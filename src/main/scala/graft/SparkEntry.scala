@@ -481,8 +481,9 @@ object SparkEntry {
       // per-turn mask side: checkpoint it once — the same materialization
       // point the production pipeline has anyway (runResumable writes
       // extracted turns to the sink). Without it the composed plan
-      // re-parsed the corpus 4x (PlanDump-attributed; 14.4 -> see
-      // BENCH/BASELINE.md for the measured drop). r6: the checkpoint is
+      // re-parsed the corpus 4x (14.4 -> 9.7 s best rep at sf0.1; BENCH/
+      // BASELINE.md "Round-5 final additions ...: loss masks in packed
+      // coordinates"). r6: the checkpoint is
       // SLIM — only (conv_id, turn_idx, extracted_text); the span
       // arrays and node counters are dead in this composition, so they
       // never enter the block manager.
@@ -512,7 +513,7 @@ object SparkEntry {
       // pins row-for-row equality, incl. non-BMP): the declarative
       // higher-order-function arithmetic is interpreted per element and
       // measured 2.03 s vs 0.13 s warm over this exact input
-      // (tools.ChunkFastProbe); no chunk_text string is ever built.
+      // (OPTIMIZATION_r06.md §7); no chunk_text string is ever built.
       val chunks = Chunking.chunkOffsetsMapped(convsP, maxTokens = 16, overlap = 4,
           textCol = "conv_text", idCol = "conv_key")
         .localCheckpoint()
@@ -978,9 +979,10 @@ object SparkEntry {
         // contract is a STORED corpus, where each consult is a pruned
         // scan — but this universe is synthesized (16 md5s/doc), so
         // each subtree would re-run the synthesis. Pin it once, as a
-        // stored corpus would be (GroupProfile-measured: 6.6 -> 4.0 s
-        // at sf0.1; same materialize-the-derived-input call as
-        // q_curation_pipeline's scored corpus).
+        // stored corpus would be (build+run 6.6 -> 4.0 s at sf0.1;
+        // BENCH/BASELINE.md "q_dedup_corpus / q_neardup_groups: pin the
+        // synthesized universe"; same materialize-the-derived-input call
+        // as q_curation_pipeline's scored corpus).
         .localCheckpoint()
       Dedup.dedupedCorpus(withExact, simThreshold = 0.5)
         .select(col("doc_id").cast("long").as("doc_id"), col("text"))
@@ -1813,11 +1815,12 @@ object SparkEntry {
         nCentroids = 8, nProbe = 8)),
     // ANN recall as a driver-checkable number (VERDICT r3 item 4): both
     // approximate paths' recall@5 against brute force in one query,
-    // gated at a 0.6 floor. Measured first (graft.tools.RecallCheck):
-    // multi-table ann (nbits=3, 8 tables) 0.90 @ sf0.001 / 0.88 @
-    // sf0.01; ivf (8 centroids, 4 probes) 0.80 / 0.72 — all
-    // deterministic (no RNG anywhere), so the floor guards SF drift,
-    // not run-to-run variance. Single-table nbits=4 measured 0.12-0.22,
+    // gated at a 0.6 floor. Measured first (recorded in SURVEY.md's
+    // ANN row; this query recomputes both on every run): multi-table
+    // ann (nbits=3, 8 tables) 0.90 @ sf0.001 / 0.88 @ sf0.01; ivf
+    // (8 centroids, 4 probes) 0.80 / 0.72 — all deterministic (no RNG
+    // anywhere), so the floor guards SF drift, not run-to-run
+    // variance. Single-table nbits=4 measured 0.12-0.22,
     // which is WHY annTopK grew the classic multi-table recall
     // amplification this round.
     "q_ann_recall" -> ((s, dir) => {
@@ -1892,7 +1895,9 @@ object SparkEntry {
   // (Transcripts.textSqlExpr). Every constant below was derived BY HAND
   // from the reference semantics (dhtmlparser.d:869-922 tree building,
   // 533-587 prettify, 287-429 classifier; quirk ledger SURVEY.md §2.5)
-  // and cross-checked with graft.tools.VariantDump. In particular:
+  // and cross-checked against the engine's parse of every variant by
+  // each oracle run (graft.Verify + scripts/verify_local.py: rows,
+  // schema and hash). In particular:
   //  - v1: a comment is istag (Q1) with RAW tagname (Q6) and is forced
   //    nonpair by parseDOM like any unmatched non-endtag;
   //  - v3: the OUTER of two same-name openers with one endtag is

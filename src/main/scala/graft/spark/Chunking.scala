@@ -160,7 +160,7 @@ object Chunking {
     * every word-length slice-sum of the declarative form is an
     * interpreted per-element walk, measured 2.03 s vs 0.13 s warm for
     * this operator over the q_masked_pipeline conversations at sf0.1
-    * (graft.tools.ChunkFastProbe, 120k docs -> 3.1M chunks, 0
+    * (OPTIMIZATION_r06.md §7: 120k docs -> 3.1M chunks, 0
     * mismatches). Here each row is one char pass (word boundaries +
     * code-point prefix sums) and chunk windows are O(1) prefix-sum
     * differences.
@@ -168,7 +168,11 @@ object Chunking {
     * Word lengths are counted in CODE POINTS (a non-low-surrogate unit
     * count), matching Spark's `length()` exactly on supplementary-plane
     * text — offsets must stay substring-faithful under Spark substring
-    * semantics. The id column must be integral (cast-to-long lossless,
+    * semantics. An UNPAIRED surrogate never reaches the walk: encoding
+    * the text into a DataFrame (UTF8String.fromString) replaces it with
+    * '?', so both forms count it as one code point (ChunkingSpec pins
+    * the equality and the substring round trip on lone low and high
+    * surrogates). The id column must be integral (cast-to-long lossless,
     * same fail-fast contract as [[Packing.packNextFit]]); callers with
     * other id types use the declarative [[chunkOffsetsOnly]].
     */

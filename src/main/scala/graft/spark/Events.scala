@@ -71,10 +71,10 @@ object Events {
     *     offset; joined back (broadcast-sized side) to emit
     *     session_idx = offset + first_flag + local_rank.
     *
-    * Cost note (visible in PlanDump): `local` feeds both the join's big
-    * side and the summary aggregation, and Spark materializes nothing
-    * between them — the summary subtree re-scans and re-shuffles the
-    * events. Two passes over the input is the classic price of
+    * Cost note (visible in `explain("formatted")`): `local` feeds both
+    * the join's big side and the summary aggregation, and Spark
+    * materializes nothing between them — the summary subtree re-scans
+    * and re-shuffles the events. Two passes over the input is the classic price of
     * bounded-memory sessionization; a caller who prefers to pay storage
     * instead can persist the projected input before calling (halves the
     * scans, costs a cached copy of (event_id, user_id, ts_us)).

@@ -8,12 +8,16 @@ import org.apache.spark.sql.functions._
   * sampling, and global token-budget selection.
   *
   * Scale notes (the 100 TB shapes):
-  *  - [[repetitionStats]] / [[gopherRepetitionFilter]] are pure per-row
-  *    projections over built-in higher-order functions — shuffle-free,
-  *    run at scan speed, and the per-row cost is O(n log n) in the
-  *    word count (one array_sort, then a single linear `aggregate`
-  *    pass), NOT the O(n^2) of the naive count-each-distinct-gram
-  *    formulation.
+  *  - [[repetitionStats]] is a pure per-row projection over built-in
+  *    higher-order functions — shuffle-free, and the per-row cost is
+  *    O(n log n) in the word count (one array_sort, then a single
+  *    linear `aggregate` pass), NOT the O(n^2) of the naive
+  *    count-each-distinct-gram formulation. [[gopherRepetitionFilter]]
+  *    computes the same statistics with [[repetitionStatsMapped]]:
+  *    still shuffle-free and O(n log n), but it crosses a
+  *    `mapPartitions` Row-encoder boundary that EVERY input column goes
+  *    through (and that column pruning cannot see past) — callers
+  *    should select the columns they need before calling it.
   *  - [[hashSample]] is a deterministic filter on a content hash: the
   *    same row always makes the same keep/drop decision, independent of
   *    partitioning, task retries, or cluster size — the property
@@ -111,7 +115,7 @@ object Filtering {
     * by a per-partition JVM walk instead of the interpreted Catalyst
     * higher-order-function chain (HOF lambdas never enter whole-stage
     * codegen; measured 0.63 s vs 0.16 s warm over the 5k-doc curation
-    * universe at sf0.1, graft.tools.GopherProbe, 0 mismatches). Grams
+    * universe at sf0.1, OPTIMIZATION_r06.md §8, 0 mismatches). Grams
     * are materialized as UTF-8 BYTE ARRAYS, which makes both agreement
     * points exact by construction: the sort comparator is unsigned
     * bytewise (== array_sort's UTF8String binary ordering) and the gram
@@ -119,16 +123,27 @@ object Filtering {
     * isolates upstream computed text columns the way the declarative
     * form's let-bound lambda does (they evaluate once per row, never
     * per gram). Generic over the input schema — every input column
-    * passes through.
+    * passes through, and a stat column the input already has is
+    * replaced in place, as `withColumn` (and so [[repetitionStats]])
+    * does: re-applying it to its own output keeps the schema.
     */
   def repetitionStatsMapped(df: DataFrame, textCol: String = "text"): DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
     val idx = df.schema.fieldIndex(textCol)
-    val outSchema = StructType(df.schema.fields ++ Array(
+    val caseSensitive = df.sparkSession.conf.get("spark.sql.caseSensitive").toBoolean
+    val inFields = df.schema.fields
+    val width = inFields.length
+    val outFields = inFields.toBuffer
+    val slots = Seq(
       StructField("n_words", IntegerType, nullable = true),
       StructField("top2_chars", LongType, nullable = true),
-      StructField("dup3_chars", LongType, nullable = true)))
+      StructField("dup3_chars", LongType, nullable = true)).map { f =>
+      val at = inFields.indexWhere(x =>
+        if (caseSensitive) x.name == f.name else x.name.equalsIgnoreCase(f.name))
+      if (at >= 0) { outFields(at) = f; at } else { outFields += f; outFields.size - 1 }
+    }.toArray
+    val outSchema = StructType(outFields.toArray)
     df.mapPartitions { it =>
       it.map { r =>
         val text = if (r.isNullAt(idx)) "" else r.getString(idx)
@@ -139,8 +154,13 @@ object Filtering {
           wb(i) = words(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
           i += 1
         }
-        Row.fromSeq(r.toSeq ++ Seq[Any](words.length,
-          runTop(sortedGramBytes(wb, 2)), runDup(sortedGramBytes(wb, 3))))
+        val vals = new Array[Any](outSchema.length)
+        i = 0
+        while (i < width) { vals(i) = r.get(i); i += 1 }
+        vals(slots(0)) = words.length
+        vals(slots(1)) = runTop(sortedGramBytes(wb, 2))
+        vals(slots(2)) = runDup(sortedGramBytes(wb, 3))
+        Row.fromSeq(vals.toSeq)
       }
     }(Encoders.row(outSchema))
   }

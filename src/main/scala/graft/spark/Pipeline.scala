@@ -1,10 +1,8 @@
 package graft.spark
 
 import graft.extract.Extractor
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.CollectionAccumulator
 
 /** The batch extraction pipeline (BASELINE.json north_rule):
   *
@@ -156,8 +154,7 @@ object Pipeline {
     * Input must have (conv_id string, turn_idx int, text string [, src_file]).
     * Keeps src_file if present (for lineage).
     */
-  def extractTurns(turns: DataFrame, cfg: Config = Config(),
-                   metricsAcc: CollectionAccumulator[PartitionMetrics] = null): Dataset[ExtractedTurn] = {
+  def extractTurns(turns: DataFrame, cfg: Config = Config()): Dataset[ExtractedTurn] = {
     val spark = turns.sparkSession
     import spark.implicits._
     val parts =
@@ -168,60 +165,28 @@ object Pipeline {
         .select(col("conv_id"), col("turn_idx"), col("text"))
         .repartition(parts, col("conv_id"), col("turn_idx")) // salt: turn-level spread
         .as[(String, Int, String)],
-      cfg, metricsAcc)
+      cfg)
   }
 
-  /** The shared instrumented extraction stage: per-row parse+extract with
-    * the oversize guard, plus optional per-partition wall-time
-    * diagnostics flushed through `metricsAcc` when the partition drains
-    * (diagnostic only — task retries may duplicate entries, so the
-    * ledger never reads the accumulator). Both the salted and the
-    * extract-first shapes plan through here, so diagnostic parity is
-    * structural (VERDICT r3 item 1).
+  /** The shared extraction stage: per-row parse+extract with the
+    * oversize guard. The salted, one-pass and extract-first shapes all
+    * plan through here, so every shape extracts a turn the same way.
     */
-  private def extractMapped(rows: Dataset[(String, Int, String)], cfg: Config,
-                            metricsAcc: CollectionAccumulator[PartitionMetrics]): Dataset[ExtractedTurn] = {
+  private def extractMapped(rows: Dataset[(String, Int, String)], cfg: Config): Dataset[ExtractedTurn] = {
     val spark = rows.sparkSession
     import spark.implicits._
     val maxChars = cfg.maxTextChars
     val repairFixed = cfg.repairTagsFixed
-    rows
-      .mapPartitions { it =>
-        val t0 = System.nanoTime()
-        var nTurns = 0L; var nBytes = 0L; var nNodes = 0L
-        var nErrors = 0L; var nOversize = 0L
-        val out = it.map { case (conv, idx, text) =>
-          val t = if (text == null) "" else text
-          nTurns += 1; nBytes += t.length
-          val rec =
-            if (isOversize(t, maxChars)) {
-              nOversize += 1
-              ExtractedTurn(conv, idx, "", Array.emptyLongArray, Array.emptyByteArray, 0, 1)
-            } else {
-              val r = Extractor.extract(t, repairFixed)
-              val (pos, kinds) = SpanCodec.pack(r.spans)
-              ExtractedTurn(conv, idx, r.text, pos, kinds, r.nNodes, r.nErrors)
-            }
-          nNodes += rec.n_nodes; nErrors += rec.n_errors
-          rec
-        }
-        if (metricsAcc == null) out
-        // iterator wrapper so metrics flush after the partition drains
-        else new Iterator[ExtractedTurn] {
-          private var flushed = false // hasNext may legally be called repeatedly after exhaustion
-          def hasNext: Boolean = {
-            val h = out.hasNext
-            if (!h && !flushed) {
-              flushed = true
-              metricsAcc.add(PartitionMetrics(TaskContext.getPartitionId(),
-                nTurns, nBytes, nNodes, nErrors, nOversize,
-                (System.nanoTime() - t0) / 1000000L))
-            }
-            h
-          }
-          def next(): ExtractedTurn = out.next()
-        }
+    rows.mapPartitions(_.map { case (conv, idx, text) =>
+      val t = if (text == null) "" else text
+      if (isOversize(t, maxChars))
+        ExtractedTurn(conv, idx, "", Array.emptyLongArray, Array.emptyByteArray, 0, 1)
+      else {
+        val r = Extractor.extract(t, repairFixed)
+        val (pos, kinds) = SpanCodec.pack(r.spans)
+        ExtractedTurn(conv, idx, r.text, pos, kinds, r.nNodes, r.nErrors)
       }
+    })
   }
 
   /** Reassembly with a hard cap on buffered turns per conversation: the
@@ -398,7 +363,7 @@ object Pipeline {
         .select(col("conv_id"), col("turn_idx"), col("text"))
         .repartitionByRange(parts, col("conv_id"), col("turn_idx"))
         .as[(String, Int, String)],
-      cfg, metricsAcc = null)
+      cfg)
       .sortWithinPartitions(col("conv_id"), col("turn_idx"))
       .as[ExtractedTurn]
   }
@@ -425,15 +390,14 @@ object Pipeline {
     * maxPartitionBytes; the oversize guard bounds per-turn cost). Safe on
     * both batch and STREAMING DataFrames — no repartition, no sort.
     */
-  def extractOnScanPartitions(turns: DataFrame, cfg: Config = Config(),
-                              metricsAcc: CollectionAccumulator[PartitionMetrics] = null): Dataset[ExtractedTurn] = {
+  def extractOnScanPartitions(turns: DataFrame, cfg: Config = Config()): Dataset[ExtractedTurn] = {
     val spark = turns.sparkSession
     import spark.implicits._
     extractMapped(
       turns
         .select(col("conv_id"), col("turn_idx"), col("text"))
         .as[(String, Int, String)],
-      cfg, metricsAcc)
+      cfg)
   }
 
   /** Per-turn output in stable (conv_id, turn_idx) order — the shape the
@@ -471,14 +435,18 @@ object Pipeline {
 
   /** Resumable batch run over a transcripts parquet directory.
     *
-    * SCHEMA NOTE (v2 break): since the round-2 ledger rework, `metrics/`
-    * holds ONE aggregate row per batch (n_turns, n_nodes, n_errors,
-    * n_chars_out, n_bytes_in, n_oversize, snapshot_id) and the old
-    * per-partition accumulator rows live under `metrics_diag/`. An
-    * outDir whose `metrics/` contains pre-rework batches mixes the two
-    * incompatible schemas — read such legacy batches from their
-    * `metrics_diag/` sibling (or reprocess into a fresh outDir); readers
-    * can tell them apart by the presence of the `part_id` column.
+    * Each batch writes three sinks, then the checkpoint: `extracted/`
+    * (per-turn rows), `lineage/` (one row per source file) and
+    * `metrics/` (ONE aggregate row per batch: n_turns, n_nodes,
+    * n_errors, n_chars_out, n_bytes_in, n_oversize, snapshot_id).
+    * Per-partition turns, bytes and wall time are not written: Spark's
+    * own task metrics record them.
+    *
+    * SCHEMA NOTE (v2 break): before the round-2 ledger rework `metrics/`
+    * held per-partition accumulator rows instead. An outDir whose
+    * `metrics/` contains such legacy batches mixes two incompatible
+    * schemas — reprocess into a fresh outDir; readers can tell them apart
+    * by the presence of the `part_id` column.
     *
     * The resume filter is a left_anti JOIN of the input against the
     * checkpoint table on src_file — never a driver-side collect of file
@@ -522,12 +490,9 @@ object Pipeline {
       return RunSummary("none", 0, 0, nDone)
     }
     val batchId = f"${agg.getLong(1)}%016x".take(8) + f"${agg.getLong(2)}%016x".take(8)
-    val metricsAcc = new CollectionAccumulator[PartitionMetrics]
-    spark.sparkContext.register(metricsAcc, "graft.partitionMetrics")
-
     val extracted =
-      if (cfg.shape == "extractfirst") extractOnScanPartitions(pending, cfg, metricsAcc)
-      else extractTurns(pending, cfg, metricsAcc)
+      if (cfg.shape == "extractfirst") extractOnScanPartitions(pending, cfg)
+      else extractTurns(pending, cfg)
     val batchDir = s"$outDir/extracted/batch=$batchId"
     reassembled(extracted)
       .write.mode("overwrite")
@@ -565,13 +530,6 @@ object Pipeline {
     metrics.write.mode("overwrite").parquet(s"$outDir/metrics/batch=$batchId")
     val rows = spark.read.parquet(s"$outDir/metrics/batch=$batchId")
       .head().getAs[Long]("n_turns")
-
-    // per-partition wall-time diagnostics from the accumulator (task
-    // retries may duplicate entries — diagnostic only, never the ledger)
-    import scala.jdk.CollectionConverters._
-    val m = metricsAcc.value.asScala.toSeq
-    if (m.nonEmpty)
-      m.toDF().write.mode("overwrite").parquet(s"$outDir/metrics_diag/batch=$batchId")
 
     // checkpoint LAST: marks the batch committed (written from the
     // distributed pending-file set, no driver materialization)

@@ -72,17 +72,6 @@ final case class NodeRow(node_id: Int, parent_id: Int, pos: Int, depth: Int,
                          params: Map[String, String], nonpair: Boolean,
                          endtag_id: Int, opener_id: Int, src_offset: Int)
 
-/** Per-partition parse diagnostics row (pipeline metrics_diag table;
-  * accumulator-sourced wall times — task retries may duplicate entries.
-  * The committed `metrics` table is the retry-safe ledger: one row per
-  * batch, aggregated from the written output + lineage). n_bytes here is
-  * UTF-16 units (cheap in-loop count, diagnostics only); the lineage
-  * ledger's n_bytes is true UTF-8 octets.
-  */
-final case class PartitionMetrics(part_id: Int, n_turns: Long, n_bytes: Long,
-                                  n_nodes: Long, n_errors: Long,
-                                  n_oversize: Long, wall_ms: Long)
-
 /** Lineage row: which input slice produced which output, with input byte
   * and oversize accounting per file (snapshot id is a deterministic
   * constant for the parquet stand-in; with Iceberg it is the table

@@ -53,7 +53,9 @@ import org.apache.spark.sql.functions._
   * then back to doc_id for the merge windows and the final
   * reassembly join (at local scale the gram aggregate broadcasts and
   * the merge windows reuse the offset window's doc_id partitioning —
-  * audited via PlanDump; at production scale the gram join shuffles on
+  * audited via `explain("formatted")`, BENCH/BASELINE.md "Round-5
+  * continuation (2026-08-19): exact-substring span dedup"; at
+  * production scale the gram join shuffles on
   * the hash and the merge pays one doc_id exchange of span rows).
   * Removal spans are two longs each and only exist for duplicated
   * occurrences — the reassembly join against the corpus text is

@@ -156,6 +156,32 @@ class ChunkingSpec extends SparkTestBase {
     }
   }
 
+  test("chunkOffsetsMapped on unpaired surrogates: == chunkOffsetsOnly, offsets rebuild each chunk") {
+    // a lone low surrogate would be skipped by the walk's code-point
+    // count and a lone high one counted; both must still agree with
+    // Spark's length() once the text has crossed into a DataFrame
+    val texts = Seq("a \uDC00b c d", "x\uD800 y z w", "\uD800", "\uDC00",
+      "\uDC00 \uD800 w v u", "\uD800\uD800 a \uDC00\uDC00 b c", "p q\uDC00 \uD800r s t")
+    val docs = mkDocs(texts)
+    // why they agree: UTF-8 encoding into the DataFrame already turned
+    // each unpaired surrogate into '?', so the walk never sees one
+    assert(docs.select($"text").as[String].collect().toSet ==
+      texts.map(_.replaceAll("[\\uD800-\\uDFFF]", "?")).toSet)
+    for ((mt, ov) <- Seq((3, 1), (2, 0))) {
+      val mapped = Chunking.chunkOffsetsMapped(docs, mt, ov)
+      val rows = mapped.as[(Long, Int, Int, Long, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
+      val decl = Chunking.chunkOffsetsOnly(docs, mt, ov)
+        .as[(Long, Int, Int, Long, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
+      assert(rows == decl, s"diverged at ($mt, $ov)")
+      val texted = Chunking.chunkWithOffsets(docs, mt, ov).select($"doc_id", $"chunk_idx", $"chunk_text")
+      val bad = mapped.join(docs, "doc_id").join(texted, Seq("doc_id", "chunk_idx"))
+        .filter(expr("substring(text, char_start + 1, chunk_len)") =!= $"chunk_text" ||
+          length($"chunk_text") =!= $"chunk_len")
+      assert(bad.count() == 0, s"offsets miss their chunk at ($mt, $ov)")
+      assert(texted.count() == rows.size)
+    }
+  }
+
   test("chunkOffsetsMapped fails fast on a non-integral id column") {
     val df = spark.createDataset(Seq(("c1", "a b c"))).toDF("doc_id", "text")
     val e = intercept[IllegalArgumentException] {

@@ -83,6 +83,15 @@ class FilteringSpec extends SparkTestBase {
     assert(!flags(0L) && flags(1L))
   }
 
+  test("gopherRepetitionFilter is idempotent: filter of its own output keeps rows and schema") {
+    val texts = Seq("spam spam spam spam spam spam",
+      "the quick brown fox jumps over the lazy dog", "", "a b a b a b a b")
+    val once = Filtering.gopherRepetitionFilter(mkDocs(texts))
+    val twice = Filtering.gopherRepetitionFilter(once)
+    assert(twice.schema == once.schema)
+    assert(twice.collect().toSeq.sortBy(_.getLong(0)) == once.collect().toSeq.sortBy(_.getLong(0)))
+  }
+
   test("null hash keys fail loudly; null text folds to the empty-text convention") {
     // a null key used to hash to a null bucket: hashSample then silently
     // DROPPED the row and assignSplit dumped it in the last split

@@ -284,14 +284,6 @@ class PipelineSpec extends SparkTestBase {
     assert(rows(s"$dir/out-ef") == rows(s"$dir/out-salted"))
     val r2 = Pipeline.runResumable(spark, inPath, s"$dir/out-ef", cfgEf)
     assert(r2.filesProcessed == 0 && r2.skippedFiles == 4)
-
-    // diagnostic parity (VERDICT r3 item 1): the extract-first branch
-    // writes the same per-partition metrics_diag the salted branch does
-    for (o <- Seq(s"$dir/out-salted", s"$dir/out-ef")) {
-      spark.catalog.refreshByPath(s"$o/metrics_diag")
-      val diag = spark.read.parquet(s"$o/metrics_diag")
-      assert(diag.agg(sum("n_turns")).head.getLong(0) >= quirkTurns.size.toLong, o)
-    }
   }
 
   test("resumable run: second run is a no-op; crash before checkpoint is idempotent") {

@@ -214,8 +214,9 @@ class PlanSpec extends SparkTestBase {
 
   test("masked pipeline: checkpoints make the final plan free of re-extraction and re-chunking") {
     // before the localCheckpoint fix the composed plan re-ran extraction
-    // 4x and the chunk generator 3x (PlanDump-attributed, 14.4 s at
-    // sf0.1); with the conversations (text + fused loss spans) and the
+    // 4x and the chunk generator 3x (14.4 s best rep at sf0.1; BENCH/
+    // BASELINE.md "Round-5 final additions ...: loss masks in packed
+    // coordinates"); with the conversations (text + fused loss spans) and the
     // SLIM chunk relation checkpointed, the final plan must contain only
     // the packing fold's MapPartitions, no chunk/parse Generate and no
     // aggregation (both ran once inside the checkpoints) — the ONLY
