@@ -451,16 +451,17 @@ object SparkEntry {
       val ex = Pipeline.extractOnScanPartitions(Transcripts.derive(s, dir))
       // guardMaxWords: the oracle's chunk explode caps at
       // generate_series(0, 255) — covers <= 256 chunks = 3076 words at
-      // 16/4 chunking (ADVICE r4). r6: the >=100-word filter is the
-      // same space arithmetic as the guard (== size(split)), and the
-      // chunker is the counts-only projection — nothing downstream
-      // reads chunk_text, so the conv text is never split at all.
+      // 16/4 chunking (ADVICE r4). The >=100-word filter is the same
+      // space arithmetic as the guard (== size(split)). Nothing
+      // downstream reads chunk_text, so the chunker is the compiled
+      // walk (no chunk string is built); it and the packing fold take
+      // an integral id, so the BIGINT conv_key is derived first.
       val convs = guardMaxWords(Pipeline.conversationTexts(ex.toDF())
-        .filter(Chunking.wordCount(col("conv_text")) >= 100)
-        .select(col("conv_id"), col("conv_text")), "conv_text", 3076)
-      val chunks = Chunking.chunkCounts(convs, maxTokens = 16, overlap = 4,
-          textCol = "conv_text", idCol = "conv_id")
-        .withColumn("conv_key", expr("CAST(substring(conv_id, 6) AS BIGINT)"))
+        .filter(Chunking.wordCount(col("conv_text")) >= 100), "conv_text", 3076)
+        .select(expr("CAST(substring(conv_id, 6) AS BIGINT)").as("conv_key"),
+          col("conv_text"))
+      val chunks = Chunking.chunkOffsetsMapped(convs, maxTokens = 16, overlap = 4,
+          textCol = "conv_text", idCol = "conv_key")
       Packing.packNextFit(chunks, capacity = 24, shard = col("conv_key"),
           idCol = "conv_key")
         .select(col("conv_key"), col("chunk_idx"), col("n_tokens"),
@@ -468,8 +469,8 @@ object SparkEntry {
     }),
     // the training pipeline WITH its loss mask carried to the end:
     // assistant-turn spans (lossMaskSpans, conv_text coordinates) are
-    // remapped through chunking (chunkWithOffsets pins each chunk's
-    // char window in the doc) and packing (sequenceSpans pins each
+    // remapped through chunking (chunkOffsetsMapped pins each chunk's
+    // char window in the doc) and packing (the fold's seq_off pins each
     // chunk's offset in seq_text) into PACKED-SEQUENCE coordinates —
     // the artifact a trainer actually consumes: packed windows plus
     // exactly the char ranges to compute loss on, no re-tokenization.
@@ -506,22 +507,18 @@ object SparkEntry {
         .select(expr("CAST(substring(conv_id, 6) AS BIGINT)").as("conv_key"),
           col("conv_text"), col("loss_spans"))
         .localCheckpoint()
-      // the three span consumers (packing fold, sequence offsets, chunk
-      // char windows) need only ids + sizes: checkpoint the SLIM chunk
-      // relation (5 numeric cols/chunk, no text). chunkOffsetsMapped —
-      // the compiled one-pass form of chunkOffsetsOnly (ChunkingSpec
-      // pins row-for-row equality, incl. non-BMP): the declarative
-      // higher-order-function arithmetic is interpreted per element and
-      // measured 2.03 s vs 0.13 s warm over this exact input
-      // (OPTIMIZATION_r06.md §7); no chunk_text string is ever built.
+      // the two span consumers (packing fold, chunk char windows) need
+      // only ids + sizes: checkpoint the SLIM chunk relation (5 numeric
+      // cols/chunk, no text) from the compiled walk (ChunkingSpec pins
+      // it against chunk(), incl. non-BMP); no chunk_text string is
+      // ever built.
       val chunks = Chunking.chunkOffsetsMapped(convsP, maxTokens = 16, overlap = 4,
           textCol = "conv_text", idCol = "conv_key")
         .localCheckpoint()
-      // fused fold: the packing walk emits each chunk's seq_text offset
-      // as it places it (PackingSpec-pinned == packNextFit +
-      // sequenceSpans), so the remap below skips the sequenceSpans
-      // join + (shard, seq_idx) window exchange
-      val asg = Packing.packNextFitWithOffsets(chunks, capacity = 24,
+      // the packing fold emits each chunk's seq_text offset as it places
+      // it, so the remap needs no join back to the chunks and no
+      // (shard, seq_idx) window exchange
+      val asg = Packing.packNextFit(chunks, capacity = 24,
         shard = col("conv_key"), idCol = "conv_key")
       val masks = convsP
         .select(col("conv_key"), explode(col("loss_spans")).as("sp"))
@@ -768,8 +765,8 @@ object SparkEntry {
     "q_packed_spans" -> ((s, dir) => {
       val chunks = Chunking.chunk(guardMaxWords(docs(s, dir), "text", 772),
         maxTokens = 16, overlap = 4)
-      val asg = Packing.packNextFit(chunks, capacity = 24, shard = col("doc_id"))
-      Packing.sequenceSpans(chunks, asg)
+      Packing.sequenceSpans(
+        Packing.packNextFit(chunks, capacity = 24, shard = col("doc_id")))
     }),
     // CROSS-DOCUMENT packing with provenance lineage: shard = doc_id % 8
     // puts many docs per shard, so the next-fit walk packs chunks from
@@ -1623,8 +1620,8 @@ object SparkEntry {
         .select((col("doc_id") + lit(6000000L)).as("doc_id"), mkText("x", 2).as("text"))
       val contaminated = Dedup.contamination(corpus, planted.unionByName(clean))
         .select(col("doc_id"))
-      // counts-only chunker: the traceback reads ids/sizes, never text
-      val chunks = Chunking.chunkCounts(corpus, maxTokens = 16, overlap = 4)
+      // compiled chunk walk: the traceback reads ids/sizes, never text
+      val chunks = Chunking.chunkOffsetsMapped(corpus, maxTokens = 16, overlap = 4)
       val asg = Packing.packNextFit(chunks, capacity = 48,
         shard = pmod(col("doc_id"), lit(8)))
       Packing.affectedSequencesByDocs(asg, contaminated)

@@ -58,8 +58,8 @@ object Extractor {
 
   private final case class KeptBlock(text: String, spans: Seq[Span])
 
-  def extract(html: String, repairFixed: Boolean = false): ExtractResult = {
-    val (dom, stats) = HtmlParser.parseWithStats(html, repairFixed)
+  def extract(html: String): ExtractResult = {
+    val (dom, stats) = HtmlParser.parseWithStats(html)
 
     val kept = new ArrayBuffer[KeptBlock]()
     val cur = new Block // reused across blocks (flush() is the hot call)

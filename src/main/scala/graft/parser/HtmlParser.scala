@@ -14,14 +14,6 @@ object HtmlParser {
     */
   def parseString(txt: String): HtmlNode = parseWithStats(txt)._1
 
-  /** As [[parseString]], with the flagged repairTagsFixed stage
-    * (comment-split-tag merge) switchable on — OFF reproduces the
-    * reference's no-op repairTags (Q16) and is the oracle-faithful
-    * default.
-    */
-  def parseString(txt: String, repairFixed: Boolean): HtmlNode =
-    parseWithStats(txt, repairFixed)._1
-
   /** Parse metrics for the pipeline's per-partition metrics table:
     * `nNodes = nTokens - droppedEndtags` (every token either lands in the
     * tree or is a dropped stray endtag); `forcedNonpair` counts *tags*

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * secondary-sort pattern: ONE exchange on the shard key, an
   * in-partition sort on (shard, doc_id, chunk_idx), then a constant-
   * memory mapPartitions walk that detects shard boundaries in-stream.
-  * No state beyond the running (sequence, position, fill) triple ever
+  * No state beyond the running (sequence, position, fill, offset) ever
   * exists, so a shard of any size packs in one pass; shard count
   * bounds the sequential grain exactly like IVF cells bound probe
   * cost. Next-fit is the standard packing compromise: one pass, at
@@ -25,12 +25,26 @@ import org.apache.spark.sql.functions._
   */
 object Packing {
 
-  /** Pack chunking output (doc_id, chunk_idx, chunk_text, n_tokens)
-    * into sequences of at most `capacity` tokens. Returns one row per
-    * input chunk: (shard, doc_id, chunk_idx, n_tokens, seq_idx,
-    * seq_pos) — seq_idx numbers sequences within the shard, seq_pos
-    * the chunk's position inside its sequence. Reconstruct sequence
-    * text by grouping on (shard, seq_idx) ordered by seq_pos.
+  /** Packed samples in every sequence's seq_text are separated by this
+    * one EOS stand-in; the fold's offsets and [[sequences]]' text both
+    * use it, so the two always agree.
+    */
+  private val Sep = "\n"
+
+  /** Pack chunks into sequences of at most `capacity` tokens. Input:
+    * (idCol, chunk_idx, n_tokens) plus each chunk's char length, taken
+    * from `chunk_len` (slim relations from
+    * [[Chunking.chunkOffsetsMapped]]) or else `length(chunk_text)`
+    * ([[Chunking.chunk]]); a relation with neither is rejected.
+    *
+    * Returns one row per input chunk: (shard, idCol, chunk_idx,
+    * n_tokens, seq_idx, seq_pos, seq_off, seq_end) — seq_idx numbers
+    * sequences within the shard, seq_pos is the chunk's position inside
+    * its sequence, and [seq_off, seq_end) is its exact character span
+    * in the sequence's seq_text as [[sequences]] materializes it. The
+    * fold walks a sequence's chunks in seq_pos order, so the span is
+    * one running `len + sep` sum — no join back to the chunks, no
+    * window exchange.
     */
   def packNextFit(chunks: DataFrame, capacity: Int,
                   shard: Column = null, nShards: Int = 256,
@@ -54,63 +68,7 @@ object Packing {
     import spark.implicits._
     val shardCol = if (shard != null) shard
       else pmod(xxhash64(col(idCol)), lit(nShards))
-    chunks
-      .select(shardCol.cast("long").as("shard"),
-        col(idCol).cast("long"), col("chunk_idx").cast("int"),
-        col("n_tokens").cast("int"))
-      .repartition(col("shard"))
-      .sortWithinPartitions(col("shard"), col(idCol), col("chunk_idx"))
-      .as[(Long, Long, Int, Int)]
-      .mapPartitions { it =>
-        var curShard = Long.MinValue
-        var first = true
-        var seq = 0L
-        var pos = 0
-        var fill = 0L
-        it.map { case (sh, doc, ci, nt) =>
-          if (first || sh != curShard) { // new shard: reset the walk
-            curShard = sh; first = false
-            seq = 0L; pos = 0; fill = nt.toLong
-          } else if (fill + nt > capacity) { // bin full: open the next
-            seq += 1L; pos = 0; fill = nt.toLong
-          } else {
-            pos += 1; fill += nt
-          }
-          (sh, doc, ci, nt, seq, pos)
-        }
-      }
-      .toDF("shard", idCol, "chunk_idx", "n_tokens", "seq_idx", "seq_pos")
-  }
-
-  /** [[packNextFit]] with each chunk's character offset `seq_off` inside
-    * its packed sequence's seq_text computed IN THE SAME FOLD — the
-    * fused form of packNextFit + [[sequenceSpans]] for span consumers:
-    * the fold already walks chunks in exactly seq_pos order (sorted
-    * (shard, id, chunk_idx) within shard partitions), so the running
-    * `len + sep.length` sum that sequenceSpans re-derives with a join
-    * back to the chunk relation plus a (shard, seq_idx) window exchange
-    * is one extra accumulator here. Input must carry `chunk_len` (slim
-    * chunk relations) or `chunk_text`; output = packNextFit's columns +
-    * `seq_off` (== sequenceSpans' span_start, PackingSpec-pinned).
-    * [[remapSpansToSequences]] consumes `seq_off` directly when the
-    * assignments carry it, skipping the join + window entirely.
-    */
-  def packNextFitWithOffsets(chunks: DataFrame, capacity: Int,
-                             shard: Column = null, nShards: Int = 256,
-                             idCol: String = "doc_id", sep: String = "\n"): DataFrame = {
-    require(capacity > 0, s"capacity must be positive, got $capacity")
-    chunks.schema(idCol).dataType match {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => ()
-      case other => throw new IllegalArgumentException(
-        s"packNextFitWithOffsets id column '$idCol' must be an integral type (cast-to-long " +
-          s"is lossless); got $other — derive a numeric key first")
-    }
-    val spark = chunks.sparkSession
-    import spark.implicits._
-    val shardCol = if (shard != null) shard
-      else pmod(xxhash64(col(idCol)), lit(nShards))
-    val sepLen = sep.length.toLong
+    val sepLen = Sep.length.toLong
     chunks
       .select(shardCol.cast("long").as("shard"),
         col(idCol).cast("long"), col("chunk_idx").cast("int"),
@@ -124,7 +82,7 @@ object Packing {
         var seq = 0L
         var pos = 0
         var fill = 0L
-        var off = 0L // span_start of the chunk being placed
+        var off = 0L // seq_off of the chunk being placed
         it.map { case (sh, doc, ci, nt, len) =>
           if (first || sh != curShard) { // new shard: reset the walk
             curShard = sh; first = false
@@ -134,20 +92,20 @@ object Packing {
           } else {
             pos += 1; fill += nt
           }
-          val row = (sh, doc, ci, nt, seq, pos, off)
+          val row = (sh, doc, ci, nt, seq, pos, off, off + len)
           off += len + sepLen // the next chunk in this sequence starts here
           row
         }
       }
-      .toDF("shard", idCol, "chunk_idx", "n_tokens", "seq_idx", "seq_pos", "seq_off")
+      .toDF("shard", idCol, "chunk_idx", "n_tokens", "seq_idx", "seq_pos", "seq_off", "seq_end")
   }
 
   /** Materialize the packed sequences themselves — the model-ready
     * artifact: one row per (shard, seq_idx) with the member chunks'
-    * texts joined in seq_pos order. `sep` stands in for the EOS
-    * boundary between packed samples. n_tokens is the true member sum
-    * (chunks are independent samples — re-tokenizing the joined text
-    * across a separator is not meaningful).
+    * texts joined in seq_pos order, separated by a newline that stands
+    * in for the EOS boundary between packed samples. n_tokens is the
+    * true member sum (chunks are independent samples — re-tokenizing
+    * the joined text across a separator is not meaningful).
     *
     * `withProvenance` appends a lineage column: the member chunks'
     * "doc_id:chunk_idx" keys in seq_pos order. When packing CROSSES
@@ -159,22 +117,27 @@ object Packing {
     * exchange.
     */
   def sequences(chunks: DataFrame, assignments: DataFrame,
-                idCol: String = "doc_id", sep: String = "\n",
+                idCol: String = "doc_id",
                 withProvenance: Boolean = false): DataFrame = {
     val sorted = array_sort(collect_list(struct(col("seq_pos"),
       col("chunk_text"), col("prov"))))
     val aggs = Seq(
       count(lit(1)).as("n_chunks"),
       sum(col("n_tokens").cast("long")).as("n_tokens"),
-      array_join(transform(sorted, t => t.getField("chunk_text")), sep)
+      array_join(transform(sorted, t => t.getField("chunk_text")), Sep)
         .as("seq_text")) ++
       (if (withProvenance)
         Seq(array_join(transform(sorted, t => t.getField("prov")), ",")
           .as("provenance"))
       else Nil)
+    // every assignment has its chunk, so a left join keeps the rows an
+    // inner join would; unlike the inner join it can only ever build
+    // the chunk TEXT side of a broadcast join and stream the assignments
+    // (which the fold already spread over the shard partitions),
+    // whatever the size estimates of the two sides say
     assignments
       .join(chunks.select(col(idCol), col("chunk_idx"), col("chunk_text")),
-        Seq(idCol, "chunk_idx"))
+        Seq(idCol, "chunk_idx"), "left")
       .withColumn("prov",
         concat(col(idCol).cast("string"), lit(":"), col("chunk_idx").cast("string")))
       .groupBy(col("shard"), col("seq_idx"))
@@ -184,58 +147,43 @@ object Packing {
   /** Char length of a chunk, from a precomputed `chunk_len` column when
     * the chunk relation is SLIM (ids + sizes only, text projected away
     * — e.g. a localCheckpoint shared by several span consumers, as
-    * q_masked_pipeline does), else from `chunk_text` directly. Both
-    * span operators below accept either shape.
+    * q_masked_pipeline does), else from `chunk_text` directly.
     */
   private def chunkLen(chunks: DataFrame): Column =
     if (chunks.columns.contains("chunk_len")) col("chunk_len").cast("long")
-    else length(col("chunk_text")).cast("long")
+    else if (chunks.columns.contains("chunk_text")) length(col("chunk_text")).cast("long")
+    else throw new IllegalArgumentException(
+      "chunks must carry chunk_len or chunk_text — produce them with Chunking.chunk " +
+        "or Chunking.chunkOffsetsMapped")
 
   /** Sample-boundary spans inside the packed sequences: one row per
     * packed chunk with its exact character span [span_start, span_end)
     * in the (shard, seq_idx) sequence's `seq_text` as materialized by
-    * [[sequences]] with the same `sep`. This is the packing mask a
-    * trainer consumes alongside the packed window — packed samples are
-    * independent, so attention must be block-diagonal per span and the
-    * loss must reset at span boundaries; shipping the spans with the
-    * sequence means the trainer never re-splits (or re-tokenizes) the
-    * window to find them.
+    * [[sequences]]. This is the packing mask a trainer consumes
+    * alongside the packed window — packed samples are independent, so
+    * attention must be block-diagonal per span and the loss must reset
+    * at span boundaries; shipping the spans with the sequence means the
+    * trainer never re-splits (or re-tokenizes) the window to find them.
     *
-    * Scale shape mirrors [[graft.spark.Pipeline.lossMaskSpans]]: the
-    * chunk TEXT never moves — length() is applied under the join, so
-    * the join on (idCol, chunk_idx) and the (shard, seq_idx) window
-    * exchange only (ids, one length per chunk); the running sum is a
-    * bounded window (no per-sequence buffering of texts). Invariant
-    * (PackingSpec-pinned):
-    * substring(seq_text, span_start+1, span_end-span_start) ==
+    * A projection of the [[packNextFit]] assignments: the fold already
+    * emits each chunk's [seq_off, seq_end). Invariant (PackingSpec-
+    * pinned): substring(seq_text, span_start+1, span_end-span_start) ==
     * chunk_text for every row, and spans tile seq_text exactly with
-    * `sep`-width gaps.
+    * one-char separator gaps.
     */
-  def sequenceSpans(chunks: DataFrame, assignments: DataFrame,
-                    idCol: String = "doc_id", sep: String = "\n"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("shard"), col("seq_idx"))
-      .orderBy(col("seq_pos"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    assignments
-      .join(chunks.select(col(idCol), col("chunk_idx"),
-          chunkLen(chunks).as("len")),
-        Seq(idCol, "chunk_idx"))
-      .withColumn("span_start",
-        coalesce(sum(col("len") + lit(sep.length.toLong)).over(w), lit(0L)))
-      .select(col("shard"), col("seq_idx"), col("seq_pos"), col(idCol),
-        col("chunk_idx"), col("span_start"),
-        (col("span_start") + col("len")).as("span_end"))
-  }
+  def sequenceSpans(assignments: DataFrame, idCol: String = "doc_id"): DataFrame =
+    assignments.select(col("shard"), col("seq_idx"), col("seq_pos"), col(idCol),
+      col("chunk_idx"), col("seq_off").as("span_start"), col("seq_end").as("span_end"))
 
   /** Remap DOCUMENT-coordinate character spans (e.g. the in-loss turn
     * spans of [[graft.spark.Pipeline.lossMaskSpans]] over a reassembled
     * conversation) into PACKED-SEQUENCE coordinates: for every chunk a
     * doc span overlaps, emit the intersection shifted to the chunk's
     * offset inside its sequence's seq_text. Composed with
-    * [[Chunking.chunkWithOffsets]] (which guarantees chunk_text ==
-    * substring(doc_text, char_start+1, len)) and [[sequenceSpans]]
-    * (substring-faithful sequence offsets), the output spans satisfy
+    * [[Chunking.chunkOffsetsMapped]] (which guarantees chunk_text ==
+    * substring(doc_text, char_start+1, chunk_len)) and the
+    * [[packNextFit]] assignments (substring-faithful `seq_off`), the
+    * output spans satisfy
     * substring(seq_text, span_start+1, span_end-span_start) ==
     * substring(doc_text, doc-span ∩ chunk window) EXACTLY — the
     * model-ready loss mask shipped in the same coordinates as the
@@ -247,8 +195,8 @@ object Packing {
     * never covering a chunk emit nothing; zero-width input spans (an
     * empty turn) are dropped explicitly — they mask nothing. The one
     * doc char no chunk carries is the separator space BETWEEN two
-    * adjacent chunks (seq_text replaces it with `sep`): a doc span
-    * crossing a chunk boundary loses exactly that char, so the mask
+    * adjacent chunks (seq_text replaces it with the sample separator): a
+    * doc span crossing a chunk boundary loses exactly that char, so the mask
     * union covers precisely the doc chars the trainer actually reads
     * (PackingSpec pins this as set equality at overlap 0 and 2).
     *
@@ -259,20 +207,11 @@ object Packing {
     * reduced to (ids, char window) and spans to (ids, two offsets).
     */
   def remapSpansToSequences(chunks: DataFrame, assignments: DataFrame,
-                            docSpans: DataFrame, idCol: String = "doc_id",
-                            sep: String = "\n"): DataFrame = {
+                            docSpans: DataFrame, idCol: String = "doc_id"): DataFrame = {
     require(chunks.columns.contains("char_start"),
-      "chunks must carry char_start — produce them with Chunking.chunkWithOffsets")
-    // assignments from [[packNextFitWithOffsets]] already carry each
-    // chunk's sequence offset — the sequenceSpans join + (shard,
-    // seq_idx) window below would only re-derive it
-    val offs =
-      if (assignments.columns.contains("seq_off"))
-        assignments.select(col("shard"), col("seq_idx"), col("seq_pos"),
-          col(idCol), col("chunk_idx"), col("seq_off"))
-      else sequenceSpans(chunks, assignments, idCol, sep)
-        .select(col("shard"), col("seq_idx"), col("seq_pos"), col(idCol),
-          col("chunk_idx"), col("span_start").as("seq_off"))
+      "chunks must carry char_start — produce them with Chunking.chunkOffsetsMapped")
+    val offs = assignments.select(col("shard"), col("seq_idx"), col("seq_pos"),
+      col(idCol), col("chunk_idx"), col("seq_off"))
     val cw = chunks.select(col(idCol), col("chunk_idx"),
       col("char_start").cast("long").as("char_start"),
       (col("char_start") + chunkLen(chunks)).cast("long").as("char_end"))

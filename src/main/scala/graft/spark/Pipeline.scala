@@ -134,10 +134,6 @@ object Pipeline {
   final case class Config(partitions: Int = 0, // 0 = spark.sql.shuffle.partitions
                           maxTextChars: Int = 4 << 20,
                           snapshotId: String = "parquet-v0",
-                          // enable the flagged repairTagsFixed stage
-                          // (Q16 intent; diverges from the reference
-                          // oracle — default stays faithful)
-                          repairTagsFixed: Boolean = false,
                           // "extractfirst" (default: extraction on scan
                           // partitions, ONE exchange of extracted text —
                           // measured fastest AND the only shape clearing
@@ -176,13 +172,12 @@ object Pipeline {
     val spark = rows.sparkSession
     import spark.implicits._
     val maxChars = cfg.maxTextChars
-    val repairFixed = cfg.repairTagsFixed
     rows.mapPartitions(_.map { case (conv, idx, text) =>
       val t = if (text == null) "" else text
       if (isOversize(t, maxChars))
         ExtractedTurn(conv, idx, "", Array.emptyLongArray, Array.emptyByteArray, 0, 1)
       else {
-        val r = Extractor.extract(t, repairFixed)
+        val r = Extractor.extract(t)
         val (pos, kinds) = SpanCodec.pack(r.spans)
         ExtractedTurn(conv, idx, r.text, pos, kinds, r.nNodes, r.nErrors)
       }

@@ -16,85 +16,37 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * session's FunctionRegistry directly.
   */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftSparkExtensions.parseNodesDescriptor)
-    ext.injectFunction(GraftSparkExtensions.wsTokenCountDescriptor)
-    ext.injectFunction(GraftSparkExtensions.bpeishTokenCountDescriptor)
-    ext.injectFunction(GraftSparkExtensions.simHash64Descriptor)
-    ext.injectFunction(GraftSparkExtensions.winnowFingerprintsDescriptor)
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftSparkExtensions.functions.foreach { case (name, cls, make) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+        GraftSparkExtensions.builder(name, make)))
+    }
 }
 
 object GraftSparkExtensions {
 
-  private def parseNodesBuilder(args: Seq[Expression]): Expression = {
-    require(args.length == 1, s"parse_nodes takes 1 argument, got ${args.length}")
-    ParseHtmlNodes(args.head)
+  /** (SQL name, expression class, constructor) of every native function:
+    * the one table both the injection and the [[register]] path install.
+    */
+  private val functions: Seq[(String, Class[_], Expression => Expression)] = Seq(
+    ("parse_nodes", classOf[ParseHtmlNodes], ParseHtmlNodes(_)),
+    ("ws_token_count", classOf[WsTokenCount], WsTokenCount(_)),
+    ("bpeish_token_count", classOf[BpeishTokenCount], BpeishTokenCount(_)),
+    ("simhash64", classOf[SimHash64], SimHash64(_)),
+    ("winnow_fingerprints", classOf[WinnowFingerprints], WinnowFingerprints(_)))
+
+  private def builder(name: String, make: Expression => Expression)
+                     (args: Seq[Expression]): Expression = {
+    require(args.length == 1, s"$name takes 1 argument, got ${args.length}")
+    make(args.head)
   }
-
-  private[catalyst] val parseNodesDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("parse_nodes"),
-      new ExpressionInfo(classOf[ParseHtmlNodes].getName, "parse_nodes"),
-      parseNodesBuilder)
-
-  private def wsTokenCountBuilder(args: Seq[Expression]): Expression = {
-    require(args.length == 1, s"ws_token_count takes 1 argument, got ${args.length}")
-    WsTokenCount(args.head)
-  }
-
-  private[catalyst] val wsTokenCountDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("ws_token_count"),
-      new ExpressionInfo(classOf[WsTokenCount].getName, "ws_token_count"),
-      wsTokenCountBuilder)
-
-  private def bpeishTokenCountBuilder(args: Seq[Expression]): Expression = {
-    require(args.length == 1, s"bpeish_token_count takes 1 argument, got ${args.length}")
-    BpeishTokenCount(args.head)
-  }
-
-  private[catalyst] val bpeishTokenCountDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("bpeish_token_count"),
-      new ExpressionInfo(classOf[BpeishTokenCount].getName, "bpeish_token_count"),
-      bpeishTokenCountBuilder)
-
-  private def simHash64Builder(args: Seq[Expression]): Expression = {
-    require(args.length == 1, s"simhash64 takes 1 argument, got ${args.length}")
-    SimHash64(args.head)
-  }
-
-  private[catalyst] val simHash64Descriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      simHash64Builder)
-
-  private def winnowFingerprintsBuilder(args: Seq[Expression]): Expression = {
-    require(args.length == 1, s"winnow_fingerprints takes 1 argument, got ${args.length}")
-    WinnowFingerprints(args.head)
-  }
-
-  private[catalyst] val winnowFingerprintsDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("winnow_fingerprints"),
-      new ExpressionInfo(classOf[WinnowFingerprints].getName, "winnow_fingerprints"),
-      winnowFingerprintsBuilder)
 
   /** Install into an already-built session (driver-owned sessions). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "parse_nodes", parseNodesBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ws_token_count", wsTokenCountBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpeish_token_count", bpeishTokenCountBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", simHash64Builder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_fingerprints", winnowFingerprintsBuilder, "scala_udf")
-  }
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (name, _, make) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, builder(name, make), "scala_udf")
+    }
 
   /** DataFrame-side surface: `df.select(parse_nodes(col("text")))` plans a
     * Generate over the native expression (no UDF, no array encode).

@@ -1,5 +1,6 @@
 package graft.spark
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Chunking contract: bounded size, exact overlap, full coverage —
@@ -11,6 +12,36 @@ class ChunkingSpec extends SparkTestBase {
   private def mkDocs(texts: Seq[String]) =
     spark.createDataset(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) })
       .toDF("doc_id", "text")
+
+  // The three retired chunkers, rebuilt from the two kept forms so their
+  // contracts stay pinned on the same inputs and shapes:
+  //  - chunkCounts: the walk's (doc_id, chunk_idx, n_tokens)
+  //  - chunkOffsetsOnly: the declarative reference for the walk —
+  //    chunk()'s sizes, with char_start measured as the joined length
+  //    of the chunk_idx * step words before the window plus one space
+  //  - chunkWithOffsets: chunk()'s text with the walk's char_start; a
+  //    window either form lacks leaves a null that fails the decode
+  private def chunkCounts(docs: DataFrame, mt: Int, ov: Int) =
+    Chunking.chunkOffsetsMapped(docs, mt, ov)
+      .select(col("doc_id"), col("chunk_idx"), col("n_tokens"))
+
+  private def chunkOffsetsOnly(docs: DataFrame, mt: Int, ov: Int) =
+    Chunking.chunk(docs, mt, ov)
+      .join(docs.select(col("doc_id"), split(coalesce(col("text"), lit("")), " ").as("w")),
+        Seq("doc_id"))
+      .select(col("doc_id"), col("chunk_idx"), col("n_tokens"),
+        length(col("chunk_text")).cast("long").as("chunk_len"),
+        when(col("chunk_idx") === 0, lit(0L)).otherwise(
+          length(array_join(slice(col("w"), lit(1), col("chunk_idx") * (mt - ov)), " "))
+            .cast("long") + 1L).as("char_start"))
+
+  private def chunkWithOffsets(docs: DataFrame, maxTokens: Int, overlap: Int) =
+    Chunking.chunk(docs, maxTokens, overlap)
+      .join(Chunking.chunkOffsetsMapped(docs, maxTokens, overlap)
+          .select(col("doc_id"), col("chunk_idx"), col("char_start")),
+        Seq("doc_id", "chunk_idx"), "full_outer")
+      .select(col("doc_id"), col("chunk_idx"), col("chunk_text"), col("n_tokens"),
+        col("char_start"))
 
   test("every word covered, chunks bounded, consecutive chunks share exactly `overlap` words") {
     val rnd = new scala.util.Random(5)
@@ -56,32 +87,6 @@ class ChunkingSpec extends SparkTestBase {
     assert(out.map(_._4).toSeq == Seq(4, 4, 2))
   }
 
-  test("chunkWithOffsets: chunk_text == substring(text, char_start+1, len) for every chunk") {
-    val rnd = new scala.util.Random(11)
-    // variable-width words (and embedded non-space whitespace, which
-    // split(" ") keeps inside words) so char offsets differ from any
-    // token-count arithmetic
-    val texts = Seq.tabulate(25)(i =>
-      Seq.fill(rnd.nextInt(40) + 1)("x" * (1 + rnd.nextInt(6)) +
-        (if (rnd.nextInt(5) == 0) "\nY" else "")).mkString(" ")) ++
-      Seq("", "one", "a b c")
-    val out = Chunking.chunkWithOffsets(mkDocs(texts), maxTokens = 7, overlap = 2)
-      .as[(Long, Int, String, Int, Long)].collect()
-    assert(out.nonEmpty)
-    out.foreach { case (d, ci, ct, nt, cs) =>
-      val t = texts(d.toInt)
-      assert(t.substring(cs.toInt, cs.toInt + ct.length) == ct,
-        s"doc $d chunk $ci: offset $cs wrong")
-      // the offset is preceded by a space or starts the doc
-      assert(cs == 0L || t.charAt(cs.toInt - 1) == ' ', s"doc $d chunk $ci")
-      assert(nt == ct.split(" ", -1).length)
-    }
-    // identical chunking to chunk() itself (offsets are additive only)
-    val plain = Chunking.chunk(mkDocs(texts), maxTokens = 7, overlap = 2)
-      .as[(Long, Int, String, Int)].collect().toSet
-    assert(out.map(r => (r._1, r._2, r._3, r._4)).toSet == plain)
-  }
-
   test("wordCount == size(split(t, ' ')) incl. empties, runs, null") {
     val texts = Seq("", " ", "  ", "a", "a b", "a  b", " a b ", "a\nb c",
       "x" * 50, ("w " * 30).trim, "é ü  ß")
@@ -102,13 +107,40 @@ class ChunkingSpec extends SparkTestBase {
     }
   }
 
+  test("chunkWithOffsets: chunk_text == substring(text, char_start+1, len) for every chunk") {
+    val rnd = new scala.util.Random(11)
+    // variable-width words (and embedded non-space whitespace, which
+    // split(" ") keeps inside words) so char offsets differ from any
+    // token-count arithmetic
+    val texts = Seq.tabulate(25)(i =>
+      Seq.fill(rnd.nextInt(40) + 1)("x" * (1 + rnd.nextInt(6)) +
+        (if (rnd.nextInt(5) == 0) "\nY" else "")).mkString(" ")) ++
+      Seq("", "one", "a b c")
+    val out = chunkWithOffsets(mkDocs(texts), maxTokens = 7, overlap = 2)
+      .as[(Long, Int, String, Int, Long)].collect()
+    assert(out.nonEmpty)
+    out.foreach { case (d, ci, ct, nt, cs) =>
+      val t = texts(d.toInt)
+      assert(t.substring(cs.toInt, cs.toInt + ct.length) == ct,
+        s"doc $d chunk $ci: offset $cs wrong")
+      // the offset is preceded by a space or starts the doc
+      assert(cs == 0L || t.charAt(cs.toInt - 1) == ' ', s"doc $d chunk $ci")
+      assert(nt == ct.split(" ", -1).length)
+    }
+    // identical chunking to chunk() itself (offsets are additive only)
+    val plain = Chunking.chunk(mkDocs(texts), maxTokens = 7, overlap = 2)
+      .as[(Long, Int, String, Int)].collect().toSet
+    assert(out.map(r => (r._1, r._2, r._3, r._4)).toSet == plain)
+    assert(out.length == plain.size)
+  }
+
   test("chunkCounts == chunk projected to (id, idx, n_tokens)") {
     val rnd = new scala.util.Random(23)
     val texts = Seq.tabulate(30)(i =>
       Seq.fill(rnd.nextInt(70) + 1)("w" * (1 + rnd.nextInt(4))).mkString(" ")) ++
       Seq("", "one", "a b c", "a  b", " lead", "trail ")
     for ((mt, ov) <- Seq((8, 3), (4, 0), (16, 4))) {
-      val slim = Chunking.chunkCounts(mkDocs(texts), mt, ov)
+      val slim = chunkCounts(mkDocs(texts), mt, ov)
         .as[(Long, Int, Int)].collect().sortBy(r => (r._1, r._2)).toSeq
       val full = Chunking.chunk(mkDocs(texts), mt, ov)
         .select(col("doc_id"), col("chunk_idx"), col("n_tokens"))
@@ -124,9 +156,9 @@ class ChunkingSpec extends SparkTestBase {
         (if (rnd.nextInt(5) == 0) "\nY" else "")).mkString(" ")) ++
       Seq("", "one", "a b c", "a  b ", "é ü ß")
     for ((mt, ov) <- Seq((7, 2), (16, 4), (3, 0))) {
-      val slim = Chunking.chunkOffsetsOnly(mkDocs(texts), mt, ov)
+      val slim = chunkOffsetsOnly(mkDocs(texts), mt, ov)
         .as[(Long, Int, Int, Long, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
-      val full = Chunking.chunkWithOffsets(mkDocs(texts), mt, ov)
+      val full = chunkWithOffsets(mkDocs(texts), mt, ov)
         .select(col("doc_id"), col("chunk_idx"), col("n_tokens"),
           length(col("chunk_text")).cast("long"), col("char_start"))
         .as[(Long, Int, Int, Long, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
@@ -150,7 +182,7 @@ class ChunkingSpec extends SparkTestBase {
     for ((mt, ov) <- Seq((7, 2), (16, 4), (3, 0), (2, 1))) {
       val mapped = Chunking.chunkOffsetsMapped(withNull, mt, ov)
         .as[(Long, Int, Int, Long, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
-      val decl = Chunking.chunkOffsetsOnly(withNull, mt, ov)
+      val decl = chunkOffsetsOnly(withNull, mt, ov)
         .as[(Long, Int, Int, Long, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
       assert(mapped == decl, s"diverged at ($mt, $ov)")
     }
@@ -170,10 +202,10 @@ class ChunkingSpec extends SparkTestBase {
     for ((mt, ov) <- Seq((3, 1), (2, 0))) {
       val mapped = Chunking.chunkOffsetsMapped(docs, mt, ov)
       val rows = mapped.as[(Long, Int, Int, Long, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
-      val decl = Chunking.chunkOffsetsOnly(docs, mt, ov)
+      val decl = chunkOffsetsOnly(docs, mt, ov)
         .as[(Long, Int, Int, Long, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
       assert(rows == decl, s"diverged at ($mt, $ov)")
-      val texted = Chunking.chunkWithOffsets(docs, mt, ov).select($"doc_id", $"chunk_idx", $"chunk_text")
+      val texted = Chunking.chunk(docs, mt, ov).select($"doc_id", $"chunk_idx", $"chunk_text")
       val bad = mapped.join(docs, "doc_id").join(texted, Seq("doc_id", "chunk_idx"))
         .filter(expr("substring(text, char_start + 1, chunk_len)") =!= $"chunk_text" ||
           length($"chunk_text") =!= $"chunk_len")
@@ -191,17 +223,7 @@ class ChunkingSpec extends SparkTestBase {
   }
 
   test("slim chunkers stay shuffle-free projections") {
-    for (df <- Seq(Chunking.chunkCounts(mkDocs(Seq("a b c d e")), 3, 1),
-                   Chunking.chunkOffsetsOnly(mkDocs(Seq("a b c d e")), 3, 1),
-                   Chunking.chunkOffsetsMapped(mkDocs(Seq("a b c d e")), 3, 1))) {
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), plan)
-      assert(!plan.contains("BatchEvalPython") && !plan.contains("UDF"), plan)
-    }
-  }
-
-  test("chunkWithOffsets stays a shuffle-free projection") {
-    val plan = Chunking.chunkWithOffsets(mkDocs(Seq("a b c d e")), 3, 1)
+    val plan = Chunking.chunkOffsetsMapped(mkDocs(Seq("a b c d e")), 3, 1)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)
     assert(!plan.contains("BatchEvalPython") && !plan.contains("UDF"), plan)

@@ -52,7 +52,16 @@ class GeneratorSpec extends SparkTestBase {
 
   test("SQL surface: LATERAL VIEW parse_nodes via extensions-built session") {
     // a genuinely separate session wired through SparkSessionExtensions
-    // (the spark-submit path: spark.sql.extensions=graft.spark.catalyst.GraftSparkExtensions)
+    // (the spark-submit path: spark.sql.extensions=graft.spark.catalyst.GraftSparkExtensions).
+    // With an active or default session set, getOrCreate() returns that
+    // session unchanged, so both are cleared first.
+    val page = "<div><a href='/x'>go</a><a href='/y'>back</a></div>"
+    val perFunction =
+      """SELECT ws_token_count(text), bpeish_token_count(text), simhash64(text),
+        |  (SELECT count(*) FROM turns_gen LATERAL VIEW winnow_fingerprints(text) f)
+        |FROM turns_gen""".stripMargin
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
     val s2 = SparkSession.builder()
       .master("local[2]")
       .appName("GeneratorSpecExt")
@@ -60,9 +69,9 @@ class GeneratorSpec extends SparkTestBase {
       .withExtensions(new GraftSparkExtensions)
       .getOrCreate()
     try {
+      assert(s2 ne spark, "the builder returned the suite's own session")
       import s2.implicits._
-      Seq((1, "<div><a href='/x'>go</a><a href='/y'>back</a></div>"))
-        .toDF("id", "text").createOrReplaceTempView("turns_gen")
+      Seq((1, page)).toDF("id", "text").createOrReplaceTempView("turns_gen")
       val hrefs = s2.sql(
         """SELECT n.node_id, n.params['href'] AS href
           |FROM turns_gen LATERAL VIEW parse_nodes(text) n
@@ -70,6 +79,13 @@ class GeneratorSpec extends SparkTestBase {
           |ORDER BY n.node_id""".stripMargin)
         .collect().map(_.getString(1)).toSeq
       assert(hrefs == Seq("/x", "/y"))
+      // the other four injected functions resolve there too, and agree
+      // with the same table installed through register()
+      val injected = s2.sql(perFunction).collect().toSeq
+      GraftSparkExtensions.register(spark)
+      spark.createDataFrame(Seq((1, page))).toDF("id", "text")
+        .createOrReplaceTempView("turns_gen")
+      assert(injected == spark.sql(perFunction).collect().toSeq)
     } finally {
       // do NOT close(): s2 shares the suite's SparkContext (local master,
       // getOrCreate) and stopping it would kill every later test's session.

@@ -1,5 +1,6 @@
 package graft.spark
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Next-fit packing contract: equals the sequential reference fold on
@@ -30,6 +31,8 @@ class PackingSpec extends SparkTestBase {
     } yield (d, c, "t", 1 + rnd.nextInt(25))
     val df = spark.createDataset(rnd.shuffle(rows)).toDF("doc_id", "chunk_idx", "chunk_text", "n_tokens")
     val got = Packing.packNextFit(df, cap, nShards = 4)
+      .select(col("shard"), col("doc_id"), col("chunk_idx"), col("n_tokens"),
+        col("seq_idx"), col("seq_pos"))
       .as[(Long, Long, Int, Int, Long, Int)].collect()
     assert(got.length == rows.length) // every chunk exactly once
     val byShard = got.groupBy(_._1)
@@ -55,31 +58,40 @@ class PackingSpec extends SparkTestBase {
     val docs = spark.createDataset((0L until 40L).map(d =>
         (d, Seq.fill(1 + rnd.nextInt(30))("x" * (1 + rnd.nextInt(7))).mkString(" "))))
       .toDF("doc_id", "text")
-    val chunks = Chunking.chunkWithOffsets(docs, maxTokens = 4, overlap = 1)
+    val chunks = Chunking.chunkOffsetsMapped(docs, maxTokens = 4, overlap = 1)
+    // the unfused derivation the fold replaced: join the assignments back
+    // to the chunk lengths and sum len + sep (one char) over the earlier
+    // members of each (shard, seq_idx) in seq_pos order
+    val before = Window.partitionBy(col("shard"), col("seq_idx"))
+      .orderBy(col("seq_pos")).rowsBetween(Window.unboundedPreceding, -1)
     for (cap <- Seq(6, 10)) {
-      val plain = Packing.packNextFit(chunks, cap, nShards = 4)
-      val fused = Packing.packNextFitWithOffsets(chunks, cap, nShards = 4)
-      // same assignment columns row-for-row
-      assert(fused.drop("seq_off").as[(Long, Long, Int, Int, Long, Int)]
-          .collect().sortBy(r => (r._2, r._3)).toSeq ==
-        plain.as[(Long, Long, Int, Int, Long, Int)]
-          .collect().sortBy(r => (r._2, r._3)).toSeq, s"cap $cap assignments")
-      // seq_off == sequenceSpans' span_start per (doc, chunk)
-      val offs = Packing.sequenceSpans(chunks, plain)
-        .select(col("doc_id"), col("chunk_idx"), col("span_start"))
-        .as[(Long, Int, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
-      val got = fused.select(col("doc_id"), col("chunk_idx"), col("seq_off"))
-        .as[(Long, Int, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
-      assert(got == offs, s"cap $cap offsets")
+      val fused = Packing.packNextFit(chunks, cap, nShards = 4)
+      val unfused = fused.drop("seq_off", "seq_end")
+        .join(chunks.select(col("doc_id"), col("chunk_idx"), col("chunk_len")),
+          Seq("doc_id", "chunk_idx"))
+        .withColumn("seq_off", coalesce(sum(col("chunk_len") + 1L).over(before), lit(0L)))
+        .withColumn("seq_end", col("seq_off") + col("chunk_len"))
+        .drop("chunk_len")
+      assert(fused.count() == chunks.count(), s"cap $cap assignments")
+      // seq_off/seq_end == the derived span per (doc, chunk), and
+      // sequenceSpans projects exactly that span
+      def offsets(df: org.apache.spark.sql.DataFrame, start: String, end: String) =
+        df.select(col("doc_id"), col("chunk_idx"), col(start), col(end))
+          .as[(Long, Int, Long, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
+      val want = offsets(unfused, "seq_off", "seq_end")
+      assert(want.size == chunks.count(), s"cap $cap derived")
+      assert(offsets(fused, "seq_off", "seq_end") == want, s"cap $cap offsets")
+      assert(offsets(Packing.sequenceSpans(fused), "span_start", "span_end") == want,
+        s"cap $cap spans")
       // and the remap consumes seq_off identically to the derived path
       val spans = spark.createDataset((0L until 40L).flatMap(d =>
           Seq.fill(rnd.nextInt(3))({ val s = rnd.nextInt(40); (d, s.toLong, (s + 1 + rnd.nextInt(20)).toLong) })))
         .toDF("doc_id", "span_start", "span_end")
       val viaFused = Packing.remapSpansToSequences(chunks, fused, spans)
         .as[(Long, Long, Int, Long, Int, Long, Long)].collect().sorted.toSeq
-      val viaPlain = Packing.remapSpansToSequences(chunks, plain, spans)
+      val viaUnfused = Packing.remapSpansToSequences(chunks, unfused, spans)
         .as[(Long, Long, Int, Long, Int, Long, Long)].collect().sorted.toSeq
-      assert(viaFused == viaPlain, s"cap $cap remap")
+      assert(viaFused == viaUnfused, s"cap $cap remap")
     }
   }
 
@@ -137,46 +149,57 @@ class PackingSpec extends SparkTestBase {
 
   test("sequenceSpans: substring(seq_text, span) == chunk_text; spans tile seq_text with sep gaps") {
     val rnd = new scala.util.Random(29)
-    // variable-width words so char spans differ from token arithmetic
+    // variable-width words so char spans differ from token arithmetic;
+    // several docs per shard
     val docs = spark.createDataset((0L until 12L).map(d =>
         (d, (0 until (3 + rnd.nextInt(20)))
           .map(i => "w" * (1 + rnd.nextInt(7)) + i).mkString(" "))))
       .toDF("doc_id", "text")
     val chunks = Chunking.chunk(docs, maxTokens = 4, overlap = 1)
-    val asg = Packing.packNextFit(chunks, capacity = 6, shard = pmod(col("doc_id"), lit(3)))
-    val spans = Packing.sequenceSpans(chunks, asg)
-    val seqs = Packing.sequences(chunks, asg)
-    // the invariant the operator exists for: each span cuts exactly its
-    // chunk's text out of the materialized sequence
-    val joined = spans
-      .join(seqs.select(col("shard"), col("seq_idx"), col("seq_text")), Seq("shard", "seq_idx"))
-      .join(chunks.select(col("doc_id"), col("chunk_idx"), col("chunk_text")),
-        Seq("doc_id", "chunk_idx"))
-    assert(joined.filter(
-      substring(col("seq_text"), (col("span_start") + 1).cast("int"),
-        (col("span_end") - col("span_start")).cast("int")) =!= col("chunk_text")).count() == 0)
-    // tiling: first span starts at 0, consecutive spans gap by len(sep)=1,
-    // last span ends at length(seq_text) — checked per sequence
-    val tiling = spans.groupBy(col("shard"), col("seq_idx"))
-      .agg(min(col("span_start")).as("first_start"),
-        max(col("span_end")).as("last_end"),
-        sum(col("span_end") - col("span_start")).as("covered"),
-        count(lit(1)).as("n"))
-      .join(seqs.select(col("shard"), col("seq_idx"),
-        length(col("seq_text")).cast("long").as("seq_len")), Seq("shard", "seq_idx"))
-    assert(tiling.filter(col("first_start") =!= 0L).count() == 0)
-    assert(tiling.filter(col("last_end") =!= col("seq_len")).count() == 0)
-    assert(tiling.filter(col("covered") + col("n") - 1L =!= col("seq_len")).count() == 0)
-    // every assignment row got exactly one span
-    assert(spans.count() == asg.count())
     // a SLIM chunk relation (chunk_len instead of chunk_text — the
-    // checkpoint shape q_masked_pipeline shares across consumers)
-    // yields byte-identical spans
+    // checkpoint shape q_masked_pipeline packs) must pack to the same spans
     val slim = chunks.select(col("doc_id"), col("chunk_idx"), col("n_tokens"),
       length(col("chunk_text")).cast("long").as("chunk_len"))
-    val slimSpans = Packing.sequenceSpans(slim, asg)
-    assert(slimSpans.exceptAll(spans).count() == 0 &&
-      spans.exceptAll(slimSpans).count() == 0)
+    for (cap <- Seq(6, 10)) {
+      val byRelation = for (rel <- Seq(chunks, slim)) yield {
+        val asg = Packing.packNextFit(rel, capacity = cap, shard = pmod(col("doc_id"), lit(3)))
+        val spans = Packing.sequenceSpans(asg)
+        val seqs = Packing.sequences(chunks, asg)
+        // the invariant the operator exists for: each span cuts exactly
+        // its chunk's text out of the materialized sequence
+        val joined = spans
+          .join(seqs.select(col("shard"), col("seq_idx"), col("seq_text")), Seq("shard", "seq_idx"))
+          .join(chunks.select(col("doc_id"), col("chunk_idx"), col("chunk_text")),
+            Seq("doc_id", "chunk_idx"))
+        assert(joined.filter(
+          substring(col("seq_text"), (col("span_start") + 1).cast("int"),
+            (col("span_end") - col("span_start")).cast("int")) =!= col("chunk_text"))
+          .count() == 0, s"cap $cap")
+        // tiling: first span starts at 0, consecutive spans gap by
+        // len(sep)=1, last span ends at length(seq_text) — per sequence
+        val tiling = spans.groupBy(col("shard"), col("seq_idx"))
+          .agg(min(col("span_start")).as("first_start"),
+            max(col("span_end")).as("last_end"),
+            sum(col("span_end") - col("span_start")).as("covered"),
+            count(lit(1)).as("n"))
+          .join(seqs.select(col("shard"), col("seq_idx"),
+            length(col("seq_text")).cast("long").as("seq_len")), Seq("shard", "seq_idx"))
+        assert(tiling.filter(col("first_start") =!= 0L).count() == 0, s"cap $cap")
+        assert(tiling.filter(col("last_end") =!= col("seq_len")).count() == 0, s"cap $cap")
+        assert(tiling.filter(col("covered") + col("n") - 1L =!= col("seq_len")).count() == 0,
+          s"cap $cap")
+        // every chunk got exactly one span
+        assert(spans.count() == chunks.count(), s"cap $cap")
+        spans.collect().toSet
+      }
+      assert(byRelation.head == byRelation(1), s"cap $cap: slim and text relations differ")
+    }
+  }
+
+  test("packNextFit rejects a chunk relation with neither chunk_len nor chunk_text") {
+    val df = spark.createDataset(Seq((1L, 0, 3))).toDF("doc_id", "chunk_idx", "n_tokens")
+    val e = intercept[IllegalArgumentException](Packing.packNextFit(df, 10))
+    assert(e.getMessage.contains("chunk_len"))
   }
 
   test("remapSpansToSequences: masks cut assistant text exactly; overlap duplicates, never loses") {
@@ -208,11 +231,13 @@ class PackingSpec extends SparkTestBase {
     val docText = docsData.map { case (d, ts) => d -> ts.map(_._2).mkString("\n") }.toMap
 
     for (overlap <- Seq(0, 2)) {
-      val chunks = Chunking.chunkWithOffsets(docs, maxTokens = 5, overlap = overlap)
+      // the q_masked_pipeline shape: the slim chunk walk feeds the fold
+      // and the remap; the text chunks only materialize seq_text
+      val chunks = Chunking.chunkOffsetsMapped(docs, maxTokens = 5, overlap = overlap)
       val asg = Packing.packNextFit(chunks, capacity = 8, shard = pmod(col("doc_id"), lit(2)))
-      val seqText = Packing.sequences(chunks, asg)
+      val seqText = Packing.sequences(Chunking.chunk(docs, maxTokens = 5, overlap = overlap), asg)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getAs[String]("seq_text")).toMap
-      val offs = Packing.sequenceSpans(chunks, asg)
+      val offs = Packing.sequenceSpans(asg)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)) ->
           (r.getLong(3), r.getInt(4), r.getLong(5))).toMap // -> (doc, chunk, seq_off)
       val chunkStart = chunks.collect()
@@ -239,7 +264,7 @@ class PackingSpec extends SparkTestBase {
       // everything the trainer actually reads, nothing it doesn't
       val windows = chunks.collect()
         .map(r => (r.getLong(0), r.getAs[Long]("char_start"),
-          r.getAs[Long]("char_start") + r.getAs[String]("chunk_text").length))
+          r.getAs[Long]("char_start") + r.getAs[Long]("chunk_len")))
         .groupBy(_._1)
       val maskPositionsByDoc = masks.groupBy(_._4).map { case (d, ms) =>
         d -> ms.map { case (sh, si, sp, _, ci, s, e) =>
@@ -268,27 +293,20 @@ class PackingSpec extends SparkTestBase {
     }
   }
 
-  test("sequenceSpans computes length under the join: no text column above it") {
-    val df = spark.createDataset(Seq((1L, "a b c d e f")))
+  test("sequenceSpans adds no Join, Window or extra Exchange over packNextFit") {
+    // the q_packed_spans composition: the spans are a projection of the
+    // fold's own seq_off/seq_end, not a join back to the chunks plus a
+    // (shard, seq_idx) window exchange
+    val df = spark.createDataset(Seq((1L, "a b c d e f"), (2L, "g h i")))
       .toDF("doc_id", "text")
-    val chunks = Chunking.chunk(df, maxTokens = 2, overlap = 0)
-    val asg = Packing.packNextFit(chunks, capacity = 4, shard = col("doc_id"))
-    val plan = Packing.sequenceSpans(chunks, asg)
-      .queryExecution.optimizedPlan
-    // walk the logical plan: once a Window node appears, no operator at
-    // or above it may output a string-typed column — the text was
-    // reduced to its length below the join, so only (ids, len) cross
-    // the window's exchange
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    val windowAndAbove = plan.collect {
-      case n if n.collectFirst { case w: LWindow => w }.isDefined => n
-    }
-    assert(windowAndAbove.nonEmpty, plan.toString)
-    windowAndAbove.foreach { n =>
-      assert(!n.output.exists(_.dataType ==
-        org.apache.spark.sql.types.StringType),
-        s"string column crosses/above the window:\n$plan")
-    }
+    val asg = Packing.packNextFit(Chunking.chunk(df, maxTokens = 2, overlap = 0),
+      capacity = 4, shard = col("doc_id"))
+    def exchanges(plan: String) =
+      plan.linesIterator.count(l => l.contains("Exchange") && !l.contains("Reused"))
+    val base = asg.queryExecution.executedPlan.toString
+    val plan = Packing.sequenceSpans(asg).queryExecution.executedPlan.toString
+    assert(exchanges(plan) == exchanges(base) && exchanges(plan) == 1, plan)
+    assert(!plan.contains("Join") && !plan.contains("Window"), plan)
   }
 
   test("plans as ONE exchange (shard repartition) + in-partition sort") {
