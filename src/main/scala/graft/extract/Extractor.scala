@@ -1,18 +1,18 @@
 package graft.extract
 
 import graft.parser.{Ascii, HtmlNode, HtmlParser}
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.immutable.ArraySeq
 
-/** A selected content span in the (BOM-stripped) source document:
-  * [start, end) character offsets plus a kind tag.
+/** Per-turn extraction result (the `north_rule` output shape: extracted
+  * text + spans + parse metrics). Spans are held packed, as the extractor
+  * produced them (SpanCodec); `spans` is the struct view. The arrays are
+  * wrapped so results compare by value.
   */
-final case class Span(start: Int, end: Int, kind: String)
-
-/** Per-turn extraction result (the `north_rule` output shape:
-  * extracted text + spans + parse metrics).
-  */
-final case class ExtractResult(text: String, spans: Seq[Span],
-                               nNodes: Int, nErrors: Int)
+final case class ExtractResult(text: String, spanPos: ArraySeq.ofLong,
+                               spanKind: ArraySeq.ofByte,
+                               nNodes: Int, nErrors: Int) {
+  def spans: Seq[SpanRec] = SpanCodec.unpack(spanPos.unsafeArray, spanKind.unsafeArray)
+}
 
 /** Deterministic main-content extraction over the DHTMLParser-semantics
   * DOM: boilerplate-subtree exclusion + block segmentation + text/link
@@ -29,6 +29,11 @@ final case class ExtractResult(text: String, spans: Seq[Span],
   *    linkChars/totalChars <= MaxLinkDensity;
   *  - extracted text = kept blocks' stripped text joined with '\n';
   *    spans = the kept blocks' contributing text-node source ranges.
+  *
+  * Spans are packed where they are produced: each text node's span goes
+  * straight into one SpanCodec.Builder, and a rejected block's spans are
+  * dropped by truncating the builder back to the block's first span, so
+  * no per-span or per-block object is built.
   */
 object Extractor {
 
@@ -48,29 +53,27 @@ object Extractor {
     "h6", "hr", "html", "li", "main", "ol", "p", "pre", "section", "table",
     "tbody", "td", "tfoot", "th", "thead", "tr", "ul")
 
-  private final class Block {
-    val sb = new java.lang.StringBuilder(64)
-    val spans = new ArrayBuffer[Span]()
-    var linkChars = 0
-    def totalChars: Int = sb.length
-    def reset(): Unit = { sb.setLength(0); spans.clear(); linkChars = 0 }
-  }
-
-  private final case class KeptBlock(text: String, spans: Seq[Span])
+  private val TextKind = SpanCodec.kindByte("text")
 
   def extract(html: String): ExtractResult = {
     val (dom, stats) = HtmlParser.parseWithStats(html)
 
-    val kept = new ArrayBuffer[KeptBlock]()
-    val cur = new Block // reused across blocks (flush() is the hot call)
+    val text = new java.lang.StringBuilder()
+    val spans = new SpanCodec.Builder
+    // the current block, reused across blocks (flush() is the hot call)
+    val block = new java.lang.StringBuilder(64)
+    var linkChars = 0
+    var firstSpan = 0 // spans.length when the block began
 
     def flush(): Unit = {
-      if (cur.totalChars > 0) {
-        val stripped = Ascii.strip(cur.sb.toString)
-        val density = cur.linkChars.toDouble / cur.totalChars.toDouble
-        if (stripped.length >= MinBlockChars && density <= MaxLinkDensity)
-          kept += KeptBlock(stripped, cur.spans.toSeq)
-        cur.reset()
+      if (block.length > 0) {
+        val stripped = Ascii.strip(block.toString)
+        val density = linkChars.toDouble / block.length.toDouble
+        if (stripped.length >= MinBlockChars && density <= MaxLinkDensity) {
+          if (text.length > 0) text.append('\n') // kept blocks are never empty
+          text.append(stripped)
+        } else spans.truncate(firstSpan)
+        block.setLength(0); linkChars = 0; firstSpan = spans.length
       }
     }
 
@@ -80,10 +83,10 @@ object Extractor {
         else if (!c.isTag) {
           val raw = c.rawElement
           if (Ascii.strip(raw).nonEmpty) {
-            cur.sb.append(raw)
+            block.append(raw)
             if (c.srcOffset >= 0)
-              cur.spans += Span(c.srcOffset, c.srcOffset + raw.length, "text")
-            if (inLink) cur.linkChars += raw.length
+              spans.add(c.srcOffset, c.srcOffset + raw.length, TextKind)
+            if (inLink) linkChars += raw.length
           }
         } else if (c.isEndTag) ()
         else {
@@ -102,8 +105,8 @@ object Extractor {
     walk(dom, inLink = false)
     flush()
 
-    val text = kept.map(_.text).mkString("\n")
-    val spans = kept.flatMap(_.spans).toSeq
-    ExtractResult(text, spans, stats.nNodes, stats.forcedNonpair + stats.droppedEndtags)
+    ExtractResult(text.toString, new ArraySeq.ofLong(spans.positions),
+      new ArraySeq.ofByte(spans.kindBytes),
+      stats.nNodes, stats.forcedNonpair + stats.droppedEndtags)
   }
 }

@@ -317,7 +317,7 @@ object Dedup {
     // contaminationFrom consults the corpus fingerprints three times
     // (doc-freq ranking, candidate postings, verification) — declarative,
     // each consumer re-scans AND re-winnows the corpus (same plan-copy
-    // effect as connectedComponents' edges; measured 7.2 -> 3.9 s on the
+    // effect as symClosure's edges; measured 7.2 -> 3.9 s on the
     // q_decontaminated composition at sf0.1). Materialize the bounded
     // ids-only (doc_id, fingerprint) relation once; at corpus scale use
     // [[contaminationAgainstIndex]], where the persisted bucketed index
@@ -435,54 +435,22 @@ object Dedup {
 
   // ===== near-dup GROUP resolution (round 5) ===============================
 
-  /** Connected components over an undirected edge list (a, b) by
-    * hash-min label propagation: the symmetric edge closure gets a
-    * self-loop per vertex, so each iteration is exactly `join labels on
-    * src -> min(comp) per dst` — a linear chain of `iters`
-    * join+aggregate stages over ONE materialized edge relation.
+  /** Symmetric edge closure of an undirected edge list (a, b), with a
+    * self-loop per vertex, MATERIALIZED (localCheckpoint) — the one
+    * relation every hash-min propagation step scans. The self-loops make
+    * each step exactly `join labels on src -> min(comp) per dst`.
     *
-    * The symmetric edge closure is materialized (localCheckpoint)
-    * before iterating — deliberately, and it matters: a purely
-    * declarative chain re-embeds the caller's whole upstream pipeline
-    * (here LSH banding -> trigram verify) once per reference, ~4 copies
-    * per iteration, and AQE re-optimizes each copy separately so
-    * exchange reuse does NOT collapse them — the upstream pipeline
-    * re-executes tens of times (measured on the q_dedup_corpus
-    * composition at sf0.01: 95-113 s declarative vs ~3 s materialized).
-    * The materialization is bounded by 2x the verified-pair count plus
-    * the vertex count (two id columns, no text), lives on the
-    * executors, and is released with the result — the standard
-    * checkpoint step of distributed CC (GraphX/GraphFrames checkpoint
-    * for exactly this lineage/plan-blowup reason).
-    *
-    * Hash-min propagates the minimum label one hop per iteration, so
-    * `iters` >= the largest component's diameter guarantees convergence.
-    * Near-dup components are small dense clusters (sibling/boilerplate
-    * families), so the default 8 covers diameter-8 chains — far beyond
-    * any real near-dup cluster; verify with [[unstableEdges]] (empty iff
-    * converged) rather than trusting the bound silently. At 10^12-row
-    * scale swap in the large-star/small-star contraction if components
-    * with huge diameters appear; for dedup graphs they do not.
-    *
-    * Returns (id, comp) — comp = min reachable vertex id within `iters`
-    * hops.
-    */
-  def connectedComponents(edges: DataFrame, iters: Int = 8): DataFrame = {
-    require(iters > 0, s"iters must be positive, got $iters")
-    val sym = symClosure(edges)
-    var labels = initLabels(sym)
-    var i = 0
-    while (i < iters) {
-      labels = propagateMin(sym, labels)
-      i += 1
-    }
-    labels
-  }
-
-  /** Symmetric edge closure with self-loops, MATERIALIZED — the one
-    * relation every propagation step scans (see the
-    * [[connectedComponents]] Scaladoc for why the checkpoint is
-    * load-bearing). Bounded at 2|E| + |V| two-long-column rows.
+    * The checkpoint is deliberate, and it matters: a purely declarative
+    * chain re-embeds the caller's whole upstream pipeline (here LSH
+    * banding -> trigram verify) once per reference, ~4 copies per
+    * iteration, and AQE re-optimizes each copy separately so exchange
+    * reuse does NOT collapse them — the upstream pipeline re-executes
+    * tens of times (measured on the q_dedup_corpus composition at
+    * sf0.01: 95-113 s declarative vs ~3 s materialized). The
+    * materialization is bounded at 2|E| + |V| two-long-column rows (no
+    * text), lives on the executors, and is released with the result —
+    * the standard checkpoint step of distributed CC (GraphX/GraphFrames
+    * checkpoint for exactly this lineage/plan-blowup reason).
     */
   private def symClosure(edges: DataFrame): DataFrame = {
     val e = edges.select(col("a").as("src"), col("b").as("dst"))
@@ -507,18 +475,26 @@ object Dedup {
       .agg(min(col("comp")).as("comp"))
       .select(col("dst").as("id"), col("comp"))
 
-  /** [[connectedComponents]] with OBSERVED convergence instead of a
-    * trusted iteration bound: propagate in blocks of `blockIters` hops,
-    * materialize the labels, and stop as soon as no edge crosses two
-    * components (the [[unstableEdges]] predicate evaluated on the
-    * symmetric closure). Near-dup graphs converge in 1-2 hops (dense
-    * sibling/boilerplate families), so the common cost is ONE block plus
-    * one convergence count — measured 2-3x cheaper than the fixed
-    * 8-iteration chain at sf0.1 — while a pathological high-diameter
-    * graph keeps iterating up to `maxIters` and a non-converged exit
-    * THROWS rather than returning half-merged components (the GraphFrames
-    * / Pregel loop shape: driver-side counts between blocks, every
-    * iterated relation checkpointed so plans stay shallow).
+  /** Connected components over an undirected edge list (a, b) by
+    * hash-min label propagation over the materialized [[symClosure]],
+    * with OBSERVED convergence instead of a trusted iteration bound:
+    * propagate in blocks of `blockIters` hops, materialize the labels,
+    * and stop as soon as no edge crosses two components (the
+    * [[unstableEdges]] predicate evaluated on the symmetric closure).
+    * Hash-min moves the minimum label one hop per iteration, so a
+    * component needs as many hops as its diameter. Near-dup graphs
+    * converge in 1-2 hops (dense sibling/boilerplate families), so the
+    * common cost is ONE block plus one convergence count — measured 2-3x
+    * cheaper than a fixed 8-iteration chain at sf0.1 — while a
+    * pathological high-diameter graph keeps iterating up to `maxIters`
+    * and a non-converged exit THROWS rather than returning half-merged
+    * components (the GraphFrames / Pregel loop shape: driver-side counts
+    * between blocks, every iterated relation checkpointed so plans stay
+    * shallow). At 10^12-row scale swap in the large-star/small-star
+    * contraction if components with huge diameters appear; for dedup
+    * graphs they do not.
+    *
+    * Returns (id, comp) — comp = min vertex id of the component.
     */
   def connectedComponentsConverged(edges: DataFrame, blockIters: Int = 2,
                                    maxIters: Int = 32): DataFrame = {
@@ -545,10 +521,9 @@ object Dedup {
     labels
   }
 
-  /** Convergence check for [[connectedComponents]]: edges whose
+  /** Convergence check for [[connectedComponentsConverged]]: edges whose
     * endpoints were assigned different components. Empty iff the label
-    * propagation converged within its iteration bound — inspect instead
-    * of trusting the diameter argument (never fail silently).
+    * propagation has converged.
     */
   def unstableEdges(labels: DataFrame, edges: DataFrame): DataFrame =
     edges
@@ -669,7 +644,7 @@ object Dedup {
     // attach), and declaratively each consult would re-run the whole
     // exact tier (corpus md5 + two exchanges) — AQE re-optimizes each
     // copy, so exchange reuse does not collapse them (the
-    // connectedComponents edge lesson). The pinned relation is ids
+    // symClosure edge lesson). The pinned relation is ids
     // ONLY, bounded by the duplicate count; with it every `kept`
     // consult is one scan + one broadcastable anti-join.
     val exactLosers = ids.join(keep, Seq("h"))
@@ -733,7 +708,7 @@ object Dedup {
     // ranking, count-join postings); winnowed on the fly it would
     // re-scan + re-winnow the corpus per reference (AQE re-optimizes
     // each copy, so exchange reuse does not collapse them — same
-    // failure mode as connectedComponents' edges). Materialize it once:
+    // failure mode as symClosure's edges). Materialize it once:
     // bounded, ids-only (doc_id, fingerprint). At real corpus scale use
     // [[contaminationPartialAgainstIndex]] — there the corpus side is a
     // persisted bucketed table whose re-scan is cheap and pruned, and

@@ -1,6 +1,6 @@
 package graft.spark
 
-import graft.extract.Extractor
+import graft.extract.{Extractor, SpanCodec}
 import graft.parser.{HtmlNode, HtmlParser}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.udf
@@ -21,49 +21,67 @@ import org.apache.spark.sql.functions.udf
   */
 object HtmlFunctions {
 
-  /** Pre-order node numbering (the arena id assignment). */
-  private def numberPreOrder(root: HtmlNode): java.util.IdentityHashMap[HtmlNode, Integer] = {
-    val ids = new java.util.IdentityHashMap[HtmlNode, Integer]()
-    var next = 0
-    def number(n: HtmlNode): Unit = {
-      ids.put(n, next); next += 1
-      n.foreachChild(number) // lazy: never materializes a leaf's child buffer
-    }
-    number(root)
-    ids
+  /** One node as the arena walk reports it: its pre-order id, its
+    * parent's id (-1 for the root), its position among the parent's
+    * children, its depth, its kind (0=text 1=comment 2=tag 3=endtag, the
+    * reference classifier, dhtmlparser.d:287-351) and the ids of its
+    * endtag and opener (-1 when absent).
+    */
+  trait NodeVisitor {
+    def visit(n: HtmlNode, id: Int, parent: Int, pos: Int, depth: Int,
+              kind: Byte, endtagId: Int, openerId: Int): Unit
   }
 
-  /** DOM -> flat pre-order arena of NodeRow (ids replace pointers). */
-  def toRows(root: HtmlNode): Seq[NodeRow] =
-    toRowsWithIds(root, numberPreOrder(root))
-
-  private def toRowsWithIds(root: HtmlNode,
-                            ids: java.util.IdentityHashMap[HtmlNode, Integer]): Seq[NodeRow] = {
-
-    val out = Vector.newBuilder[NodeRow]
+  /** The arena walk (ids replace pointers) behind parse_html, find_nodes,
+    * dom_tag_nodes and the parse_nodes generator: numbers every node in
+    * pre-order first (endtag/opener links can point forward), then visits
+    * each node in pre-order. Returns the node -> id map.
+    */
+  def walkArena(root: HtmlNode, v: NodeVisitor): java.util.IdentityHashMap[HtmlNode, Integer] = {
+    val ids = new java.util.IdentityHashMap[HtmlNode, Integer]()
+    var next = 0
+    // hasChilds guards: a leaf (most nodes) allocates no child closure
+    def number(n: HtmlNode): Unit = {
+      ids.put(n, next); next += 1
+      if (n.hasChilds) n.foreachChild(number)
+    }
+    number(root)
+    def idOf(n: HtmlNode): Int = if (n == null) -1 else {
+      val i = ids.get(n); if (i == null) -1 else i.intValue
+    }
     def emit(n: HtmlNode, parent: Int, pos: Int, depth: Int): Unit = {
-      val id = ids.get(n)
+      val id = ids.get(n).intValue
       val kind: Byte =
         if (!n.isTag) 0
         else if (n.isComment) 1
         else if (n.isEndTag) 3
         else 2
-      val endId = if (n.endtag != null && ids.containsKey(n.endtag)) ids.get(n.endtag).intValue else -1
-      val opId = if (n.openertag != null && ids.containsKey(n.openertag)) ids.get(n.openertag).intValue else -1
+      v.visit(n, id, parent, pos, depth, kind, idOf(n.endtag), idOf(n.openertag))
+      if (n.hasChilds) {
+        var i = 0
+        n.foreachChild { c => emit(c, id, i, depth + 1); i += 1 }
+      }
+    }
+    emit(root, -1, 0, 0)
+    ids
+  }
+
+  /** DOM -> flat pre-order arena of NodeRow (rows(i).node_id == i), with
+    * the walk's id map. */
+  private def toRows(root: HtmlNode): (Vector[NodeRow], java.util.IdentityHashMap[HtmlNode, Integer]) = {
+    val out = Vector.newBuilder[NodeRow]
+    val ids = walkArena(root, (n, id, parent, pos, depth, kind, endId, opId) => {
       val pm: Map[String, String] = if (n.hasParams) n.params.toMap else Map.empty
       out += NodeRow(id, parent, pos, depth, kind, n.getTagName, n.rawElement,
         pm, n.isNonPairTag, endId, opId, n.srcOffset)
-      var i = 0
-      n.foreachChild { c => emit(c, id, i, depth + 1); i += 1 }
-    }
-    emit(root, -1, 0, 0)
-    out.result()
+    })
+    (out.result(), ids)
   }
 
   // ===== pure row-wise functions (also used by mapPartitions) =============
 
   def parseNodes(html: String): Seq[NodeRow] =
-    if (html == null) Seq.empty else toRows(HtmlParser.parseString(html))
+    if (html == null) Seq.empty else toRows(HtmlParser.parseString(html))._1
 
   /** The reference's generic `find(tag, params)` (dhtmlparser.d:150,
     * 623-647) as a SQL-facing function: DFS matches minus endtags, each
@@ -74,8 +92,7 @@ object HtmlFunctions {
   def findNodes(html: String, tag: String, params: Map[String, String]): Seq[NodeRow] = {
     if (html == null) return Seq.empty
     val dom = HtmlParser.parseString(html)
-    val ids = numberPreOrder(dom)
-    val rows = toRowsWithIds(dom, ids) // rows(i).node_id == i (pre-order)
+    val (rows, ids) = toRows(dom)
     val pm = if (params == null || params.isEmpty) null else params
     dom.find(tag, pm).map(n => rows(ids.get(n).intValue)).toSeq
   }
@@ -110,11 +127,6 @@ object HtmlFunctions {
     val hits = HtmlParser.parseString(html).find(tag)
     if (hits.isEmpty) null else hits.head.getContent
   }
-
-  /** getContent of every DFS match of `tag`, in document order. */
-  def getContentsOf(html: String, tag: String): Seq[String] =
-    if (html == null) Seq.empty
-    else HtmlParser.parseString(html).find(tag).map(_.getContent).toSeq
 
   /** Normalized tagToString of the first match of tag[key=value]. */
   def firstTagString(html: String, tag: String, key: String, value: String): String = {
@@ -187,12 +199,6 @@ object HtmlFunctions {
     dom.toHtml
   }
 
-  def extractTurn(conv: String, idx: Int, html: String): ExtractedTurn = {
-    val r = Extractor.extract(if (html == null) "" else html)
-    val (pos, kinds) = SpanCodec.pack(r.spans)
-    ExtractedTurn(conv, idx, r.text, pos, kinds, r.nNodes, r.nErrors)
-  }
-
   // ===== Column functions ==================================================
 
   val parse_html = udf(parseNodes _)
@@ -206,14 +212,13 @@ object HtmlFunctions {
   val replace_tag = udf(replaceTag _)
   val find_links = udf(findLinks _)
   val get_content = udf(getContentOf _)
-  val get_contents = udf(getContentsOf _)
   val first_tag_string = udf(firstTagString _)
   val to_html = udf(roundtrip _)
   val prettify_html = udf(prettifyHtml _)
   val node_count = udf(nodeCount _)
   val extract_main = udf((html: String) => {
     val r = Extractor.extract(if (html == null) "" else html)
-    (r.text, r.spans.map(s => SpanRec(s.start, s.end, s.kind)), r.nNodes, r.nErrors)
+    (r.text, r.spans, r.nNodes, r.nErrors)
   })
 
   /** Struct view over the packed span columns (SpanCodec wire format) —
@@ -232,7 +237,6 @@ object HtmlFunctions {
     spark.udf.register("build_tag", build_tag)
     spark.udf.register("find_links", find_links)
     spark.udf.register("get_content", get_content)
-    spark.udf.register("get_contents", get_contents)
     spark.udf.register("first_tag_string", first_tag_string)
     spark.udf.register("to_html", to_html)
     spark.udf.register("prettify_html", prettify_html)

@@ -178,8 +178,8 @@ object Pipeline {
         ExtractedTurn(conv, idx, "", Array.emptyLongArray, Array.emptyByteArray, 0, 1)
       else {
         val r = Extractor.extract(t)
-        val (pos, kinds) = SpanCodec.pack(r.spans)
-        ExtractedTurn(conv, idx, r.text, pos, kinds, r.nNodes, r.nErrors)
+        ExtractedTurn(conv, idx, r.text, r.spanPos.unsafeArray, r.spanKind.unsafeArray,
+          r.nNodes, r.nErrors)
       }
     })
   }

@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -17,8 +17,6 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingExtraction {
 
-  val turnSchema = Encoders.product[Turn].schema
-
   /** Process all currently-available transcript files into outDir.
     * Returns the number of rows written by this invocation.
     */
@@ -28,7 +26,7 @@ object StreamingExtraction {
     val before = countOutput(spark, outDir)
 
     val turns = spark.readStream
-      .schema(turnSchema)
+      .schema(Transcripts.turnSchema)
       .parquet(inputPath)
       .select(col("conv_id"), col("turn_idx"), col("text"))
 

@@ -1,8 +1,9 @@
 package graft.spark.catalyst
 
-import graft.parser.{HtmlNode, HtmlParser}
+import graft.parser.HtmlParser
+import graft.spark.HtmlFunctions
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -22,10 +23,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * The parse itself dominates, so CodegenFallback (virtual eval call) is
   * the right tier; GenerateExec handles non-codegen generators.
   *
-  * Output schema / semantics match HtmlFunctions.parseNodes exactly
-  * (kept interchangeable; equivalence is pinned by GeneratorSpec):
-  * node ids are pre-order positions, kind 0=text 1=comment 2=tag 3=endtag
-  * (reference classifier semantics, dhtmlparser.d:287-351).
+  * Numbering, kind and endtag/opener ids come from the same walk as
+  * HtmlFunctions.parseNodes (HtmlFunctions.walkArena); this generator only
+  * writes each visited node into a row, so the two outputs cannot drift
+  * (GeneratorSpec still compares them): node ids are pre-order positions,
+  * kind 0=text 1=comment 2=tag 3=endtag.
   */
 case class ParseHtmlNodes(child: Expression)
     extends UnaryExpression with Generator with CodegenFallback {
@@ -40,55 +42,19 @@ case class ParseHtmlNodes(child: Expression)
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val v = child.eval(input)
     if (v == null) return Nil
-    val html = v.asInstanceOf[UTF8String].toString
-    val root = HtmlParser.parseString(html)
-
-    // pre-order ids first (endtag/openertag links can point forward)
-    val ids = new java.util.IdentityHashMap[HtmlNode, Integer]()
-    var next = 0
-    def number(n: HtmlNode): Unit = {
-      ids.put(n, next); next += 1
-      n.foreachChild(number)
-    }
-    number(root)
-
-    val out = new scala.collection.mutable.ArrayBuffer[InternalRow](next)
-    def emit(n: HtmlNode, parent: Int, pos: Int, depth: Int): Unit = {
-      val id = ids.get(n).intValue
-      val kind: Byte =
-        if (!n.isTag) 0
-        else if (n.isComment) 1
-        else if (n.isEndTag) 3
-        else 2
-      val endId =
-        if (n.endtag != null && ids.containsKey(n.endtag)) ids.get(n.endtag).intValue else -1
-      val opId =
-        if (n.openertag != null && ids.containsKey(n.openertag)) ids.get(n.openertag).intValue
-        else -1
+    val root = HtmlParser.parseString(v.asInstanceOf[UTF8String].toString)
+    val out = new scala.collection.mutable.ArrayBuffer[InternalRow]()
+    HtmlFunctions.walkArena(root, (n, id, parent, pos, depth, kind, endId, opId) => {
       val params =
         if (n.hasParams)
           ArrayBasedMapData(n.params,
             (k: Any) => UTF8String.fromString(k.asInstanceOf[String]),
             (x: Any) => UTF8String.fromString(x.asInstanceOf[String]))
         else ParseHtmlNodes.EmptyMap
-      val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(12)
-      row.update(0, id)
-      row.update(1, parent)
-      row.update(2, pos)
-      row.update(3, depth)
-      row.update(4, kind)
-      row.update(5, UTF8String.fromString(n.getTagName))
-      row.update(6, UTF8String.fromString(n.rawElement))
-      row.update(7, params)
-      row.update(8, n.isNonPairTag)
-      row.update(9, endId)
-      row.update(10, opId)
-      row.update(11, n.srcOffset)
-      out += row
-      var i = 0
-      n.foreachChild { c => emit(c, id, i, depth + 1); i += 1 }
-    }
-    emit(root, -1, 0, 0)
+      out += new GenericInternalRow(Array[Any](id, parent, pos, depth, kind,
+        UTF8String.fromString(n.getTagName), UTF8String.fromString(n.rawElement), params,
+        n.isNonPairTag, endId, opId, n.srcOffset))
+    })
     out
   }
 

@@ -390,25 +390,26 @@ class DedupSpec extends SparkTestBase {
     assert(plan.contains("BroadcastExchange"))
   }
 
-  test("connectedComponents: hash-min labels, chains merge, singletons self-label") {
+  test("connectedComponentsConverged: hash-min labels, chains merge, singletons self-label") {
     // components: {1,2,3,4} (a path, diameter 3), {10,11}, {20} (self-loop)
     val edges = Seq((2L, 1L), (2L, 3L), (4L, 3L), (10L, 11L), (20L, 20L))
       .toDF("a", "b")
-    val labels = Dedup.connectedComponents(edges, iters = 4)
+    val labels = Dedup.connectedComponentsConverged(edges, blockIters = 1, maxIters = 4)
     val got = labels.as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L))
     assert(Dedup.unstableEdges(labels, edges).count() == 0)
-    // too few iterations for the diameter => unstableEdges reports it
-    val early = Dedup.connectedComponents(edges, iters = 1)
-    assert(Dedup.unstableEdges(early, edges).count() > 0)
+    // too few hops for the diameter => reported, never half-merged labels
+    val e = intercept[IllegalStateException] {
+      Dedup.connectedComponentsConverged(edges, blockIters = 1, maxIters = 1)
+    }
+    assert(e.getMessage.contains("not converged"))
   }
 
-  test("connectedComponents: random graphs match a union-find oracle; plan reuses edge exchanges") {
+  test("connectedComponentsConverged: random graphs match a union-find oracle") {
     // property: seeded random graphs vs a driver-side union-find — pins
     // the distributed label propagation against the textbook sequential
-    // answer (iters = 16 > any diameter at n = 40; 8 graphs keeps the
-    // 16-stage-per-call plan cost inside the suite budget)
+    // answer (maxIters = 16 > any diameter at n = 40)
     val rnd = new scala.util.Random(41)
     for (_ <- 0 until 8) {
       val n = 2 + rnd.nextInt(39)
@@ -417,31 +418,18 @@ class DedupSpec extends SparkTestBase {
       def find(x: Int): Int = { if (parent(x) != x) parent(x) = find(parent(x)); parent(x) }
       edges.foreach { case (a, b) => parent(find(a.toInt)) = find(b.toInt) }
       // union-find roots are arbitrary — remap each root to the min
-      // member, the survivor policy connectedComponents guarantees
+      // member, the survivor policy the label propagation guarantees
       val byRoot = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
         .groupBy(v => find(v.toInt))
       val want = byRoot.values.flatMap { vs => val m = vs.min; vs.map(_ -> m) }.toMap
-      val got = Dedup.connectedComponents(edges.toDF("a", "b"), iters = 16)
+      val got = Dedup.connectedComponentsConverged(edges.toDF("a", "b"), maxIters = 16)
         .as[(Long, Long)].collect().toMap
       assert(got == want, s"n=$n edges=$edges")
     }
-    // every iteration must consult the MATERIALIZED edge relation, never
-    // re-embed the caller's upstream pipeline: the plan's only edge
-    // source is the localCheckpoint scan (ExistingRDD), and the original
-    // input relation appears nowhere (re-embedding it once per reference
-    // is what made the declarative form re-execute the LSH+verify
-    // pipeline tens of times in q_dedup_corpus — 95 s vs ~3 s)
-    val plan = Dedup.connectedComponents(
-      Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a", "b"), iters = 4)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("ExistingRDD"),
-      "iterations must scan the materialized (checkpointed) edge relation")
-    assert(!plan.contains("LocalTableScan"),
-      "the input edge relation must not be re-embedded past the checkpoint")
   }
 
   test("connectedComponentsConverged: matches oracle, handles high diameter, throws past maxIters") {
-    // same union-find oracle as the fixed-iteration variant
+    // same union-find oracle as the case above, default block/hop bounds
     val rnd = new scala.util.Random(43)
     for (_ <- 0 until 4) {
       val n = 2 + rnd.nextInt(39)

@@ -105,6 +105,35 @@ class GeneratorSpec extends SparkTestBase {
     assert(err.getMessage.toLowerCase.contains("string"))
   }
 
+  test("extract_main == spans_view of the pipeline's packed spans (samples + soup)") {
+    // the UDF and the pipeline read the same packed extractor output:
+    // same text, same spans, on clean samples and on tag soup
+    import org.scalacheck.{Gen => G}
+    import org.scalacheck.rng.Seed
+    val tags = Seq("div", "p", "a", "nav", "pre", "h1", "br", "script")
+    val soup: G[String] = G.listOfN(30, G.frequency(
+      (3, G.listOfN(12, G.frequency((8, G.alphaNumChar), (3, G.oneOf(' ', '<', '>', '/', '='))))
+        .map(_.mkString)),
+      (3, G.oneOf(tags).map(t => s"<$t>")),
+      (3, G.oneOf(tags).map(t => s"</$t>")),
+      (1, G.const("<!-- c -->")))).map(_.mkString)
+    val texts = samples ++
+      (0 until 60).flatMap(i => soup(G.Parameters.default.withSize(100), Seed(0xD0C + i)))
+    val df = texts.zipWithIndex.map { case (t, i) => ("c", i, t) }.toDF("conv_id", "turn_idx", "text")
+    val viaUdf = df.select(col("turn_idx"), HtmlFunctions.extract_main(col("text")).as("r"))
+    assert(viaUdf.schema("r").dataType.catalogString ==
+      "struct<_1:string,_2:array<struct<start:int,end:int,kind:string>>,_3:int,_4:int>")
+    val a = viaUdf.select(col("turn_idx"), col("r._1"), col("r._2")).collect()
+      .map(r => r.getInt(0) -> (r.getString(1), r.getSeq[org.apache.spark.sql.Row](2))).toMap
+    val b = Pipeline.extractOnScanPartitions(df).toDF()
+      .select(col("turn_idx"), col("extracted_text"),
+        HtmlFunctions.spans_view(col("span_pos"), col("span_kind")))
+      .collect()
+      .map(r => r.getInt(0) -> (r.getString(1), r.getSeq[org.apache.spark.sql.Row](2))).toMap
+    assert(a.size == texts.size && a == b)
+    assert(a.values.count(_._2.nonEmpty) > texts.size / 4, "too few turns with spans to compare")
+  }
+
   test("ws_token_count: equals the char-based counter on adversarial unicode (property)") {
     import org.scalacheck.{Gen => G}
     import org.scalacheck.rng.Seed

@@ -1,5 +1,6 @@
 package graft.spark
 
+import graft.extract.SpanCodec
 import org.apache.spark.sql.functions._
 
 /** The registered SQL surface: every UDF must be callable from
