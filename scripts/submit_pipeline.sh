@@ -12,10 +12,12 @@
 #   reps:  timed reps per level, interleaved N/4N (default 3)
 #   repl:  input replication factor (default 8 = 4.8M turns at sf0.1).
 #          The resumable batch carries a fixed per-batch bookkeeping
-#          tail (checkpoint ledger + metrics read-back + lineage
-#          commits, ~10 s) that Amdahl-limits short runs; raise repl so
-#          the parallel phase dominates, as a production-sized batch
-#          would. Warmup always runs over the small repl=1 copy.
+#          tail (the resume + ledger aggregate, the lineage, metrics
+#          and checkpoint commits, and the gaps between those
+#          executions; see Pipeline.runResumable) that Amdahl-limits
+#          short runs; raise repl so the parallel phase dominates, as a
+#          production-sized batch would. Warmup always runs over the
+#          small repl=1 copy.
 # Requires `sbt package` first (thin jar; the scala runtime comes from
 # /opt/spark/jars) and a quiet box (watch steal_pct in the output).
 set -e

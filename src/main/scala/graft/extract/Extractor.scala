@@ -67,11 +67,15 @@ object Extractor {
 
     def flush(): Unit = {
       if (block.length > 0) {
-        val stripped = Ascii.strip(block.toString)
+        // the block's Ascii.strip bounds, found in place (no copy)
+        var s = 0
+        var e = block.length
+        while (s < e && Ascii.isUniWhite(block.charAt(s))) s += 1
+        while (e > s && Ascii.isUniWhite(block.charAt(e - 1))) e -= 1
         val density = linkChars.toDouble / block.length.toDouble
-        if (stripped.length >= MinBlockChars && density <= MaxLinkDensity) {
+        if (e - s >= MinBlockChars && density <= MaxLinkDensity) {
           if (text.length > 0) text.append('\n') // kept blocks are never empty
-          text.append(stripped)
+          text.append(block, s, e)
         } else spans.truncate(firstSpan)
         block.setLength(0); linkChars = 0; firstSpan = spans.length
       }
@@ -82,7 +86,7 @@ object Extractor {
         if (c.isComment) ()
         else if (!c.isTag) {
           val raw = c.rawElement
-          if (Ascii.strip(raw).nonEmpty) {
+          if (!Ascii.isBlank(raw)) {
             block.append(raw)
             if (c.srcOffset >= 0)
               spans.add(c.srcOffset, c.srcOffset + raw.length, TextKind)

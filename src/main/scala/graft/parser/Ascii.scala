@@ -51,6 +51,13 @@ object Ascii {
   def isUniWhite(c: Char): Boolean =
     Character.isWhitespace(c) || c == '\u00A0' || c == '\u0085'
 
+  /** `strip(s).isEmpty`, without the copy. */
+  def isBlank(s: String): Boolean = {
+    var i = 0
+    while (i < s.length && isUniWhite(s.charAt(i))) i += 1
+    i == s.length
+  }
+
   /** D std.string.strip: remove leading+trailing Unicode whitespace. */
   def strip(s: String): String = {
     var start = 0

@@ -430,10 +430,40 @@ object Pipeline {
 
   /** Resumable batch run over a transcripts parquet directory.
     *
-    * Each batch writes three sinks, then the checkpoint: `extracted/`
-    * (per-turn rows), `lineage/` (one row per source file) and
-    * `metrics/` (ONE aggregate row per batch: n_turns, n_nodes,
-    * n_errors, n_chars_out, n_bytes_in, n_oversize, snapshot_id).
+    * One batch is five Spark executions, and none of them reads a sink
+    * this batch wrote:
+    *  1. *Resume + ledger.* The pending rows are the input left_anti
+    *     JOINed with the checkpoint on src_file, never a `collect` of
+    *     file lists or an IN-list in the plan (at 10^6 input files both
+    *     would be memory / plan-size bottlenecks). They
+    *     are aggregated once into the per-file ledger (file, row_count,
+    *     n_bytes, n_oversize), cached for the batch. One aggregate over
+    *     the ledger, crossed with the checkpoint's row count, gives the
+    *     batch id, the pending file and row counts, the input totals and
+    *     the number of files committed before this batch.
+    *  2. *Extracted* (`extracted/`): the per-turn rows.
+    *  3. *Lineage* (`lineage/`): the cached ledger, one row per source file.
+    *  4. *Metrics* (`metrics/`): ONE row per batch (n_turns, n_nodes,
+    *     n_errors, n_chars_out, n_bytes_in, n_oversize, snapshot_id),
+    *     aggregated from the committed extracted batch directory, with
+    *     the ledger's input totals.
+    *  5. *Checkpoint*, LAST: the cached ledger's files, appended. It is
+    *     what marks the batch committed.
+    *
+    * Retry safety: the batch id is an order-independent aggregate (xor of
+    * per-file xxhash64) over the pending file set, and every data sink is
+    * a batch-keyed overwrite, so a rerun after a crash anywhere before the
+    * checkpoint write rewrites the same directories (idempotent; the
+    * parquet stand-in for an Iceberg transactional commit). Every ledger
+    * value is a Spark aggregate of the committed extracted batch or of the
+    * same ledger relation the lineage sink writes, never an accumulator,
+    * so a retried or speculative task cannot count twice.
+    *
+    * Trade: the ledger reads `text` (for n_bytes and n_oversize), so a
+    * no-op resume (every file checkpointed) scans the input once where a
+    * file-name-only scan would do. In exchange a pending batch reads the
+    * input only twice: once for the ledger, once for the extraction.
+    *
     * Per-partition turns, bytes and wall time are not written: Spark's
     * own task metrics record them.
     *
@@ -442,14 +472,6 @@ object Pipeline {
     * `metrics/` contains such legacy batches mixes two incompatible
     * schemas — reprocess into a fresh outDir; readers can tell them apart
     * by the presence of the `part_id` column.
-    *
-    * The resume filter is a left_anti JOIN of the input against the
-    * checkpoint table on src_file — never a driver-side collect of file
-    * lists or an IN-list in the plan: at 10^6 input files both would be
-    * driver-memory / plan-size bottlenecks. The batch id is an
-    * order-independent distributed aggregate (xor/sum of per-file
-    * xxhash64) over the pending file set, so a rerun of the same pending
-    * set rewrites the same batch directory (idempotent).
     */
   def runResumable(spark: SparkSession, transcriptsPath: String, outDir: String,
                    cfg: Config = Config()): RunSummary = {
@@ -463,79 +485,61 @@ object Pipeline {
         spark.read.parquet(ckptPath).select(col("file").as("src_file"))
       else spark.emptyDataset[String].toDF("src_file")
 
-    val input = spark.read.parquet(transcriptsPath)
+    val pending = spark.read.parquet(transcriptsPath)
       .withColumn("src_file", input_file_name())
+      .join(doneFiles, Seq("src_file"), "left_anti")
 
-    val pending = input.join(doneFiles, Seq("src_file"), "left_anti")
-    val pendingFilesDf = pending.select(col("src_file").as("file")).distinct()
-
-    // deterministic, order-independent batch id from the pending set
-    // (computed as one tiny aggregate; no file-list collect)
-    val agg = pendingFilesDf.agg(
-      count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(file))"), lit(0L)).as("s"),
-      coalesce(expr("bit_xor(xxhash64(concat(file, '#2')))"), lit(0L)).as("s2"))
-      .head()
-    val nPending = agg.getLong(0)
-    if (nPending == 0) {
-      val nDone =
-        if (fs.exists(new org.apache.hadoop.fs.Path(ckptPath)))
-          spark.read.parquet(ckptPath).count()
-        else 0L
-      return RunSummary("none", 0, 0, nDone)
-    }
-    val batchId = f"${agg.getLong(1)}%016x".take(8) + f"${agg.getLong(2)}%016x".take(8)
-    val extracted =
-      if (cfg.shape == "extractfirst") extractOnScanPartitions(pending, cfg)
-      else extractTurns(pending, cfg)
-    val batchDir = s"$outDir/extracted/batch=$batchId"
-    reassembled(extracted)
-      .write.mode("overwrite")
-      .parquet(batchDir)
-
-    // lineage: per source file of this batch, row count + input bytes +
-    // oversize count (one pass; same groupBy). Batch-keyed overwrite =>
-    // idempotent on rerun of the same pending set (the `batch` partition
-    // column comes from the directory name on read).
     // n_bytes = true UTF-8 octets (octet_length); n_oversize counts the
-    // SAME rows the extraction's code-point guard skipped (isOversize)
-    val lineage = pending.groupBy(col("src_file").as("file"))
+    // SAME rows the extraction's code-point guard skips (isOversize)
+    val ledger = pending.groupBy(col("src_file").as("file"))
       .agg(count(lit(1)).as("row_count"),
         coalesce(sum(octet_length(col("text"))), lit(0L)).as("n_bytes"),
         coalesce(sum(when(length(col("text")) > cfg.maxTextChars, 1L)
           .otherwise(0L)), lit(0L)).as("n_oversize"))
-      .select(lit(cfg.snapshotId).as("snapshot_id"), col("file"),
-        col("row_count"), col("n_bytes"), col("n_oversize"))
-    lineage.write.mode("overwrite").parquet(s"$outDir/lineage/batch=$batchId")
+      .persist()
+    try {
+      val totals = ledger.agg(
+          count(lit(1)).as("n_pending"),
+          coalesce(expr("bit_xor(xxhash64(file))"), lit(0L)).as("s"),
+          coalesce(expr("bit_xor(xxhash64(concat(file, '#2')))"), lit(0L)).as("s2"),
+          coalesce(sum(col("row_count")), lit(0L)).as("n_rows"),
+          coalesce(sum(col("n_bytes")), lit(0L)).as("n_bytes_in"),
+          coalesce(sum(col("n_oversize")), lit(0L)).as("n_oversize"))
+        .crossJoin(doneFiles.agg(count(lit(1)).as("n_done")))
+        .head()
+      def total(name: String): Long = totals.getAs[Long](name)
+      val nPending = total("n_pending")
+      if (nPending == 0) return RunSummary("none", 0, 0, total("n_done"))
+      val batchId = f"${total("s")}%016x".take(8) + f"${total("s2")}%016x".take(8)
 
-    // metrics: DISTRIBUTED aggregates derived from the committed batch
-    // output + the committed lineage — deterministic and retry-safe (a
-    // task retry can't double-count data that is aggregated after the
-    // write), unlike accumulators (VERDICT r1 item 5 / ROADMAP 6).
-    val outAgg = spark.read.parquet(batchDir).agg(
-      count(lit(1)).as("n_turns"),
-      coalesce(sum(col("n_nodes")), lit(0L)).as("n_nodes"),
-      coalesce(sum(col("n_errors")), lit(0L)).as("n_errors"),
-      coalesce(sum(length(col("extracted_text"))), lit(0L)).as("n_chars_out"))
-    val inAgg = spark.read.parquet(s"$outDir/lineage/batch=$batchId").agg(
-      coalesce(sum(col("n_bytes")), lit(0L)).as("n_bytes_in"),
-      coalesce(sum(col("n_oversize")), lit(0L)).as("n_oversize"))
-    val metrics = outAgg.crossJoin(inAgg)
-      .withColumn("snapshot_id", lit(cfg.snapshotId))
-    metrics.write.mode("overwrite").parquet(s"$outDir/metrics/batch=$batchId")
-    val rows = spark.read.parquet(s"$outDir/metrics/batch=$batchId")
-      .head().getAs[Long]("n_turns")
+      val extracted =
+        if (cfg.shape == "extractfirst") extractOnScanPartitions(pending, cfg)
+        else extractTurns(pending, cfg)
+      val batchDir = s"$outDir/extracted/batch=$batchId"
+      reassembled(extracted)
+        .write.mode("overwrite")
+        .parquet(batchDir)
 
-    // checkpoint LAST: marks the batch committed (written from the
-    // distributed pending-file set, no driver materialization)
-    pendingFilesDf
-      .withColumn("snapshot_id", lit(cfg.snapshotId))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("append").parquet(ckptPath)
+      ledger.select(lit(cfg.snapshotId).as("snapshot_id"), col("file"),
+          col("row_count"), col("n_bytes"), col("n_oversize"))
+        .write.mode("overwrite").parquet(s"$outDir/lineage/batch=$batchId")
 
-    val nDone =
-      spark.read.parquet(ckptPath).count() - nPending // committed before this batch
-    RunSummary(batchId, nPending, rows, nDone)
+      spark.read.parquet(batchDir).agg(
+          count(lit(1)).as("n_turns"),
+          coalesce(sum(col("n_nodes")), lit(0L)).as("n_nodes"),
+          coalesce(sum(col("n_errors")), lit(0L)).as("n_errors"),
+          coalesce(sum(length(col("extracted_text"))), lit(0L)).as("n_chars_out"),
+          lit(total("n_bytes_in")).as("n_bytes_in"),
+          lit(total("n_oversize")).as("n_oversize"),
+          lit(cfg.snapshotId).as("snapshot_id"))
+        .write.mode("overwrite").parquet(s"$outDir/metrics/batch=$batchId")
+
+      ledger.select(col("file"), lit(cfg.snapshotId).as("snapshot_id"),
+          lit(batchId).as("batch_id"))
+        .write.mode("append").parquet(ckptPath)
+
+      RunSummary(batchId, nPending, total("n_rows"), total("n_done"))
+    } finally ledger.unpersist()
   }
 
   /** All extracted rows across batches. refreshByPath first: a resume run

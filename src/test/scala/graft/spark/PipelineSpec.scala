@@ -335,6 +335,96 @@ class PipelineSpec extends SparkTestBase {
     assert(mr.getAs[Long]("n_oversize") == 0L)
   }
 
+  test("resumable run: incremental resume; sink ledgers agree per batch; sink schemas") {
+    val dir = tmpDir("graft-pipe-incr")
+    val inPath = s"$dir/transcripts"
+    val outDir = s"$dir/out"
+    val cfg = Pipeline.Config(maxTextChars = 64)
+    def turns(conv: String, n: Int) = (0 until n).map(i => Turn(conv, i, "user",
+      s"<p>über turn $i of $conv, body text</p>", "", new java.sql.Timestamp(0)))
+    // each append writes one input file
+    def addFile(ts: Seq[Turn]): Unit =
+      spark.createDataset(ts).toDF().coalesce(1).write.mode("append").parquet(inPath)
+    val oversize = Turn("c-big", 0, "user", "<p>" + ("y" * 100) + "</p>", "",
+      new java.sql.Timestamp(0))
+    val first = Seq(turns("c-0", 1) :+ oversize, turns("c-1", 2), turns("c-2", 3), turns("c-3", 1))
+    val second = Seq(turns("c-4", 2), turns("c-5", 4))
+    first.foreach(addFile)
+    val r1 = Pipeline.runResumable(spark, inPath, outDir, cfg)
+    assert(r1.filesProcessed == 4 && r1.skippedFiles == 0)
+    assert(r1.rowsProcessed == first.map(_.size).sum)
+    second.foreach(addFile)
+    val r2 = Pipeline.runResumable(spark, inPath, outDir, cfg)
+    assert(r2.filesProcessed == 2 && r2.skippedFiles == 4)
+    assert(r2.rowsProcessed == second.map(_.size).sum)
+    assert(r2.batchId != r1.batchId)
+
+    // a batch id of hex digits could otherwise be inferred as a number
+    val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    val prev = spark.conf.get(inferKey)
+    try {
+      spark.conf.set(inferKey, "false")
+      val lineage = spark.read.parquet(s"$outDir/lineage")
+      val metrics = spark.read.parquet(s"$outDir/metrics")
+      val ckpt = spark.read.parquet(s"$outDir/checkpoint")
+      for ((r, files, oversizeRows) <- Seq((r1, first, 1L), (r2, second, 0L))) {
+        val lin = lineage.filter(col("batch") === r.batchId)
+          .agg(count(lit(1)), sum("row_count"), sum("n_bytes"), sum("n_oversize")).head()
+        val m = metrics.filter(col("batch") === r.batchId).collect()
+        assert(m.length == 1, s"batch ${r.batchId}")
+        assert(lin.getLong(0) == files.size)
+        assert(m.head.getAs[Long]("n_turns") == r.rowsProcessed)
+        assert(lin.getLong(1) == r.rowsProcessed)
+        assert(m.head.getAs[Long]("n_bytes_in") == lin.getLong(2))
+        assert(lin.getLong(2) == files.flatten.map(_.text.getBytes("UTF-8").length.toLong).sum)
+        assert(m.head.getAs[Long]("n_oversize") == oversizeRows)
+        assert(lin.getLong(3) == oversizeRows)
+      }
+      assert(ckpt.count() == 6 && ckpt.select("file").distinct().count() == 6)
+
+      assert(spark.read.parquet(s"$outDir/extracted").schema.simpleString ==
+        "struct<conv_id:string,turn_idx:int,extracted_text:string,span_pos:array<bigint>," +
+          "span_kind:binary,n_nodes:int,n_errors:int,batch:string>")
+      assert(lineage.schema.simpleString ==
+        "struct<snapshot_id:string,file:string,row_count:bigint,n_bytes:bigint," +
+          "n_oversize:bigint,batch:string>")
+      assert(metrics.schema.simpleString ==
+        "struct<n_turns:bigint,n_nodes:bigint,n_errors:bigint,n_chars_out:bigint," +
+          "n_bytes_in:bigint,n_oversize:bigint,snapshot_id:string,batch:string>")
+      assert(ckpt.schema.simpleString == "struct<file:string,snapshot_id:string,batch_id:string>")
+    } finally spark.conf.set(inferKey, prev)
+  }
+
+  test("batch shape: a pending batch runs at most 5 root SQL executions, a no-op resume 1") {
+    val dir = tmpDir("graft-pipe-shape")
+    val inPath = s"$dir/transcripts"
+    spark.createDataset(quirkTurns).toDF().repartition(4).write.parquet(inPath)
+    val sc = spark.sparkContext
+    def rootExecutions(run: => Pipeline.RunSummary): (Pipeline.RunSummary, Int) = {
+      val roots = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+              if s.rootExecutionId.forall(_ == s.executionId) => roots.incrementAndGet()
+          case _ =>
+        }
+      }
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.addSparkListener(listener)
+      try {
+        val r = run
+        org.apache.spark.ListenerBusDrain(sc)
+        (r, roots.get)
+      } finally sc.removeSparkListener(listener)
+    }
+    val (r1, pendingExecs) = rootExecutions(Pipeline.runResumable(spark, inPath, s"$dir/out"))
+    assert(r1.filesProcessed == 4)
+    assert(pendingExecs <= 5, s"a pending batch ran $pendingExecs root SQL executions")
+    val (r2, noopExecs) = rootExecutions(Pipeline.runResumable(spark, inPath, s"$dir/out"))
+    assert(r2.filesProcessed == 0 && r2.skippedFiles == 4)
+    assert(noopExecs == 1, s"a no-op resume ran $noopExecs root SQL executions")
+  }
+
   test("salting defeats conversation skew: one giant conversation spreads over all partitions") {
     // 1 conversation with 4000 turns + 40 singleton conversations
     val rows = (0 until 4000).map(i =>
