@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.spark.catalyst.GraftSparkExtensions
 import graft.spark.{Chunking, Dedup, Embeddings, Events, Filtering, HtmlFunctions => H, LmScore, Mixing, Multimodal, Packing, Pipeline, SubstringDedup, Transcripts}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -365,8 +366,6 @@ object SparkEntry {
     // by q_dom_nodes).
     "q_relational_find" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      import graft.spark.catalyst.GraftSparkExtensions
-      GraftSparkExtensions.register(s)
       val nodes = Transcripts.derive(s, dir)
         .select(col("conv_id"), col("turn_idx"),
           GraftSparkExtensions.parse_nodes(col("text")))
@@ -384,8 +383,6 @@ object SparkEntry {
     // fewer full-arena materialization per turn; must hash-match the
     // q_dom_nodes oracle exactly
     "q_gen_nodes" -> ((s, dir) => {
-      import graft.spark.catalyst.GraftSparkExtensions
-      GraftSparkExtensions.register(s)
       Transcripts.derive(s, dir)
         .select(col("conv_id"), col("turn_idx"),
           GraftSparkExtensions.parse_nodes(col("text")))
@@ -693,8 +690,6 @@ object SparkEntry {
     // (UTF-8 bytes, no String decode, stays in WholeStageCodegen) —
     // shares q_token_count's oracle
     "q_token_count_native" -> ((s, dir) => {
-      import graft.spark.catalyst.GraftSparkExtensions
-      GraftSparkExtensions.register(s)
       docs(s, dir).select(col("doc_id"),
         GraftSparkExtensions.ws_token_count(col("text")).as("n_tokens"))
     }),
@@ -702,8 +697,6 @@ object SparkEntry {
     // expression (no ANSI-SQL analog — case-flip/run-length chunking;
     // semantics pinned by TextSpec equivalence properties)
     "q_bpeish_count" -> ((s, dir) => {
-      import graft.spark.catalyst.GraftSparkExtensions
-      GraftSparkExtensions.register(s)
       docs(s, dir).select(col("doc_id"),
         GraftSparkExtensions.bpeish_token_count(col("text")).as("n_subwords"))
     }),
@@ -841,8 +834,6 @@ object SparkEntry {
     // basis points, and langid only ever claims a language from its
     // profile set (or 'und')
     "q_text_invariants" -> ((s, dir) => {
-      import graft.spark.catalyst.GraftSparkExtensions
-      GraftSparkExtensions.register(s)
       val lang = udf((t: String) => graft.text.TextAnalysis.detectLanguage(t)._1)
       val scoreBp = udf((t: String) =>
         math.round(graft.text.TextAnalysis.quality(t).score * 10000).toInt)
@@ -1010,8 +1001,6 @@ object SparkEntry {
     // charset drifting with the executor); run over the dup-injected
     // corpus so every %10 group genuinely exercises the cross-row claim
     "q_simhash_consistency" -> ((s, dir) => {
-      import graft.spark.catalyst.GraftSparkExtensions
-      GraftSparkExtensions.register(s)
       docsWithDups(s, dir).select(md5(col("text")).as("text_hash"),
           GraftSparkExtensions.simhash64(coalesce(col("text"), lit(""))).as("simhash"))
         .groupBy(col("text_hash"))

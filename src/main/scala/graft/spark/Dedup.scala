@@ -1,5 +1,6 @@
 package graft.spark
 
+import graft.spark.catalyst.GraftSparkExtensions
 import graft.text.Fingerprints
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -245,13 +246,10 @@ object Dedup {
     * expression (bit-identical to Fingerprints.simHash; nulls hash as
     * the empty string, matching the old UDF's guard).
     */
-  def simhashTable(docs: DataFrame): DataFrame = {
-    graft.spark.catalyst.GraftSparkExtensions.register(docs.sparkSession)
+  def simhashTable(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-        graft.spark.catalyst.GraftSparkExtensions
-          .simhash64(coalesce(col("text"), lit(""))).as("simhash"))
+        GraftSparkExtensions.simhash64(coalesce(col("text"), lit(""))).as("simhash"))
       .withColumn("bucket", shiftrightunsigned(col("simhash"), 48))
-  }
 
   /** Winnowing fingerprints (doc_id, fingerprint) exploded — substring-
     * level dedup/contamination lookup table. Plans the native
@@ -259,12 +257,9 @@ object Dedup {
     * intermediate array encode; null text hashes as the empty string,
     * matching the old UDF's guard).
     */
-  def fingerprintTable(docs: DataFrame): DataFrame = {
-    graft.spark.catalyst.GraftSparkExtensions.register(docs.sparkSession)
+  def fingerprintTable(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      graft.spark.catalyst.GraftSparkExtensions
-        .winnow_fingerprints(coalesce(col("text"), lit(""))))
-  }
+      GraftSparkExtensions.winnow_fingerprints(coalesce(col("text"), lit(""))))
 
   /** Default corpus document-frequency cap for [[contamination]]: a
     * fingerprint appearing in more corpus docs than this is boilerplate

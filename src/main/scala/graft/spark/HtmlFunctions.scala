@@ -2,7 +2,8 @@ package graft.spark
 
 import graft.extract.{Extractor, SpanCodec}
 import graft.parser.{HtmlNode, HtmlParser}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
 
 /** The engine's scalar-function surface over HTML text columns.
@@ -18,6 +19,9 @@ import org.apache.spark.sql.functions.udf
   * parse_html (#1), find/findAll via node rows or find_links (#17-21),
   * get_content (#27), prettify (#28), to_html round-trip (#29),
   * tag_to_string (#25), plus extract_main (the north_rule extraction).
+  *
+  * The Column functions work in any session; their SQL names come from
+  * [[udfs]], part of the one table in graft.spark.catalyst.GraftSparkExtensions.
   */
 object HtmlFunctions {
 
@@ -229,21 +233,14 @@ object HtmlFunctions {
 
   def extractMainText(c: Column): Column = extract_main(c).getField("_1")
 
-  /** Register everything for spark.sql use. */
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("parse_html", parse_html)
-    spark.udf.register("find_nodes", find_nodes)
-    spark.udf.register("to_html_fixed", to_html_fixed)
-    spark.udf.register("build_tag", build_tag)
-    spark.udf.register("find_links", find_links)
-    spark.udf.register("get_content", get_content)
-    spark.udf.register("first_tag_string", first_tag_string)
-    spark.udf.register("to_html", to_html)
-    spark.udf.register("prettify_html", prettify_html)
-    spark.udf.register("node_count", node_count)
-    spark.udf.register("reset_nonpair", reset_nonpair)
-    spark.udf.register("replace_tag", replace_tag)
-    spark.udf.register("extract_main", extract_main)
-    spark.udf.register("spans_view", spans_view)
-  }
+  /** Every Column function above under its SQL name: the UDF half of the
+    * one function table (graft.spark.catalyst.GraftSparkExtensions). */
+  val udfs: Seq[(String, UserDefinedFunction)] = Seq(
+    "parse_html" -> parse_html, "find_nodes" -> find_nodes, "to_html_fixed" -> to_html_fixed,
+    "build_tag" -> build_tag, "dom_tag_nodes" -> dom_tag_nodes, "bfs_tag_order" -> bfs_tag_order,
+    "remove_tags" -> remove_tags, "reset_nonpair" -> reset_nonpair, "replace_tag" -> replace_tag,
+    "find_links" -> find_links, "get_content" -> get_content,
+    "first_tag_string" -> first_tag_string, "to_html" -> to_html,
+    "prettify_html" -> prettify_html, "node_count" -> node_count,
+    "extract_main" -> extract_main, "spans_view" -> spans_view)
 }

@@ -1,7 +1,7 @@
 package graft.spark
 
 import graft.extract.Extractor
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The batch extraction pipeline (BASELINE.json north_rule):
@@ -464,6 +464,11 @@ object Pipeline {
     * file-name-only scan would do. In exchange a pending batch reads the
     * input only twice: once for the ledger, once for the extraction.
     *
+    * The batch id is `b` and 16 hex digits: without the letter, partition
+    * inference would read an all-digit id back as a bigint. The batch's
+    * own files are read with known schemas, so only the user's input
+    * starts a schema-inference job.
+    *
     * Per-partition turns, bytes and wall time are not written: Spark's
     * own task metrics record them.
     *
@@ -482,7 +487,8 @@ object Pipeline {
 
     val doneFiles: DataFrame =
       if (fs.exists(new org.apache.hadoop.fs.Path(ckptPath)))
-        spark.read.parquet(ckptPath).select(col("file").as("src_file"))
+        spark.read.schema("file string, snapshot_id string, batch_id string").parquet(ckptPath)
+          .select(col("file").as("src_file"))
       else spark.emptyDataset[String].toDF("src_file")
 
     val pending = spark.read.parquet(transcriptsPath)
@@ -510,7 +516,7 @@ object Pipeline {
       def total(name: String): Long = totals.getAs[Long](name)
       val nPending = total("n_pending")
       if (nPending == 0) return RunSummary("none", 0, 0, total("n_done"))
-      val batchId = f"${total("s")}%016x".take(8) + f"${total("s2")}%016x".take(8)
+      val batchId = "b" + f"${total("s")}%016x".take(8) + f"${total("s2")}%016x".take(8)
 
       val extracted =
         if (cfg.shape == "extractfirst") extractOnScanPartitions(pending, cfg)
@@ -524,7 +530,7 @@ object Pipeline {
           col("row_count"), col("n_bytes"), col("n_oversize"))
         .write.mode("overwrite").parquet(s"$outDir/lineage/batch=$batchId")
 
-      spark.read.parquet(batchDir).agg(
+      spark.read.schema(Encoders.product[ExtractedTurn].schema).parquet(batchDir).agg(
           count(lit(1)).as("n_turns"),
           coalesce(sum(col("n_nodes")), lit(0L)).as("n_nodes"),
           coalesce(sum(col("n_errors")), lit(0L)).as("n_errors"),

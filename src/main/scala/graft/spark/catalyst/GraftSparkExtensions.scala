@@ -1,76 +1,93 @@
 package graft.spark.catalyst
 
+import graft.spark.HtmlFunctions
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ScalaUDF, UnaryExpression}
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.graft.CatalystBridge
 
-/** SparkSessionExtensions entry point for the engine's native Catalyst
-  * expressions. Enable on a fresh session with either
+/** SparkSessionExtensions entry point for the engine's one SQL function
+  * table: the native Catalyst expressions and every [[HtmlFunctions]] UDF.
+  * Enable on a fresh session with either
   *
   *   SparkSession.builder().withExtensions(new GraftSparkExtensions) ...
   *   // or, config-only (spark-submit):
-  *   .config("spark.sql.extensions", "graft.spark.catalyst.GraftSparkExtensions")
+  *   --conf spark.sql.extensions=graft.spark.catalyst.GraftSparkExtensions
   *
   * For a session that already exists (e.g. one handed to us by a driver),
-  * [[GraftSparkExtensions.register]] installs the same builders into the
-  * session's FunctionRegistry directly.
+  * [[GraftSparkExtensions.register]] installs the same table into the
+  * session's FunctionRegistry directly. The Column functions below need
+  * neither: they build their expressions themselves.
   */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
-    GraftSparkExtensions.functions.foreach { case (name, cls, make) =>
-      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
-        GraftSparkExtensions.builder(name, make)))
-    }
+    GraftSparkExtensions.functions.foreach(f => ext.injectFunction(f.description))
 }
 
 object GraftSparkExtensions {
 
-  /** (SQL name, expression class, constructor) of every native function:
-    * the one table both the injection and the [[register]] path install.
-    */
-  private val functions: Seq[(String, Class[_], Expression => Expression)] = Seq(
-    ("parse_nodes", classOf[ParseHtmlNodes], ParseHtmlNodes(_)),
-    ("ws_token_count", classOf[WsTokenCount], WsTokenCount(_)),
-    ("bpeish_token_count", classOf[BpeishTokenCount], BpeishTokenCount(_)),
-    ("simhash64", classOf[SimHash64], SimHash64(_)),
-    ("winnow_fingerprints", classOf[WinnowFingerprints], WinnowFingerprints(_)))
-
-  private def builder(name: String, make: Expression => Expression)
-                     (args: Seq[Expression]): Expression = {
-    require(args.length == 1, s"$name takes 1 argument, got ${args.length}")
-    make(args.head)
+  /** One SQL function: its name, the class `DESCRIBE FUNCTION` reports,
+    * its argument count and its expression. */
+  private[graft] final case class Fn(name: String, cls: Class[_], arity: Int,
+                                     make: Seq[Expression] => Expression) {
+    def build(args: Seq[Expression]): Expression = {
+      require(args.length == arity, s"$name takes $arity argument(s), got ${args.length}")
+      make(args)
+    }
+    def description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
   }
+
+  /** Every SQL name the engine binds; [[apply]] and [[register]] install
+    * exactly this table. A UDF is named on the SQL side only, so SQL plans
+    * print `name(args)` while Column-side plans stay as they were. */
+  private[graft] val functions: Seq[Fn] = Seq(
+    Fn("parse_nodes", classOf[ParseHtmlNodes], 1, a => ParseHtmlNodes(a.head)),
+    Fn("ws_token_count", classOf[WsTokenCount], 1, a => WsTokenCount(a.head)),
+    Fn("bpeish_token_count", classOf[BpeishTokenCount], 1, a => BpeishTokenCount(a.head)),
+    Fn("simhash64", classOf[SimHash64], 1, a => SimHash64(a.head)),
+    Fn("winnow_fingerprints", classOf[WinnowFingerprints], 1, a => WinnowFingerprints(a.head))) ++
+    HtmlFunctions.udfs.map { case (name, f) =>
+      val named = f.withName(name)
+      Fn(name, classOf[ScalaUDF], CatalystBridge.arity(f), CatalystBridge.scalaUdf(named, _))
+    }
 
   /** Install into an already-built session (driver-owned sessions). */
   def register(spark: SparkSession): Unit =
-    functions.foreach { case (name, _, make) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder(name, make), "scala_udf")
+    functions.map(_.description).foreach { case (id, info, build) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, build)
     }
+
+  private def column(make: Expression => Expression, c: Column): Column =
+    CatalystBridge.column(make(CatalystBridge.expression(c)))
 
   /** DataFrame-side surface: `df.select(parse_nodes(col("text")))` plans a
     * Generate over the native expression (no UDF, no array encode).
-    * Resolves through the session FunctionRegistry (the public
-    * Column-from-Expression path is sql-private in Spark 4), so call
-    * [[register]] — or build the session with [[GraftSparkExtensions]] —
-    * first.
     */
-  def parse_nodes(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("parse_nodes", c)
+  def parse_nodes(c: Column): Column = column(ParseHtmlNodes(_), c)
 
   /** Codegen'd whitespace token count (see [[WsTokenCount]]). */
-  def ws_token_count(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("ws_token_count", c)
+  def ws_token_count(c: Column): Column = column(WsTokenCount(_), c)
 
   /** Codegen'd BPE-ish subword token count (see [[BpeishTokenCount]]). */
-  def bpeish_token_count(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("bpeish_token_count", c)
+  def bpeish_token_count(c: Column): Column = column(BpeishTokenCount(_), c)
 
   /** Codegen'd 64-bit SimHash (see [[SimHash64]]). */
-  def simhash64(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("simhash64", c)
+  def simhash64(c: Column): Column = column(SimHash64(_), c)
 
   /** Winnowing-fingerprint Generator (see [[WinnowFingerprints]]). */
-  def winnow_fingerprints(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("winnow_fingerprints", c)
+  def winnow_fingerprints(c: Column): Column = column(WinnowFingerprints(_), c)
+}
+
+/** A native entry of the function table: one string argument, and the SQL
+  * name that plans and type errors print. Serializable, because Java needs
+  * a no-argument constructor on the first non-serializable superclass. */
+abstract class StringFunction(override val prettyName: String)
+    extends UnaryExpression with Serializable {
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires a string column, got ${child.dataType.catalogString}")
 }

@@ -3,10 +3,9 @@ package graft.spark.catalyst
 import graft.parser.HtmlParser
 import graft.spark.HtmlFunctions
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -30,14 +29,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * kind 0=text 1=comment 2=tag 3=endtag.
   */
 case class ParseHtmlNodes(child: Expression)
-    extends UnaryExpression with Generator with CodegenFallback {
+    extends StringFunction("parse_nodes") with Generator with CodegenFallback {
 
   override def elementSchema: StructType = ParseHtmlNodes.Schema
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"parse_nodes requires a string column, got ${child.dataType.catalogString}")
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val v = child.eval(input)
@@ -58,7 +52,6 @@ case class ParseHtmlNodes(child: Expression)
     out
   }
 
-  override def prettyName: String = "parse_nodes"
   override protected def withNewChildInternal(newChild: Expression): ParseHtmlNodes =
     copy(child = newChild)
 }

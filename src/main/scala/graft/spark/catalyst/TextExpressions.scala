@@ -1,10 +1,9 @@
 package graft.spark.catalyst
 
 import graft.text.{Fingerprints, TextAnalysis}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** BPE-ish subword token count as a native codegen'd expression — the
@@ -14,12 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * codegen). Char-level equivalence with the String form is
   * property-tested in TextSpec.
   */
-case class BpeishTokenCount(child: Expression) extends UnaryExpression {
+case class BpeishTokenCount(child: Expression) extends StringFunction("bpeish_token_count") {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bpeish_token_count requires a string column, got ${child.dataType.catalogString}")
   override def dataType: DataType = IntegerType
 
   override protected def nullSafeEval(input: Any): Any =
@@ -28,7 +23,6 @@ case class BpeishTokenCount(child: Expression) extends UnaryExpression {
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.text.TextAnalysis.bpeishTokenCountUtf8($c)")
 
-  override def prettyName: String = "bpeish_token_count"
   override protected def withNewChildInternal(newChild: Expression): BpeishTokenCount =
     copy(child = newChild)
 }
@@ -40,12 +34,8 @@ case class BpeishTokenCount(child: Expression) extends UnaryExpression {
   * per-row UTF8String->String copy) removes the dominant allocation on
   * the simhash scan.
   */
-case class SimHash64(child: Expression) extends UnaryExpression {
+case class SimHash64(child: Expression) extends StringFunction("simhash64") {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"simhash64 requires a string column, got ${child.dataType.catalogString}")
   override def dataType: DataType = LongType
 
   override protected def nullSafeEval(input: Any): Any =
@@ -54,7 +44,6 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.text.Fingerprints.simHashUtf8($c)")
 
-  override def prettyName: String = "simhash64"
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
 }

@@ -2,8 +2,7 @@ package graft.spark.catalyst
 
 import graft.text.Fingerprints
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -18,15 +17,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * equality with the UDF path is pinned by GeneratorSpec.
   */
 case class WinnowFingerprints(child: Expression)
-    extends UnaryExpression with Generator with CodegenFallback {
+    extends StringFunction("winnow_fingerprints") with Generator with CodegenFallback {
 
   override def elementSchema: StructType =
     StructType(Seq(StructField("fingerprint", LongType, nullable = false)))
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"winnow_fingerprints requires a string column, got ${child.dataType.catalogString}")
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val v = child.eval(input)
@@ -44,7 +38,6 @@ case class WinnowFingerprints(child: Expression)
     }
   }
 
-  override def prettyName: String = "winnow_fingerprints"
   override protected def withNewChildInternal(newChild: Expression): WinnowFingerprints =
     copy(child = newChild)
 }

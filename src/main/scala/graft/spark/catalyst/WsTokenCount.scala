@@ -1,10 +1,9 @@
 package graft.spark.catalyst
 
 import graft.text.TextAnalysis
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{DataType, IntegerType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Whitespace token count as a NATIVE codegen'd Catalyst expression: the
@@ -19,13 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * (their cost is the parse itself — SURVEY.md §4.3), but a per-row
   * scalar this hot and this small is exactly what doGenCode is for.
   */
-case class WsTokenCount(child: Expression)
-    extends UnaryExpression {
+case class WsTokenCount(child: Expression) extends StringFunction("ws_token_count") {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"ws_token_count requires a string column, got ${child.dataType.catalogString}")
   override def dataType: DataType = IntegerType
 
   override protected def nullSafeEval(input: Any): Any =
@@ -34,7 +28,6 @@ case class WsTokenCount(child: Expression)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.text.TextAnalysis.wsTokenCountUtf8($c)")
 
-  override def prettyName: String = "ws_token_count"
   override protected def withNewChildInternal(newChild: Expression): WsTokenCount =
     copy(child = newChild)
 }

@@ -425,6 +425,62 @@ class PipelineSpec extends SparkTestBase {
     assert(noopExecs == 1, s"a no-op resume ran $noopExecs root SQL executions")
   }
 
+  test("batch jobs: a pending batch starts at most one job outside any SQL execution") {
+    val dir = tmpDir("graft-pipe-jobs")
+    val inPath = s"$dir/transcripts"
+    spark.createDataset(quirkTurns).toDF().repartition(4).write.parquet(inPath)
+    val sc = spark.sparkContext
+    val outside = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).forall(_.getProperty("spark.sql.execution.id") == null))
+          outside.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      assert(Pipeline.runResumable(spark, inPath, s"$dir/out").filesProcessed == 4)
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    // the one is the schema inference of the user's transcripts input
+    assert(outside.get <= 1, s"a pending batch started ${outside.get} jobs outside SQL executions")
+  }
+
+  test("batch id: an all-digit hash still reads back as a string partition value") {
+    val dir = tmpDir("graft-pipe-digits")
+    val inPath = s"$dir/transcripts"
+    val outDir = s"$dir/out"
+    spark.createDataset(quirkTurns).toDF().coalesce(1).write.parquet(inPath)
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(inPath), spark.sparkContext.hadoopConfiguration)
+    val written = fs.listStatus(new org.apache.hadoop.fs.Path(inPath))
+      .map(_.getPath).filter(_.getName.endsWith(".parquet"))
+    assert(written.length == 1)
+    val url = spark.read.parquet(inPath).select(input_file_name()).head.getString(0)
+    val prefix = url.take(url.lastIndexOf('/') + 1)
+    // a file name whose xor-of-xxhash64 hex id (two 8-digit halves) is all
+    // decimal digits, about 1 name in 1,800
+    def half(c: org.apache.spark.sql.Column) = substring(lpad(hex(xxhash64(c)), 16, "0"), 1, 8)
+    val name = spark.range(0, 200000)
+      .select(concat(lit("t-"), col("id").cast("string"), lit(".parquet")).as("name"))
+      .withColumn("f", concat(lit(prefix), col("name")))
+      .filter(concat(half(col("f")), half(concat(col("f"), lit("#2")))).rlike("^[0-9]{16}$"))
+      .select("name").as[String].head
+    assert(fs.rename(written.head, new org.apache.hadoop.fs.Path(s"$inPath/$name")))
+    spark.catalog.refreshByPath(inPath)
+    assert(spark.read.parquet(inPath).select(input_file_name()).head.getString(0) == prefix + name)
+
+    val r = Pipeline.runResumable(spark, inPath, outDir)
+    assert(r.filesProcessed == 1)
+    val ckpt = spark.read.parquet(s"$outDir/checkpoint").select("batch_id").as[String].collect()
+    assert(ckpt.toSeq == Seq(r.batchId))
+    for (sink <- Seq("metrics", "lineage")) {
+      val df = spark.read.parquet(s"$outDir/$sink")
+      assert(df.schema("batch").dataType == org.apache.spark.sql.types.StringType, sink)
+      assert(df.select("batch").distinct().as[String].collect().toSeq == ckpt.toSeq, sink)
+    }
+  }
+
   test("salting defeats conversation skew: one giant conversation spreads over all partitions") {
     // 1 conversation with 4000 turns + 40 singleton conversations
     val rows = (0 until 4000).map(i =>

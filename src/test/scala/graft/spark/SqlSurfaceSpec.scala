@@ -1,6 +1,7 @@
 package graft.spark
 
 import graft.extract.SpanCodec
+import graft.spark.catalyst.GraftSparkExtensions
 import org.apache.spark.sql.functions._
 
 /** The registered SQL surface: every UDF must be callable from
@@ -10,7 +11,7 @@ class SqlSurfaceSpec extends SparkTestBase {
   import spark.implicits._
 
   test("all registered functions are usable from SQL") {
-    HtmlFunctions.register(spark)
+    GraftSparkExtensions.register(spark)
     Seq(("c1", 0, "<div id='m'><a href='/x'>go</a> some main content text</div>"))
       .toDF("conv_id", "turn_idx", "text").createOrReplaceTempView("turns")
 
@@ -35,7 +36,7 @@ class SqlSurfaceSpec extends SparkTestBase {
   }
 
   test("spans_view: packed span columns unpack from SQL") {
-    HtmlFunctions.register(spark)
+    GraftSparkExtensions.register(spark)
     val packed = SpanCodec.packPos(3, 8)
     Seq((Array(packed), Array(SpanCodec.kindByte("text"))))
       .toDF("span_pos", "span_kind").createOrReplaceTempView("ex")
@@ -46,7 +47,7 @@ class SqlSurfaceSpec extends SparkTestBase {
   }
 
   test("find_nodes: generic find(tag, params) from SQL, arena ids + DFS order") {
-    HtmlFunctions.register(spark)
+    GraftSparkExtensions.register(spark)
     Seq(("c1", 0,
       "<div><a href='/x' rel='me'>one</a><p><a href='/y'>two</a></p><a href='/x'>three</a></div>"))
       .toDF("conv_id", "turn_idx", "text").createOrReplaceTempView("turns2")
@@ -74,7 +75,7 @@ class SqlSurfaceSpec extends SparkTestBase {
   }
 
   test("to_html_fixed merges comment-split tags; default surface reproduces the no-op (Q16)") {
-    HtmlFunctions.register(spark)
+    GraftSparkExtensions.register(spark)
     Seq(("c1", 0, "<HT<!-- c -->ML>payload</HTML>"))
       .toDF("conv_id", "turn_idx", "text").createOrReplaceTempView("turns3")
     val row = spark.sql(
