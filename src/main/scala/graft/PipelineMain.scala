@@ -33,7 +33,7 @@ import graft.spark.{Pipeline, Transcripts}
 object PipelineMain {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
-      "usage: prepare <sfDir> <workDir> <repl> | run <in> <out> [shape]")
+      "usage: prepare <sfDir> <workDir> <repl> | run <in> <out> [shape] [warmupDir]")
     val spark = SparkSession.builder()
       .appName(s"graft-pipeline-${args(0)}")
       .getOrCreate()
@@ -69,7 +69,7 @@ object PipelineMain {
         println(s"""{"prepared":"$workDir/transcripts","repl":$repl}""")
 
       case "run" =>
-        require(args.length >= 3, "run <transcriptsDir> <outDir> [shape]")
+        require(args.length >= 3, "run <transcriptsDir> <outDir> [shape] [warmupDir]")
         val (in, out) = (args(1), args(2))
         val cfg = Pipeline.Config(
           shape = if (args.length > 3) args(3) else "extractfirst")

@@ -37,6 +37,12 @@ object ScalingBench {
     // measured the saturated host)
     val nExec = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "1").toInt
     val repl = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPL", "8").toInt
+    // north-rule shape: salted (explicit skew-defeating repartition,
+    // default) or extractfirst (extraction on scan partitions, one
+    // exchange of extracted text — the recommended production shape);
+    // Config rejects any other name before any setup runs
+    val shape = Pipeline.Config(
+      shape = sys.env.getOrElse("SPARK_GRAFT_SCALE_SHAPE", "salted")).shape
     val jar = findJar()
     val mode =
       sys.env.getOrElse("SPARK_GRAFT_MODE",
@@ -97,10 +103,6 @@ object ScalingBench {
         if (mode == "cluster" || mode == "external") jar else None)
       import s.implicits._
       val turns = s.read.parquet(s"$work/transcripts")
-      // north-rule shape: salted (explicit skew-defeating repartition,
-      // default) or extractfirst (extraction on scan partitions, one
-      // exchange of extracted text — the recommended production shape)
-      val shape = sys.env.getOrElse("SPARK_GRAFT_SCALE_SHAPE", "salted")
       def fullJob(): Unit =
         Bench.runQuery(
           (if (shape == "extractfirst") Pipeline.extractReassembledExtractFirst(turns)

@@ -1112,7 +1112,7 @@ object SparkEntry {
     }),
     // ===== corpus quality / selection over documents ======================
     // Gopher-style repetition stats: exact integer byte counts (UTF-8),
-    // shuffle-free higher-order-function projection; top-2-gram counts
+    // shuffle-free projection of one native expression; top-2-gram counts
     // only grams occurring >= 2 times (count ties -> lexicographically
     // smallest gram, matching the oracle's ORDER BY c DESC, g ASC pick).
     // guardMaxWords: the oracle's gram explode joins generate_series(1,
@@ -1250,7 +1250,7 @@ object SparkEntry {
         .collect().sortBy(_.getInt(0)).map(r => (r.getString(1), r.getString(2))).toSeq
       val chunks = Chunking.chunk(guardMaxWords(docs(s, dir), "text", 772),
         maxTokens = 16, overlap = 4)
-        .withColumn("n_tokens", graft.spark.Bpe.tokenCountLocal(col("chunk_text"), m))
+        .withColumn("n_tokens", graft.spark.Bpe.tokenCount(col("chunk_text"), m))
       Packing.packNextFit(chunks, capacity = 112, shard = col("doc_id"))
         .select(col("doc_id"), col("chunk_idx"), col("n_tokens"),
           col("seq_idx"), col("seq_pos"))
@@ -1276,7 +1276,7 @@ object SparkEntry {
       val kept = docs(s, dir).join(sampled, Seq("doc_id"), "left_semi")
       val chunks = Chunking.chunk(guardMaxWords(kept, "text", 772),
         maxTokens = 16, overlap = 4)
-        .withColumn("n_tokens", graft.spark.Bpe.tokenCountLocal(col("chunk_text"), m))
+        .withColumn("n_tokens", graft.spark.Bpe.tokenCount(col("chunk_text"), m))
       Packing.packNextFit(chunks, capacity = 112, shard = col("doc_id"))
         .select(col("doc_id"), col("chunk_idx"), col("n_tokens"),
           col("seq_idx"), col("seq_pos"))

@@ -1,23 +1,24 @@
 package graft.spark
 
+import graft.spark.catalyst.RepetitionStats
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CatalystBridge
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Corpus-quality filtering and selection operators for a training-data
   * pipeline: Gopher-style repetition statistics, deterministic hash
   * sampling, and global token-budget selection.
   *
   * Scale notes (the 100 TB shapes):
-  *  - [[repetitionStats]] is a pure per-row projection over built-in
-  *    higher-order functions — shuffle-free, and the per-row cost is
-  *    O(n log n) in the word count (one array_sort, then a single
-  *    linear `aggregate` pass), NOT the O(n^2) of the naive
-  *    count-each-distinct-gram formulation. [[gopherRepetitionFilter]]
-  *    computes the same statistics with [[repetitionStatsMapped]]:
-  *    still shuffle-free and O(n log n), but it crosses a
-  *    `mapPartitions` Row-encoder boundary that EVERY input column goes
-  *    through (and that column pruning cannot see past) — callers
-  *    should select the columns they need before calling it.
+  *  - [[repetitionStats]] (and [[gopherRepetitionFilter]] over it) is
+  *    one native one-row-per-row generator — shuffle-free, transparent
+  *    to column pruning and filter pushdown, and the per-row
+  *    cost is O(n log n) in the word count (one gram sort, then a single
+  *    linear pass), NOT the O(n^2) of the naive count-each-distinct-gram
+  *    formulation.
   *  - [[hashSample]] is a deterministic filter on a content hash: the
   *    same row always makes the same keep/drop decision, independent of
   *    partitioning, task retries, or cluster size — the property
@@ -31,160 +32,68 @@ import org.apache.spark.sql.functions._
   */
 object Filtering {
 
-  /** SQL fragment: the sorted n-gram array of a split-on-space text
-    * column. Grams are joined with a single space, so their byte length
-    * is `sum(word bytes) + n - 1` — the unit both engines agree on
-    * (Spark `length` counts UTF-16 units, DuckDB `length` counts code
-    * points; `octet_length`/`strlen` count UTF-8 bytes identically).
-    */
-  private def sortedGramsSql(wordsCol: String, n: Int): String = {
-    val concat = (0 until n).map(j => s"element_at($wordsCol, i + $j)")
-      .mkString("concat_ws(' ', ", ", ", ")")
-    s"""CASE WHEN size($wordsCol) < $n THEN CAST(array() AS ARRAY<STRING>)
-       | ELSE array_sort(transform(sequence(1, size($wordsCol) - ${n - 1}),
-       |   i -> $concat)) END""".stripMargin.replace("\n", " ")
-  }
-
-  /** SQL fragment: one linear pass over a SORTED gram array collecting
-    * run-length statistics into a struct:
-    *   top — bytes covered by the most frequent gram (count * bytes),
-    *         PROVIDED it occurs at least twice — a count-1 gram is not
-    *         repetition, and counting it would make the metric pure
-    *         doc-length noise on short documents. Count ties break to
-    *         the lexicographically smallest gram, which is the FIRST
-    *         max run in the sorted array — strict `>` keeps it.
-    *   dup — total bytes over all occurrences of grams appearing >= 2
-    *         times (the Gopher "characters in duplicate n-grams"
-    *         numerator, in UTF-8 bytes).
-    * The init state's empty-string sentinel flushes as a run of 0 and
-    * can never win.
-    */
-  private def runStatsSql(arrCol: String): String =
-    s"""aggregate($arrCol,
-       | named_struct('prev', '', 'run', 0L, 'best', 0L, 'top', 0L, 'dup', 0L),
-       | (st, g) -> IF(g = st.prev,
-       |   named_struct('prev', st.prev, 'run', st.run + 1L, 'best', st.best,
-       |     'top', st.top, 'dup', st.dup),
-       |   named_struct('prev', g, 'run', 1L,
-       |     'best', IF(st.run > st.best, st.run, st.best),
-       |     'top', IF(st.run >= 2L AND st.run > st.best, st.run * octet_length(st.prev), st.top),
-       |     'dup', st.dup + IF(st.run >= 2L, st.run * octet_length(st.prev), 0L))),
-       | st -> named_struct(
-       |   'top', IF(st.run >= 2L AND st.run > st.best, st.run * octet_length(st.prev), st.top),
-       |   'dup', st.dup + IF(st.run >= 2L, st.run * octet_length(st.prev), 0L)))"""
-      .stripMargin.replace("\n", " ")
-
   /** Gopher-style repetition statistics (Rae et al. 2021 §A1.1) per
     * document: word count, bytes covered by the most frequent word
     * 2-gram, and bytes in duplicated word 3-grams. Counts are exact
     * integers (UTF-8 bytes) so they replay hash-exact in ANSI SQL;
     * normalization to fractions is the caller's choice of denominator
-    * (see [[gopherRepetitionFilter]]).
+    * (see [[gopherRepetitionFilter]]). Words are the split of the text
+    * on single spaces (empties kept), and a null text counts as ''.
     *
-    * The whole computation is ONE expression over a single reference to
-    * `textCol`, with the word array let-bound as a lambda variable
-    * (`transform(array(split(...)), ws -> ...)`). This matters when the
-    * text column is itself computed (e.g. [[redactPii]] output): the
-    * optimizer inlines computed aliases into consuming expressions —
-    * including into lambda BODIES, where an inlined text expression
-    * re-evaluates once per GRAM rather than once per row (measured 9x
-    * on the redact->gopher composition). A lambda variable is never
-    * substituted, so upstream expressions evaluate exactly once per row
-    * no matter what feeds this operator.
+    * The three columns come from one [[RepetitionStats]] generator over
+    * `textCol`, one row per input row: an operator the optimizer sees
+    * through, so filters on input columns reach the scan and unused
+    * columns are pruned, while a filter on a stat (or on
+    * [[gopherRepetitionFilter]]'s `keep`) stays above it and reads the
+    * stats and the text as computed once. A stat column the input
+    * already has is replaced in place, so re-applying this to its own
+    * output keeps the schema.
     */
   def repetitionStats(df: DataFrame, textCol: String = "text"): DataFrame = {
-    // null text folds to '' (the Chunking/Dedup convention): without the
-    // coalesce every stat — and gopherRepetitionFilter's `keep` flag —
-    // is SQL null, and the standard `.filter(keep)` call site then drops
-    // null-text docs with no trace
-    val statsSql =
-      s"""element_at(transform(array(split(coalesce(`$textCol`, ''), ' ')), __ws -> named_struct(
-         | 'n_words', size(__ws),
-         | 'top2', ${runStatsSql(sortedGramsSql("__ws", 2))}.top,
-         | 'dup3', ${runStatsSql(sortedGramsSql("__ws", 3))}.dup)), 1)"""
-        .stripMargin.replace("\n", " ")
-    df.withColumn("__st", expr(statsSql))
-      .withColumn("n_words", col("__st.n_words"))
-      .withColumn("top2_chars", col("__st.top2"))
-      .withColumn("dup3_chars", col("__st.dup3"))
-      .drop("__st")
+    val names = RepetitionStats.Schema.fieldNames.toSeq
+    val tmp = names.map("__" + _)
+    // null text folds to '' (the Chunking/Dedup convention): null stats
+    // would null gopherRepetitionFilter's `keep` flag, and the standard
+    // `.filter(keep)` call site would drop null-text docs with no trace
+    val stats = CatalystBridge.column(RepetitionStats(
+      CatalystBridge.expression(coalesce(col(textCol), lit("")))))
+    names.zip(tmp).foldLeft(df.select(col("*"), stats.as(tmp))) {
+      case (d, (name, t)) => d.withColumn(name, col(t))
+    }.drop(tmp: _*)
   }
 
-  /** The COMPILED form of [[repetitionStats]] — same three appended
-    * columns, same values row-for-row (FilteringSpec-pinned), computed
-    * by a per-partition JVM walk instead of the interpreted Catalyst
-    * higher-order-function chain (HOF lambdas never enter whole-stage
-    * codegen; measured 0.63 s vs 0.16 s warm over the 5k-doc curation
-    * universe at sf0.1, OPTIMIZATION_r06.md §8, 0 mismatches). Grams
-    * are materialized as UTF-8 BYTE ARRAYS, which makes both agreement
-    * points exact by construction: the sort comparator is unsigned
-    * bytewise (== array_sort's UTF8String binary ordering) and the gram
-    * byte length IS octet_length. The serialization boundary also
-    * isolates upstream computed text columns the way the declarative
-    * form's let-bound lambda does (they evaluate once per row, never
-    * per gram). Generic over the input schema — every input column
-    * passes through, and a stat column the input already has is
-    * replaced in place, as `withColumn` (and so [[repetitionStats]])
-    * does: re-applying it to its own output keeps the schema.
+  /** [[repetitionStats]]' kernel on one non-null text: the words are
+    * byte slices of the UTF-8 text between 0x20 bytes (0x20 never occurs
+    * inside a multibyte sequence), and an n-gram of consecutive words is
+    * the slice from its first word's start to its last word's end.
+    * Returns the (n_words, top2_chars, dup3_chars) row.
     */
-  def repetitionStatsMapped(df: DataFrame, textCol: String = "text"): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-    val idx = df.schema.fieldIndex(textCol)
-    val caseSensitive = df.sparkSession.conf.get("spark.sql.caseSensitive").toBoolean
-    val inFields = df.schema.fields
-    val width = inFields.length
-    val outFields = inFields.toBuffer
-    val slots = Seq(
-      StructField("n_words", IntegerType, nullable = true),
-      StructField("top2_chars", LongType, nullable = true),
-      StructField("dup3_chars", LongType, nullable = true)).map { f =>
-      val at = inFields.indexWhere(x =>
-        if (caseSensitive) x.name == f.name else x.name.equalsIgnoreCase(f.name))
-      if (at >= 0) { outFields(at) = f; at } else { outFields += f; outFields.size - 1 }
-    }.toArray
-    val outSchema = StructType(outFields.toArray)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val text = if (r.isNullAt(idx)) "" else r.getString(idx)
-        val words = text.split(" ", -1)
-        val wb = new Array[Array[Byte]](words.length)
-        var i = 0
-        while (i < words.length) {
-          wb(i) = words(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          i += 1
-        }
-        val vals = new Array[Any](outSchema.length)
-        i = 0
-        while (i < width) { vals(i) = r.get(i); i += 1 }
-        vals(slots(0)) = words.length
-        vals(slots(1)) = runTop(sortedGramBytes(wb, 2))
-        vals(slots(2)) = runDup(sortedGramBytes(wb, 3))
-        Row.fromSeq(vals.toSeq)
-      }
-    }(Encoders.row(outSchema))
+  private[spark] def repetitionStatsUtf8(text: UTF8String): InternalRow = {
+    val b = text.getBytes
+    var nWords = 1
+    var i = 0
+    while (i < b.length) { if (b(i) == ' ') nWords += 1; i += 1 }
+    // starts(j) is word j's first byte, and starts(nWords) sits where a
+    // space after the last word would end, so word j ends at starts(j + 1) - 1
+    val starts = new Array[Int](nWords + 1)
+    var w = 1
+    i = 0
+    while (i < b.length) { if (b(i) == ' ') { starts(w) = i + 1; w += 1 }; i += 1 }
+    starts(nWords) = b.length + 1
+    new GenericInternalRow(Array[Any](nWords,
+      runTop(sortedGramBytes(b, starts, 2)), runDup(sortedGramBytes(b, starts, 3))))
   }
 
-  /** Sorted n-gram byte arrays of a word-bytes array (grams joined by
-    * 0x20, sorted bytewise-unsigned == UTF8String binary order). */
-  private def sortedGramBytes(wb: Array[Array[Byte]], n: Int): Array[Array[Byte]] = {
-    if (wb.length < n) return Array.empty
-    val out = new Array[Array[Byte]](wb.length - n + 1)
+  /** Sorted n-grams of the words `starts` delimits in `b`, each copied out
+    * as its UTF-8 bytes (words joined by their single 0x20), sorted
+    * bytewise-unsigned: UTF8String binary order. */
+  private def sortedGramBytes(b: Array[Byte], starts: Array[Int], n: Int): Array[Array[Byte]] = {
+    val nWords = starts.length - 1
+    if (nWords < n) return Array.empty
+    val out = new Array[Array[Byte]](nWords - n + 1)
     var i = 0
-    while (i <= wb.length - n) {
-      var len = n - 1
-      var j = 0
-      while (j < n) { len += wb(i + j).length; j += 1 }
-      val g = new Array[Byte](len)
-      var p = 0
-      j = 0
-      while (j < n) {
-        if (j > 0) { g(p) = ' '; p += 1 }
-        System.arraycopy(wb(i + j), 0, g, p, wb(i + j).length)
-        p += wb(i + j).length
-        j += 1
-      }
-      out(i) = g
+    while (i < out.length) {
+      out(i) = java.util.Arrays.copyOfRange(b, starts(i), starts(i + n) - 1)
       i += 1
     }
     java.util.Arrays.sort(out, byteCmp)
@@ -204,9 +113,11 @@ object Filtering {
     }
   }
 
-  /** [[runStatsSql]]'s `top` over a sorted gram array: bytes covered by
-    * the most frequent gram with count >= 2, count ties breaking to the
-    * first (lexicographically smallest) run — strict `>` keeps it. */
+  /** Bytes covered by the most frequent gram of a sorted gram array,
+    * provided it occurs at least twice: a count-1 gram is not repetition,
+    * and counting it would make the metric pure doc-length noise on short
+    * documents. Count ties break to the first (bytewise smallest) run;
+    * strict `>` keeps it. */
   private def runTop(sorted: Array[Array[Byte]]): Long = {
     var best = 0L
     var top = 0L
@@ -222,8 +133,8 @@ object Filtering {
     top
   }
 
-  /** [[runStatsSql]]'s `dup`: total bytes over all occurrences of grams
-    * appearing >= 2 times. */
+  /** Total bytes over all occurrences of grams appearing >= 2 times (the
+    * Gopher "characters in duplicate n-grams" numerator, in UTF-8 bytes). */
   private def runDup(sorted: Array[Array[Byte]]): Long = {
     var dup = 0L
     var i = 0
@@ -244,14 +155,11 @@ object Filtering {
     * replays exactly in any engine. Returns the input columns plus a
     * `keep` flag (callers filter on it; returning the flag keeps the
     * drop decision observable — SURVEY "no silent drops").
-    * Stats come from [[repetitionStatsMapped]] (values identical to
-    * [[repetitionStats]], spec-pinned — the declarative form stays the
-    * reference surface).
     */
   def gopherRepetitionFilter(df: DataFrame, textCol: String = "text",
                              maxTop2Bp: Int = 2000,
                              maxDup3Bp: Int = 2000): DataFrame =
-    repetitionStatsMapped(df, textCol)
+    repetitionStats(df, textCol)
       .withColumn("keep",
         col("top2_chars") * 10000 <=
           lit(maxTop2Bp).cast("long") * octet_length(coalesce(col(textCol), lit(""))) &&
@@ -551,10 +459,12 @@ object Filtering {
     * Scale: a pure per-row projection over built-in higher-order
     * functions — shuffle-free, codegen'd, runs at scan speed. Both the
     * raw text and its line array are LET-BOUND as lambda variables
-    * (`transform(array(...), v -> ...)`, the [[repetitionStats]]
-    * pattern), so a computed upstream text column evaluates exactly once
-    * per row and the split exactly once, no matter how many outputs
-    * consume them. Every predicate is engine-neutral string arithmetic
+    * (`transform(array(...), v -> ...)`, as in [[dedupLinesInDoc]]).
+    * The optimizer inlines a computed alias into the expressions that
+    * consume it, lambda bodies included, where it would re-evaluate once
+    * per line; a lambda variable is never substituted, so a computed
+    * upstream text column evaluates exactly once per row and the split
+    * exactly once, no matter how many outputs consume them. Every predicate is engine-neutral string arithmetic
     * (no regex beyond the newline split), so the whole operator replays
     * exactly in ANSI SQL — see the q_line_clean oracle.
     */

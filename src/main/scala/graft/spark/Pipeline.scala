@@ -144,7 +144,10 @@ object Pipeline {
                           // skew-contrast reference; its raw-text
                           // shuffle is a measured bandwidth wall at
                           // scale: 0.471 efficiency vs 0.850)
-                          shape: String = "extractfirst")
+                          shape: String = "extractfirst") {
+    require(shape == "extractfirst" || shape == "salted",
+      s"unknown pipeline shape '$shape': expected extractfirst or salted")
+  }
 
   /** Core stage: salted repartition + mapPartitions extraction.
     * Input must have (conv_id string, turn_idx int, text string [, src_file]).

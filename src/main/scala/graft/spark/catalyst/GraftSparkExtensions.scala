@@ -81,9 +81,10 @@ object GraftSparkExtensions {
   def winnow_fingerprints(c: Column): Column = column(WinnowFingerprints(_), c)
 }
 
-/** A native entry of the function table: one string argument, and the SQL
-  * name that plans and type errors print. Serializable, because Java needs
-  * a no-argument constructor on the first non-serializable superclass. */
+/** A native expression over one string argument, and the name that plans
+  * and type errors print (the SQL name, for an entry of the function
+  * table). Serializable, because Java needs a no-argument constructor on
+  * the first non-serializable superclass. */
 abstract class StringFunction(override val prettyName: String)
     extends UnaryExpression with Serializable {
   override def checkInputDataTypes(): TypeCheckResult =

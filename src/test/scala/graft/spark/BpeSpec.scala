@@ -130,35 +130,65 @@ class BpeSpec extends SparkTestBase {
     assert(loose.toSeq == Seq((0, 0L, 0), (1, 0L, 1)))
   }
 
-  test("tokenCountLocal == tokenCount on learned merges (incl. edge shapes)") {
-    // the in-JVM walk must reproduce the literal replace chain exactly:
+  /** Reference token count: per non-empty space-separated word, fold
+    * Java `String.replace` (left-to-right, never re-matching inside a
+    * replacement, as SQL `replace`) over the bar-wrapped code-point
+    * segmentation, then count the symbols. */
+  private def refCount(text: String, merges: Seq[(String, String)]): Long =
+    Option(text).getOrElse("").split(" ").filter(_.nonEmpty).map { w =>
+      val seg0 = w.codePoints().toArray
+        .map(cp => "|" + new String(Character.toChars(cp)) + "|").mkString(" ")
+      merges.foldLeft(seg0) { case (seg, (l, r)) => seg.replace(s"|$l| |$r|", s"|$l$r|") }
+        .split(" ").length.toLong
+    }.sum
+
+  test("tokenCount == a String.replace fold over bar-wrapped segments") {
     // compound merges, chained merges (aa+ab), multi-space runs, empty
     // and null text, non-BMP symbols, newline-in-word
-    val docs = mkDocs(Seq(
+    val texts = Seq(
       "aaab ab aaab cd cd", "ab widest widest lower", "a\nb a\nb",
-      "😀x 😀x 😀x", "", "  doublespace  end ", "aaaaaaaa aaab"))
-      .unionByName(spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(99L, null: String))),
-        mkDocs(Seq("z")).schema))
+      "😀x 😀x 😀x", "", "  doublespace  end ", "aaaaaaaa aaab", null)
+    val docs = mkDocs(texts)
     for (k <- Seq(0, 1, 3, 6)) {
       val m =
         if (k == 0) Seq.empty[(String, String)]
         else Bpe.learn(docs.filter(col("text").isNotNull), k)
           .collect().sortBy(_.getInt(0))
           .map(r => (r.getString(1), r.getString(2))).toSeq
-      val both = docs.select(col("doc_id"),
-        Bpe.tokenCount(col("text"), m).as("a"),
-        Bpe.tokenCountLocal(col("text"), m).as("b"))
-        .as[(Long, Long, Long)].collect()
-      both.foreach { case (id, a, b) =>
-        assert(a == b, s"doc $id diverged at K=$k: builtin=$a local=$b")
+      val got = docs.select(col("doc_id"), Bpe.tokenCount(col("text"), m))
+        .as[(Long, Long)].collect().toMap
+      texts.zipWithIndex.foreach { case (t, i) =>
+        assert(got(i.toLong) == refCount(t, m), s"doc $i diverged at K=$k: '$t'")
       }
     }
-    // fail-loud delimiter contract matches
+    // fail-loud delimiter contract
     val e = intercept[Exception](
-      mkDocs(Seq("ok a|b")).select(
-        Bpe.tokenCountLocal(col("text"), Seq(("a", "b")))).collect())
+      mkDocs(Seq("ok a|b")).select(Bpe.tokenCount(col("text"), Seq(("a", "b")))).collect())
     assert(e.getMessage.contains("delimiter"), e.getMessage)
+  }
+
+  test("encode under a 10,000-entry merge table matches the reference") {
+    // three merges that apply, spread through non-matching filler: the
+    // table is applied in order, and the plan prints its size, not it
+    val filler = (0 until 9997).map(i => (s"q$i", s"z$i"))
+    val m = Seq(("a", "a")) ++ filler.take(5000) ++ Seq(("a", "b")) ++
+      filler.drop(5000) ++ Seq(("aa", "ab"))
+    assert(m.length == 10000)
+    val texts = Seq("aaab ab", "aaab", "aaaaaaaa aaab ba", "😀x ab q0 z0", "", null)
+    // parquet, not a local relation, which the optimizer would fold: the
+    // count runs in generated code
+    val dir = tmpDir("bpe-10k") + "/docs"
+    mkDocs(texts).write.parquet(dir)
+    val df = Bpe.encode(spark.read.parquet(dir), m)
+    assert(df.queryExecution.optimizedPlan.toString.contains("10000 merges"))
+    val enc = compiledOnly(df.as[(Long, Long, Long)].collect())
+    assert(enc.map(_._1).sorted.toSeq == texts.indices.map(_.toLong))
+    enc.foreach { case (id, nWords, nTokens) =>
+      val t = texts(id.toInt)
+      assert(nWords == Option(t).getOrElse("").split(" ").count(_.nonEmpty), s"doc $id")
+      assert(nTokens == refCount(t, m), s"doc $id: '$t'")
+    }
+    assert(enc.find(_._1 == 0L).get._3 == 2L) // aaab -> |aaab|, ab -> |ab|
   }
 
   test("encode plans shuffle-free (merges are plan literals)") {

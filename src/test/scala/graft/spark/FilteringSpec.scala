@@ -14,19 +14,25 @@ class FilteringSpec extends SparkTestBase {
     spark.createDataset(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) })
       .toDF("doc_id", "text")
 
-  /** Brute-force reference for [[Filtering.repetitionStats]]. */
+  /** Brute-force reference for [[Filtering.repetitionStats]]. Count ties
+    * break to the gram smallest in UTF-8 byte order, the documented
+    * contract (UTF-16 order differs once supplementary chars meet
+    * U+E000..U+FFFF). */
   private def bruteStats(t: String): (Int, Long, Long) = {
     val ws = t.split(" ", -1)
     def grams(n: Int): Seq[String] =
       if (ws.length < n) Seq.empty
       else ws.sliding(n).map(_.mkString(" ")).toSeq
     def bytes(s: String): Long = s.getBytes("UTF-8").length.toLong
+    val utf8Order: Ordering[String] = Ordering.by((s: String) =>
+      s.getBytes("UTF-8").toSeq.map(_ & 0xff))(Ordering.Implicits.seqOrdering)
     val g2 = grams(2)
     val top =
       if (g2.isEmpty) 0L
       else {
         val (g, c) = g2.groupBy(identity).view.mapValues(_.size).toSeq
-          .minBy { case (gram, cnt) => (-cnt, gram) } // max count, lexicographically smallest
+          .minBy { case (gram, cnt) => (-cnt, gram) }(
+            Ordering.Tuple2(Ordering.Int, utf8Order)) // max count, smallest gram
         if (c < 2) 0L else c * bytes(g) // a count-1 gram is not repetition
       }
     val dup = grams(3).groupBy(identity)
@@ -37,41 +43,25 @@ class FilteringSpec extends SparkTestBase {
 
   test("repetitionStats matches brute force on random, repetitive, and unicode texts") {
     val rnd = new scala.util.Random(7)
-    val vocab = Array("alpha", "beta", "gamma", "dd", "e")
+    val vocab = Array("alpha", "beta", "gamma", "dd", "e", "é", "𝄞x", "wörld")
     val texts = Seq.tabulate(60)(_ =>
         Seq.fill(rnd.nextInt(40) + 1)(vocab(rnd.nextInt(vocab.length))).mkString(" ")) ++
-      Seq("", "one", "x x x x x", "a b a b a b a b",
+      Seq("", "one", "x x x x x", "a b a b a b a b", "a  b  a  b",
+        " lead lead", "trail trail ",
         "héllo wörld héllo wörld héllo", // UTF-8 multibyte: counts are BYTES
+        "𝄞 a 𝄞 a 𝄞 a", // supplementary plane: byte counts and byte order
         "p q r s t u v w")              // no repetition at all
-    val out = Filtering.repetitionStats(mkDocs(texts))
+    val withNull = mkDocs(texts).unionByName(spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(999L, null: String))),
+      mkDocs(Seq("z")).schema))
+    val out = Filtering.repetitionStats(withNull)
       .select($"doc_id", $"n_words", $"top2_chars", $"dup3_chars")
       .as[(Long, Int, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     texts.zipWithIndex.foreach { case (t, i) =>
       assert(out(i.toLong) == bruteStats(t), s"doc $i: '$t'")
     }
-  }
-
-  test("repetitionStatsMapped == repetitionStats row-for-row (incl. unicode, runs, null)") {
-    val rnd = new scala.util.Random(53)
-    val vocab = Array("alpha", "beta", "gamma", "dd", "e", "é", "𝄞x", "wörld")
-    val texts = Seq.tabulate(60)(_ =>
-        Seq.fill(rnd.nextInt(40) + 1)(vocab(rnd.nextInt(vocab.length))).mkString(" ")) ++
-      Seq("", "one", "x x x x x", "a b a b a b a b", "a  b  a  b",
-        " lead lead", "trail trail ",
-        "héllo wörld héllo wörld héllo",
-        "𝄞 a 𝄞 a 𝄞 a", // supplementary plane: byte counts and byte order
-        "p q r s t u v w")
-    val withNull = mkDocs(texts).unionByName(spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(999L, null: String))),
-      mkDocs(Seq("z")).schema))
-    val decl = Filtering.repetitionStats(withNull)
-      .select($"doc_id", $"n_words", $"top2_chars", $"dup3_chars")
-      .as[(Long, Int, Long, Long)].collect().sortBy(_._1).toSeq
-    val mapped = Filtering.repetitionStatsMapped(withNull)
-      .select($"doc_id", $"n_words", $"top2_chars", $"dup3_chars")
-      .as[(Long, Int, Long, Long)].collect().sortBy(_._1).toSeq
-    assert(mapped == decl)
+    assert(out(999L) == bruteStats(""), "null text counts as ''")
   }
 
   test("gopherRepetitionFilter drops repetitive docs, keeps diverse ones, observable flag") {

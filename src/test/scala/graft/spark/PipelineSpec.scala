@@ -286,6 +286,14 @@ class PipelineSpec extends SparkTestBase {
     assert(r2.filesProcessed == 0 && r2.skippedFiles == 4)
   }
 
+  test("an unknown pipeline shape fails loudly instead of running salted") {
+    // a misspelt shape used to fall through to the salted plan (0.471
+    // scaling efficiency vs 0.850) with no error
+    val e = intercept[IllegalArgumentException](Pipeline.Config(shape = "extract-first"))
+    assert(e.getMessage.contains("extractfirst") && e.getMessage.contains("salted"),
+      e.getMessage)
+  }
+
   test("resumable run: second run is a no-op; crash before checkpoint is idempotent") {
     val dir = tmpDir("graft-pipe")
     val inPath = s"$dir/transcripts"

@@ -19,6 +19,67 @@ class PlanSpec extends SparkTestBase {
     dir
   }
 
+  private def docsParquet: String = {
+    val dir = tmpDir("plan-docs") + "/docs"
+    Seq((1L, "spam spam spam spam", "en"), (3L, "the quick brown fox", "de"))
+      .toDF("doc_id", "text", "lang").write.parquet(dir)
+    dir
+  }
+
+  private def scanLine(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.executedPlan.toString.linesIterator
+      .find(_.contains("FileScan")).getOrElse("")
+
+  /** Logical operator names and expression classes of an optimized plan. */
+  private def planParts(df: org.apache.spark.sql.DataFrame): (Seq[String], Seq[String]) = {
+    val plan = df.queryExecution.optimizedPlan
+    (plan.collect { case p => p.nodeName },
+      plan.collect { case p => p.expressions.flatMap(_.collect { case e => e.getClass.getSimpleName }) }
+        .flatten)
+  }
+
+  test("gopher filter: a filter on an input column reaches the scan") {
+    val df = Filtering.gopherRepetitionFilter(spark.read.parquet(docsParquet))
+      .filter(col("doc_id") === 3L).select(col("doc_id"), col("n_words"))
+    val scan = scanLine(df)
+    assert(scan.contains("PushedFilters: [IsNotNull(doc_id), EqualTo(doc_id,3)]"), scan)
+    assert(df.as[(Long, Int)].collect().toSeq == Seq((3L, 4)))
+  }
+
+  test("gopher filter: an unused input column is never read") {
+    val df = Filtering.gopherRepetitionFilter(spark.read.parquet(docsParquet))
+      .select(col("doc_id"), col("keep"))
+    val scan = scanLine(df)
+    assert(scan.contains("ReadSchema: struct<doc_id:bigint,text:string>"), scan)
+    assert(df.as[(Long, Boolean)].collect().toMap == Map(1L -> false, 3L -> true))
+  }
+
+  test("gopher filter over a computed text evaluates the stats once") {
+    // redactPii rewrites `text` with three regexp_replace calls. A filter
+    // on `keep` must stay above the stats, not be pushed below them with
+    // the stats and that computed text substituted into its condition
+    val df = Filtering.gopherRepetitionFilter(Filtering.redactPii(spark.read.parquet(docsParquet)))
+      .filter(col("keep")).select(col("doc_id"), col("text"))
+    val exprs = planParts(df)._2
+    assert(exprs.count(_ == "RepetitionStats") == 1 && exprs.count(_ == "RegExpReplace") == 3,
+      df.queryExecution.optimizedPlan.toString)
+    assert(df.as[(Long, String)].collect().toSeq == Seq((3L, "the quick brown fox")))
+  }
+
+  test("repetition and BPE queries plan no object boundary and no UDF") {
+    for (q <- Seq("q_repetition", "q_gopher_filter", "q_bpe_encode")) {
+      val df = graft.SparkEntry.queries(q)(spark, sf)
+      val (ops, exprs) = planParts(df)
+      assert(!ops.exists(Set("DeserializeToObject", "MapPartitions")) && !exprs.contains("ScalaUDF"),
+        s"$q:\n${df.queryExecution.optimizedPlan}")
+    }
+    // packNextFit's fold is still a MapPartitions; only the counts moved
+    for (q <- Seq("q_packed_bpe", "q_dsir_pipeline")) {
+      val df = graft.SparkEntry.queries(q)(spark, sf)
+      assert(!planParts(df)._2.contains("ScalaUDF"), s"$q:\n${df.queryExecution.optimizedPlan}")
+    }
+  }
+
   test("pipeline scan prunes to (conv_id, turn_idx, text) — role/tool/ts never read") {
     val df = spark.read.parquet(turnsParquet)
     val plan = Pipeline.extractTurns(df).queryExecution.executedPlan.toString

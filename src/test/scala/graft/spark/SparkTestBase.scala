@@ -21,6 +21,16 @@ abstract class SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("WARN")
   }
 
+  /** Run `body` so that generated code which fails to compile raises,
+    * instead of Spark's silent fallback to interpreted evaluation (of a
+    * whole stage, or of one projection outside whole-stage codegen). */
+  protected def compiledOnly[T](body: => T): T = {
+    val confs = Seq("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
   protected def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 }
