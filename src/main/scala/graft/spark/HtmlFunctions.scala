@@ -2,18 +2,29 @@ package graft.spark
 
 import graft.extract.{Extractor, SpanCodec}
 import graft.parser.{HtmlNode, HtmlParser}
+import graft.parser.HtmlParser.ParseStats
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
 
 /** The engine's scalar-function surface over HTML text columns.
   *
-  * Design (SURVEY.md §4.3): the parser itself is a pure JVM function —
-  * per-turn parse cost dominates, so a Scala UDF (codegen calls it with
-  * UTF8String->String conversion only) is the right tier; no custom
-  * Catalyst Expression needed in v1. Keep plans in the shape
-  * `select(cols..., fn(col("text")))` so Catalyst column pruning still
-  * reaches the parquet scan (never `Dataset.map` over whole rows).
+  * Design (SURVEY.md §4.3): the parser itself is a pure JVM function and
+  * per-turn parse cost dominates, so each function is a Scala UDF (codegen
+  * calls it with UTF8String->String conversion only). Keep plans in the
+  * shape `select(cols..., fn(col("text")))` so Catalyst column pruning
+  * still reaches the parquet scan (never `Dataset.map` over whole rows).
+  *
+  * One parse per row: the read-only functions (parse_html, find_nodes,
+  * find_links, get_content, first_tag_string, to_html, prettify_html,
+  * node_count, dom_tag_nodes, bfs_tag_order) and the parse_nodes generator
+  * ([[graft.spark.catalyst.ParseHtmlNodes]]) read one shared parse of their
+  * input ([[parsed]]), so a select of several of them over one column
+  * parses each row once, as the reference runs every finder and serializer
+  * against one DOM (SURVEY.md §1.1). The mutators (remove_tags,
+  * reset_nonpair, replace_tag) change their tree, and to_html_fixed parses
+  * with repairFixed, so each of these owns a private tree.
   *
   * Every function here mirrors a reference operator (SURVEY.md §2.1):
   * parse_html (#1), find/findAll via node rows or find_links (#17-21),
@@ -82,10 +93,62 @@ object HtmlFunctions {
     (out.result(), ids)
   }
 
-  // ===== pure row-wise functions (also used by mapPartitions) =============
+  // ===== the shared parse ==================================================
+
+  /** One parse of `html`: its root and stats. Readers only: the tree may be
+    * handed to the next function over the same input. */
+  final class Parsed(val html: String, val root: HtmlNode, val stats: ParseStats)
+
+  /** A thread's memo: the last parse and the task attempt it was made in. */
+  private final class Slot { var task = -1L; var last: Parsed = null }
+  private val slots = ThreadLocal.withInitial[Slot](() => new Slot)
+
+  /** Parses [[parsed]] has run: memo misses, and every call outside a task.
+    * A test hook. */
+  private[graft] val memoMisses = new java.util.concurrent.atomic.LongAdder
+
+  /** The parse of `html` (non-null), shared by every read-only function
+    * over the same input in the running task: a one-entry memo keyed on
+    * the input's content. Spark evaluates a row's functions one after
+    * another on the task's thread, and so does a Generate above the
+    * Project that evaluates the UDFs, so one entry serves them all. A task
+    * completion listener empties the slot, so an idle executor thread pins
+    * no tree. With no TaskContext (constant folding while planning) it
+    * parses privately. The tree is safe to share because readers change
+    * nothing but the deterministic lazy params parse
+    * (HtmlNode.ensureParams); mutators must parse their own.
+    */
+  private[graft] def parsed(html: String): Parsed = {
+    val tc = TaskContext.get()
+    if (tc == null) return parse(html)
+    val slot = slots.get()
+    val task = tc.taskAttemptId()
+    val last = slot.last
+    if (last != null && slot.task == task && last.html.equals(html)) return last
+    if (slot.task != task) {
+      slot.task = task
+      tc.addTaskCompletionListener[Unit] { _ =>
+        if (slot.task == task) { slot.last = null; slot.task = -1L }
+      }
+    }
+    slot.last = null // the old tree is garbage before the new one is built
+    val p = parse(html)
+    slot.last = p
+    p
+  }
+
+  private def parse(html: String): Parsed = {
+    memoMisses.increment()
+    val (root, stats) = HtmlParser.parseWithStats(html)
+    new Parsed(html, root, stats)
+  }
+
+  private def dom(html: String): HtmlNode = parsed(html).root
+
+  // ===== pure row-wise functions ============================================
 
   def parseNodes(html: String): Seq[NodeRow] =
-    if (html == null) Seq.empty else toRows(HtmlParser.parseString(html))._1
+    if (html == null) Seq.empty else toRows(dom(html))._1
 
   /** The reference's generic `find(tag, params)` (dhtmlparser.d:150,
     * 623-647) as a SQL-facing function: DFS matches minus endtags, each
@@ -95,10 +158,10 @@ object HtmlFunctions {
     */
   def findNodes(html: String, tag: String, params: Map[String, String]): Seq[NodeRow] = {
     if (html == null) return Seq.empty
-    val dom = HtmlParser.parseString(html)
-    val (rows, ids) = toRows(dom)
+    val root = dom(html)
+    val (rows, ids) = toRows(root)
     val pm = if (params == null || params.isEmpty) null else params
-    dom.find(tag, pm).map(n => rows(ids.get(n).intValue)).toSeq
+    root.find(tag, pm).map(n => rows(ids.get(n).intValue)).toSeq
   }
 
   /** Constructor-built DOM (reference ctor surface, dhtmlparser.d:74-138
@@ -123,49 +186,56 @@ object HtmlFunctions {
 
   def findLinks(html: String): Seq[String] =
     if (html == null) Seq.empty
-    else HtmlParser.parseString(html).find("a").flatMap(_.params.get("href")).toSeq
+    else dom(html).find("a").flatMap(_.params.get("href")).toSeq
 
   /** getContent of the first DFS match of `tag` (null if no match). */
   def getContentOf(html: String, tag: String): String = {
     if (html == null) return null
-    val hits = HtmlParser.parseString(html).find(tag)
+    val hits = dom(html).find(tag)
     if (hits.isEmpty) null else hits.head.getContent
   }
 
   /** Normalized tagToString of the first match of tag[key=value]. */
   def firstTagString(html: String, tag: String, key: String, value: String): String = {
     if (html == null) return null
-    val hits = HtmlParser.parseString(html).find(tag, Map(key -> value))
+    val hits = dom(html).find(tag, Map(key -> value))
     if (hits.isEmpty) null else hits.head.tagToString
   }
 
   def roundtrip(html: String): String =
-    if (html == null) null else HtmlParser.parseString(html).toHtml
+    if (html == null) null else dom(html).toHtml
 
   def prettifyHtml(html: String): String =
-    if (html == null) null else HtmlParser.parseString(html).prettify()
+    if (html == null) null else dom(html).prettify()
 
   def nodeCount(html: String): Int =
-    if (html == null) 0 else HtmlParser.parseWithStats(html)._2.nNodes
+    if (html == null) 0 else parsed(html).stats.nNodes
 
   /** Structural arena dump restricted to tag/comment/endtag nodes (text
     * omitted so the row set is input-independent for template oracles):
-    * (node_id, parent_id, pos, depth, kind, tagname, nonpair).
+    * (node_id, parent_id, pos, depth, kind, tagname, nonpair). Ids are the
+    * arena walk's, so they match parse_html's.
     */
-  def domTagNodes(html: String): Seq[(Int, Int, Int, Int, Int, String, Boolean)] =
-    if (html == null) Seq.empty
-    else parseNodes(html).filter(_.kind != 0).map(r =>
-      (r.node_id, r.parent_id, r.pos, r.depth, r.kind.toInt, r.tagname, r.nonpair))
+  def domTagNodes(html: String): Seq[(Int, Int, Int, Int, Int, String, Boolean)] = {
+    if (html == null) return Seq.empty
+    val out = Vector.newBuilder[(Int, Int, Int, Int, Int, String, Boolean)]
+    walkArena(dom(html), (n, id, parent, pos, depth, kind, _, _) =>
+      if (kind != 0) out += ((id, parent, pos, depth, kind.toInt, n.getTagName, n.isNonPairTag)))
+    out.result()
+  }
 
   /** BFS (findAllB with match-all fn) order of tag nodes:
     * (bfs_pos_among_tags, tagname, is_endtag).
     */
   def bfsTagOrder(html: String): Seq[(Int, String, Boolean)] =
     if (html == null) Seq.empty
-    else HtmlParser.parseString(html)
+    else dom(html)
       .findAllB(null, null, _ => true)
       .filter(_.isTag).zipWithIndex
       .map { case (n, i) => (i, n.getTagName, n.isEndTag) }.toSeq
+
+  // The mutators below change their tree, so each parses its own and never
+  // reads the shared parse.
 
   /** Remove every match of each tag name (removeChild incl. endtag),
     * then reconstruct (toHtml) — the remove_tag.d workflow as one op.

@@ -1,6 +1,5 @@
 package graft.spark.catalyst
 
-import graft.parser.HtmlParser
 import graft.spark.HtmlFunctions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow}
@@ -27,6 +26,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * writes each visited node into a row, so the two outputs cannot drift
   * (GeneratorSpec still compares them): node ids are pre-order positions,
   * kind 0=text 1=comment 2=tag 3=endtag.
+  *
+  * The tree is the task's shared parse (HtmlFunctions.parsed): a Generate
+  * cannot share a subexpression with the Project below it that evaluates
+  * find_links or to_html over the same text, but the memo lets all three
+  * read one parse of the row.
   */
 case class ParseHtmlNodes(child: Expression)
     extends StringFunction("parse_nodes") with Generator with CodegenFallback {
@@ -36,7 +40,7 @@ case class ParseHtmlNodes(child: Expression)
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val v = child.eval(input)
     if (v == null) return Nil
-    val root = HtmlParser.parseString(v.asInstanceOf[UTF8String].toString)
+    val root = HtmlFunctions.parsed(v.asInstanceOf[UTF8String].toString).root
     val out = new scala.collection.mutable.ArrayBuffer[InternalRow]()
     HtmlFunctions.walkArena(root, (n, id, parent, pos, depth, kind, endId, opId) => {
       val params =

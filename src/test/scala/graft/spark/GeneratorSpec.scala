@@ -165,15 +165,17 @@ class GeneratorSpec extends SparkTestBase {
       .write.parquet(s"$dir/t")
     val df = spark.read.parquet(s"$dir/t")
     val q = df.select(GraftSparkExtensions.ws_token_count(col("text")).as("n"))
-    assert(q.orderBy(col("n")).collect().map(_.getInt(0)).toSeq == Seq(2, 3))
+    // compiledOnly: a doGenCode that does not compile fails here instead
+    // of falling back to interpreted evaluation with only a log line
+    assert(compiledOnly(q.orderBy(col("n")).collect()).map(_.getInt(0)).toSeq == Seq(2, 3))
     val plan = q.queryExecution.executedPlan.toString
     // "*(n)" marks operators fused into WholeStageCodegen stage n
     assert(plan.linesIterator.exists(l =>
       l.contains("*(") && l.contains("ws_token_count")), s"not codegen'd:\n$plan")
     assert(!plan.contains("ScalaUDF"))
     // the null path returns null, not 0
-    val n = Seq((1, null: String)).toDF("id", "text")
-      .select(GraftSparkExtensions.ws_token_count(col("text"))).head
+    val n = compiledOnly(Seq((1, null: String)).toDF("id", "text")
+      .select(GraftSparkExtensions.ws_token_count(col("text"))).head)
     assert(n.isNullAt(0))
   }
 
@@ -232,7 +234,7 @@ class GeneratorSpec extends SparkTestBase {
     val q = df.select(col("id"),
       GraftSparkExtensions.bpeish_token_count(col("text")).as("n"),
       GraftSparkExtensions.simhash64(col("text")).as("h"))
-    val got = q.orderBy(col("id")).collect()
+    val got = compiledOnly(q.orderBy(col("id")).collect())
     assert(got.map(_.getInt(1)).toSeq ==
       Seq(graft.text.TextAnalysis.bpeishTokenCount("CamelCase 123456"),
           graft.text.TextAnalysis.bpeishTokenCount("plain words here")))
