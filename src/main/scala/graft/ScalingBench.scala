@@ -91,7 +91,8 @@ object ScalingBench {
     /** One session per rep; times three jobs over the same input:
       *   full  — the north_rule pipeline (salt shuffle -> extract ->
       *           reassembly shuffle), the headline number;
-      *   extract — scan + mapPartitions extraction only (no exchange):
+      *   extract — the pipeline's shuffle-free extraction stage only
+      *           (Pipeline.extractOnScanPartitions, no exchange):
       *           isolates the COMPUTE fraction;
       *   scan  — parquet scan + projection only: isolates input I/O.
       * The three efficiencies attribute any scaling residual to a stage.
@@ -101,19 +102,13 @@ object ScalingBench {
       val (master, cores) = masterFor(execs)
       val s = session(master, cores,
         if (mode == "cluster" || mode == "external") jar else None)
-      import s.implicits._
       val turns = s.read.parquet(s"$work/transcripts")
       def fullJob(): Unit =
         Bench.runQuery(
           (if (shape == "extractfirst") Pipeline.extractReassembledExtractFirst(turns)
            else Pipeline.reassembled(Pipeline.extractTurns(turns))).toDF())
       def extractJob(): Unit =
-        Bench.runQuery(turns.select(col("conv_id"), col("turn_idx"), col("text"))
-          .as[(String, Int, String)]
-          .mapPartitions(_.map { case (c, i, t) =>
-            val r = graft.extract.Extractor.extract(if (t == null) "" else t)
-            (c, i, r.text, r.nNodes, r.nErrors)
-          }).toDF())
+        Bench.runQuery(Pipeline.extractOnScanPartitions(turns).toDF())
       def scanJob(): Unit =
         Bench.runQuery(turns.select(sum(length(col("text")))))
       // breakdown jobs triple the wall-clock per rep — skippable when only

@@ -506,9 +506,9 @@ object SparkEntry {
         .localCheckpoint()
       // the two span consumers (packing fold, chunk char windows) need
       // only ids + sizes: checkpoint the SLIM chunk relation (5 numeric
-      // cols/chunk, no text) from the compiled walk (ChunkingSpec pins
-      // it against chunk(), incl. non-BMP); no chunk_text string is
-      // ever built.
+      // cols/chunk, no text) from the window generator (ChunkingSpec
+      // pins it against a declarative reference, incl. non-BMP); no
+      // chunk_text string is ever built.
       val chunks = Chunking.chunkOffsetsMapped(convsP, maxTokens = 16, overlap = 4,
           textCol = "conv_text", idCol = "conv_key")
         .localCheckpoint()
@@ -701,9 +701,8 @@ object SparkEntry {
         GraftSparkExtensions.bpeish_token_count(col("text")).as("n_subwords"))
     }),
     // training-sequence chunking (round 4): fixed token windows with
-    // overlap over each document — pure built-in projection (split /
-    // sequence / posexplode / slice), shuffle-free (ChunkingSpec gates
-    // the plan). maxTokens=16, overlap=4 gives 1-8 chunks per doc at
+    // overlap over each document — one native window generator plus a
+    // substring projection, shuffle-free (ChunkingSpec gates the plan). maxTokens=16, overlap=4 gives 1-8 chunks per doc at
     // every driver SF (docs run 10-99 words). Exact DuckDB oracle via
     // list slicing over the same start arithmetic.
     // guardMaxWords: the oracle's per-doc chunk explode is capped at
@@ -1609,7 +1608,7 @@ object SparkEntry {
         .select((col("doc_id") + lit(6000000L)).as("doc_id"), mkText("x", 2).as("text"))
       val contaminated = Dedup.contamination(corpus, planted.unionByName(clean))
         .select(col("doc_id"))
-      // compiled chunk walk: the traceback reads ids/sizes, never text
+      // slim chunk windows: the traceback reads ids/sizes, never text
       val chunks = Chunking.chunkOffsetsMapped(corpus, maxTokens = 16, overlap = 4)
       val asg = Packing.packNextFit(chunks, capacity = 48,
         shard = pmod(col("doc_id"), lit(8)))

@@ -1,21 +1,27 @@
 package graft.spark
 
+import graft.spark.catalyst.ChunkWindows
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CatalystBridge
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Document chunking for training-sequence preparation: split each doc
   * into fixed-size token windows with overlap — the op that sits
   * between token counting and sequence packing in an LLM data pipeline.
   *
-  * Tokens are whitespace words (the same unit as
-  * [[graft.text.TextAnalysis.wsTokenCount]] on single-space text). Two
-  * forms compute the same windows, neither shuffles:
-  *  - [[chunk]] builds each chunk's text as a PROJECTION over built-in
-  *    functions (split / sequence / posexplode / slice / array_join);
-  *    it is the reference the other form is tested against.
-  *  - [[chunkOffsetsMapped]] is the compiled one-pass walk for
-  *    consumers that read only sizes and offsets (packing, span remap):
-  *    no chunk string is ever built.
+  * Tokens are whitespace words: the split of the text on single spaces,
+  * empties kept (the same unit as [[graft.text.TextAnalysis.wsTokenCount]]
+  * on single-space text), and a null text chunks as ''. One kernel,
+  * [[windowsUtf8]], computes every window, run per row by the native
+  * [[ChunkWindows]] generator; the two forms are two projections of it,
+  * and neither shuffles:
+  *  - [[chunk]] also takes each chunk's text, a byte slice of the doc;
+  *  - [[chunkOffsetsMapped]] keeps the sizes and offsets only, for
+  *    consumers that never read chunk text (packing, span remap).
   *
   * Chunk layout: starts at 0, step = maxTokens - overlap; every word
   * lands in at least one chunk; consecutive chunks share exactly
@@ -24,44 +30,14 @@ import org.apache.spark.sql.functions._
   */
 object Chunking {
 
-  /** (doc_id, chunk_idx, chunk_text, n_tokens) for every chunk.
-    *
-    * The chunk structs are built INSIDE a `transform` over the start
-    * sequence, BEFORE the explode: the first shape sliced after
-    * posexplode, so every output row materialized with a copy of its
-    * doc's full words array — measured +4 s on 130k conversations ->
-    * 3M chunks at sf0.1. Building pre-explode keeps the per-row payload
-    * at one chunk (total data = corpus x (1 + overlap share)).
+  /** (doc_id, chunk_idx, chunk_text, n_tokens) for every chunk; the id
+    * column passes through with its own type.
     */
   def chunk(docs: DataFrame, maxTokens: Int = 512, overlap: Int = 64,
-            textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    require(maxTokens > 0, s"maxTokens must be positive, got $maxTokens")
-    require(overlap >= 0 && overlap < maxTokens,
-      s"overlap must be in [0, maxTokens), got $overlap")
-    val step = maxTokens - overlap
-    val w: Column = col("w")
-    val n: Column = size(w)
-    // last start: the largest multiple of step strictly below
-    // max(1, n - overlap) — guarantees the final chunk is non-empty and
-    // every word is covered
-    val lastStart = (ceil((greatest(n - lit(overlap), lit(1))).cast("double")
-      / lit(step)).cast("int") - 1) * lit(step)
-    // coalesce: split(null) yields a null array and posexplode then emits
-    // NO rows — null-text docs would vanish silently (ADVICE r4). An
-    // empty string chunks like any other text (one chunk, [""]), so null
-    // docs stay visible downstream.
+            textCol: String = "text", idCol: String = "doc_id"): DataFrame =
     docs
-      .select(col(idCol), split(coalesce(col(textCol), lit("")), " ").as("w"))
-      .select(col(idCol),
-        posexplode(transform(sequence(lit(0), lastStart, lit(step)), start =>
-          struct(
-            array_join(slice(w, start + 1, lit(maxTokens)), " ").as("chunk_text"),
-            least(n - start, lit(maxTokens)).as("n_tokens"))))
-          .as(Seq("chunk_idx", "c")))
-      .select(col(idCol), col("chunk_idx"),
-        col("c.chunk_text").as("chunk_text"),
-        col("c.n_tokens").as("n_tokens"))
-  }
+      .select(col(idCol), windows(col(textCol), maxTokens, overlap, withText = true))
+      .select(col(idCol), col("chunk_idx"), col("chunk_text"), col("n_tokens"))
 
   /** Whitespace word count of a text column WITHOUT materializing the
     * word array: `size(split(t, " "))` equals (number of spaces) + 1
@@ -77,84 +53,75 @@ object Chunking {
     length(textCol) - length(translate(textCol, " ", "")) + lit(1)
 
   /** The windows of [[chunk]] as (idCol, chunk_idx, n_tokens,
-    * chunk_len, char_start), without building any chunk text: n_tokens
-    * equals [[chunk]]'s, chunk_len == length(chunk_text), and
-    * chunk_text == substring(text, char_start+1, chunk_len) — the
-    * property that lets document-coordinate spans (e.g. loss masks) be
-    * remapped into chunk coordinates exactly (ChunkingSpec pins all
-    * three against [[chunk]]).
-    *
-    * One per-partition pass in the JVM: each row is one char pass (word
-    * boundaries + code-point prefix sums) and chunk windows are O(1)
-    * prefix-sum differences. The declarative higher-order-function form
-    * of the same arithmetic is interpreted per element outside
-    * whole-stage codegen — measured 2.03 s vs 0.13 s warm over the
-    * q_masked_pipeline conversations at sf0.1 (OPTIMIZATION_r06.md §7:
-    * 120k docs -> 3.1M chunks, 0 mismatches).
-    *
-    * Word lengths are counted in CODE POINTS (a non-low-surrogate unit
-    * count), matching Spark's `length()` exactly on supplementary-plane
-    * text — offsets must stay substring-faithful under Spark substring
-    * semantics. An UNPAIRED surrogate never reaches the walk: encoding
-    * the text into a DataFrame (UTF8String.fromString) replaces it with
-    * '?', which counts as one code point here and in `length()`. The id
-    * column must be integral (cast-to-long lossless, same fail-fast
-    * contract as [[Packing.packNextFit]]); callers with other id types
-    * derive a numeric key first.
+    * chunk_len, char_start), with no chunk text: chunk_text ==
+    * substring(text, char_start+1, chunk_len), which lets document
+    * spans (e.g. loss masks) be remapped into chunk coordinates exactly.
+    * The id column must be integral and comes out as a long (the
+    * fail-fast contract of [[Packing.packNextFit]]); callers with other
+    * id types derive a numeric key first.
     */
   def chunkOffsetsMapped(docs: DataFrame, maxTokens: Int = 512, overlap: Int = 64,
                          textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    require(maxTokens > 0, s"maxTokens must be positive, got $maxTokens")
-    require(overlap >= 0 && overlap < maxTokens,
-      s"overlap must be in [0, maxTokens), got $overlap")
     docs.schema(idCol).dataType match {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => ()
+      case ByteType | ShortType | IntegerType | LongType => ()
       case other => throw new IllegalArgumentException(
         s"chunkOffsetsMapped id column '$idCol' must be an integral type; got $other " +
           "— derive a numeric key first")
     }
-    val step = maxTokens - overlap
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .select(col(idCol).cast("long"), coalesce(col(textCol), lit("")))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (id, text) =>
-          // boundaries of split(text, " ", -1): every ' ' ends a word
-          var nWords = 1
-          var i = 0
-          val units = text.length
-          while (i < units) { if (text.charAt(i) == ' ') nWords += 1; i += 1 }
-          // pre(k) = code points in words[0..k) — low surrogates are the
-          // second half of an already-counted code point
-          val pre = new Array[Long](nWords + 1)
-          var w = 0
-          var cp = 0L
-          i = 0
-          while (i < units) {
-            val c = text.charAt(i)
-            if (c == ' ') { pre(w + 1) = cp; w += 1 }
-            else if (!Character.isLowSurrogate(c)) cp += 1
-            i += 1
-          }
-          pre(w + 1) = cp
-          val lastStart = ((math.max(nWords - overlap, 1) + step - 1) / step - 1) * step
-          val nChunks = lastStart / step + 1
-          val out = new Array[(Long, Int, Int, Long, Long)](nChunks)
-          var k = 0
-          while (k < nChunks) {
-            val s = k * step
-            val nt = math.min(nWords - s, maxTokens)
-            out(k) = (id, k, nt,
-              pre(s + nt) - pre(s) + nt - 1L, // window sum + (nt-1) separators
-              pre(s) + s.toLong)              // s words + s separators before
-            k += 1
-          }
-          out.iterator
+    docs.select(col(idCol).cast("long").as(idCol),
+      windows(col(textCol), maxTokens, overlap, withText = false))
+  }
+
+  /** [[ChunkWindows]] over `text` coalesced to '', its outputs named. */
+  private def windows(text: Column, maxTokens: Int, overlap: Int, withText: Boolean): Column = {
+    require(maxTokens > 0, s"maxTokens must be positive, got $maxTokens")
+    require(overlap >= 0 && overlap < maxTokens,
+      s"overlap must be in [0, maxTokens), got $overlap")
+    val gen = ChunkWindows(CatalystBridge.expression(coalesce(text, lit(""))),
+      maxTokens, overlap, withText)
+    CatalystBridge.column(gen).as(gen.elementSchema.fieldNames.toSeq)
+  }
+
+  /** The (chunk_idx, n_tokens, chunk_len, char_start[, chunk_text]) rows
+    * of one non-null text. One walk over the UTF-8 bytes splits words at
+    * 0x20 (never inside a multibyte sequence) and counts code points as
+    * non-continuation bytes (`UTF8String.numChars` on valid UTF-8), so
+    * lengths and offsets are in Spark `length`/`substring` units. pre(k)
+    * is the code points in words [0, k) and starts(k) the byte where word
+    * k starts, so a chunk's text is an O(chunk) byte slice.
+    */
+  private[spark] def windowsUtf8(text: UTF8String, maxTokens: Int, overlap: Int,
+                                 withText: Boolean): Iterator[InternalRow] = {
+    val b = text.getBytes
+    var pre = new Array[Int](16)
+    var starts = new Array[Int](16)
+    var nWords = 1
+    var cp = 0
+    var i = 0
+    while (i <= b.length) {
+      if (i == b.length || b(i) == ' ') {
+        if (nWords == pre.length) {
+          pre = java.util.Arrays.copyOf(pre, 2 * nWords)
+          starts = java.util.Arrays.copyOf(starts, 2 * nWords)
         }
-      }
-      .toDF(idCol, "chunk_idx", "n_tokens", "chunk_len", "char_start")
+        pre(nWords) = cp
+        starts(nWords) = i + 1
+        if (i < b.length) nWords += 1
+      } else if ((b(i) & 0xc0) != 0x80) cp += 1
+      i += 1
+    }
+    // the last start is the largest multiple of step strictly below
+    // max(1, nWords - overlap): the final chunk is non-empty and every
+    // word is covered
+    val step = maxTokens - overlap
+    val nChunks = (math.max(nWords - overlap, 1) + step - 1) / step
+    Iterator.tabulate(nChunks) { k =>
+      val s = k * step
+      val nt = math.min(nWords - s, maxTokens)
+      // nt words and nt - 1 separators, after s words and s separators
+      val window = Array[Any](k, nt, (pre(s + nt) - pre(s) + nt - 1).toLong, (pre(s) + s).toLong)
+      new GenericInternalRow(if (!withText) window
+        else window :+ UTF8String.fromBytes(b, starts(s), starts(s + nt) - 1 - starts(s)))
+    }
   }
 }

@@ -29,13 +29,6 @@ object Dedup {
     Fingerprints.minHash(Fingerprints.wordShingles(if (text == null) "" else text)).toSeq)
   private val bandsUdf = udf((sig: Seq[Long]) =>
     Fingerprints.lshBands(sig.toArray).toSeq)
-  // null texts shingle as "" (the sigUdf convention): Scala UDFs over
-  // String args ARE invoked with null, and an unguarded null would NPE
-  // the verification tier mid-composition
-  private val jaccardUdf = udf((a: String, b: String) =>
-    Fingerprints.jaccard(
-      Fingerprints.wordShingles(if (a == null) "" else a),
-      Fingerprints.wordShingles(if (b == null) "" else b)))
   private val minhashSimUdf = udf((a: Seq[Long], b: Seq[Long]) =>
     Fingerprints.minHashSimilarity(a.toArray, b.toArray))
 
@@ -181,17 +174,19 @@ object Dedup {
       .filter(col("est_sim") >= simThreshold)
   }
 
-  /** Exact word-3-gram Jaccard for verified pairs (joins text back). */
+  /** Exact word-3-gram Jaccard for verified pairs (joins text back):
+    * n_inter / n_union of [[ngramJaccardDetail]]. A shingle set is never
+    * empty, so n_union >= 1 and the double equals Fingerprints.jaccard.
+    */
   def ngramJaccardPairs(docs: DataFrame, pairs: DataFrame,
-                        threshold: Double = 0.5): DataFrame = {
-    val t = docs.select(col("doc_id"), col("text"))
-    pairs
-      .join(t.withColumnRenamed("doc_id", "a").withColumnRenamed("text", "text_a"), "a")
-      .join(t.withColumnRenamed("doc_id", "b").withColumnRenamed("text", "text_b"), "b")
-      .select(col("a"), col("b"), jaccardUdf(col("text_a"), col("text_b")).as("jaccard"))
+                        threshold: Double = 0.5): DataFrame =
+    ngramJaccardDetail(docs, pairs)
+      .select(col("a"), col("b"), (col("n_inter") / col("n_union")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-  }
 
+  // null texts shingle as "" (the sigUdf convention): Scala UDFs over
+  // String args ARE invoked with null, and an unguarded null would NPE
+  // the verification tier mid-composition
   private val jaccardDetailUdf = udf((a: String, b: String) => {
     val sa = Fingerprints.wordShingles(if (a == null) "" else a)
     val sb = Fingerprints.wordShingles(if (b == null) "" else b)
@@ -203,15 +198,17 @@ object Dedup {
     * the verification tier with its arithmetic exposed (integer counts,
     * so an oracle can pin the verified set without floating-point
     * hashing). Returns (a, b, n_inter, n_union); Jaccard =
-    * n_inter / n_union.
+    * n_inter / n_union. The counts leave through a one-row generator,
+    * so a filter on them does not re-run the UDF (as in
+    * Filtering.c4LineClean).
     */
   def ngramJaccardDetail(docs: DataFrame, pairs: DataFrame): DataFrame = {
     val t = docs.select(col("doc_id"), col("text"))
     pairs
       .join(t.withColumnRenamed("doc_id", "a").withColumnRenamed("text", "text_a"), "a")
       .join(t.withColumnRenamed("doc_id", "b").withColumnRenamed("text", "text_b"), "b")
-      .select(col("a"), col("b"), jaccardDetailUdf(col("text_a"), col("text_b")).as("d"))
-      .select(col("a"), col("b"), col("d._1").as("n_inter"), col("d._2").as("n_union"))
+      .select(col("a"), col("b"), inline(array(jaccardDetailUdf(col("text_a"), col("text_b")))))
+      .select(col("a"), col("b"), col("_1").as("n_inter"), col("_2").as("n_union"))
   }
 
   private val triUdf = udf((text: String) => {

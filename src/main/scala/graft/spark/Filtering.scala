@@ -464,7 +464,11 @@ object Filtering {
     * consume it, lambda bodies included, where it would re-evaluate once
     * per line; a lambda variable is never substituted, so a computed
     * upstream text column evaluates exactly once per row and the split
-    * exactly once, no matter how many outputs consume them. Every predicate is engine-neutral string arithmetic
+    * exactly once, no matter how many outputs consume them. The struct
+    * leaves through a one-row generator (`inline(array(struct))`): a
+    * filter on `keep` stays above it, where a projection would let the
+    * optimizer substitute the struct into the filter once per reference.
+    * Every predicate is engine-neutral string arithmetic
     * (no regex beyond the newline split), so the whole operator replays
     * exactly in ANSI SQL — see the q_line_clean oracle.
     */
@@ -483,19 +487,18 @@ object Filtering {
         (if (dropCodeBrace) Seq("NOT contains(__t, '{')") else Nil)
     val pageOk = if (pageChecks.isEmpty) "true" else pageChecks.mkString(" AND ")
     val c4Sql =
-      s"""element_at(transform(array(coalesce(`$textCol`, '')), __t ->
+      s"""inline(array(element_at(transform(array(coalesce(`$textCol`, '')), __t ->
          | element_at(transform(array(split(__t, chr(10))), __ls -> named_struct(
-         |   'n_lines', size(__ls),
-         |   'kept', filter(__ls, __l -> $lineOk),
-         |   'page_ok', ($pageOk))), 1)), 1)"""
+         |   '__n_lines', size(__ls),
+         |   '__kept', filter(__ls, __l -> $lineOk),
+         |   '__page_ok', ($pageOk))), 1)), 1)))"""
         .stripMargin.replace("\n", " ")
-    df.withColumn("__c4", expr(c4Sql))
-      .withColumn("clean_text", array_join(col("__c4.kept"), "\n"))
-      .withColumn("n_lines", col("__c4.n_lines"))
-      .withColumn("n_kept", size(col("__c4.kept")))
-      .withColumn("keep",
-        col("__c4.page_ok") && size(col("__c4.kept")) >= minKeptLines)
-      .drop("__c4")
+    df.select(col("*"), expr(c4Sql))
+      .withColumn("clean_text", array_join(col("__kept"), "\n"))
+      .withColumn("n_lines", col("__n_lines"))
+      .withColumn("n_kept", size(col("__kept")))
+      .withColumn("keep", col("__page_ok") && size(col("__kept")) >= minKeptLines)
+      .drop("__n_lines", "__kept", "__page_ok")
   }
 
   /** WITHIN-document line dedup: keep only the FIRST occurrence of each
@@ -506,7 +509,9 @@ object Filtering {
     * exchange to do it). Adds `clean_text` (surviving lines in original
     * order) plus `n_lines`/`n_kept` counters; zero rows dropped.
     *
-    * Scale: pure per-row projection — shuffle-free, scan-speed. The
+    * Scale: pure per-row projection — shuffle-free, scan-speed; the
+    * struct leaves through a one-row generator, as in [[c4LineClean]],
+    * so a filter on its outputs does not re-run the split. The
     * first-occurrence test is `array_position(lines, line) == index+1`
     * inside a single indexed `filter` over the let-bound line array
     * (O(lines²) per doc in the worst case, on line COUNTS, not chars —
@@ -517,15 +522,15 @@ object Filtering {
     */
   def dedupLinesInDoc(df: DataFrame, textCol: String = "text"): DataFrame = {
     val sql =
-      s"""element_at(transform(array(split(coalesce(`$textCol`, ''), chr(10))),
+      s"""inline(array(element_at(transform(array(split(coalesce(`$textCol`, ''), chr(10))),
          | __ls -> named_struct(
-         |  'n_lines', size(__ls),
-         |  'kept', filter(__ls, (__l, __i) -> array_position(__ls, __l) = __i + 1))), 1)"""
+         |  '__n_lines', size(__ls),
+         |  '__kept', filter(__ls, (__l, __i) -> array_position(__ls, __l) = __i + 1))), 1)))"""
         .stripMargin.replace("\n", " ")
-    df.withColumn("__ld", expr(sql))
-      .withColumn("clean_text", array_join(col("__ld.kept"), "\n"))
-      .withColumn("n_lines", col("__ld.n_lines"))
-      .withColumn("n_kept", size(col("__ld.kept")))
-      .drop("__ld")
+    df.select(col("*"), expr(sql))
+      .withColumn("clean_text", array_join(col("__kept"), "\n"))
+      .withColumn("n_lines", col("__n_lines"))
+      .withColumn("n_kept", size(col("__kept")))
+      .drop("__n_lines", "__kept")
   }
 }

@@ -1,6 +1,6 @@
 package graft.spark.catalyst
 
-import graft.spark.{Bpe, Filtering}
+import graft.spark.{Bpe, Chunking, Filtering}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
@@ -36,6 +36,38 @@ object RepetitionStats {
     StructField("n_words", IntegerType, nullable = false),
     StructField("top2_chars", LongType, nullable = false),
     StructField("dup3_chars", LongType, nullable = false)))
+}
+
+/** The chunk windows of one text as a native Generator: a (chunk_idx,
+  * n_tokens, chunk_len, char_start) row per window of `maxTokens` words
+  * overlapping by `overlap`, plus its chunk_text when `withText`, from
+  * [[Chunking.windowsUtf8]]. The sizes are fields, not plan literals.
+  * Column-side only ([[Chunking.chunk]] with text,
+  * [[Chunking.chunkOffsetsMapped]] without); no SQL name is bound. The
+  * text comes from the generator because a text column carried through
+  * it would be copied whole into every chunk row. CodegenFallback, as
+  * for [[RepetitionStats]]: the kernel dominates.
+  */
+case class ChunkWindows(child: Expression, maxTokens: Int, overlap: Int, withText: Boolean)
+    extends StringFunction("chunk_windows") with Generator with CodegenFallback {
+
+  override def elementSchema: StructType =
+    if (withText) ChunkWindows.Schema.add("chunk_text", StringType, nullable = false)
+    else ChunkWindows.Schema
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] =
+    Chunking.windowsUtf8(child.eval(input).asInstanceOf[UTF8String], maxTokens, overlap, withText)
+
+  override protected def withNewChildInternal(newChild: Expression): ChunkWindows =
+    copy(child = newChild)
+}
+
+object ChunkWindows {
+  val Schema: StructType = StructType(Seq(
+    StructField("chunk_idx", IntegerType, nullable = false),
+    StructField("n_tokens", IntegerType, nullable = false),
+    StructField("chunk_len", LongType, nullable = false),
+    StructField("char_start", LongType, nullable = false)))
 }
 
 /** BPE token count of one text under a merge table, as a native

@@ -1,10 +1,12 @@
 package graft.spark
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Chunking contract: bounded size, exact overlap, full coverage —
-  * concatenating chunks minus their overlaps reconstructs the doc.
+  * concatenating chunks minus their overlaps reconstructs the doc. Both
+  * public forms run one kernel, so each is pinned to an independent
+  * reference (`referenceChunk`), not to the other.
   */
 class ChunkingSpec extends SparkTestBase {
   import spark.implicits._
@@ -13,20 +15,47 @@ class ChunkingSpec extends SparkTestBase {
     spark.createDataset(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) })
       .toDF("doc_id", "text")
 
-  // The three retired chunkers, rebuilt from the two kept forms so their
-  // contracts stay pinned on the same inputs and shapes:
-  //  - chunkCounts: the walk's (doc_id, chunk_idx, n_tokens)
-  //  - chunkOffsetsOnly: the declarative reference for the walk —
-  //    chunk()'s sizes, with char_start measured as the joined length
-  //    of the chunk_idx * step words before the window plus one space
-  //  - chunkWithOffsets: chunk()'s text with the walk's char_start; a
-  //    window either form lacks leaves a null that fails the decode
-  private def chunkCounts(docs: DataFrame, mt: Int, ov: Int) =
-    Chunking.chunkOffsetsMapped(docs, mt, ov)
-      .select(col("doc_id"), col("chunk_idx"), col("n_tokens"))
+  // The declarative chunker the kernel replaced, kept verbatim as the
+  // independent reference both public forms are pinned to: the windows
+  // as a higher-order-function projection over split / sequence /
+  // posexplode / slice / array_join.
+  private def referenceChunk(docs: DataFrame, maxTokens: Int, overlap: Int,
+                             textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+    val step = maxTokens - overlap
+    val w: Column = col("w")
+    val n: Column = size(w)
+    // last start: the largest multiple of step strictly below
+    // max(1, n - overlap) — guarantees the final chunk is non-empty and
+    // every word is covered
+    val lastStart = (ceil((greatest(n - lit(overlap), lit(1))).cast("double")
+      / lit(step)).cast("int") - 1) * lit(step)
+    // coalesce: split(null) yields a null array and posexplode then emits
+    // NO rows — null-text docs would vanish silently (ADVICE r4). An
+    // empty string chunks like any other text (one chunk, [""]), so null
+    // docs stay visible downstream.
+    docs
+      .select(col(idCol), split(coalesce(col(textCol), lit("")), " ").as("w"))
+      .select(col(idCol),
+        posexplode(transform(sequence(lit(0), lastStart, lit(step)), start =>
+          struct(
+            array_join(slice(w, start + 1, lit(maxTokens)), " ").as("chunk_text"),
+            least(n - start, lit(maxTokens)).as("n_tokens"))))
+          .as(Seq("chunk_idx", "c")))
+      .select(col(idCol), col("chunk_idx"),
+        col("c.chunk_text").as("chunk_text"),
+        col("c.n_tokens").as("n_tokens"))
+  }
 
+  // Helpers over the reference and the two public forms:
+  //  - chunkOffsetsOnly: the reference's windows as (doc_id, chunk_idx,
+  //    n_tokens, chunk_len, char_start), char_start measured as the
+  //    joined length of the chunk_idx * step words before the window
+  //    plus one space
+  //  - chunkWithOffsets: chunk()'s text with chunkOffsetsMapped's
+  //    char_start; a window either form lacks leaves a null that fails
+  //    the decode
   private def chunkOffsetsOnly(docs: DataFrame, mt: Int, ov: Int) =
-    Chunking.chunk(docs, mt, ov)
+    referenceChunk(docs, mt, ov)
       .join(docs.select(col("doc_id"), split(coalesce(col("text"), lit("")), " ").as("w")),
         Seq("doc_id"))
       .select(col("doc_id"), col("chunk_idx"), col("n_tokens"),
@@ -42,6 +71,31 @@ class ChunkingSpec extends SparkTestBase {
         Seq("doc_id", "chunk_idx"), "full_outer")
       .select(col("doc_id"), col("chunk_idx"), col("chunk_text"), col("n_tokens"),
         col("char_start"))
+
+  /** Every (max_tokens, overlap) shape the forms are pinned at. */
+  private val shapes = Seq((7, 2), (16, 4), (3, 0), (2, 1), (1, 0))
+
+  /** Variable-width words, embedded non-space whitespace (kept inside
+    * words by split(" ")), space runs, leading and trailing spaces, and
+    * supplementary-plane chars (Spark length() counts code points, Java
+    * String.length UTF-16 units), plus a null text. */
+  private def mixedDocs(seed: Int): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    val texts = Seq.tabulate(30)(i =>
+      Seq.fill(rnd.nextInt(50) + 1)("x" * (1 + rnd.nextInt(6)) +
+        (if (rnd.nextInt(5) == 0) "\nY" else "")).mkString(" ")) ++
+      Seq("", "one", "a b c", "a  b ", "a   b", " lead", "trail ", "  ", "é ü ß",
+        "𝄞𝄞 x 😀y z", "a 𝄞 b c d e f g")
+    mkDocs(texts).unionByName(spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(999L, null: String))),
+      mkDocs(Seq("z")).schema))
+  }
+
+  private def sorted4(df: DataFrame) =
+    df.as[(Long, Int, String, Int)].collect().sortBy(r => (r._1, r._2)).toSeq
+
+  private def sorted5(df: DataFrame) =
+    df.as[(Long, Int, Int, Long, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
 
   test("every word covered, chunks bounded, consecutive chunks share exactly `overlap` words") {
     val rnd = new scala.util.Random(5)
@@ -134,79 +188,50 @@ class ChunkingSpec extends SparkTestBase {
     assert(out.length == plain.size)
   }
 
-  test("chunkCounts == chunk projected to (id, idx, n_tokens)") {
-    val rnd = new scala.util.Random(23)
-    val texts = Seq.tabulate(30)(i =>
-      Seq.fill(rnd.nextInt(70) + 1)("w" * (1 + rnd.nextInt(4))).mkString(" ")) ++
-      Seq("", "one", "a b c", "a  b", " lead", "trail ")
-    for ((mt, ov) <- Seq((8, 3), (4, 0), (16, 4))) {
-      val slim = chunkCounts(mkDocs(texts), mt, ov)
-        .as[(Long, Int, Int)].collect().sortBy(r => (r._1, r._2)).toSeq
-      val full = Chunking.chunk(mkDocs(texts), mt, ov)
-        .select(col("doc_id"), col("chunk_idx"), col("n_tokens"))
-        .as[(Long, Int, Int)].collect().sortBy(r => (r._1, r._2)).toSeq
-      assert(slim == full, s"diverged at ($mt, $ov)")
+  test("chunk == the declarative reference (incl. non-BMP, runs, null)") {
+    val docs = mixedDocs(23)
+    for ((mt, ov) <- shapes) {
+      val got = sorted4(Chunking.chunk(docs, mt, ov))
+      assert(got.nonEmpty && got == sorted4(referenceChunk(docs, mt, ov)), s"diverged at ($mt, $ov)")
     }
   }
 
   test("chunkOffsetsOnly == chunkWithOffsets projected to ids + sizes") {
-    val rnd = new scala.util.Random(31)
-    val texts = Seq.tabulate(30)(i =>
-      Seq.fill(rnd.nextInt(50) + 1)("x" * (1 + rnd.nextInt(6)) +
-        (if (rnd.nextInt(5) == 0) "\nY" else "")).mkString(" ")) ++
-      Seq("", "one", "a b c", "a  b ", "é ü ß")
-    for ((mt, ov) <- Seq((7, 2), (16, 4), (3, 0))) {
-      val slim = chunkOffsetsOnly(mkDocs(texts), mt, ov)
-        .as[(Long, Int, Int, Long, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
-      val full = chunkWithOffsets(mkDocs(texts), mt, ov)
+    val docs = mixedDocs(31)
+    for ((mt, ov) <- shapes) {
+      val slim = sorted5(chunkOffsetsOnly(docs, mt, ov))
+      val full = sorted5(chunkWithOffsets(docs, mt, ov)
         .select(col("doc_id"), col("chunk_idx"), col("n_tokens"),
-          length(col("chunk_text")).cast("long"), col("char_start"))
-        .as[(Long, Int, Int, Long, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
+          length(col("chunk_text")).cast("long"), col("char_start")))
       assert(slim == full, s"diverged at ($mt, $ov)")
     }
   }
 
   test("chunkOffsetsMapped == chunkOffsetsOnly row-for-row (incl. non-BMP, runs, null)") {
-    val rnd = new scala.util.Random(41)
-    val texts = Seq.tabulate(30)(i =>
-      Seq.fill(rnd.nextInt(50) + 1)("x" * (1 + rnd.nextInt(6)) +
-        (if (rnd.nextInt(5) == 0) "\nY" else "")).mkString(" ")) ++
-      // supplementary-plane chars: Spark length() counts code points,
-      // Java String.length counts UTF-16 units — the compiled walk must
-      // agree with the declarative form on both offsets and lengths
-      Seq("", "one", "a b c", "a  b ", " lead", "é ü ß",
-        "𝄞𝄞 x 😀y z", "a 𝄞 b c d e f g")
-    val withNull = mkDocs(texts).unionByName(spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(999L, null: String))),
-      mkDocs(Seq("z")).schema))
-    for ((mt, ov) <- Seq((7, 2), (16, 4), (3, 0), (2, 1))) {
-      val mapped = Chunking.chunkOffsetsMapped(withNull, mt, ov)
-        .as[(Long, Int, Int, Long, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
-      val decl = chunkOffsetsOnly(withNull, mt, ov)
-        .as[(Long, Int, Int, Long, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
-      assert(mapped == decl, s"diverged at ($mt, $ov)")
+    val docs = mixedDocs(41)
+    for ((mt, ov) <- shapes) {
+      val mapped = sorted5(Chunking.chunkOffsetsMapped(docs, mt, ov))
+      assert(mapped.nonEmpty && mapped == sorted5(chunkOffsetsOnly(docs, mt, ov)),
+        s"diverged at ($mt, $ov)")
     }
   }
 
   test("chunkOffsetsMapped on unpaired surrogates: == chunkOffsetsOnly, offsets rebuild each chunk") {
-    // a lone low surrogate would be skipped by the walk's code-point
-    // count and a lone high one counted; both must still agree with
-    // Spark's length() once the text has crossed into a DataFrame
     val texts = Seq("a \uDC00b c d", "x\uD800 y z w", "\uD800", "\uDC00",
       "\uDC00 \uD800 w v u", "\uD800\uD800 a \uDC00\uDC00 b c", "p q\uDC00 \uD800r s t")
     val docs = mkDocs(texts)
-    // why they agree: UTF-8 encoding into the DataFrame already turned
-    // each unpaired surrogate into '?', so the walk never sees one
+    // UTF-8 encoding into the DataFrame turns each unpaired surrogate
+    // into '?', so the kernel only ever sees valid UTF-8
     assert(docs.select($"text").as[String].collect().toSet ==
       texts.map(_.replaceAll("[\\uD800-\\uDFFF]", "?")).toSet)
-    for ((mt, ov) <- Seq((3, 1), (2, 0))) {
+    for ((mt, ov) <- shapes ++ Seq((3, 1), (2, 0))) {
       val mapped = Chunking.chunkOffsetsMapped(docs, mt, ov)
-      val rows = mapped.as[(Long, Int, Int, Long, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
-      val decl = chunkOffsetsOnly(docs, mt, ov)
-        .as[(Long, Int, Int, Long, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
-      assert(rows == decl, s"diverged at ($mt, $ov)")
-      val texted = Chunking.chunk(docs, mt, ov).select($"doc_id", $"chunk_idx", $"chunk_text")
-      val bad = mapped.join(docs, "doc_id").join(texted, Seq("doc_id", "chunk_idx"))
+      val rows = sorted5(mapped)
+      assert(rows == sorted5(chunkOffsetsOnly(docs, mt, ov)), s"diverged at ($mt, $ov)")
+      val texted = Chunking.chunk(docs, mt, ov)
+      assert(sorted4(texted) == sorted4(referenceChunk(docs, mt, ov)), s"chunk diverged at ($mt, $ov)")
+      val bad = mapped.join(docs, "doc_id")
+        .join(texted.select($"doc_id", $"chunk_idx", $"chunk_text"), Seq("doc_id", "chunk_idx"))
         .filter(expr("substring(text, char_start + 1, chunk_len)") =!= $"chunk_text" ||
           length($"chunk_text") =!= $"chunk_len")
       assert(bad.count() == 0, s"offsets miss their chunk at ($mt, $ov)")
@@ -223,10 +248,26 @@ class ChunkingSpec extends SparkTestBase {
   }
 
   test("slim chunkers stay shuffle-free projections") {
-    val plan = Chunking.chunkOffsetsMapped(mkDocs(Seq("a b c d e")), 3, 1)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), plan)
-    assert(!plan.contains("BatchEvalPython") && !plan.contains("UDF"), plan)
+    // both forms plan the one ChunkWindows generator, with no object
+    // boundary (a typed mapPartitions) and no UDF around it
+    val docs = mkDocs(Seq("a b c d e"))
+    for (df <- Seq(Chunking.chunkOffsetsMapped(docs, 3, 1), Chunking.chunk(docs, 3, 1))) {
+      val plan = df.queryExecution.optimizedPlan
+      val ops = plan.collect { case p => p.nodeName }
+      val exprs = plan.flatMap(_.expressions.flatMap(_.collect { case e => e.getClass.getSimpleName }))
+      assert(exprs.count(_ == "ChunkWindows") == 1, plan.toString)
+      assert(!ops.exists(Set("DeserializeToObject", "MapPartitions")) && !exprs.contains("ScalaUDF"),
+        plan.toString)
+      val physical = df.queryExecution.executedPlan.toString
+      assert(!physical.contains("Exchange"), physical)
+      assert(!physical.contains("BatchEvalPython") && !physical.contains("UDF"), physical)
+    }
+    // the output schemas the packing and span-remap consumers read
+    assert(Chunking.chunkOffsetsMapped(docs, 3, 1).schema.map(f => (f.name, f.dataType.simpleString)) ==
+      Seq("doc_id" -> "bigint", "chunk_idx" -> "int", "n_tokens" -> "int",
+        "chunk_len" -> "bigint", "char_start" -> "bigint"))
+    assert(Chunking.chunk(docs, 3, 1).schema.map(f => (f.name, f.dataType.simpleString)) ==
+      Seq("doc_id" -> "bigint", "chunk_idx" -> "int", "chunk_text" -> "string", "n_tokens" -> "int"))
   }
 
   test("chunking plans as a shuffle-free projection (no exchange, no UDF)") {

@@ -67,7 +67,7 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("repetition and BPE queries plan no object boundary and no UDF") {
-    for (q <- Seq("q_repetition", "q_gopher_filter", "q_bpe_encode")) {
+    for (q <- Seq("q_repetition", "q_gopher_filter", "q_bpe_encode", "q_chunked")) {
       val df = graft.SparkEntry.queries(q)(spark, sf)
       val (ops, exprs) = planParts(df)
       assert(!ops.exists(Set("DeserializeToObject", "MapPartitions")) && !exprs.contains("ScalaUDF"),
@@ -78,6 +78,26 @@ class PlanSpec extends SparkTestBase {
       val df = graft.SparkEntry.queries(q)(spark, sf)
       assert(!planParts(df)._2.contains("ScalaUDF"), s"$q:\n${df.queryExecution.optimizedPlan}")
     }
+  }
+
+  test("line cleaning under .filter(keep) runs its line split and rules once per row") {
+    // the struct of per-row line results leaves through a one-row
+    // generator: a filter on `keep` stays above it, rather than being
+    // pushed below with the struct substituted into its condition
+    def counts(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
+      val exprs = planParts(df)._2
+      (exprs.count(_ == "StringSplit"), exprs.count(_ == "ArrayFilter"))
+    }
+    val docs = spark.read.parquet(docsParquet)
+    val c4 = Filtering.c4LineClean(docs)
+    val c4Plain = c4.select(col("doc_id"), col("clean_text"))
+    val c4Kept = c4.filter(col("keep")).select(col("doc_id"), col("clean_text"))
+    assert(counts(c4Kept) == counts(c4Plain) && counts(c4Plain) == (2, 2),
+      c4Kept.queryExecution.optimizedPlan.toString)
+    val ld = Filtering.dedupLinesInDoc(docs)
+    val ldKept = ld.filter(col("n_kept") < col("n_lines")).select(col("doc_id"), col("clean_text"))
+    assert(counts(ldKept) == counts(ld.select(col("doc_id"), col("clean_text"))),
+      ldKept.queryExecution.optimizedPlan.toString)
   }
 
   test("pipeline scan prunes to (conv_id, turn_idx, text) — role/tool/ts never read") {

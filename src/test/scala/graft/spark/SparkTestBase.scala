@@ -16,9 +16,16 @@ abstract class SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
+  private val tmpDirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+
   override def beforeAll(): Unit = {
     super.beforeAll()
     spark.sparkContext.setLogLevel("WARN")
+  }
+
+  override def afterAll(): Unit = {
+    super.afterAll()
+    tmpDirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
   }
 
   /** Run `body` so that generated code which fails to compile raises,
@@ -31,6 +38,11 @@ abstract class SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     try body finally confs.foreach { case (k, _) => spark.conf.unset(k) }
   }
 
-  protected def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A fresh directory under java.io.tmpdir, deleted with its contents
+    * after the suite. */
+  protected def tmpDir(prefix: String): String = synchronized {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tmpDirs += d
+    d.toString
+  }
 }
