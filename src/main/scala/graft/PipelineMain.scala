@@ -17,14 +17,15 @@ import graft.spark.{Pipeline, Transcripts}
   *     Materialize the replicated transcripts input once (setup, not
   *     the measured job — same protocol as ScalingBench), plus a small
   *     repl=1 copy at <workDir>/transcripts-warmup for JIT warmup.
-  *   run <transcriptsDir> <outDir> [shape] [warmupDir]
+  *   run <transcriptsDir> <outDir> [warmupDir]
   *     ONE resumable production batch (Pipeline.runResumable:
   *     anti-join checkpoint resume + per-file lineage + retry-safe
-  *     metrics ledger), timed end to end; prints one JSON line with
-  *     rows, wall seconds, turns/sec and the window's steal%. The
-  *     untimed warmup batch (JIT + codegen, fresh JVM per submit) runs
-  *     over warmupDir when given — warming on a small input keeps
-  *     large-input scaling runs affordable without skipping the warmup.
+  *     metrics ledger) in the default extract-first shape, timed end
+  *     to end; prints one JSON line with rows, wall seconds, turns/sec
+  *     and the window's steal%. The untimed warmup batch (JIT +
+  *     codegen, fresh JVM per submit) runs over warmupDir when given —
+  *     warming on a small input keeps large-input scaling runs
+  *     affordable without skipping the warmup.
   *
   * The master is whatever spark-submit passes (--master) — never set
   * here. Shuffle partitions come from SPARK_GRAFT_SHUFFLE_PARTITIONS
@@ -33,7 +34,7 @@ import graft.spark.{Pipeline, Transcripts}
 object PipelineMain {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
-      "usage: prepare <sfDir> <workDir> <repl> | run <in> <out> [shape] [warmupDir]")
+      "usage: prepare <sfDir> <workDir> <repl> | run <in> <out> [warmupDir]")
     val spark = SparkSession.builder()
       .appName(s"graft-pipeline-${args(0)}")
       .getOrCreate()
@@ -69,16 +70,15 @@ object PipelineMain {
         println(s"""{"prepared":"$workDir/transcripts","repl":$repl}""")
 
       case "run" =>
-        require(args.length >= 3, "run <transcriptsDir> <outDir> [shape] [warmupDir]")
+        require(args.length >= 3, "run <transcriptsDir> <outDir> [warmupDir]")
         val (in, out) = (args(1), args(2))
-        val cfg = Pipeline.Config(
-          shape = if (args.length > 3) args(3) else "extractfirst")
+        val cfg = Pipeline.Config()
         // untimed warmup batch into a throwaway dir (JIT + codegen —
         // same per-level warmup ScalingBench applies), then the timed
         // production batch; opt out with SPARK_GRAFT_SUBMIT_WARMUP=0
         if (sys.env.getOrElse("SPARK_GRAFT_SUBMIT_WARMUP", "1") == "1") {
           val w = s"$out-warmup"
-          val warmIn = if (args.length > 4) args(4) else in
+          val warmIn = if (args.length > 3) args(3) else in
           Pipeline.runResumable(spark, warmIn, w, cfg)
           org.apache.hadoop.fs.FileSystem
             .get(new java.net.URI(w), spark.sparkContext.hadoopConfiguration)

@@ -110,10 +110,12 @@ object SparkEntry {
   /** Unrolled DuckDB replay of [[graft.spark.Bpe.learn]]: s0 is the
     * initial bar-wrapped segmentation of the word-type table; each
     * iteration i extracts adjacent symbol pairs laterally (p_i), picks
-    * the (count desc, l, r) argmax (b_i — binary string order, same as
-    * Spark's), and applies it with a literal `replace` (s_i), which in
-    * both engines scans left-to-right without re-matching inside a
-    * replacement — classic BPE merge order. MATERIALIZED is load-bearing:
+    * the (count desc, l, r) argmax (b_i — binary string order, the UTF-8
+    * byte order learn's tie-break compares), and applies it with a
+    * literal `replace` (s_i), which scans left-to-right without
+    * re-matching inside a replacement — classic BPE merge order, the one
+    * learn's in-memory walk follows (BpeSpec checks learn against this
+    * chain's Spark form merge-for-merge). MATERIALIZED is load-bearing:
     * s_{i-1} is referenced twice per iteration (pairs + replay), and
     * inlined CTEs would re-evaluate the whole chain per reference
     * (measured: 2^12 blowup hangs DuckDB; materialized it's ~0.1 s).
@@ -1224,17 +1226,18 @@ object SparkEntry {
     // smaller pair. The bar-wrapped segmentation makes each merge ONE
     // literal replace that replays verbatim in DuckDB, so the whole
     // training loop is exactly oracle-checked (12 covers both
-    // single-char and compound merges on this corpus, e.g. p+ar)
-    // (r6: learnLocal — merge-for-merge equivalent to learn, BpeSpec-
-    // gated; ONE distributed job instead of K sequential aggregations,
-    // and this corpus's ~31-word vocabulary is far under maxTypes)
-    "q_bpe_merges" -> ((s, dir) => graft.spark.Bpe.learnLocal(docs(s, dir), bpeMerges)),
+    // single-char and compound merges on this corpus, e.g. p+ar).
+    // learn runs the loop in memory over ONE distributed word count;
+    // this corpus's ~31 word types are far under its 2^20-type cap, so
+    // dropped_mass is 0 and the five oracle columns are exact
+    "q_bpe_merges" -> ((s, dir) => graft.spark.Bpe.learn(docs(s, dir), bpeMerges)
+      .select("iter", "l_sym", "r_sym", "merged", "cnt")),
     // apply the learned merges: per-doc (n_words, n_tokens) — the
     // token-budget numbers chunk/pack sizing consumes. The merge table
     // is a driver artifact (like the IVF centroids); encode itself is
     // one shuffle-free projection
     "q_bpe_encode" -> ((s, dir) => {
-      val m = graft.spark.Bpe.learnLocal(docs(s, dir), bpeMerges)
+      val m = graft.spark.Bpe.learn(docs(s, dir), bpeMerges)
         .collect().sortBy(_.getInt(0)).map(r => (r.getString(1), r.getString(2))).toSeq
       graft.spark.Bpe.encode(docs(s, dir), m)
     }),
@@ -1245,7 +1248,7 @@ object SparkEntry {
     // measured chunk-size distribution (12-72 BPE tokens, mean 52):
     // some pairs co-pack, large chunks ride alone
     "q_packed_bpe" -> ((s, dir) => {
-      val m = graft.spark.Bpe.learnLocal(docs(s, dir), bpeMerges)
+      val m = graft.spark.Bpe.learn(docs(s, dir), bpeMerges)
         .collect().sortBy(_.getInt(0)).map(r => (r.getString(1), r.getString(2))).toSeq
       val chunks = Chunking.chunk(guardMaxWords(docs(s, dir), "text", 772),
         maxTokens = 16, overlap = 4)
@@ -1270,7 +1273,7 @@ object SparkEntry {
       val sampled = graft.spark.Dsir.resample(scored,
         Seq(-105 -> 65536, -110 -> 32768, -115 -> 16384), floorRate = 8192)
         .select(col("doc_id"))
-      val m = graft.spark.Bpe.learnLocal(docs(s, dir), bpeMerges)
+      val m = graft.spark.Bpe.learn(docs(s, dir), bpeMerges)
         .collect().sortBy(_.getInt(0)).map(r => (r.getString(1), r.getString(2))).toSeq
       val kept = docs(s, dir).join(sampled, Seq("doc_id"), "left_semi")
       val chunks = Chunking.chunk(guardMaxWords(kept, "text", 772),

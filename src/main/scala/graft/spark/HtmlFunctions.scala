@@ -1,6 +1,6 @@
 package graft.spark
 
-import graft.extract.{Extractor, SpanCodec}
+import graft.extract.{Extractor, SpanCodec, SpanRec}
 import graft.parser.{HtmlNode, HtmlParser}
 import graft.parser.HtmlParser.ParseStats
 import org.apache.spark.TaskContext
@@ -290,9 +290,17 @@ object HtmlFunctions {
   val to_html = udf(roundtrip _)
   val prettify_html = udf(prettifyHtml _)
   val node_count = udf(nodeCount _)
+  /** Main-text extraction of one turn, with the pipeline's oversize
+    * guard: a turn over [[Pipeline.DefaultMaxTextChars]] code points is
+    * not parsed and reads ("", no spans, 0 nodes, 1 error), as
+    * [[Pipeline.extractOnScanPartitions]] emits it. */
   val extract_main = udf((html: String) => {
-    val r = Extractor.extract(if (html == null) "" else html)
-    (r.text, r.spans, r.nNodes, r.nErrors)
+    val t = if (html == null) "" else html
+    if (Pipeline.isOversize(t, Pipeline.DefaultMaxTextChars)) ("", Seq.empty[SpanRec], 0, 1)
+    else {
+      val r = Extractor.extract(t)
+      (r.text, r.spans, r.nNodes, r.nErrors)
+    }
   })
 
   /** Struct view over the packed span columns (SpanCodec wire format) —

@@ -131,8 +131,13 @@ object Pipeline {
   @inline private[spark] def isOversize(t: String, maxChars: Int): Boolean =
     t.length > maxChars && t.codePointCount(0, t.length) > maxChars
 
+  /** The oversize guard's default bound in code points: the pipeline's
+    * [[Config]] and the `extract_main` SQL function skip a text longer
+    * than this the same way. */
+  val DefaultMaxTextChars: Int = 4 << 20
+
   final case class Config(partitions: Int = 0, // 0 = spark.sql.shuffle.partitions
-                          maxTextChars: Int = 4 << 20,
+                          maxTextChars: Int = DefaultMaxTextChars,
                           snapshotId: String = "parquet-v0",
                           // "extractfirst" (default: extraction on scan
                           // partitions, ONE exchange of extracted text —

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** Tokenizer-prep operators: corpus vocabulary induction (the top-K
   * most frequent words, the seed step of any BPE/WordPiece training
-  * run) and per-document out-of-vocabulary statistics against an
+  * run — [[Bpe.learn]] trains on [[topK]]'s word-type table) and
+  * per-document out-of-vocabulary statistics against an
   * induced vocabulary (the coverage check that decides whether K was
   * large enough / the corpus slice matches the tokenizer's training
   * distribution).

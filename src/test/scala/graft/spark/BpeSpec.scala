@@ -1,11 +1,14 @@
 package graft.spark
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** BPE trainer/encoder: hand-derived merge sequences on tiny corpora
-  * (counts, within-word merge order, deterministic tie-break), encode
-  * arithmetic, the fail-loud contracts (pair exhaustion, delimiter
-  * collision), and the no-pinned-blocks hygiene of learn().
+  * (counts, within-word merge order, deterministic tie-break), `learn`
+  * against the distributed reference trainer (fixed corpora, a
+  * generated property, and the 2^20-type cap with its dropped mass),
+  * encode arithmetic, the fail-loud contracts (pair exhaustion,
+  * delimiter collision), and the no-pinned-blocks hygiene of learn().
   */
 class BpeSpec extends SparkTestBase {
   import spark.implicits._
@@ -14,6 +17,72 @@ class BpeSpec extends SparkTestBase {
     spark.createDataset(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) })
       .toDF("doc_id", "text")
 
+  /** Initial segmentation of a word: every char bar-wrapped.
+    * `"abc"` -> `"|a| |b| |c|"`. (?s) is load-bearing: without DOTALL a
+    * newline inside a word would stay UNWRAPPED and corrupt the
+    * segmentation silently — identically in both engines, so even the
+    * oracle could not catch it. With it, '.' matches any code point in
+    * Java regex and RE2 alike.
+    */
+  private def seg0(word: Column): Column =
+    rtrim(regexp_replace(word, "(?s)(.)", "\\|$1\\| "))
+
+  /** The reference trainer: the distributed form of the merge loop, the
+    * exact algorithm the q_bpe_merges DuckDB chain replays. One corpus
+    * pass into a persisted word-type table of bar-wrapped segmentations,
+    * then per merge one pair-count aggregate, a one-row argmax collect
+    * and a literal `replace` over the types. Returns (iter, l_sym, r_sym,
+    * merged, cnt) in application order.
+    */
+  private def reference(docs: DataFrame, nMerges: Int, textCol: String = "text"): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    require(nMerges > 0, s"nMerges must be positive, got $nMerges")
+    // ONE corpus pass; the type table is vocabulary-sized — pin it so
+    // the merge iterations never re-scan the corpus (unpersisted below)
+    val types = docs
+      .select(explode(Bpe.wordsOf(col(textCol))).as("word"))
+      .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
+      .select(col("word"), col("cnt"), seg0(col("word")).as("seg"))
+      .persist()
+    try {
+      var seg = types
+      val merges = Seq.newBuilder[(Int, String, String, String, Long)]
+      for (it <- 1 to nMerges) {
+        val ws = split(col("seg"), " ")
+        val n = size(ws)
+        val pairs = zip_with(
+          slice(ws, lit(1), n - 1), slice(ws, lit(2), n - 1),
+          (a, b) => struct(a.as("l"), b.as("r")))
+        val best = seg
+          .select(col("cnt"), explode(pairs).as("p"))
+          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+          .agg(sum(col("cnt")).as("c"))
+          .orderBy(col("c").desc, col("l").asc, col("r").asc)
+          .limit(1)
+          .as[(String, String, Long)]
+          .collect()
+        require(best.nonEmpty,
+          s"BPE pair supply exhausted at merge $it of $nMerges — every " +
+            "word is a single symbol; lower nMerges")
+        val (bl, br, bc) = best.head
+        val inner = (s: String) => s.substring(1, s.length - 1)
+        merges += ((it, inner(bl), inner(br), inner(bl) + inner(br), bc))
+        // literal (non-regex) replace: left-to-right, never re-matching
+        // inside a replacement — identical to SQL replace in DuckDB
+        seg = seg.withColumn("seg",
+          replace(col("seg"), lit(s"$bl $br"),
+            lit(s"|${inner(bl)}${inner(br)}|")))
+      }
+      merges.result().toDF("iter", "l_sym", "r_sym", "merged", "cnt")
+    } finally types.unpersist()
+  }
+
+  /** A merge table's (iter, l_sym, r_sym, merged, cnt) rows in order. */
+  private def rows(merges: DataFrame) =
+    merges.select("iter", "l_sym", "r_sym", "merged", "cnt")
+      .as[(Int, String, String, String, Long)].collect().sortBy(_._1).toSeq
+
   test("learn: exact merge sequence, compound merges, pair counts") {
     // types: aaab cnt=2 ("|a| |a| |a| |b|"), ab cnt=1 ("|a| |b|")
     // iter 1: (a,a)=4 [two per aaab], (a,b)=3          -> merge a+a @4
@@ -21,15 +90,15 @@ class BpeSpec extends SparkTestBase {
     // iter 2: (aa,a)=2, (a,b)=3                        -> merge a+b @3
     // iter 3: (aa,ab)=2                                -> merge aa+ab @2
     val docs = mkDocs(Seq("aaab ab", "aaab"))
-    val m = Bpe.learn(docs, 3)
-      .as[(Int, String, String, String, Long)].collect().sortBy(_._1)
-    assert(m.toSeq == Seq(
+    val m = rows(Bpe.learn(docs, 3))
+    assert(m == Seq(
       (1, "a", "a", "aa", 4L),
       (2, "a", "b", "ab", 3L),
       (3, "aa", "ab", "aaab", 2L)))
+    assert(rows(reference(docs, 3)) == m)
   }
 
-  test("newlines and non-BMP chars segment whole: learn == learnLocal") {
+  test("newlines and non-BMP chars segment whole: learn == reference") {
     // '\n' inside a word must wrap like any char ((?s) — without it the
     // newline stays unwrapped and corrupts the segmentation silently);
     // the emoji is a surrogate pair and must stay ONE symbol
@@ -37,20 +106,19 @@ class BpeSpec extends SparkTestBase {
     val e0 = Bpe.encode(docs, Seq.empty)
       .as[(Long, Long, Long)].collect().sortBy(_._1)
     assert(e0.toSeq == Seq((0L, 2L, 6L), (1L, 3L, 6L)), e0.toSeq.toString)
-    val dist = Bpe.learn(docs, 2)
-      .as[(Int, String, String, String, Long)].collect().sortBy(_._1).toSeq
-    val local = Bpe.learnLocal(docs, 2)
-      .as[(Int, String, String, String, Long)].collect().sortBy(_._1).toSeq
-    assert(local == dist, s"\nlocal: $local\ndist:  $dist")
+    val got = rows(Bpe.learn(docs, 2))
+    val ref = rows(reference(docs, 2))
+    assert(got == ref, s"\nlearn:     $got\nreference: $ref")
     // the emoji pair dominates: first merge fuses the 2-char word
-    assert(dist.head._4 == "😀x", dist.toString)
+    assert(got.head._4 == "😀x", got.toString)
   }
 
   test("learn: count ties break on (l, r) binary order") {
     // (a,b)=1 and (c,d)=1 tie; '|a|' < '|c|' -> a+b wins
-    val m = Bpe.learn(mkDocs(Seq("ab cd")), 1)
-      .as[(Int, String, String, String, Long)].collect()
-    assert(m.toSeq == Seq((1, "a", "b", "ab", 1L)))
+    val docs = mkDocs(Seq("ab cd"))
+    val m = rows(Bpe.learn(docs, 1))
+    assert(m == Seq((1, "a", "b", "ab", 1L)))
+    assert(rows(reference(docs, 1)) == m)
   }
 
   test("learn: pair-supply exhaustion fails loudly; leaves no pinned blocks") {
@@ -59,8 +127,8 @@ class BpeSpec extends SparkTestBase {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val e = intercept[Exception](Bpe.learn(mkDocs(Seq("ab")), 2))
     assert(e.getMessage.contains("pair supply exhausted"), e.getMessage)
-    // persist hygiene: the type table must be unpersisted even on the
-    // failure path (and after a successful learn)
+    // persist hygiene: nothing learn() runs may stay pinned, on the
+    // failure path or after a successful learn
     Bpe.learn(mkDocs(Seq("aaab ab")), 1).count()
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"learn() leaked persisted RDDs: $leaked")
@@ -93,21 +161,70 @@ class BpeSpec extends SparkTestBase {
     assert(e3.toSeq == Seq((0L, 2L, 2L), (1L, 1L, 1L), (2L, 0L, 0L), (9L, 0L, 0L)))
   }
 
-  test("learnLocal reproduces learn merge-for-merge; truncation is opt-in") {
-    val docs = mkDocs(Seq("aaab ab aaab cd cd", "ab widest widest lower"))
-    val dist = Bpe.learn(docs, 6)
-      .as[(Int, String, String, String, Long)].collect().sortBy(_._1).toSeq
-    val local = Bpe.learnLocal(docs, 6)
-      .as[(Int, String, String, String, Long)].collect().sortBy(_._1).toSeq
-    assert(local == dist, s"\nlocal: $local\ndist:  $dist")
-    // more types than maxTypes: silent truncation would change pair
-    // counts, so it must be the caller's explicit opt-in
-    val e = intercept[IllegalArgumentException](
-      Bpe.learnLocal(docs, 1, maxTypes = 2))
-    assert(e.getMessage.contains("allowTruncation"), e.getMessage)
-    // opted in: learns from the (count desc, word) top-2 types only
-    assert(Bpe.learnLocal(docs, 1, maxTypes = 2, allowTruncation = true)
-      .count() == 1)
+  test("learn caps the type table: top-MaxTypes merges, dropped_mass = left-out occurrences") {
+    // MaxTypes + k one-word docs of distinct short base-36 words, plus
+    // two more copies of the word that sorts LAST: at count 3 it ranks
+    // first, so the k + 1 largest count-1 words but it fall out. Every
+    // word ends in "!?", so the first merge's count is exactly the
+    // trained word mass (MaxTypes - 1 + 3): one extra type would show
+    val k = 5
+    val words = spark.range(Bpe.MaxTypes + k)
+      .select(concat(conv(col("id").cast("string"), 10, 36), lit("!?")).as("text"))
+    val last = words.agg(max(col("text"))).as[String].head
+    val docs = words.unionByName(Seq(last, last).toDF("text"))
+    val nMerges = 2
+    val got = Bpe.learn(docs, nMerges)
+    assert(got.columns.toSeq == Seq("iter", "l_sym", "r_sym", "merged", "cnt", "dropped_mass"))
+    assert(got.select("dropped_mass").as[Long].collect().toSeq == Seq.fill(nMerges)(k.toLong))
+    assert(rows(got).head == ((1, "!", "?", "!?", Bpe.MaxTypes + 2L)))
+    // the reference trained on exactly the kept types (with their counts)
+    val kept = Vocab.topK(docs, Bpe.MaxTypes).select(col("word"), col("cnt"))
+    assert(kept.filter(col("word") === last).select("cnt").as[Long].head == 3L)
+    val keptDocs = kept.select(
+      explode(array_repeat(col("word"), col("cnt").cast("int"))).as("text"))
+    assert(rows(got) == rows(reference(keptDocs, nMerges)))
+    // under the cap every type is trained on and nothing is dropped
+    val small = Bpe.learn(mkDocs(Seq("aaab ab aaab cd cd", "ab widest widest lower")), 6)
+    assert(small.select("dropped_mass").as[Long].collect().toSeq == Seq.fill(6)(0L))
+  }
+
+  test("learn == reference merge-for-merge on generated corpora (property)") {
+    // non-BMP symbols, newlines and tabs inside words, runs of spaces,
+    // empty and null docs, and unpaired surrogates (parquet's UTF-8
+    // write replaces them, for both trainers alike); a small alphabet
+    // keeps pairs repeating, so the argmax and its ties do real work
+    import org.scalacheck.{Gen => G}
+    import org.scalacheck.rng.Seed
+    val sym = G.frequency((10, G.oneOf("a", "b", "c")), (2, G.oneOf("😀", "𝄞")),
+      (1, G.oneOf("\n", "\t", "é", "\uD800", "\uDC00")))
+    val word = G.choose(1, 6).flatMap(G.listOfN(_, sym)).map(_.mkString)
+    val doc: G[String] = G.frequency(
+      (8, G.choose(1, 6).flatMap(n => G.listOfN(n, G.zip(word, G.choose(1, 3))))
+        .map(_.map { case (w, sp) => w + " " * sp }.mkString)
+        .flatMap(t => G.oneOf(t, " " + t))),
+      (1, G.const("")), (1, G.const(null: String)))
+    val corpus = G.choose(1, 8).flatMap(G.listOfN(_, doc))
+    val corpora = (0 until 25).map(i => corpus(G.Parameters.default, Seed(0xB9E + i)).get)
+    val dir = tmpDir("bpe-prop") + "/docs"
+    corpora.zipWithIndex.flatMap { case (texts, i) => texts.map((i, _)) }
+      .toDF("corpus", "text").write.parquet(dir)
+    def outcome(m: => DataFrame): Either[String, Seq[(Int, String, String, String, Long)]] =
+      try Right(rows(m)) catch {
+        case e: IllegalArgumentException if e.getMessage.contains("pair supply exhausted") =>
+          Left("exhausted")
+      }
+    val at12 = for ((texts, i) <- corpora.zipWithIndex) yield {
+      val docs = spark.read.parquet(dir).filter(col("corpus") === i)
+      val outcomes = Seq(1, 4, 12).map { kMerges =>
+        val got = outcome(Bpe.learn(docs, kMerges))
+        assert(got == outcome(reference(docs, kMerges)),
+          s"corpus $i at K=$kMerges: ${texts.map(Option(_))}")
+        got
+      }
+      outcomes.last
+    }
+    // most corpora carry 12 merges: the comparison is not vacuous
+    assert(at12.count(_.isRight) >= 15, at12)
   }
 
   test("tokenCount drives packing: next-fit walk over BPE weights") {
@@ -191,7 +308,7 @@ class BpeSpec extends SparkTestBase {
     assert(enc.find(_._1 == 0L).get._3 == 2L) // aaab -> |aaab|, ab -> |ab|
   }
 
-  test("encode plans shuffle-free (merges are plan literals)") {
+  test("encode plans shuffle-free (merges are an expression field)") {
     val enc = Bpe.encode(mkDocs(Seq("aaab ab")), Seq(("a", "a"), ("a", "b")))
     val plan = enc.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)

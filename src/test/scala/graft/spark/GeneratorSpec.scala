@@ -134,6 +134,30 @@ class GeneratorSpec extends SparkTestBase {
     assert(a.values.count(_._2.nonEmpty) > texts.size / 4, "too few turns with spans to compare")
   }
 
+  test("extract_main applies the pipeline's oversize guard in code points") {
+    // one code point over the default bound: neither path parses the turn
+    // (the tree builder is O(n^2) worst case); exactly at the bound, with
+    // non-BMP symbols making the UTF-16 length larger, both parse it
+    val n = Pipeline.DefaultMaxTextChars
+    def turn(codePoints: Int) = "<p>" + "😀" * 8 + "x" * (codePoints - 11)
+    val df = Seq(("c", 0, turn(n + 1)), ("c", 1, turn(n)))
+      .toDF("conv_id", "turn_idx", "text")
+    // texts compare by (length, hash): a failure message stays readable
+    def row(r: org.apache.spark.sql.Row) = r.getInt(0) -> ((r.getString(1).length,
+      r.getString(1).hashCode, r.getSeq[org.apache.spark.sql.Row](2), r.getInt(3), r.getInt(4)))
+    val a = df.select(col("turn_idx"), HtmlFunctions.extract_main(col("text")).as("r"))
+      .select(col("turn_idx"), col("r._1"), col("r._2"), col("r._3"), col("r._4"))
+      .collect().map(row).toMap
+    val b = Pipeline.extractOnScanPartitions(df).toDF()
+      .select(col("turn_idx"), col("extracted_text"),
+        HtmlFunctions.spans_view(col("span_pos"), col("span_kind")),
+        col("n_nodes"), col("n_errors"))
+      .collect().map(row).toMap
+    assert(a(0) == ((0, "".hashCode, Seq.empty, 0, 1)), a(0))
+    assert(a(1)._1 > 0 && a(1)._4 > 0, a(1))
+    assert(a == b)
+  }
+
   test("ws_token_count: equals the char-based counter on adversarial unicode (property)") {
     import org.scalacheck.{Gen => G}
     import org.scalacheck.rng.Seed
