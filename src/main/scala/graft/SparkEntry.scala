@@ -455,7 +455,8 @@ object SparkEntry {
       // downstream reads chunk_text, so the chunker is the compiled
       // walk (no chunk string is built); it and the packing fold take
       // an integral id, so the BIGINT conv_key is derived first.
-      val convs = guardMaxWords(Pipeline.conversationTexts(ex.toDF())
+      val convs = guardMaxWords(Pipeline.conversations(ex)
+        .select(col("conv_id"), col("conv_text"))
         .filter(Chunking.wordCount(col("conv_text")) >= 100), "conv_text", 3076)
         .select(expr("CAST(substring(conv_id, 6) AS BIGINT)").as("conv_key"),
           col("conv_text"))

@@ -881,6 +881,26 @@ object Dedup {
     corpus.join(flagged.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
   }
 
+  /** The words of a text for the word-n-gram operators: its split on
+    * single spaces (empties kept), a null text counting as ''.
+    */
+  private[spark] def gramWords(text: Column): Column =
+    split(coalesce(text, lit("")), " ")
+
+  /** 1-based start positions of the word n-grams of the words `ws`,
+    * [1, size - n + 1]. sequence() DESCENDS when start > stop, so a text
+    * shorter than n gets an empty array, not sequence(1, 0).
+    */
+  private[spark] def gramStarts(ws: Column, n: Int): Column =
+    when(size(ws) >= n, sequence(lit(1), size(ws) - (n - 1)))
+      .otherwise(array().cast("array<int>"))
+
+  /** md5 of each word n-gram of `ws` (its words joined by ' '), in
+    * position order.
+    */
+  private[spark] def gramHashes(ws: Column, n: Int): Column =
+    transform(gramStarts(ws, n), i => md5(array_join(slice(ws, i, lit(n)), " ")))
+
   /** Exact word-n-gram overlap contamination — the GPT-3/Llama-style
     * decontamination criterion (Brown et al. 2020 Appendix C: flag a
     * training doc if it shares ANY 13-gram with an eval example),
@@ -909,15 +929,9 @@ object Dedup {
   def ngramContamination(corpus: DataFrame, testSet: DataFrame,
                          n: Int = 13): DataFrame = {
     require(n >= 2, s"gram size must be >= 2, got $n")
-    val grams = (df: DataFrame, idCol: String) => {
-      val ws = col("ws")
-      val starts = when(size(ws) >= n, sequence(lit(1), size(ws) - (n - 1)))
-        .otherwise(array().cast("array<int>"))
-      df.select(col(idCol), split(coalesce(col("text"), lit("")), " ").as("ws"))
-        .select(col(idCol),
-          explode(transform(starts,
-            i => md5(array_join(slice(ws, i, lit(n)), " ")))).as("h"))
-    }
+    val grams = (df: DataFrame, idCol: String) =>
+      df.select(col(idCol), gramWords(col("text")).as("ws"))
+        .select(col(idCol), explode(gramHashes(col("ws"), n)).as("h"))
     val testGrams = broadcast(grams(testSet, "test_id").select(col("h")).distinct())
     grams(corpus, "doc_id")
       .join(testGrams, Seq("h"), "left_semi")
@@ -965,14 +979,9 @@ object Dedup {
   def crossDocDupGrams(corpus: DataFrame, n: Int = 13,
                        textCol: String = "text"): DataFrame = {
     require(n >= 2, s"gram size must be >= 2, got $n")
-    val ws = col("ws")
-    val starts = when(size(ws) >= n, sequence(lit(1), size(ws) - (n - 1)))
-      .otherwise(array().cast("array<int>"))
     val positions = corpus
-      .select(col("doc_id"), split(coalesce(col(textCol), lit("")), " ").as("ws"))
-      .select(col("doc_id"),
-        explode(transform(starts,
-          i => md5(array_join(slice(ws, i, lit(n)), " ")))).as("h"))
+      .select(col("doc_id"), gramWords(col(textCol)).as("ws"))
+      .select(col("doc_id"), explode(gramHashes(col("ws"), n)).as("h"))
     val census = positions
       .groupBy(col("h"))
       .agg((min(col("doc_id")) =!= max(col("doc_id"))).as("dup"))

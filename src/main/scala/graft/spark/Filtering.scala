@@ -234,7 +234,9 @@ object Filtering {
   /** Global token-budget selection: the maximal prefix of the corpus in
     * (score DESC, id ASC) order whose running token sum stays within
     * `budget` — the "take the best docs until the budget is full" step
-    * of corpus curation, deterministic ties included.
+    * of corpus curation, deterministic ties included. It is
+    * [[selectToBudgetByDomain]] over one constant domain, so `budget`
+    * must be >= 0.
     *
     * Plan shape: ONE small aggregate (per-score token sums — requires a
     * bounded score domain, e.g. basis points; `require`d at most
@@ -248,45 +250,16 @@ object Filtering {
     */
   def selectToBudget(df: DataFrame, scoreCol: Column, tokenCol: Column,
                      idCol: Column, budget: Long,
-                     maxScoreCard: Int = 100000): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // limit BEFORE collect: the cardinality guard must fire on
-    // maxScoreCard+1 driver rows, not after an unbounded-score-domain
-    // histogram has already been materialized on the driver
-    val hist = df.groupBy(scoreCol.as("__score"))
-      .agg(sum(tokenCol.cast("long")).as("__tok"))
-      .limit(maxScoreCard + 1)
-      .collect()
-    require(hist.length <= maxScoreCard,
-      s"selectToBudget needs a bounded score domain: > $maxScoreCard distinct " +
-        s"scores — bucket the score (e.g. basis points) first")
-    // sort by score descending; scores are whatever ordered type the
-    // caller passed — compare via Ordering on their natural encoding
-    val byScore = hist.sortBy(r => r.getAs[Any](0) match {
-      case n: java.lang.Number => -n.doubleValue()
-      case other => throw new IllegalArgumentException(
-        s"selectToBudget score must be numeric, got $other")
-    }).map(r => (r.getAs[Any](0), r.getLong(1)))
-    budgetBoundary(byScore, budget) match {
-      case None => df // whole corpus fits
-      case Some((bScore, spentAbove)) =>
-        val full = df.filter(scoreCol > lit(bScore))
-        val w = Window.orderBy(idCol.asc)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val edge = df.filter(scoreCol === lit(bScore))
-          .withColumn("__cum", sum(tokenCol.cast("long")).over(w))
-          .filter(col("__cum") <= lit(budget - spentAbove))
-          .drop("__cum")
-        full.unionByName(edge)
-    }
-  }
+                     maxScoreCard: Int = 100000): DataFrame =
+    // one constant domain: its CASE-folded filters and remaining-budget
+    // literal fold to the single-domain predicates at optimization
+    selectToBudgetByDomain(df, lit(""), scoreCol, tokenCol, idCol,
+      Map("" -> budget), maxScoreCard)
 
   /** Walk a (score, tokenSum) histogram best-score-first against a
     * budget: None = everything fits; Some((boundaryScore, spentAbove))
     * = strictly-better buckets fit whole and the boundary bucket gets
-    * the remainder. ONE shared implementation for the global and
-    * per-domain selectors so boundary placement can never silently
-    * diverge between them.
+    * the remainder.
     */
   private def budgetBoundary(byScore: Seq[(Any, Long)],
                              budget: Long): Option[(Any, Long)] = {
@@ -323,8 +296,8 @@ object Filtering {
     import org.apache.spark.sql.expressions.Window
     require(budgets.nonEmpty, "selectToBudgetByDomain needs at least one budget")
     budgets.values.foreach(b => require(b >= 0, s"budget must be >= 0, got $b"))
-    // same bounded-collect pattern as selectToBudget: the guard fires on
-    // maxScoreCard+1 rows, never after an unbounded driver materialization
+    // limit BEFORE collect: the guard fires on maxScoreCard+1 rows, never
+    // after an unbounded histogram has been materialized on the driver
     val hist = df.groupBy(domainCol.as("__dom"), scoreCol.as("__score"))
       .agg(sum(tokenCol.cast("long")).as("__tok"))
       .limit(maxScoreCard + 1)

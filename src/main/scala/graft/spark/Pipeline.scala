@@ -245,25 +245,9 @@ object Pipeline {
           .as("conv_text"))
   }
 
-  /** Lean reassembly for consumers that need ONLY (conv_id, conv_text):
-    * the [[conversations]] construction minus the counter aggregates —
-    * identical conv_text (same array_sort(collect_list(struct)) walk,
-    * same "\n" join), three fewer aggregate functions and a narrower
-    * exchange when the counters are dead downstream (the composed
-    * pipelines project them away immediately).
-    */
-  def conversationTexts(turns: DataFrame): DataFrame =
-    turns
-      .groupBy(col("conv_id"))
-      .agg(array_sort(collect_list(struct(col("turn_idx"), col("extracted_text"))))
-        .as("turns_sorted"))
-      .select(col("conv_id"),
-        array_join(transform(col("turns_sorted"), t => t.getField("extracted_text")), "\n")
-          .as("conv_text"))
-
-  /** [[conversationTexts]] with the conversation's in-loss turn spans
-    * computed IN THE SAME AGGREGATION — the fused form of
-    * `conversationTexts` + [[lossMaskSpans]].filter(in_loss) for
+  /** [[conversations]]' (conv_id, conv_text) with the conversation's
+    * in-loss turn spans computed IN THE SAME AGGREGATION — the fused form
+    * of `conversations` + [[lossMaskSpans]].filter(in_loss) for
     * compositions that consume both (the loss-mask training pipeline):
     * the separate spans branch costs a second conv-keyed exchange plus
     * a per-conversation sort of every turn row, while here the prefix

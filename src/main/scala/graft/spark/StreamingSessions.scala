@@ -1,8 +1,8 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One raw event row (matches the driver's events table schema). */
 final case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
@@ -37,21 +37,32 @@ object StreamingSessions {
   private def micros(t: java.sql.Timestamp): Long =
     t.getTime / 1000L * 1000000L + t.getNanos / 1000L
 
+  /** The gap fold both sessionizers share: walks time-ordered events
+    * from the cursor (lastTsUs, idx), opening a session whenever the gap
+    * to the previous event exceeds `gapMinutes`. Returns the assignments
+    * and the cursor after the last event.
+    */
+  private def foldGaps(gapMinutes: Int, userId: Long, lastTsUs: Long, idx: Long,
+                       events: Seq[BufEvent]): (Seq[SessionAssign], Long, Long) = {
+    val gapUs = gapMinutes.toLong * 60L * 1000000L
+    var lastTs = lastTsUs
+    var i = idx
+    val out = events.map { e =>
+      if (lastTs == Long.MinValue || e.tsUs - lastTs > gapUs) i += 1
+      lastTs = e.tsUs
+      SessionAssign(e.eventId, userId, i)
+    }
+    (out, lastTs, i)
+  }
+
   private def assign(gapMinutes: Int)(
       userId: Long, events: Iterator[Event],
       state: GroupState[SessState]): Iterator[SessionAssign] = {
-    val gapUs = gapMinutes.toLong * 60L * 1000000L
-    val sorted = events.toArray.sortBy(e => (micros(e.ts), e.event_id))
-    var st = state.getOption.getOrElse(SessState(Long.MinValue, 0L))
-    val out = sorted.map { e =>
-      val tsUs = micros(e.ts)
-      val idx =
-        if (st.lastTsUs == Long.MinValue || tsUs - st.lastTsUs > gapUs) st.sessionIdx + 1
-        else st.sessionIdx
-      st = SessState(tsUs, idx)
-      SessionAssign(e.event_id, userId, idx)
-    }
-    state.update(st)
+    val sorted = events.map(e => BufEvent(micros(e.ts), e.event_id)).toSeq
+      .sortBy(e => (e.tsUs, e.eventId))
+    val st = state.getOption.getOrElse(SessState(Long.MinValue, 0L))
+    val (out, lastTs, idx) = foldGaps(gapMinutes, userId, st.lastTsUs, st.sessionIdx, sorted)
+    state.update(SessState(lastTs, idx))
     out.iterator
   }
 
@@ -61,29 +72,18 @@ object StreamingSessions {
   def runAvailableNow(spark: SparkSession, inputPath: String, outDir: String,
                       gapMinutes: Int = 30): Long = {
     import spark.implicits._
-    val before = countOutput(spark, outDir)
-
-    val assigned: Dataset[SessionAssign] = spark.readStream
+    StreamingSink.run(spark.readStream
       .schema(eventSchema)
       .parquet(inputPath)
       .as[Event]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        assign(gapMinutes))
-
-    val q = assigned.writeStream
-      .format("parquet")
-      .option("path", s"$outDir/sessions")
-      .option("checkpointLocation", s"$outDir/_stream_checkpoint")
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    countOutput(spark, outDir) - before
+        assign(gapMinutes)), outDir, "sessions")
   }
 
-  /** One buffered event awaiting watermark finalization. */
+  /** One event as the gap fold reads it; the buffered sessionizer keeps
+    * these in state until the watermark finalizes them.
+    */
   final case class BufEvent(tsUs: Long, eventId: Long)
 
   /** State for the watermark-buffered sessionizer: events not yet final,
@@ -114,9 +114,8 @@ object StreamingSessions {
   private def assignBuffered(gapMinutes: Int, idleRetentionMs: Long)(
       userId: Long, events: Iterator[Event],
       state: GroupState[BufSessState]): Iterator[SessionAssign] = {
-    val gapUs = gapMinutes.toLong * 60L * 1000000L
     val wmUs = state.getCurrentWatermarkMs() * 1000L
-    var st = state.getOption.getOrElse(BufSessState(Nil, Long.MinValue, 0L, 0L))
+    val st = state.getOption.getOrElse(BufSessState(Nil, Long.MinValue, 0L, 0L))
     // merge new events; an arrival strictly older than the emitted
     // frontier is late beyond the watermark (emitting it would fold the
     // gap cursor backwards) — dropped and counted. Equal-ts arrivals are
@@ -128,13 +127,7 @@ object StreamingSessions {
     // events at-or-below the watermark are FINAL: no future batch may
     // carry anything older, so the gap fold over them is exact
     val (ripe, hold) = all.partition(_.tsUs <= wmUs)
-    var lastTs = st.lastTsUs
-    var idx = st.idx
-    val out = ripe.map { e =>
-      if (lastTs == Long.MinValue || e.tsUs - lastTs > gapUs) idx += 1
-      lastTs = e.tsUs
-      SessionAssign(e.eventId, userId, idx)
-    }
+    val (out, lastTs, idx) = foldGaps(gapMinutes, userId, st.lastTsUs, st.idx, ripe)
     if (hold.nonEmpty) {
       state.update(BufSessState(hold, lastTs, idx, st.nLateDropped + late.size))
       // flush held events in a later batch once the watermark passes the
@@ -175,44 +168,19 @@ object StreamingSessions {
     import spark.implicits._
     require(idleRetentionMs >= gapMinutes.toLong * 60L * 1000L,
       "idle retention below the session gap would split sessions the batch operator keeps whole")
-    val before = countOutput(spark, outDir)
-
     var reader = spark.readStream.schema(eventSchema)
     maxFilesPerTrigger.foreach(n => reader = reader.option("maxFilesPerTrigger", n))
-    val assigned: Dataset[SessionAssign] = reader
+    StreamingSink.run(reader
       .parquet(inputPath)
       .withWatermark("ts", watermarkDelay)
       .as[Event]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        assignBuffered(gapMinutes, idleRetentionMs))
-
-    val q = assigned.writeStream
-      .format("parquet")
-      .option("path", s"$outDir/sessions")
-      .option("checkpointLocation", s"$outDir/_stream_checkpoint")
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    countOutput(spark, outDir) - before
+        assignBuffered(gapMinutes, idleRetentionMs)), outDir, "sessions")
   }
 
-  def countOutput(spark: SparkSession, outDir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/sessions")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0L
-    else {
-      spark.catalog.refreshByPath(s"$outDir/sessions")
-      spark.read.parquet(s"$outDir/sessions").count()
-    }
-  }
-
-  def readSessions(spark: SparkSession, outDir: String): DataFrame = {
-    spark.catalog.refreshByPath(s"$outDir/sessions")
-    spark.read.parquet(s"$outDir/sessions")
-  }
+  def readSessions(spark: SparkSession, outDir: String): DataFrame =
+    StreamingSink.read(spark, outDir, "sessions")
 
   /** Watermarked tumbling-window counts per event_type (streaming agg
     * surface: watermark bounds state; Append emits finalized windows).

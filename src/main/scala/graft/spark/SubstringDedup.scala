@@ -84,15 +84,10 @@ object SubstringDedup {
                               idCol: String, textCol: String): DataFrame = {
     require(n >= 2, s"gram size must be >= 2, got $n")
     val ws = col("ws")
-    // grams exist only at word positions [1, size - n + 1]; sequence()
-    // DESCENDS when start > stop, so the short-doc case must be an
-    // empty array, not sequence(1, 0)
-    val starts = when(size(ws) >= n, sequence(lit(1), size(ws) - (n - 1)))
-      .otherwise(array().cast("array<int>"))
     val exploded = docs
-      .select(col(idCol), split(coalesce(col(textCol), lit("")), " ").as("ws"))
+      .select(col(idCol), Dedup.gramWords(col(textCol)).as("ws"))
       .select(col(idCol),
-        posexplode(transform(starts, i =>
+        posexplode(transform(Dedup.gramStarts(ws, n), i =>
           struct(
             length(element_at(ws, i)).cast("long").as("wlen"),
             array_join(slice(ws, i, lit(n)), " ").as("gt"))))
@@ -199,13 +194,9 @@ object SubstringDedup {
   def contaminationSpans(corpus: DataFrame, testSet: DataFrame, n: Int = 13,
                          idCol: String = "doc_id",
                          textCol: String = "text"): DataFrame = {
-    val ws = col("ws")
-    val starts = when(size(ws) >= n, sequence(lit(1), size(ws) - (n - 1)))
-      .otherwise(array().cast("array<int>"))
     val testGrams = broadcast(testSet
-      .select(split(coalesce(col(textCol), lit("")), " ").as("ws"))
-      .select(explode(transform(starts,
-        i => md5(array_join(slice(ws, i, lit(n)), " ")))).as("h"))
+      .select(Dedup.gramWords(col(textCol)).as("ws"))
+      .select(explode(Dedup.gramHashes(col("ws"), n)).as("h"))
       .distinct())
     val removal = gramOccurrences(corpus, n, idCol, textCol)
       .join(testGrams, Seq("h"), "left_semi")

@@ -164,6 +164,9 @@ class FilteringSpec extends SparkTestBase {
       Filtering.selectToBudget(df, col("score"), col("tok"), col("doc_id"),
         100L, maxScoreCard = 10)
     }
+    intercept[IllegalArgumentException] {
+      Filtering.selectToBudget(df, col("score"), col("tok"), col("doc_id"), -1L)
+    }
   }
 
   test("selectToBudgetByDomain equals the per-domain prefix rule; fails loudly on a missing budget") {

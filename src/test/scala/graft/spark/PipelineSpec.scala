@@ -236,17 +236,13 @@ class PipelineSpec extends SparkTestBase {
       .select(col("conv_id"), col("span_start"), col("span_end"))
       .collect().groupBy(_.getString(0)).view
       .mapValues(_.map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq).toMap
-    val refText = Pipeline.conversationTexts(extracted.toDF()).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val refText = Pipeline.conversations(extracted).collect()
+      .map(r => r.getAs[String]("conv_id") -> r.getAs[String]("conv_text")).toMap
     assert(fused.keySet == refText.keySet)
     fused.foreach { case (cid, (text, spans)) =>
       assert(text == refText(cid), s"conv_text diverged for $cid")
       assert(spans == ref.getOrElse(cid, Seq.empty), s"spans diverged for $cid")
     }
-    // conversationTexts itself must equal conversations' conv_text
-    val full = Pipeline.conversations(extracted).collect()
-      .map(r => r.getAs[String]("conv_id") -> r.getAs[String]("conv_text")).toMap
-    assert(refText == full)
   }
 
   test("conversations reassembly joins turns in order") {

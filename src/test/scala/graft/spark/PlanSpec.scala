@@ -182,6 +182,21 @@ class PlanSpec extends SparkTestBase {
     assert(engine.contains("partial_collect_list"), plan) // map-side combine
   }
 
+  test("training pipeline: the pruned conversation aggregate holds only the collect_list") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, CollectList}
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    // q_training_pipeline reads only (conv_id, conv_text) of conversations:
+    // ColumnPruning must drop its n_turns/n_nodes/n_errors aggregates
+    val df = graft.SparkEntry.queries("q_training_pipeline")(spark, sf)
+    val plan = df.queryExecution.optimizedPlan
+    val aggs = plan.collect {
+      case a: Aggregate if a.aggregateExpressions.exists(_.exists(_.isInstanceOf[CollectList])) => a
+    }
+    assert(aggs.size == 1, plan.toString)
+    val fns = aggs.head.aggregateExpressions.flatMap(_.collect { case f: AggregateFunction => f.prettyName })
+    assert(fns == Seq("collect_list"), plan.toString)
+  }
+
   test("conversation dedup: one extraction, two partial+final aggs, two exchanges") {
     val df = graft.SparkEntry.queries("q_conv_dedup")(spark, sf)
     val plan = df.queryExecution.executedPlan.toString

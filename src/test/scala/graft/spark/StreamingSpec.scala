@@ -32,7 +32,7 @@ class StreamingSpec extends SparkTestBase {
       .write.mode("append").parquet(in)
     val n3 = StreamingExtraction.runAvailableNow(spark, in, out)
     assert(n3 == 20)
-    assert(StreamingExtraction.countOutput(spark, out) == 50)
+    assert(StreamingExtraction.readExtracted(spark, out).count() == 50)
 
     // per-turn equality vs the pure-function oracle
     val got = StreamingExtraction.readExtracted(spark, out)
@@ -231,6 +231,34 @@ class StreamingSpec extends SparkTestBase {
     // documented TTL trade-off, and the observable proof that the idle
     // state was genuinely removed (without removal this would be 2)
     assert(assign(3L) == 1, s"idle state must be removed after retention: $assign")
+  }
+
+  test("a run with more micro-batches than the progress ring fails loudly") {
+    val dir = tmpDir("graft-ring")
+    val in = s"$dir/in"
+    val out = s"$dir/out"
+    new java.io.File(in).mkdirs()
+    val min = 60L * 1000000L
+    val base = 240L * 24 * min
+    (1 to 3).foreach { i =>
+      val tmp = tmpDir("ring-stage")
+      spark.createDataset(Seq(Event(i, new java.sql.Timestamp((base + i * min) / 1000L),
+          1L, "t", 0.0, ""))).toDF().coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.copy(part.toPath, new java.io.File(in, s"f$i.parquet").toPath)
+    }
+    // three one-file micro-batches against a ring of two progress events:
+    // the summed in-query count would miss a batch, so the run must refuse
+    val key = "spark.sql.streaming.numRecentProgressUpdates"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "2")
+    try {
+      val ex = intercept[IllegalArgumentException] {
+        StreamingSessions.runAvailableNowBuffered(spark, in, out,
+          maxFilesPerTrigger = Some(1))
+      }
+      assert(ex.getMessage.contains("progress buffer 2"), ex.getMessage)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("watermark-buffered sessionize: exact under OUT-OF-ORDER multi-batch arrival") {
