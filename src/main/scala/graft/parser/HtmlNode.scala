@@ -85,6 +85,9 @@ final class HtmlNode private[parser] () {
     */
   var srcOffset: Int = -1
 
+  /** Pre-order id set by HtmlParser's tree builder (-1 if none); valid on an unmodified parse. */
+  private[graft] var arenaId: Int = -1
+
   // ===== classification (ctor logic, dhtmlparser.d:47-69) ==================
 
   private[parser] def classify(str: String): Unit = {

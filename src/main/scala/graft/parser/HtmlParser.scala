@@ -39,6 +39,7 @@ object HtmlParser {
     istack = if (repairFixed) repairTagsFixed(istack) else repairTags(istack)
 
     val container = HtmlNode.container()
+    container.arenaId = 0
     val counters = new Array[Int](2) // 0: forced nonpair tags, 1: dropped endtags
     container.childs ++= parseDOM(istack, 0, istack.length, counters)
     (container,
@@ -140,41 +141,43 @@ object HtmlParser {
     matches
   }
 
+  /** Builds over [[computeMatches]] and numbers the tree in pre-order from 1 (arenaId): a
+    * node when reached, a matched endtag after its opener's slice, a stray endtag never. */
   private[parser] def parseDOM(istack: Array[HtmlNode], from: Int, until: Int,
                                counters: Array[Int]): ArrayBuffer[HtmlNode] = {
     val matches = computeMatches(istack)
-    parseDOMFast(istack, matches, from, until, counters)
-  }
+    var nextId = 1
+    def build(from: Int, until: Int): ArrayBuffer[HtmlNode] = {
+      val ostack = new ArrayBuffer[HtmlNode]()
+      var index = from
+      while (index < until) {
+        val el = istack(index)
+        val m = matches(index)
+        val matched = m > index && m < until
 
-  private def parseDOMFast(istack: Array[HtmlNode], matches: Array[Int],
-                           from: Int, until: Int,
-                           counters: Array[Int]): ArrayBuffer[HtmlNode] = {
-    val ostack = new ArrayBuffer[HtmlNode]()
-    var index = from
-    while (index < until) {
-      val el = istack(index)
-      val m = matches(index)
-      val matched = m > index && m < until
+        if (!el.isNonPairTag && !matched && !el.isEndTag) {
+          el.setNonPairTag(true)
+          if (counters != null && el.isTag && !el.isComment) counters(0) += 1
+        }
 
-      if (!el.isNonPairTag && !matched && !el.isEndTag) {
-        el.setNonPairTag(true)
-        if (counters != null && el.isTag && !el.isComment) counters(0) += 1
+        if (matched) {
+          el.arenaId = nextId; nextId += 1
+          el.childs = build(index + 1, m)
+          el.endtag = istack(m)
+          el.endtag.openertag = el
+          el.endtag.arenaId = nextId; nextId += 1
+          ostack += el
+          ostack += el.endtag
+          index = m
+        } else {
+          if (!el.isEndTag) { el.arenaId = nextId; nextId += 1; ostack += el }
+          else if (counters != null && (el.openertag == null)) counters(1) += 1
+          index += 1
+        }
       }
-
-      if (matched) {
-        el.childs = parseDOMFast(istack, matches, index + 1, m, counters)
-        el.endtag = istack(m)
-        el.endtag.openertag = el
-        ostack += el
-        ostack += el.endtag
-        index = m
-      } else {
-        if (!el.isEndTag) ostack += el
-        else if (counters != null && (el.openertag == null)) counters(1) += 1
-        index += 1
-      }
+      ostack
     }
-    ostack
+    build(from, until)
   }
 
   /** The reference's literal O(n^2) construction (dhtmlparser.d:895-922):

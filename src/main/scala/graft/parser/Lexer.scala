@@ -115,8 +115,6 @@ object Lexer {
     (toks, offArr, cnt)
   }
 
-  def rawSplit(itxt: String): ArrayBuffer[String] = rawSplitWithOffsets(itxt)._1
-
   // ===== faithful per-char implementation (equivalence oracle) ===========
 
   private val tlContent: ThreadLocal[java.lang.StringBuilder] =

@@ -24,7 +24,8 @@ import org.apache.spark.sql.functions.udf
   * parses each row once, as the reference runs every finder and serializer
   * against one DOM (SURVEY.md §1.1). The mutators (remove_tags,
   * reset_nonpair, replace_tag) change their tree, and to_html_fixed parses
-  * with repairFixed, so each of these owns a private tree.
+  * with repairFixed, so each of these owns a private tree. Node ids are
+  * the parse's own pre-order numbering (HtmlNode.arenaId); none renumbers.
   *
   * Every function here mirrors a reference operator (SURVEY.md §2.1):
   * parse_html (#1), find/findAll via node rows or find_links (#17-21),
@@ -48,49 +49,39 @@ object HtmlFunctions {
   }
 
   /** The arena walk (ids replace pointers) behind parse_html, find_nodes,
-    * dom_tag_nodes and the parse_nodes generator: numbers every node in
-    * pre-order first (endtag/opener links can point forward), then visits
-    * each node in pre-order. Returns the node -> id map.
+    * dom_tag_nodes and the parse_nodes generator: one pre-order pass that
+    * reads the ids the tree builder gave each node, its endtag and its
+    * opener (HtmlNode.arenaId). Valid only on an unmodified parse.
     */
-  def walkArena(root: HtmlNode, v: NodeVisitor): java.util.IdentityHashMap[HtmlNode, Integer] = {
-    val ids = new java.util.IdentityHashMap[HtmlNode, Integer]()
-    var next = 0
+  private[spark] def walkArena(root: HtmlNode, v: NodeVisitor): Unit = {
+    def idOf(n: HtmlNode): Int = if (n == null) -1 else n.arenaId
     // hasChilds guards: a leaf (most nodes) allocates no child closure
-    def number(n: HtmlNode): Unit = {
-      ids.put(n, next); next += 1
-      if (n.hasChilds) n.foreachChild(number)
-    }
-    number(root)
-    def idOf(n: HtmlNode): Int = if (n == null) -1 else {
-      val i = ids.get(n); if (i == null) -1 else i.intValue
-    }
     def emit(n: HtmlNode, parent: Int, pos: Int, depth: Int): Unit = {
-      val id = ids.get(n).intValue
       val kind: Byte =
         if (!n.isTag) 0
         else if (n.isComment) 1
         else if (n.isEndTag) 3
         else 2
-      v.visit(n, id, parent, pos, depth, kind, idOf(n.endtag), idOf(n.openertag))
+      v.visit(n, n.arenaId, parent, pos, depth, kind, idOf(n.endtag), idOf(n.openertag))
       if (n.hasChilds) {
         var i = 0
-        n.foreachChild { c => emit(c, id, i, depth + 1); i += 1 }
+        n.foreachChild { c => emit(c, n.arenaId, i, depth + 1); i += 1 }
       }
     }
     emit(root, -1, 0, 0)
-    ids
   }
 
-  /** DOM -> flat pre-order arena of NodeRow (rows(i).node_id == i), with
-    * the walk's id map. */
-  private def toRows(root: HtmlNode): (Vector[NodeRow], java.util.IdentityHashMap[HtmlNode, Integer]) = {
+  private def nodeRow(n: HtmlNode, id: Int, parent: Int, pos: Int, depth: Int,
+                      kind: Byte, endId: Int, opId: Int): NodeRow =
+    NodeRow(id, parent, pos, depth, kind, n.getTagName, n.rawElement,
+      if (n.hasParams) n.params.toMap else Map.empty, n.isNonPairTag, endId, opId, n.srcOffset)
+
+  /** DOM -> flat pre-order arena of NodeRow (rows(i).node_id == i). */
+  private def toRows(root: HtmlNode): Vector[NodeRow] = {
     val out = Vector.newBuilder[NodeRow]
-    val ids = walkArena(root, (n, id, parent, pos, depth, kind, endId, opId) => {
-      val pm: Map[String, String] = if (n.hasParams) n.params.toMap else Map.empty
-      out += NodeRow(id, parent, pos, depth, kind, n.getTagName, n.rawElement,
-        pm, n.isNonPairTag, endId, opId, n.srcOffset)
-    })
-    (out.result(), ids)
+    walkArena(root, (n, id, parent, pos, depth, kind, endId, opId) =>
+      out += nodeRow(n, id, parent, pos, depth, kind, endId, opId))
+    out.result()
   }
 
   // ===== the shared parse ==================================================
@@ -148,29 +139,32 @@ object HtmlFunctions {
   // ===== pure row-wise functions ============================================
 
   def parseNodes(html: String): Seq[NodeRow] =
-    if (html == null) Seq.empty else toRows(dom(html))._1
+    if (html == null) Seq.empty else toRows(dom(html))
 
   /** The reference's generic `find(tag, params)` (dhtmlparser.d:150,
-    * 623-647) as a SQL-facing function: DFS matches minus endtags, each
-    * returned as its full arena NodeRow (node_id = pre-order position in
-    * the parse arena, identical to parse_html's ids). A null/empty params
-    * map means tag-name-only matching.
+    * 623-647) as a SQL-facing function: one arena walk keeps the
+    * non-endtag nodes `isAlmostEqual` accepts (find's DFS matches), each as
+    * its full NodeRow (parse_html's ids). A null/empty params map means
+    * tag-name-only matching.
     */
   def findNodes(html: String, tag: String, params: Map[String, String]): Seq[NodeRow] = {
     if (html == null) return Seq.empty
-    val root = dom(html)
-    val (rows, ids) = toRows(root)
     val pm = if (params == null || params.isEmpty) null else params
-    root.find(tag, pm).map(n => rows(ids.get(n).intValue)).toSeq
+    val out = Vector.newBuilder[NodeRow]
+    walkArena(dom(html), (n, id, parent, pos, depth, kind, endId, opId) =>
+      if (kind != 3 && n.isAlmostEqual(tag, pm))
+        out += nodeRow(n, id, parent, pos, depth, kind, endId, opId))
+    out.result()
   }
 
   /** Constructor-built DOM (reference ctor surface, dhtmlparser.d:74-138
     * + closeElements 721-743, Q25): build `tag` with one param and one
     * text child, wrap in a container (which auto-closes the unclosed pair
     * tag and double-links the synthetic endtag), serialize with toHtml.
+    * NULL if any argument is NULL.
     */
   def buildTagHtml(tag: String, key: String, value: String, text: String): String = {
-    if (tag == null) return null
+    if (tag == null || key == null || value == null || text == null) return null
     val el = HtmlNode.create(tag, Map(key -> value), Seq(HtmlNode.fromRaw(text)))
     HtmlNode.container(Seq(el)).toHtml
   }
@@ -235,13 +229,14 @@ object HtmlFunctions {
       .map { case (n, i) => (i, n.getTagName, n.isEndTag) }.toSeq
 
   // The mutators below change their tree, so each parses its own and never
-  // reads the shared parse.
+  // reads the shared parse. A NULL argument gives NULL, except a NULL tag to
+  // match (or a NULL name in remove_tags' array), which matches nothing.
 
   /** Remove every match of each tag name (removeChild incl. endtag),
     * then reconstruct (toHtml) — the remove_tag.d workflow as one op.
     */
   def removeTags(html: String, names: Seq[String]): String = {
-    if (html == null) return null
+    if (html == null || names == null) return null
     val dom = HtmlParser.parseString(html)
     names.foreach { n => dom.find(n).foreach(e => dom.removeChild(e)) }
     dom.toHtml
@@ -267,7 +262,7 @@ object HtmlFunctions {
     */
   def replaceTag(html: String, tag: String, newTag: String,
                  key: String, value: String): String = {
-    if (html == null) return null
+    if (html == null || newTag == null || key == null || value == null) return null
     val dom = HtmlParser.parseString(html)
     dom.find(tag).foreach(_.replaceWith(HtmlNode.create(newTag, Map(key -> value))))
     dom.toHtml

@@ -21,11 +21,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * The parse itself dominates, so CodegenFallback (virtual eval call) is
   * the right tier; GenerateExec handles non-codegen generators.
   *
-  * Numbering, kind and endtag/opener ids come from the same walk as
+  * Ids are the parse's own pre-order numbering (HtmlNode.arenaId, given by
+  * the tree builder) and kind comes from the same walk as
   * HtmlFunctions.parseNodes (HtmlFunctions.walkArena); this generator only
   * writes each visited node into a row, so the two outputs cannot drift
-  * (GeneratorSpec still compares them): node ids are pre-order positions,
-  * kind 0=text 1=comment 2=tag 3=endtag.
+  * (GeneratorSpec compares them). Kind: 0=text 1=comment 2=tag 3=endtag.
   *
   * The tree is the task's shared parse (HtmlFunctions.parsed): a Generate
   * cannot share a subexpression with the Project below it that evaluates
@@ -49,9 +49,11 @@ case class ParseHtmlNodes(child: Expression)
             (k: Any) => UTF8String.fromString(k.asInstanceOf[String]),
             (x: Any) => UTF8String.fromString(x.asInstanceOf[String]))
         else ParseHtmlNodes.EmptyMap
+      val raw = UTF8String.fromString(n.rawElement)
+      // a text or comment node's tagname is its element (HtmlNode.classify)
+      val tagname = if (n.getTagName eq n.rawElement) raw else UTF8String.fromString(n.getTagName)
       out += new GenericInternalRow(Array[Any](id, parent, pos, depth, kind,
-        UTF8String.fromString(n.getTagName), UTF8String.fromString(n.rawElement), params,
-        n.isNonPairTag, endId, opId, n.srcOffset))
+        tagname, raw, params, n.isNonPairTag, endId, opId, n.srcOffset))
     })
     out
   }

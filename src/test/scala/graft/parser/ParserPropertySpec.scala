@@ -87,6 +87,32 @@ class ParserPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("tree builder numbers every node with its pre-order position (arenaId)") {
+    // the FIXTURES.md §3 quirk templates
+    val templates = Seq(
+      "text <div", "<!DOCTYPE HTML PUBLIC \"-//W3C//DTD HTML 4.01//EN\">x",
+      "<a href=\"x</y\">t</a>", "< /div>", "<br>", "<BR>", "<spacer>", "<area>",
+      "<img src=x>", "<p / >", "<div\nid=x>y</div>", "hello", "<div id>",
+      "<input checked>", "<input type=x checked>", "<a HREF='a\\'b' X=Y>",
+      "<a title=\"a>b\">t</a>", "<script>if(a<b){}</script>", "<a t=\"x\\\"y\">",
+      "<a t=\"x\\\\\">", "<HT<!-- c -->ML>", "<DIV Id='1' B=\"2\">x</DIV>", "<A HREF=x>",
+      "<div> <b>x</b> </div>", "<pre> a\n  b</pre>", "<div><div></div>",
+      "<p><b></p></b>", "</x>y", "\uFEFF<a>x</a>", "<div>x</div>",
+      "&amp; &lt;<a t='&amp;'>x</a>")
+    for (s <- cases() ++ templates; repairFixed <- Seq(false, true)) {
+      val (dom, stats) = HtmlParser.parseWithStats(s, repairFixed)
+      val nodes = allNodes(dom)
+      val where = s"repairFixed=$repairFixed input: ${s.take(120)}"
+      assert(nodes.length == stats.nNodes + 1, where)
+      nodes.indices.foreach { i =>
+        val n = nodes(i)
+        assert(n.arenaId == i, where)
+        if (n.endtag != null) assert(nodes(n.endtag.arenaId) eq n.endtag, where)
+        if (n.openertag != null) assert(nodes(n.openertag.arenaId) eq n.openertag, where)
+      }
+    }
+  }
+
   test("escape/unescape round-trip on backslash-free strings") {
     // The reference's escape doesn't escape backslashes (quote_escaper.d:29-40),
     // so the round-trip only holds when the input has none: escape("\\\"")

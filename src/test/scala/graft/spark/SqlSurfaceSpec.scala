@@ -86,4 +86,30 @@ class SqlSurfaceSpec extends SparkTestBase {
     // fixed: the split tag is merged into <HTML>, which pairs with </HTML>
     assert(row.getAs[String]("fixed") == "<HTML><!-- c -->payload</HTML>")
   }
+
+  test("a NULL argument gives NULL from the DOM builder and mutators (parquet input)") {
+    GraftSparkExtensions.register(spark)
+    val dir = tmpDir("nullargs")
+    Seq((1, "<div><b>x</b></div>", null: String, Option.empty[Seq[String]]))
+      .toDF("id", "text", "nul", "no_names").write.parquet(s"$dir/t")
+    spark.read.parquet(s"$dir/t").createOrReplaceTempView("nullargs")
+    val row = spark.sql(
+      """SELECT
+        |  remove_tags(text, no_names) AS rm_names,
+        |  build_tag('p', 'k', 'v', nul) AS bt_text,
+        |  build_tag('p', 'k', nul, 'x') AS bt_value,
+        |  build_tag('p', nul, 'v', 'x') AS bt_key,
+        |  replace_tag(text, 'b', nul, 'k', 'v') AS rt_new_tag,
+        |  replace_tag(text, 'b', 'i', 'k', nul) AS rt_value,
+        |  replace_tag(text, 'b', 'i', nul, 'v') AS rt_key,
+        |  remove_tags(text, array('b', nul)) AS rm_null_name,
+        |  remove_tags(text, array('b')) AS rm_b,
+        |  replace_tag(text, nul, 'i', 'k', 'v') AS rt_null_tag
+        |FROM nullargs""".stripMargin).head
+    Seq("rm_names", "bt_text", "bt_value", "bt_key", "rt_new_tag", "rt_value", "rt_key")
+      .foreach(c => assert(row.isNullAt(row.fieldIndex(c)), c))
+    // a NULL name, or a NULL tag to match, matches nothing
+    assert(row.getAs[String]("rm_null_name") == row.getAs[String]("rm_b"))
+    assert(row.getAs[String]("rt_null_tag") == "<div><b>x</b></div>")
+  }
 }
