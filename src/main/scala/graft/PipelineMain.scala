@@ -62,15 +62,14 @@ object PipelineMain {
       case "run" =>
         require(args.length >= 3, "run <transcriptsDir> <outDir> [warmupDir]")
         val (in, out) = (args(1), args(2))
-        val cfg = Pipeline.Config()
         if (args.length > 3) {
           val w = s"$out-warmup"
-          Pipeline.runResumable(spark, args(3), w, cfg)
+          Pipeline.runResumable(spark, args(3), w)
           org.apache.hadoop.fs.FileSystem
             .get(new java.net.URI(w), spark.sparkContext.hadoopConfiguration)
             .delete(new org.apache.hadoop.fs.Path(w), true)
         }
-        val (s, wall, steal) = timed(Pipeline.runResumable(spark, in, out, cfg))
+        val (s, wall, steal) = timed(Pipeline.runResumable(spark, in, out))
         println(
           f"""{"batch":"${s.batchId}","files":${s.filesProcessed},"rows":${s.rowsProcessed},"wall_sec":$wall%.3f,"turns_per_sec":${s.rowsProcessed / wall}%.0f,"steal_pct":$steal%.2f}""")
 

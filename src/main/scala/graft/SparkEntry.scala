@@ -269,7 +269,7 @@ object SparkEntry {
         .select(col("conv_id"), col("turn_idx"),
           H.extractMainText(col("text")).as("extracted_text"))
     }),
-    // ===== the pipeline path (salted repartition + mapPartitions) ========
+    // ===== the pipeline path (salted repartition + ExtractTurn) ==========
     "q_pipeline_extract" -> ((s, dir) => {
       val extracted = Pipeline.extractTurns(Transcripts.derive(s, dir))
       Pipeline.reassembled(extracted).toDF()

@@ -26,15 +26,17 @@ object SpanCodec {
       s"unknown span kind '$kind' — not in SpanCodec.Kinds ${Kinds.mkString("[", ",", "]")}; " +
         "append new kinds to the dictionary (it is wire-format, append-only)"))
 
-  def unpack(pos: Array[Long], kinds: Array[Byte]): Seq[SpanRec] = {
-    if (pos == null) return Seq.empty
-    val out = Vector.newBuilder[SpanRec]
-    var i = 0
-    while (i < pos.length) {
-      out += SpanRec((pos(i) >>> 32).toInt, pos(i).toInt, Kinds(kinds(i)))
-      i += 1
+  /** The struct view of two packed arrays of one length; `caller` names
+    * the function an IllegalArgumentException blames for a length
+    * mismatch or a kind byte outside [[Kinds]]. */
+  def unpack(pos: Array[Long], kinds: Array[Byte], caller: String = "SpanCodec.unpack"): Seq[SpanRec] = {
+    require(pos.length == kinds.length,
+      s"$caller: ${pos.length} span positions but ${kinds.length} span kinds")
+    pos.indices.map { i =>
+      val k = kinds(i)
+      require(k >= 0 && k < Kinds.length, s"$caller: unknown span kind byte $k, not in SpanCodec.Kinds")
+      SpanRec((pos(i) >>> 32).toInt, pos(i).toInt, Kinds(k))
     }
-    out.result()
   }
 
   /** Growable packed span arrays. Spans are appended in document order;

@@ -168,12 +168,7 @@ object Embeddings {
     // optional Lloyd refinement (distributed assign + average)
     var iter = 0
     while (iter < lloydIters) {
-      val bc = spark.sparkContext.broadcast(centroids)
-      val assignU = udf((v: Seq[Float]) => {
-        val arr = v.toArray
-        bc.value.maxBy { case (_, c) => Fingerprints.cosine(c, arr) }._1
-      })
-      val means = emb.select(assignU(col("embedding")).as("cid"), col("embedding"))
+      val means = ivfAssignments(emb, centroids).select(col("cid"), col("embedding"))
         .as[(Int, Seq[Float])]
         .groupByKey(_._1)
         .mapGroups { (cid, it) =>

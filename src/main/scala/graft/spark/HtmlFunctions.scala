@@ -1,6 +1,6 @@
 package graft.spark
 
-import graft.extract.{Extractor, SpanCodec, SpanRec}
+import graft.extract.SpanCodec
 import graft.parser.{HtmlNode, HtmlParser}
 import graft.parser.HtmlParser.ParseStats
 import org.apache.spark.TaskContext
@@ -285,24 +285,22 @@ object HtmlFunctions {
   val to_html = udf(roundtrip _)
   val prettify_html = udf(prettifyHtml _)
   val node_count = udf(nodeCount _)
-  /** Main-text extraction of one turn, with the pipeline's oversize
-    * guard: a turn over [[Pipeline.DefaultMaxTextChars]] code points is
-    * not parsed and reads ("", no spans, 0 nodes, 1 error), as
-    * [[Pipeline.extractOnScanPartitions]] emits it. */
+  /** Main-text extraction of one turn through the pipeline's guarded
+    * kernel ([[Pipeline.extractGuarded]]) at
+    * [[Pipeline.DefaultMaxTextChars]], so it reads what
+    * [[Pipeline.extractOnScanPartitions]] emits, spans as structs. */
   val extract_main = udf((html: String) => {
-    val t = if (html == null) "" else html
-    if (Pipeline.isOversize(t, Pipeline.DefaultMaxTextChars)) ("", Seq.empty[SpanRec], 0, 1)
-    else {
-      val r = Extractor.extract(t)
-      (r.text, r.spans, r.nNodes, r.nErrors)
-    }
+    val r = Pipeline.extractGuarded(html, Pipeline.DefaultMaxTextChars)
+    (r.text, r.spans, r.nNodes, r.nErrors)
   })
 
   /** Struct view over the packed span columns (SpanCodec wire format) —
     * for inspecting/oracle-checking pipeline output without re-parsing.
+    * A NULL argument gives NULL; arrays of different lengths or an
+    * unknown kind byte fail the query, naming the function.
     */
   val spans_view = udf((pos: Array[Long], kinds: Array[Byte]) =>
-    SpanCodec.unpack(pos, kinds))
+    if (pos == null || kinds == null) null else SpanCodec.unpack(pos, kinds, "spans_view"))
 
   def extractMainText(c: Column): Column = extract_main(c).getField("_1")
 

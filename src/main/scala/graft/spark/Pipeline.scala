@@ -1,8 +1,11 @@
 package graft.spark
 
-import graft.extract.Extractor
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import graft.extract.{ExtractResult, Extractor}
+import graft.spark.catalyst.ExtractTurn
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CatalystBridge
+import scala.collection.immutable.ArraySeq
 
 /** The batch extraction pipeline (BASELINE.json north_rule):
   *
@@ -119,77 +122,67 @@ object Pipeline {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
   }
 
-  /** Oversize test in Unicode CODE POINTS — the same unit SQL `length()`
-    * uses in both Spark and DuckDB, so the lineage ledger's
-    * `length(text) > maxTextChars` predicate selects exactly the rows
-    * the extraction skipped (ADVICE r2: the old UTF-16 `String.length`
-    * guard diverged from the ledger for supplementary-plane text near
-    * the limit). The UTF-16 length upper-bounds the code-point count, so
-    * the common path stays O(1); codePointCount runs only for strings
-    * already over the limit in UTF-16 units.
-    */
-  @inline private[spark] def isOversize(t: String, maxChars: Int): Boolean =
-    t.length > maxChars && t.codePointCount(0, t.length) > maxChars
-
   /** The oversize guard's default bound in code points: the pipeline's
     * [[Config]] and the `extract_main` SQL function skip a text longer
     * than this the same way. */
   val DefaultMaxTextChars: Int = 4 << 20
 
-  final case class Config(partitions: Int = 0, // 0 = spark.sql.shuffle.partitions
-                          maxTextChars: Int = DefaultMaxTextChars,
-                          snapshotId: String = "parquet-v0",
-                          // "extractfirst" (default: extraction on scan
-                          // partitions, ONE exchange of extracted text —
-                          // measured fastest AND the only shape clearing
-                          // the >=0.8 scaling bar at 4-core executors;
-                          // BENCH/BASELINE.md round-3 scaling table) or
-                          // "salted" (explicit salt repartition of RAW
-                          // text before extraction — kept as the
-                          // skew-contrast reference; its raw-text
-                          // shuffle is a measured bandwidth wall at
-                          // scale: 0.471 efficiency vs 0.850)
+  /** One turn's extraction, the kernel of [[ExtractTurn]] and the
+    * `extract_main` SQL function: a NULL text reads as '', and a text
+    * over `maxChars` CODE POINTS is not parsed and reads ("", no spans,
+    * 0 nodes, 1 error). Code points are the unit SQL `length()` uses in
+    * both Spark and DuckDB, so the lineage ledger's
+    * `length(text) > maxTextChars` selects exactly the skipped rows
+    * (ADVICE r2). The UTF-16 length bounds the code-point count, so
+    * codePointCount runs only for texts already over it.
+    */
+  private[spark] def extractGuarded(text: String, maxChars: Int): ExtractResult = {
+    val t = if (text == null) "" else text
+    if (t.length > maxChars && t.codePointCount(0, t.length) > maxChars)
+      ExtractResult("", new ArraySeq.ofLong(Array.emptyLongArray),
+        new ArraySeq.ofByte(Array.emptyByteArray), 0, 1)
+    else Extractor.extract(t)
+  }
+
+  /** The snapshot id every sink records: a constant for the parquet
+    * stand-in (with Iceberg it is the table snapshot). */
+  val SnapshotId = "parquet-v0"
+
+  /** `shape` "extractfirst" (the default: extraction on scan partitions,
+    * ONE exchange of extracted text — measured fastest AND the only shape
+    * clearing the >=0.8 scaling bar at 4-core executors; BENCH/BASELINE.md
+    * round-3 scaling table) or "salted" (salt repartition of RAW text
+    * before extraction — the skew-contrast reference; its raw-text
+    * shuffle is a measured bandwidth wall at scale: 0.471 efficiency vs
+    * 0.850). */
+  final case class Config(maxTextChars: Int = DefaultMaxTextChars,
                           shape: String = "extractfirst") {
     require(shape == "extractfirst" || shape == "salted",
       s"unknown pipeline shape '$shape': expected extractfirst or salted")
   }
 
-  /** Core stage: salted repartition + mapPartitions extraction.
-    * Input must have (conv_id string, turn_idx int, text string [, src_file]).
-    * Keeps src_file if present (for lineage).
+  /** Core stage: salted repartition, then the extraction generator.
+    * Input must have (conv_id string, turn_idx int, text string); the
+    * salt spreads over spark.sql.shuffle.partitions partitions, passed as
+    * an explicit count so AQE cannot coalesce them.
     */
-  def extractTurns(turns: DataFrame, cfg: Config = Config()): Dataset[ExtractedTurn] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    val parts =
-      if (cfg.partitions > 0) cfg.partitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    extractMapped(
-      turns
-        .select(col("conv_id"), col("turn_idx"), col("text"))
-        .repartition(parts, col("conv_id"), col("turn_idx")) // salt: turn-level spread
-        .as[(String, Int, String)],
-      cfg)
-  }
+  def extractTurns(turns: DataFrame, cfg: Config = Config()): Dataset[ExtractedTurn] =
+    extractMapped(turns.repartition(shufflePartitions(turns), col("conv_id"), col("turn_idx")), cfg)
 
-  /** The shared extraction stage: per-row parse+extract with the
-    * oversize guard. The salted, one-pass and extract-first shapes all
-    * plan through here, so every shape extracts a turn the same way.
+  private def shufflePartitions(df: DataFrame): Int =
+    df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+
+  /** The shared extraction stage: one [[ExtractTurn]] row per turn beside
+    * its (conv_id, turn_idx) keys. The salted, one-pass and extract-first
+    * shapes all plan through here, so every shape extracts a turn the
+    * same way. No object boundary: a filter on a key reaches the scan,
+    * and the scan reads only (conv_id, turn_idx, text).
     */
-  private def extractMapped(rows: Dataset[(String, Int, String)], cfg: Config): Dataset[ExtractedTurn] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val maxChars = cfg.maxTextChars
-    rows.mapPartitions(_.map { case (conv, idx, text) =>
-      val t = if (text == null) "" else text
-      if (isOversize(t, maxChars))
-        ExtractedTurn(conv, idx, "", Array.emptyLongArray, Array.emptyByteArray, 0, 1)
-      else {
-        val r = Extractor.extract(t)
-        ExtractedTurn(conv, idx, r.text, r.spanPos.unsafeArray, r.spanKind.unsafeArray,
-          r.nNodes, r.nErrors)
-      }
-    })
+  private def extractMapped(rows: DataFrame, cfg: Config): Dataset[ExtractedTurn] = {
+    val extracted = CatalystBridge.column(
+      ExtractTurn(CatalystBridge.expression(col("text")), cfg.maxTextChars))
+    rows.select(col("conv_id"), col("turn_idx"), extracted.as(ExtractTurn.Schema.fieldNames.toSeq))
+      .as(Encoders.product[ExtractedTurn])
   }
 
   /** Reassembly with a hard cap on buffered turns per conversation: the
@@ -339,21 +332,9 @@ object Pipeline {
     * is the range partitioner's input sampling pass (scan-only, cheap).
     */
   def extractReassembledOnePass(turns: DataFrame,
-                                cfg: Config = Config()): Dataset[ExtractedTurn] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    val parts =
-      if (cfg.partitions > 0) cfg.partitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    extractMapped(
-      turns
-        .select(col("conv_id"), col("turn_idx"), col("text"))
-        .repartitionByRange(parts, col("conv_id"), col("turn_idx"))
-        .as[(String, Int, String)],
-      cfg)
+                                cfg: Config = Config()): Dataset[ExtractedTurn] =
+    extractMapped(turns.repartitionByRange(shufflePartitions(turns), col("conv_id"), col("turn_idx")), cfg)
       .sortWithinPartitions(col("conv_id"), col("turn_idx"))
-      .as[ExtractedTurn]
-  }
 
   /** EXTRACT-FIRST pipeline: extraction runs directly on the scan
     * partitions (the file source byte-balances splits via
@@ -377,15 +358,8 @@ object Pipeline {
     * maxPartitionBytes; the oversize guard bounds per-turn cost). Safe on
     * both batch and STREAMING DataFrames — no repartition, no sort.
     */
-  def extractOnScanPartitions(turns: DataFrame, cfg: Config = Config()): Dataset[ExtractedTurn] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    extractMapped(
-      turns
-        .select(col("conv_id"), col("turn_idx"), col("text"))
-        .as[(String, Int, String)],
-      cfg)
-  }
+  def extractOnScanPartitions(turns: DataFrame, cfg: Config = Config()): Dataset[ExtractedTurn] =
+    extractMapped(turns, cfg)
 
   /** Per-turn output in stable (conv_id, turn_idx) order — the shape the
     * per-turn oracle compares (north_rule: "per-turn text equality under
@@ -405,8 +379,6 @@ object Pipeline {
     */
   def reassembled(extracted: Dataset[ExtractedTurn],
                   turnsPerShard: Int = 0): Dataset[ExtractedTurn] = {
-    val spark = extracted.sparkSession
-    import spark.implicits._
     val parts =
       if (turnsPerShard > 0)
         Seq(col("conv_id"), floor(col("turn_idx") / lit(turnsPerShard)))
@@ -414,7 +386,6 @@ object Pipeline {
     extracted
       .repartition(parts: _*)
       .sortWithinPartitions(col("conv_id"), col("turn_idx"))
-      .as[ExtractedTurn]
   }
 
   final case class RunSummary(batchId: String, filesProcessed: Long,
@@ -488,7 +459,7 @@ object Pipeline {
       .join(doneFiles, Seq("src_file"), "left_anti")
 
     // n_bytes = true UTF-8 octets (octet_length); n_oversize counts the
-    // SAME rows the extraction's code-point guard skips (isOversize)
+    // SAME rows the extraction's code-point guard skips (extractGuarded)
     val ledger = pending.groupBy(col("src_file").as("file"))
       .agg(count(lit(1)).as("row_count"),
         coalesce(sum(octet_length(col("text"))), lit(0L)).as("n_bytes"),
@@ -518,7 +489,7 @@ object Pipeline {
         .write.mode("overwrite")
         .parquet(batchDir)
 
-      ledger.select(lit(cfg.snapshotId).as("snapshot_id"), col("file"),
+      ledger.select(lit(SnapshotId).as("snapshot_id"), col("file"),
           col("row_count"), col("n_bytes"), col("n_oversize"))
         .write.mode("overwrite").parquet(s"$outDir/lineage/batch=$batchId")
 
@@ -529,10 +500,10 @@ object Pipeline {
           coalesce(sum(length(col("extracted_text"))), lit(0L)).as("n_chars_out"),
           lit(total("n_bytes_in")).as("n_bytes_in"),
           lit(total("n_oversize")).as("n_oversize"),
-          lit(cfg.snapshotId).as("snapshot_id"))
+          lit(SnapshotId).as("snapshot_id"))
         .write.mode("overwrite").parquet(s"$outDir/metrics/batch=$batchId")
 
-      ledger.select(col("file"), lit(cfg.snapshotId).as("snapshot_id"),
+      ledger.select(col("file"), lit(SnapshotId).as("snapshot_id"),
           lit(batchId).as("batch_id"))
         .write.mode("append").parquet(ckptPath)
 

@@ -1,7 +1,6 @@
 package graft.spark
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Incremental extraction via Structured Streaming — the streaming analog
   * of Pipeline.runResumable for continuously-landing transcript files.
@@ -24,7 +23,6 @@ object StreamingExtraction {
     val turns = spark.readStream
       .schema(Transcripts.turnSchema)
       .parquet(inputPath)
-      .select(col("conv_id"), col("turn_idx"), col("text"))
     // extraction runs on the file-source partitions directly — salting
     // would shuffle raw text per microbatch for nothing (no reassembly
     // happens in the sink; ordering is applied at read time)

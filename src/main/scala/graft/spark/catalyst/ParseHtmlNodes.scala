@@ -1,8 +1,9 @@
 package graft.spark.catalyst
 
-import graft.spark.HtmlFunctions
+import graft.spark.{ExtractedTurn, HtmlFunctions, Pipeline}
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.types._
@@ -81,4 +82,35 @@ object ParseHtmlNodes {
 
   private val EmptyMap =
     ArrayBasedMapData(Array.empty[Any], Array.empty[Any])
+}
+
+/** The pipeline's per-turn extraction as a native one-row Generator over
+  * [[Pipeline.extractGuarded]]. Being an expression, not a typed
+  * `mapPartitions`, it crosses no object boundary, so column pruning and
+  * filter pushdown on the (conv_id, turn_idx) keys reach the scan.
+  * Column-side only; no SQL name is bound. The parse dominates, so
+  * CodegenFallback is the tier, as for [[ParseHtmlNodes]].
+  */
+case class ExtractTurn(child: Expression, maxChars: Int)
+    extends StringFunction("extract_turn") with Generator with CodegenFallback {
+
+  override def elementSchema: StructType = ExtractTurn.Schema
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val v = child.eval(input)
+    val r = Pipeline.extractGuarded(if (v == null) null else v.toString, maxChars)
+    Iterator.single(InternalRow(UTF8String.fromString(r.text),
+      UnsafeArrayData.fromPrimitiveArray(r.spanPos.unsafeArray), r.spanKind.unsafeArray,
+      r.nNodes, r.nErrors))
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): ExtractTurn =
+    copy(child = newChild)
+}
+
+object ExtractTurn {
+  /** [[ExtractedTurn]]'s columns after its (conv_id, turn_idx) keys:
+    * the case class stays the one definition of the row. */
+  val Schema: StructType = StructType(
+    Encoders.product[ExtractedTurn].schema.filterNot(f => f.name == "conv_id" || f.name == "turn_idx"))
 }

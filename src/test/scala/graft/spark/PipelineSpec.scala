@@ -494,8 +494,10 @@ class PipelineSpec extends SparkTestBase {
         Turn(s"c-$i", 0, "user", s"<p>small conv $i body</p>", "",
           new java.sql.Timestamp(0)))
     val df = spark.createDataset(rows).toDF()
-    val counts = Pipeline.extractTurns(df, Pipeline.Config(partitions = 8))
-      .mapPartitions(it => Iterator.single(it.size)).collect()
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8") // the salt spreads over these
+    val counts = try Pipeline.extractTurns(df).mapPartitions(it => Iterator.single(it.size)).collect()
+      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert(counts.length == 8)
     val mean = counts.sum.toDouble / counts.length
     // hash(conv_id, turn_idx) salting: no partition should exceed 2x mean

@@ -26,6 +26,9 @@ class PlanSpec extends SparkTestBase {
     dir
   }
 
+  /** How the pipeline's extraction stage prints in an executed plan. */
+  private val ExtractionOp = "Generate extract_turn"
+
   private def scanLine(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString.linesIterator
       .find(_.contains("FileScan")).getOrElse("")
@@ -108,6 +111,22 @@ class PlanSpec extends SparkTestBase {
     assert(!readSchema.contains("role") && !readSchema.contains("tool") && !readSchema.contains("ts:"))
   }
 
+  test("extraction plans no object boundary") {
+    val df = spark.read.parquet(turnsParquet)
+    for ((name, ds) <- Seq("extractOnScanPartitions" -> Pipeline.extractOnScanPartitions(df),
+        "extractTurns" -> Pipeline.extractTurns(df),
+        "extractReassembledOnePass" -> Pipeline.extractReassembledOnePass(df))) {
+      val plan = ds.queryExecution.executedPlan.toString
+      assert(!Seq("DeserializeToObject", "MapPartitions", "SerializeFromObject").exists(plan.contains),
+        s"$name:\n$plan")
+    }
+    // a filter on a key above the extraction reaches the scan
+    val one = Pipeline.extractOnScanPartitions(df).filter(col("conv_id") === "c1")
+    val scan = scanLine(one.toDF())
+    assert(scan.contains("EqualTo(conv_id,c1)"), scan)
+    assert(one.collect().map(t => (t.conv_id, t.extracted_text)).toSeq == Seq(("c1", "row 1 content body")))
+  }
+
   test("documents join in derive is broadcast (no shuffle for the dimension)") {
     val plan = Transcripts.deriveUncached(spark, sf).queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"),
@@ -168,16 +187,16 @@ class PlanSpec extends SparkTestBase {
     val exchangeLine = plan.linesIterator.find(_.contains("Exchange")).getOrElse("")
     assert(exchangeLine.contains("hashpartitioning"), s"expected hash exchange:\n$plan")
     // tree prints root-first, so upstream operators appear LATER in the
-    // string: the extraction's SerializeFromObject must print below the
-    // exchange (i.e. feed it), proving extraction runs on scan partitions
-    assert(plan.indexOf("Exchange") < plan.indexOf("SerializeFromObject"),
-      s"extraction (object serialize) must be upstream of the exchange:\n$plan")
+    // string: the extraction's Generate must print below the exchange
+    // (i.e. feed it), proving extraction runs on scan partitions
+    assert(plan.indexOf("Exchange") < plan.indexOf(ExtractionOp),
+      s"extraction ($ExtractionOp) must be upstream of the exchange:\n$plan")
   }
 
   test("conversations query: single exchange, downstream of extraction") {
     val df = graft.SparkEntry.queries("q_conversations")(spark, sf)
     val plan = df.queryExecution.executedPlan.toString
-    val engine = plan.substring(0, plan.indexOf("SerializeFromObject"))
+    val engine = plan.substring(0, plan.indexOf(ExtractionOp))
     assert("Exchange".r.findAllIn(engine).length == 1, plan)
     assert(engine.contains("partial_collect_list"), plan) // map-side combine
   }
@@ -200,15 +219,15 @@ class PlanSpec extends SparkTestBase {
   test("conversation dedup: one extraction, two partial+final aggs, two exchanges") {
     val df = graft.SparkEntry.queries("q_conv_dedup")(spark, sf)
     val plan = df.queryExecution.executedPlan.toString
-    // extraction (object serialize) appears ONCE — the dup injection must
-    // replicate rows, not recompute the pipeline via self-union
-    assert("SerializeFromObject".r.findAllIn(plan).length == 1, plan)
+    // extraction appears ONCE — the dup injection must replicate rows,
+    // not recompute the pipeline via self-union
+    assert(ExtractionOp.r.findAllIn(plan).length == 1, plan)
     // engine section = everything downstream of extraction (tree prints
-    // root-first, so it's the text BEFORE SerializeFromObject; below it
+    // root-first, so it's the text BEFORE the extraction; below it
     // sits input synthesis, which is not engine work): conv reassembly +
     // md5 grouping = exactly two exchanges, each fed by a map-side
     // partial aggregate
-    val engine = plan.substring(0, plan.indexOf("SerializeFromObject"))
+    val engine = plan.substring(0, plan.indexOf(ExtractionOp))
     assert("Exchange".r.findAllIn(engine).length == 2, plan)
     assert(engine.contains("partial_collect_list") && engine.contains("partial_count"), plan)
   }

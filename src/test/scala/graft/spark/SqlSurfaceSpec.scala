@@ -46,6 +46,26 @@ class SqlSurfaceSpec extends SparkTestBase {
       row.getAs[String]("kind") == "text")
   }
 
+  test("spans_view: NULL gives NULL; mismatched or unknown kinds name the function (parquet input)") {
+    GraftSparkExtensions.register(spark)
+    val dir = tmpDir("spansview")
+    val p = SpanCodec.packPos(3, 8)
+    Seq((1, Array(p), null: Array[Byte]), (2, null: Array[Long], Array[Byte](0)),
+      (3, Array(p, p), Array[Byte](0)), (4, Array(p), Array[Byte](9)))
+      .toDF("id", "span_pos", "span_kind").write.parquet(s"$dir/t")
+    spark.read.parquet(s"$dir/t").createOrReplaceTempView("spansview")
+    val nulls = spark.sql("SELECT spans_view(span_pos, span_kind) AS v FROM spansview WHERE id <= 2")
+      .collect()
+    assert(nulls.length == 2 && nulls.forall(_.isNullAt(0)))
+    for ((id, what) <- Seq(3 -> "1 span kinds", 4 -> "unknown span kind byte 9")) {
+      val err = intercept[Exception](
+        spark.sql(s"SELECT spans_view(span_pos, span_kind) FROM spansview WHERE id = $id").collect())
+      val iae = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case e: IllegalArgumentException => e }
+      assert(iae.exists(e => e.getMessage.contains("spans_view") && e.getMessage.contains(what)), err)
+    }
+  }
+
   test("find_nodes: generic find(tag, params) from SQL, arena ids + DFS order") {
     GraftSparkExtensions.register(spark)
     Seq(("c1", 0,
