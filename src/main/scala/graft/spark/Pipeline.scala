@@ -405,13 +405,26 @@ object Pipeline {
     *     batch id, the pending file and row counts, the input totals and
     *     the number of files committed before this batch.
     *  2. *Extracted* (`extracted/`): the per-turn rows.
-    *  3. *Lineage* (`lineage/`): the cached ledger, one row per source file.
+    *  3. *Lineage* (`lineage/`): the cached ledger, one row per source
+    *     file. It reads nothing step 2 writes, so it runs on a thread of
+    *     its own, concurrently with steps 2 and 4.
     *  4. *Metrics* (`metrics/`): ONE row per batch (n_turns, n_nodes,
     *     n_errors, n_chars_out, n_bytes_in, n_oversize, snapshot_id),
     *     aggregated from the committed extracted batch directory, with
     *     the ledger's input totals.
-    *  5. *Checkpoint*, LAST: the cached ledger's files, appended. It is
-    *     what marks the batch committed.
+    *  5. *Checkpoint*, LAST, once lineage and metrics are both written:
+    *     the cached ledger's files, appended. It is what marks the batch
+    *     committed.
+    * Lineage and checkpoint each write one file per batch (the ledger is
+    * coalesced to one partition), so resume's checkpoint listing grows by
+    * one file per batch, not by one per shuffle partition.
+    *
+    * The lineage thread is started from the calling thread after step 1
+    * has returned, so it inherits no SQL execution id and its write is a
+    * root execution like the others. It is joined on every path before the
+    * ledger is released: when this method returns or throws, none of the
+    * batch's jobs is still running. If both threads fail, the calling
+    * thread's failure is thrown with the lineage failure suppressed.
     *
     * Retry safety: the batch id is an order-independent aggregate (xor of
     * per-file xxhash64) over the pending file set, and every data sink is
@@ -481,34 +494,58 @@ object Pipeline {
       if (nPending == 0) return RunSummary("none", 0, 0, total("n_done"))
       val batchId = "b" + f"${total("s")}%016x".take(8) + f"${total("s2")}%016x".take(8)
 
-      val extracted =
-        if (cfg.shape == "extractfirst") extractOnScanPartitions(pending, cfg)
-        else extractTurns(pending, cfg)
-      val batchDir = s"$outDir/extracted/batch=$batchId"
-      reassembled(extracted)
-        .write.mode("overwrite")
-        .parquet(batchDir)
+      val joinLineage = fork(s"graft-lineage-$batchId") {
+        ledger.coalesce(1).select(lit(SnapshotId).as("snapshot_id"), col("file"),
+            col("row_count"), col("n_bytes"), col("n_oversize"))
+          .write.mode("overwrite").parquet(s"$outDir/lineage/batch=$batchId")
+      }
+      try {
+        val extracted =
+          if (cfg.shape == "extractfirst") extractOnScanPartitions(pending, cfg)
+          else extractTurns(pending, cfg)
+        val batchDir = s"$outDir/extracted/batch=$batchId"
+        reassembled(extracted)
+          .write.mode("overwrite")
+          .parquet(batchDir)
 
-      ledger.select(lit(SnapshotId).as("snapshot_id"), col("file"),
-          col("row_count"), col("n_bytes"), col("n_oversize"))
-        .write.mode("overwrite").parquet(s"$outDir/lineage/batch=$batchId")
+        spark.read.schema(Encoders.product[ExtractedTurn].schema).parquet(batchDir).agg(
+            count(lit(1)).as("n_turns"),
+            coalesce(sum(col("n_nodes")), lit(0L)).as("n_nodes"),
+            coalesce(sum(col("n_errors")), lit(0L)).as("n_errors"),
+            coalesce(sum(length(col("extracted_text"))), lit(0L)).as("n_chars_out"),
+            lit(total("n_bytes_in")).as("n_bytes_in"),
+            lit(total("n_oversize")).as("n_oversize"),
+            lit(SnapshotId).as("snapshot_id"))
+          .write.mode("overwrite").parquet(s"$outDir/metrics/batch=$batchId")
+      } catch { case e: Throwable =>
+        joinLineage().foreach(e.addSuppressed)
+        throw e
+      }
+      joinLineage().foreach(e => throw e)
 
-      spark.read.schema(Encoders.product[ExtractedTurn].schema).parquet(batchDir).agg(
-          count(lit(1)).as("n_turns"),
-          coalesce(sum(col("n_nodes")), lit(0L)).as("n_nodes"),
-          coalesce(sum(col("n_errors")), lit(0L)).as("n_errors"),
-          coalesce(sum(length(col("extracted_text"))), lit(0L)).as("n_chars_out"),
-          lit(total("n_bytes_in")).as("n_bytes_in"),
-          lit(total("n_oversize")).as("n_oversize"),
-          lit(SnapshotId).as("snapshot_id"))
-        .write.mode("overwrite").parquet(s"$outDir/metrics/batch=$batchId")
-
-      ledger.select(col("file"), lit(SnapshotId).as("snapshot_id"),
+      ledger.coalesce(1).select(col("file"), lit(SnapshotId).as("snapshot_id"),
           lit(batchId).as("batch_id"))
         .write.mode("append").parquet(ckptPath)
 
       RunSummary(batchId, nPending, total("n_rows"), total("n_done"))
     } finally ledger.unpersist()
+  }
+
+  /** Runs `body` on a new thread started now, from the calling thread, so
+    * it inherits the caller's Spark local properties as they are at this
+    * point. The returned function waits for the thread to end (across
+    * interrupts, which it re-raises afterwards) and gives its failure.
+    */
+  private def fork(name: String)(body: => Unit): () => Option[Throwable] = {
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val thread = new Thread(() => try body catch { case e: Throwable => failure.set(e) }, name)
+    thread.start()
+    () => {
+      var interrupted = false
+      while (thread.isAlive) try thread.join() catch { case _: InterruptedException => interrupted = true }
+      if (interrupted) Thread.currentThread.interrupt()
+      Option(failure.get)
+    }
   }
 
   /** All extracted rows across batches. refreshByPath first: a resume run

@@ -399,17 +399,22 @@ class PipelineSpec extends SparkTestBase {
     } finally spark.conf.set(inferKey, prev)
   }
 
-  test("batch shape: a pending batch runs at most 5 root SQL executions, a no-op resume 1") {
+  test("batch shape: a pending batch runs exactly 5 root SQL executions, one per sink write; a no-op resume 1") {
     val dir = tmpDir("graft-pipe-shape")
     val inPath = s"$dir/transcripts"
+    val outDir = s"$dir/out"
     spark.createDataset(quirkTurns).toDF().repartition(4).write.parquet(inPath)
     val sc = spark.sparkContext
-    def rootExecutions(run: => Pipeline.RunSummary): (Pipeline.RunSummary, Int) = {
-      val roots = new java.util.concurrent.atomic.AtomicInteger()
+    val insertPath = """(?s)Execute InsertIntoHadoopFsRelationCommand\n.*?Arguments: ([^,\s]+)""".r
+    // the sink directory each root execution writes ("" for a read)
+    def rootExecutions(run: => Pipeline.RunSummary): (Pipeline.RunSummary, Seq[String]) = {
+      val roots = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       val listener = new org.apache.spark.scheduler.SparkListener {
         override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
           case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-              if s.rootExecutionId.forall(_ == s.executionId) => roots.incrementAndGet()
+              if s.rootExecutionId.forall(_ == s.executionId) =>
+            roots.add(insertPath.findFirstMatchIn(s.physicalPlanDescription).map(_.group(1))
+              .map(p => p.substring(p.lastIndexOf("/out/") + 5).takeWhile(_ != '/')).getOrElse(""))
           case _ =>
         }
       }
@@ -418,15 +423,59 @@ class PipelineSpec extends SparkTestBase {
       try {
         val r = run
         org.apache.spark.ListenerBusDrain(sc)
-        (r, roots.get)
+        (r, roots.toArray(Array.empty[String]).toSeq.sorted)
       } finally sc.removeSparkListener(listener)
     }
-    val (r1, pendingExecs) = rootExecutions(Pipeline.runResumable(spark, inPath, s"$dir/out"))
+    val (r1, pendingRoots) = rootExecutions(Pipeline.runResumable(spark, inPath, outDir))
     assert(r1.filesProcessed == 4)
-    assert(pendingExecs <= 5, s"a pending batch ran $pendingExecs root SQL executions")
-    val (r2, noopExecs) = rootExecutions(Pipeline.runResumable(spark, inPath, s"$dir/out"))
+    assert(pendingRoots == Seq("", "checkpoint", "extracted", "lineage", "metrics"),
+      s"a pending batch's root SQL executions wrote ${pendingRoots.mkString("[", ", ", "]")}")
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(outDir), sc.hadoopConfiguration)
+    for (sink <- Seq(s"lineage/batch=${r1.batchId}", "checkpoint")) {
+      val files = fs.listStatus(new org.apache.hadoop.fs.Path(s"$outDir/$sink"))
+        .map(_.getPath.getName).filter(_.endsWith(".parquet"))
+      assert(files.length == 1, s"$sink: ${files.mkString(", ")}")
+    }
+    val (r2, noopRoots) = rootExecutions(Pipeline.runResumable(spark, inPath, outDir))
     assert(r2.filesProcessed == 0 && r2.skippedFiles == 4)
-    assert(noopExecs == 1, s"a no-op resume ran $noopExecs root SQL executions")
+    assert(noopRoots == Seq(""), s"a no-op resume ran ${noopRoots.size} root SQL executions")
+  }
+
+  test("a failed write leaves no commit and no running job; the rerun commits the clean batch") {
+    val dir = tmpDir("graft-pipe-fail")
+    val inPath = s"$dir/transcripts"
+    spark.createDataset(quirkTurns).toDF().repartition(4).write.parquet(inPath)
+    val sc = spark.sparkContext
+    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir), sc.hadoopConfiguration)
+    def sinkRows(out: String): Seq[String] = Seq("lineage", "metrics").flatMap { sink =>
+      spark.catalog.refreshByPath(s"$out/$sink")
+      spark.read.parquet(s"$out/$sink").collect().map(s"$sink " + _).sorted
+    }
+    val clean = Pipeline.runResumable(spark, inPath, s"$dir/clean")
+    assert(clean.filesProcessed == 4)
+    // a regular file where a sink's directory belongs fails that sink's
+    // write; while the extracted write is blocked, each lineage task is
+    // slowed so that it still runs when the extracted write has failed
+    for (sink <- Seq("extracted", "lineage")) {
+      val out = s"$dir/blocked-$sink"
+      val blocker = new org.apache.hadoop.fs.Path(s"$out/$sink")
+      fs.create(blocker).close()
+      val slow = if (sink != "extracted") Nil else Seq("fs.file.impl.disable.cache" -> "true",
+        "fs.file.impl" -> classOf[SlowLineageTaskFileSystem].getName)
+      slow.foreach { case (k, v) => spark.conf.set(k, v) }
+      try intercept[Exception](Pipeline.runResumable(spark, inPath, out))
+      finally slow.foreach { case (k, _) => spark.conf.unset(k) }
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$out/checkpoint")), sink)
+      org.apache.spark.ListenerBusDrain(sc)
+      assert(sc.statusTracker.getActiveJobIds.isEmpty,
+        s"$sink blocked: jobs ${sc.statusTracker.getActiveJobIds.mkString(", ")} still running")
+      if (sink == "extracted") // the unblocked lineage write had committed
+        assert(fs.exists(new org.apache.hadoop.fs.Path(s"$out/lineage/batch=${clean.batchId}/_SUCCESS")))
+      assert(fs.delete(blocker, false))
+      assert(Pipeline.runResumable(spark, inPath, out) == clean, sink)
+      assert(sinkRows(out) == sinkRows(s"$dir/clean"), sink)
+    }
   }
 
   test("batch jobs: a pending batch starts at most one job outside any SQL execution") {
@@ -525,5 +574,15 @@ class PipelineSpec extends SparkTestBase {
       "text" -> "string", "tool" -> "string", "ts" -> "timestamp"))
     val dup = t.groupBy("conv_id", "turn_idx").count().filter(col("count") > 1).count()
     assert(dup == 0)
+  }
+}
+
+/** The local file system, except that a task making a directory under a
+  * lineage batch first sleeps 1.5 s. */
+class SlowLineageTaskFileSystem extends org.apache.hadoop.fs.LocalFileSystem {
+  override def mkdirs(f: org.apache.hadoop.fs.Path): Boolean = {
+    if (org.apache.spark.TaskContext.get() != null && f.toString.contains("/lineage/batch="))
+      Thread.sleep(1500)
+    super.mkdirs(f)
   }
 }
