@@ -363,9 +363,8 @@ object SparkEntry {
     // find("a") expressed RELATIONALLY over the exploded node arena
     // (SURVEY.md §2.2: node-table filter; node_id order = DFS pre-order) —
     // must equal q_find_links' UDF-side result. The arena comes from the
-    // native ParseHtmlNodes Generator (one fewer full-arena encode per
-    // turn than explode(parse_html); the UDF explode path stays covered
-    // by q_dom_nodes).
+    // native ParseHtmlNodes Generator, whose node-row writer parse_html and
+    // find_nodes (q_find_nodes) share.
     "q_relational_find" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val nodes = Transcripts.derive(s, dir)
@@ -380,10 +379,10 @@ object SparkEntry {
         .select(col("conv_id"), col("turn_idx"), col("pos"),
           element_at(col("params"), "href").as("href"))
     }),
-    // the SAME arena through the native Catalyst Generator (ParseHtmlNodes
-    // via SparkSessionExtensions) instead of the UDF+explode path — one
-    // fewer full-arena materialization per turn; must hash-match the
-    // q_dom_nodes oracle exactly
+    // the non-text rows of the arena through the native Catalyst Generator
+    // (ParseHtmlNodes via SparkSessionExtensions), which emits each node
+    // row without an intermediate array; must hash-match the q_dom_nodes
+    // oracle exactly
     "q_gen_nodes" -> ((s, dir) => {
       Transcripts.derive(s, dir)
         .select(col("conv_id"), col("turn_idx"),

@@ -12,7 +12,7 @@ import scala.collection.mutable.ArrayBuffer
   * The reference's API is mutable (childs array, endtag/openertag links);
   * we keep that shape for the in-JVM library surface. Nodes are created
   * per-parse and never shared across threads; the Spark layer converts
-  * trees to flat NodeRow arenas before anything crosses a task boundary.
+  * trees to flat node rows before anything crosses a task boundary.
   *
   * Perf notes (this runs per-token for 10^12-turn corpora): `childs` and
   * `params` are lazily allocated — text/leaf nodes (the majority) never

@@ -3,18 +3,22 @@ package graft.spark
 import graft.extract.SpanCodec
 import graft.parser.{HtmlNode, HtmlParser}
 import graft.parser.HtmlParser.ParseStats
+import graft.spark.catalyst.{FindNodes, ParseHtml}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.graft.CatalystBridge.{column => native, expression}
 
 /** The engine's scalar-function surface over HTML text columns.
   *
   * Design (SURVEY.md §4.3): the parser itself is a pure JVM function and
-  * per-turn parse cost dominates, so each function is a Scala UDF (codegen
-  * calls it with UTF8String->String conversion only). Keep plans in the
-  * shape `select(cols..., fn(col("text")))` so Catalyst column pruning
-  * still reaches the parquet scan (never `Dataset.map` over whole rows).
+  * per-turn parse cost dominates, so most functions are Scala UDFs (codegen
+  * calls them with UTF8String->String conversion only). parse_html and
+  * find_nodes build native expressions over the parse_nodes generator's
+  * node-row writer instead. Keep plans in the shape
+  * `select(cols..., fn(col("text")))` so Catalyst column pruning still
+  * reaches the parquet scan (never `Dataset.map` over whole rows).
   *
   * One parse per row: the read-only functions (parse_html, find_nodes,
   * find_links, get_content, first_tag_string, to_html, prettify_html,
@@ -33,7 +37,7 @@ import org.apache.spark.sql.functions.udf
   * tag_to_string (#25), plus extract_main (the north_rule extraction).
   *
   * The Column functions work in any session; their SQL names come from
-  * [[udfs]], part of the one table in graft.spark.catalyst.GraftSparkExtensions.
+  * the one table in graft.spark.catalyst.GraftSparkExtensions.
   */
 object HtmlFunctions {
 
@@ -48,8 +52,8 @@ object HtmlFunctions {
               kind: Byte, endtagId: Int, openerId: Int): Unit
   }
 
-  /** The arena walk (ids replace pointers) behind parse_html, find_nodes,
-    * dom_tag_nodes and the parse_nodes generator: one pre-order pass that
+  /** The arena walk (ids replace pointers) behind the node-row writer
+    * (ParseHtmlNodes.rows) and dom_tag_nodes: one pre-order pass that
     * reads the ids the tree builder gave each node, its endtag and its
     * opener (HtmlNode.arenaId). Valid only on an unmodified parse.
     */
@@ -69,19 +73,6 @@ object HtmlFunctions {
       }
     }
     emit(root, -1, 0, 0)
-  }
-
-  private def nodeRow(n: HtmlNode, id: Int, parent: Int, pos: Int, depth: Int,
-                      kind: Byte, endId: Int, opId: Int): NodeRow =
-    NodeRow(id, parent, pos, depth, kind, n.getTagName, n.rawElement,
-      if (n.hasParams) n.params.toMap else Map.empty, n.isNonPairTag, endId, opId, n.srcOffset)
-
-  /** DOM -> flat pre-order arena of NodeRow (rows(i).node_id == i). */
-  private def toRows(root: HtmlNode): Vector[NodeRow] = {
-    val out = Vector.newBuilder[NodeRow]
-    walkArena(root, (n, id, parent, pos, depth, kind, endId, opId) =>
-      out += nodeRow(n, id, parent, pos, depth, kind, endId, opId))
-    out.result()
   }
 
   // ===== the shared parse ==================================================
@@ -137,25 +128,6 @@ object HtmlFunctions {
   private def dom(html: String): HtmlNode = parsed(html).root
 
   // ===== pure row-wise functions ============================================
-
-  def parseNodes(html: String): Seq[NodeRow] =
-    if (html == null) Seq.empty else toRows(dom(html))
-
-  /** The reference's generic `find(tag, params)` (dhtmlparser.d:150,
-    * 623-647) as a SQL-facing function: one arena walk keeps the
-    * non-endtag nodes `isAlmostEqual` accepts (find's DFS matches), each as
-    * its full NodeRow (parse_html's ids). A null/empty params map means
-    * tag-name-only matching.
-    */
-  def findNodes(html: String, tag: String, params: Map[String, String]): Seq[NodeRow] = {
-    if (html == null) return Seq.empty
-    val pm = if (params == null || params.isEmpty) null else params
-    val out = Vector.newBuilder[NodeRow]
-    walkArena(dom(html), (n, id, parent, pos, depth, kind, endId, opId) =>
-      if (kind != 3 && n.isAlmostEqual(tag, pm))
-        out += nodeRow(n, id, parent, pos, depth, kind, endId, opId))
-    out.result()
-  }
 
   /** Constructor-built DOM (reference ctor surface, dhtmlparser.d:74-138
     * + closeElements 721-743, Q25): build `tag` with one param and one
@@ -270,8 +242,9 @@ object HtmlFunctions {
 
   // ===== Column functions ==================================================
 
-  val parse_html = udf(parseNodes _)
-  val find_nodes = udf(findNodes _)
+  def parse_html(html: Column): Column = native(ParseHtml(expression(html)))
+  def find_nodes(html: Column, tag: Column, params: Column): Column =
+    native(FindNodes(expression(html), expression(tag), expression(params)))
   val to_html_fixed = udf(roundtripFixed _)
   val build_tag = udf(buildTagHtml _)
   val dom_tag_nodes = udf(domTagNodes _)
@@ -304,11 +277,11 @@ object HtmlFunctions {
 
   def extractMainText(c: Column): Column = extract_main(c).getField("_1")
 
-  /** Every Column function above under its SQL name: the UDF half of the
-    * one function table (graft.spark.catalyst.GraftSparkExtensions). */
+  /** Every UDF above under its SQL name: the UDF half of the one
+    * function table (graft.spark.catalyst.GraftSparkExtensions). */
   val udfs: Seq[(String, UserDefinedFunction)] = Seq(
-    "parse_html" -> parse_html, "find_nodes" -> find_nodes, "to_html_fixed" -> to_html_fixed,
-    "build_tag" -> build_tag, "dom_tag_nodes" -> dom_tag_nodes, "bfs_tag_order" -> bfs_tag_order,
+    "to_html_fixed" -> to_html_fixed, "build_tag" -> build_tag,
+    "dom_tag_nodes" -> dom_tag_nodes, "bfs_tag_order" -> bfs_tag_order,
     "remove_tags" -> remove_tags, "reset_nonpair" -> reset_nonpair, "replace_tag" -> replace_tag,
     "find_links" -> find_links, "get_content" -> get_content,
     "first_tag_string" -> first_tag_string, "to_html" -> to_html,

@@ -23,21 +23,3 @@ final case class ExtractedTurn(conv_id: String, turn_idx: Int,
                                n_nodes: Int, n_errors: Int) {
   def spans: Seq[SpanRec] = SpanCodec.unpack(span_pos, span_kind)
 }
-
-/** Relational encoding of one parsed DOM node (the integer-id arena from
-  * SURVEY.md §1.2): pointer cycles (endtag/openertag) become ids; node_id
-  * is pre-order, so ORDER BY node_id reproduces DFS document order.
-  * kind: 0=text, 1=comment, 2=tag (open or nonpair), 3=endtag.
-  */
-final case class NodeRow(node_id: Int, parent_id: Int, pos: Int, depth: Int,
-                         kind: Byte, tagname: String, raw: String,
-                         params: Map[String, String], nonpair: Boolean,
-                         endtag_id: Int, opener_id: Int, src_offset: Int)
-
-/** Lineage row: which input slice produced which output, with input byte
-  * and oversize accounting per file (snapshot id is a deterministic
-  * constant for the parquet stand-in; with Iceberg it is the table
-  * snapshot).
-  */
-final case class LineageRec(snapshot_id: String, file: String,
-                            row_count: Long, n_bytes: Long, n_oversize: Long)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.StringType
 import org.apache.spark.sql.graft.CatalystBridge
 
 /** SparkSessionExtensions entry point for the engine's one SQL function
-  * table: the native Catalyst expressions and every [[HtmlFunctions]] UDF.
+  * table: the native Catalyst expressions and the [[HtmlFunctions.udfs]].
   * Enable on a fresh session with either
   *
   *   SparkSession.builder().withExtensions(new GraftSparkExtensions) ...
@@ -45,6 +45,8 @@ object GraftSparkExtensions {
     * print `name(args)` while Column-side plans stay as they were. */
   private[graft] val functions: Seq[Fn] = Seq(
     Fn("parse_nodes", classOf[ParseHtmlNodes], 1, a => ParseHtmlNodes(a.head)),
+    Fn("parse_html", classOf[ParseHtml], 1, a => ParseHtml(a.head)),
+    Fn("find_nodes", classOf[FindNodes], 3, a => FindNodes(a(0), a(1), a(2))),
     Fn("ws_token_count", classOf[WsTokenCount], 1, a => WsTokenCount(a.head)),
     Fn("bpeish_token_count", classOf[BpeishTokenCount], 1, a => BpeishTokenCount(a.head)),
     Fn("simhash64", classOf[SimHash64], 1, a => SimHash64(a.head)),

@@ -1,5 +1,6 @@
 package graft.spark
 
+import graft.parser.HtmlParser
 import graft.spark.catalyst.GraftSparkExtensions
 import graft.text.{Fingerprints, TextAnalysis}
 import org.apache.spark.sql.SparkSession
@@ -11,8 +12,8 @@ import org.apache.spark.sql.functions._
   */
 class FunctionTableSpec extends SparkTestBase {
 
-  private val natives =
-    Seq("parse_nodes", "ws_token_count", "bpeish_token_count", "simhash64", "winnow_fingerprints")
+  private val natives = Seq("parse_nodes", "parse_html", "find_nodes",
+    "ws_token_count", "bpeish_token_count", "simhash64", "winnow_fingerprints")
   private val html = "<div id='m'><a href='/x'>go</a> some main content, text</div>"
 
   /** A session with neither the extension nor `register`: a new session
@@ -37,8 +38,12 @@ class FunctionTableSpec extends SparkTestBase {
     assert(row.getInt(0) == TextAnalysis.wsTokenCount(html))
     assert(row.getInt(1) == TextAnalysis.bpeishTokenCount(html))
     assert(row.getLong(2) == Fingerprints.simHash(html))
-    assert(df.select(GraftSparkExtensions.parse_nodes(col("text"))).count() ==
-      HtmlFunctions.parseNodes(html).size)
+    val nodes = HtmlParser.parseWithStats(html)._2.nNodes + 1 // the tokens and the container
+    assert(df.select(GraftSparkExtensions.parse_nodes(col("text"))).count() == nodes)
+    assert(df.select(size(HtmlFunctions.parse_html(col("text")))).head.getInt(0) == nodes)
+    assert(df.select(explode(HtmlFunctions.find_nodes(col("text"), lit("a"),
+      typedLit(Map("href" -> "/x")))).as("n")).select("n.raw").as[String].collect().toSeq ==
+      Seq("<a href='/x'>"))
     assert(df.select(GraftSparkExtensions.winnow_fingerprints(col("text")))
       .as[Long].collect().toSeq == Fingerprints.winnow(html).toSeq)
     natives.foreach(n => assert(!s.catalog.functionExists(n), s"$n was bound by a Column call"))

@@ -83,6 +83,17 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
+  test("node-row functions plan no UDF: q_find_nodes and size(parse_html(text)) over parquet") {
+    val sizes = spark.read.parquet(turnsParquet).select(size(HtmlFunctions.parse_html(col("text"))))
+    for ((df, native) <- Seq(graft.SparkEntry.queries("q_find_nodes")(spark, sf) -> "FindNodes",
+                             sizes -> "ParseHtml")) {
+      val exprs = planParts(df)._2
+      assert(exprs.contains(native) && !exprs.contains("ScalaUDF"), df.queryExecution.optimizedPlan.toString)
+    }
+    // the container, <p>, its text and </p>
+    assert(sizes.as[Int].collect().toSeq == Seq.fill(100)(4))
+  }
+
   test("line cleaning under .filter(keep) runs its line split and rules once per row") {
     // the struct of per-row line results leaves through a one-row
     // generator: a filter on `keep` stays above it, rather than being

@@ -1,5 +1,6 @@
 package graft.spark
 
+import graft.parser.HtmlParser
 import graft.spark.catalyst.GraftSparkExtensions
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -32,6 +33,9 @@ class SharedParseSpec extends SparkTestBase {
     (out, HtmlFunctions.memoMisses.sum() - before)
   }
 
+  /** parse_nodes' and parse_html's row count: the tokens and the container. */
+  private def nodeCount(t: String): Int = HtmlParser.parseWithStats(t)._2.nNodes + 1
+
   private def links(c: String) = HtmlFunctions.find_links(col(c))
   private def html(c: String) = HtmlFunctions.to_html(col(c))
 
@@ -51,7 +55,7 @@ class SharedParseSpec extends SparkTestBase {
     val texts = (0 until n).map(i => i -> page(i)).toMap
     got.groupBy(_.getInt(0)).foreach { case (id, rows) =>
       val t = texts(id)
-      assert(rows.length == HtmlFunctions.parseNodes(t).length)
+      assert(rows.length == nodeCount(t))
       assert(rows.forall(r => r.getSeq[String](1) == HtmlFunctions.findLinks(t)))
       assert(rows.forall(r => r.getString(2) == HtmlFunctions.roundtrip(t)))
     }
@@ -103,13 +107,18 @@ class SharedParseSpec extends SparkTestBase {
       HtmlFunctions.dom_tag_nodes(col("a")), HtmlFunctions.bfs_tag_order(col("b")),
       HtmlFunctions.get_content(col("a"), lit("div")), HtmlFunctions.prettify_html(col("b")))
       .collect().toSeq
-    val nodes = (t: String) => HtmlFunctions.parseNodes(t).map(Row.fromTuple)
-    val expected = rows.map { case (_, a, b) => Row(
+    // the node-row functions have no Scala form: each runs alone in a query
+    def alone(c: Column): Seq[Seq[Row]] =
+      df.orderBy(col("id")).select(c).collect().toSeq.map(_.getSeq[Row](0))
+    val nodesB = alone(HtmlFunctions.parse_html(col("b")))
+    val nodesA = alone(HtmlFunctions.parse_html(col("a")))
+    val found = alone(HtmlFunctions.find_nodes(col("a"), lit("a"), typedLit(Map("class" -> "x"))))
+    assert(found.count(_.nonEmpty) == 4, found)
+    val expected = rows.zipWithIndex.map { case ((_, a, b), i) => Row(
       HtmlFunctions.findLinks(a), HtmlFunctions.findLinks(b),
       HtmlFunctions.roundtrip(b), HtmlFunctions.roundtrip(a),
       HtmlFunctions.nodeCount(a), HtmlFunctions.nodeCount(b),
-      nodes(b), nodes(a),
-      HtmlFunctions.findNodes(a, "a", Map("class" -> "x")).map(Row.fromTuple),
+      nodesB(i), nodesA(i), found(i),
       HtmlFunctions.firstTagString(b, "a", "class", "x"),
       HtmlFunctions.domTagNodes(a).map(Row.fromTuple), HtmlFunctions.bfsTagOrder(b).map(Row.fromTuple),
       HtmlFunctions.getContentOf(a, "div"), HtmlFunctions.prettifyHtml(b))
@@ -118,9 +127,15 @@ class SharedParseSpec extends SparkTestBase {
   }
 
   test("dom_tag_nodes == the non-text rows of parse_html, ids unchanged") {
-    ((0 until 5).map(page) ++ Seq("<HT<!-- c -->ML>x</HTML>", "<br><hr>t", "", "text")).foreach { t =>
-      assert(HtmlFunctions.domTagNodes(t) == HtmlFunctions.parseNodes(t).filter(_.kind != 0)
-        .map(r => (r.node_id, r.parent_id, r.pos, r.depth, r.kind.toInt, r.tagname, r.nonpair)))
+    val texts = (0 until 5).map(page) ++ Seq("<HT<!-- c -->ML>x</HTML>", "<br><hr>t", "", "text")
+    val df = parquet(texts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("id", "text"), "tagnodes")
+    val got = df.orderBy(col("id")).select(HtmlFunctions.parse_html(col("text"))).collect().toSeq
+    assert(got.length == texts.length)
+    texts.zip(got).foreach { case (t, r) =>
+      assert(HtmlFunctions.domTagNodes(t) == r.getSeq[Row](0).filter(_.getAs[Byte]("kind") != 0)
+        .map(n => (n.getAs[Int]("node_id"), n.getAs[Int]("parent_id"), n.getAs[Int]("pos"),
+          n.getAs[Int]("depth"), n.getAs[Byte]("kind").toInt, n.getAs[String]("tagname"),
+          n.getAs[Boolean]("nonpair"))), t)
     }
   }
 
@@ -137,7 +152,7 @@ class SharedParseSpec extends SparkTestBase {
         .select(col("id"), col("links"), GraftSparkExtensions.parse_nodes(col("text")))
         .select(col("id"), col("links"), col("node_id"), col("tagname"), col("params")).collect())
     assert(viaSql.map(_.toString).sorted.toSeq == viaColumns.map(_.toString).sorted.toSeq)
-    assert(viaSql.length == (0 until n).map(i => HtmlFunctions.parseNodes(page(i)).length).sum)
+    assert(viaSql.length == (0 until n).map(i => nodeCount(page(i))).sum)
     assert(sqlParses == n && colParses == n, s"parses: sql $sqlParses, columns $colParses, rows $n")
   }
 

@@ -2,6 +2,7 @@ package graft.spark
 
 import graft.extract.SpanCodec
 import graft.spark.catalyst.GraftSparkExtensions
+import org.apache.spark.sql.{AnalysisException, Row}
 import org.apache.spark.sql.functions._
 
 /** The registered SQL surface: every UDF must be callable from
@@ -87,11 +88,45 @@ class SqlSurfaceSpec extends SparkTestBase {
       .select(element_at(col("n.params"), "href")).as[String].collect().toSeq
     assert(hx == Seq("/x", "/x"))
 
-    // ids are the parse arena's ids (match parse_html positions)
-    val html = "<div><a href='/x' rel='me'>one</a><p><a href='/y'>two</a></p><a href='/x'>three</a></div>"
-    val fids = HtmlFunctions.findNodes(html, "p", null).map(_.node_id)
-    val pids = HtmlFunctions.parseNodes(html).filter(r => r.tagname == "p" && r.kind == 2).map(_.node_id)
-    assert(fids == pids)
+    // ids are the parse arena's ids (match parse_html positions); each
+    // function runs alone in its query
+    val fids = spark.sql("SELECT find_nodes(text, 'p', NULL) AS ns FROM turns2")
+      .select(explode(col("ns")).as("n")).select("n.node_id").as[Int].collect().toSeq
+    val pids = spark.sql("SELECT parse_html(text) AS ns FROM turns2")
+      .select(explode(col("ns")).as("n"))
+      .filter(col("n.tagname") === "p" && col("n.kind") === 2)
+      .select("n.node_id").as[Int].collect().toSeq
+    assert(fids.nonEmpty && fids == pids)
+  }
+
+  test("parse_html and find_nodes: SQL route == Column route on NULL, cast and map arguments (parquet input)") {
+    GraftSparkExtensions.register(spark)
+    val dir = tmpDir("nodefns")
+    Seq((1, "<a x=1>", "<a x=1>b</a>", null: String, 123, Seq("a")))
+      .toDF("id", "a", "ab", "nul", "num", "arr").write.parquet(s"$dir/t")
+    val df = spark.read.parquet(s"$dir/t")
+    df.createOrReplaceTempView("nodefns")
+    val nul = lit(null)
+    // (SQL call, Column call, rows) over the table's one row
+    val calls = Seq(
+      ("parse_html(nul)", HtmlFunctions.parse_html(col("nul")), 0),
+      ("parse_html(num)", HtmlFunctions.parse_html(col("num")), 2),
+      ("find_nodes(a, 'a', map('x', 1))",
+        HtmlFunctions.find_nodes(col("a"), lit("a"), map(lit("x"), lit(1))), 1),
+      ("find_nodes(a, 'a', map('x', NULL))",
+        HtmlFunctions.find_nodes(col("a"), lit("a"), map(lit("x"), nul)), 0),
+      ("find_nodes(a, 'a', NULL)", HtmlFunctions.find_nodes(col("a"), lit("a"), nul), 1),
+      ("find_nodes(a, 'a', map())", HtmlFunctions.find_nodes(col("a"), lit("a"), map()), 1),
+      ("find_nodes(ab, NULL, map())", HtmlFunctions.find_nodes(col("ab"), nul, map()), 0),
+      ("find_nodes(nul, 'a', map())", HtmlFunctions.find_nodes(col("nul"), lit("a"), map()), 0))
+    for ((sql, column, n) <- calls) {
+      val viaSql = spark.sql(s"SELECT $sql FROM nodefns").head
+      val viaColumn = df.select(column).head
+      assert(!viaSql.isNullAt(0) && viaSql.getSeq[Row](0).length == n, s"$sql: $viaSql")
+      assert(viaSql == viaColumn, sql)
+    }
+    intercept[AnalysisException](spark.sql("SELECT parse_html(arr) FROM nodefns").collect())
+    intercept[AnalysisException](df.select(HtmlFunctions.parse_html(col("arr"))).collect())
   }
 
   test("to_html_fixed merges comment-split tags; default surface reproduces the no-op (Q16)") {
