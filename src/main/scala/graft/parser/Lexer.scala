@@ -26,21 +26,12 @@ import scala.collection.mutable.ArrayBuffer
   */
 object Lexer {
 
-  /** Split `itxt` into raw tokens. Also returns, aligned with the tokens,
-    * the start offset of each token in `itxt` (used for span lineage;
-    * offsets are an addition of ours, invisible to reference semantics).
-    */
-  def rawSplitWithOffsets(itxt: String): (ArrayBuffer[String], ArrayBuffer[Int]) = {
-    val (toks, offs, n) = rawSplitArrays(itxt)
-    val ob = new ArrayBuffer[String](n); val fb = new ArrayBuffer[Int](n)
-    var i = 0
-    while (i < n) { ob += toks(i); fb += offs(i); i += 1 }
-    (ob, fb)
-  }
-
-  /** Primitive-array variant for the parser hot path: no Int boxing, no
-    * per-append ArrayBuffer overhead. Returns (tokens, offsets, count);
-    * the arrays may be longer than count.
+  /** Split `itxt` into raw tokens and, aligned with them, the start
+    * offset of each token in `itxt` (used for span lineage; offsets are an
+    * addition of ours, invisible to reference semantics). Primitive arrays
+    * for the parser hot path: no Int boxing, no per-append ArrayBuffer
+    * overhead. Returns (tokens, offsets, count); the arrays may be longer
+    * than count.
     */
   def rawSplitArrays(itxt: String): (Array[String], Array[Int], Int) = {
     var toks = new Array[String](16)

@@ -66,15 +66,6 @@ object Dedup {
         concat(col("text"), lit(" zzchainmarkerone zzchainmarkertwo")).as("text")))
   }
 
-  /** Per-doc minhash signature (64 perms). */
-  def signatures(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), sigUdf(col("text")).as("sig"))
-
-  /** Exploded LSH band table: (doc_id, band_idx, band_hash). */
-  def bandTable(docs: DataFrame): DataFrame =
-    signatures(docs)
-      .select(col("doc_id"), posexplode(bandsUdf(col("sig"))).as(Seq("band_idx", "band_hash")))
-
   /** Default per-band-bucket population cap for near-dup candidate
     * generation. A real crawl corpus is GUARANTEED to contain
     * mass-duplicated boilerplate; one such cluster of m docs in a single
@@ -109,6 +100,11 @@ object Dedup {
   private def canonicalBands(sigs: DataFrame): DataFrame =
     sigs.select(col("doc_id"), explode(bandsUdf(col("sig"))).as("band_hash"))
 
+  /** (doc_id, band_hash) of `docs`' canonical docs, one per distinct text
+    * (an index's and a probe's rows): twins count once toward a bucket cap. */
+  private[spark] def bandRows(docs: DataFrame): DataFrame =
+    canonicalBands(canonicalSignatures(docs))
+
   /** Keys of band buckets whose population exceeds the cap — a TINY
     * relation by construction (each row is a mass-collision cluster), so
     * the bucket cap is enforced with a broadcast anti-join instead of a
@@ -132,7 +128,7 @@ object Dedup {
     */
   def oversizeBuckets(docs: DataFrame,
                       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
-    canonicalBands(canonicalSignatures(docs))
+    bandRows(docs)
       .groupBy(col("band_hash"))
       .agg(count(lit(1)).as("bucket_n_docs"))
       .filter(col("bucket_n_docs") > maxBucketSize)
@@ -804,7 +800,7 @@ object Dedup {
     */
   def writeBandIndex(corpus: DataFrame, table: String,
                      nBuckets: Int = 64): Unit =
-    writeBucketedIndex(canonicalBands(canonicalSignatures(corpus)),
+    writeBucketedIndex(bandRows(corpus),
       table, "band_hash", nBuckets)
 
   /** Near-dup CANDIDATES of a new batch against a [[writeBandIndex]]
@@ -836,7 +832,7 @@ object Dedup {
       .agg(countDistinct(col("doc_id")).as("bucket_n"))
       .filter(col("bucket_n") > maxBucketSize)
       .select(col("band_hash"))
-    canonicalBands(canonicalSignatures(batch))
+    bandRows(batch)
       .withColumnRenamed("doc_id", "batch_id")
       .join(broadcast(hot), Seq("band_hash"), "left_anti")
       .join(idx, Seq("band_hash"))

@@ -3,7 +3,7 @@ package graft.spark
 import graft.extract.SpanCodec
 import graft.parser.{HtmlNode, HtmlParser}
 import graft.parser.HtmlParser.ParseStats
-import graft.spark.catalyst.{FindNodes, ParseHtml}
+import graft.spark.catalyst.{FindNodes, ParseHtml, TagNodes}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.UserDefinedFunction
@@ -16,20 +16,22 @@ import org.apache.spark.sql.graft.CatalystBridge.{column => native, expression}
   * per-turn parse cost dominates, so most functions are Scala UDFs (codegen
   * calls them with UTF8String->String conversion only). parse_html and
   * find_nodes build native expressions over the parse_nodes generator's
-  * node-row writer instead. Keep plans in the shape
+  * node-row writer instead, as do dom_tag_nodes and bfs_tag_order
+  * ([[graft.spark.catalyst.TagNodes]]). Keep plans in the shape
   * `select(cols..., fn(col("text")))` so Catalyst column pruning still
   * reaches the parquet scan (never `Dataset.map` over whole rows).
   *
   * One parse per row: the read-only functions (parse_html, find_nodes,
-  * find_links, get_content, first_tag_string, to_html, prettify_html,
-  * node_count, dom_tag_nodes, bfs_tag_order) and the parse_nodes generator
-  * ([[graft.spark.catalyst.ParseHtmlNodes]]) read one shared parse of their
-  * input ([[parsed]]), so a select of several of them over one column
-  * parses each row once, as the reference runs every finder and serializer
-  * against one DOM (SURVEY.md §1.1). The mutators (remove_tags,
-  * reset_nonpair, replace_tag) change their tree, and to_html_fixed parses
-  * with repairFixed, so each of these owns a private tree. Node ids are
-  * the parse's own pre-order numbering (HtmlNode.arenaId); none renumbers.
+  * dom_tag_nodes, bfs_tag_order, find_links, get_content,
+  * first_tag_string, to_html, prettify_html, node_count) and the
+  * parse_nodes generator ([[graft.spark.catalyst.ParseHtmlNodes]]) read
+  * one shared parse of their input ([[parsed]]), so a select of several
+  * of them over one column parses each row once, as the reference runs
+  * every finder and serializer against one DOM (SURVEY.md §1.1). The
+  * mutators (remove_tags, reset_nonpair, replace_tag) change their tree,
+  * and to_html_fixed parses with repairFixed, so each of these owns a
+  * private tree. Node ids are the parse's own pre-order numbering
+  * (HtmlNode.arenaId); none renumbers.
   *
   * Every function here mirrors a reference operator (SURVEY.md §2.1):
   * parse_html (#1), find/findAll via node rows or find_links (#17-21),
@@ -40,40 +42,6 @@ import org.apache.spark.sql.graft.CatalystBridge.{column => native, expression}
   * the one table in graft.spark.catalyst.GraftSparkExtensions.
   */
 object HtmlFunctions {
-
-  /** One node as the arena walk reports it: its pre-order id, its
-    * parent's id (-1 for the root), its position among the parent's
-    * children, its depth, its kind (0=text 1=comment 2=tag 3=endtag, the
-    * reference classifier, dhtmlparser.d:287-351) and the ids of its
-    * endtag and opener (-1 when absent).
-    */
-  trait NodeVisitor {
-    def visit(n: HtmlNode, id: Int, parent: Int, pos: Int, depth: Int,
-              kind: Byte, endtagId: Int, openerId: Int): Unit
-  }
-
-  /** The arena walk (ids replace pointers) behind the node-row writer
-    * (ParseHtmlNodes.rows) and dom_tag_nodes: one pre-order pass that
-    * reads the ids the tree builder gave each node, its endtag and its
-    * opener (HtmlNode.arenaId). Valid only on an unmodified parse.
-    */
-  private[spark] def walkArena(root: HtmlNode, v: NodeVisitor): Unit = {
-    def idOf(n: HtmlNode): Int = if (n == null) -1 else n.arenaId
-    // hasChilds guards: a leaf (most nodes) allocates no child closure
-    def emit(n: HtmlNode, parent: Int, pos: Int, depth: Int): Unit = {
-      val kind: Byte =
-        if (!n.isTag) 0
-        else if (n.isComment) 1
-        else if (n.isEndTag) 3
-        else 2
-      v.visit(n, n.arenaId, parent, pos, depth, kind, idOf(n.endtag), idOf(n.openertag))
-      if (n.hasChilds) {
-        var i = 0
-        n.foreachChild { c => emit(c, n.arenaId, i, depth + 1); i += 1 }
-      }
-    }
-    emit(root, -1, 0, 0)
-  }
 
   // ===== the shared parse ==================================================
 
@@ -177,29 +145,6 @@ object HtmlFunctions {
   def nodeCount(html: String): Int =
     if (html == null) 0 else parsed(html).stats.nNodes
 
-  /** Structural arena dump restricted to tag/comment/endtag nodes (text
-    * omitted so the row set is input-independent for template oracles):
-    * (node_id, parent_id, pos, depth, kind, tagname, nonpair). Ids are the
-    * arena walk's, so they match parse_html's.
-    */
-  def domTagNodes(html: String): Seq[(Int, Int, Int, Int, Int, String, Boolean)] = {
-    if (html == null) return Seq.empty
-    val out = Vector.newBuilder[(Int, Int, Int, Int, Int, String, Boolean)]
-    walkArena(dom(html), (n, id, parent, pos, depth, kind, _, _) =>
-      if (kind != 0) out += ((id, parent, pos, depth, kind.toInt, n.getTagName, n.isNonPairTag)))
-    out.result()
-  }
-
-  /** BFS (findAllB with match-all fn) order of tag nodes:
-    * (bfs_pos_among_tags, tagname, is_endtag).
-    */
-  def bfsTagOrder(html: String): Seq[(Int, String, Boolean)] =
-    if (html == null) Seq.empty
-    else dom(html)
-      .findAllB(null, null, _ => true)
-      .filter(_.isTag).zipWithIndex
-      .map { case (n, i) => (i, n.getTagName, n.isEndTag) }.toSeq
-
   // The mutators below change their tree, so each parses its own and never
   // reads the shared parse. A NULL argument gives NULL, except a NULL tag to
   // match (or a NULL name in remove_tags' array), which matches nothing.
@@ -245,10 +190,10 @@ object HtmlFunctions {
   def parse_html(html: Column): Column = native(ParseHtml(expression(html)))
   def find_nodes(html: Column, tag: Column, params: Column): Column =
     native(FindNodes(expression(html), expression(tag), expression(params)))
+  def dom_tag_nodes(html: Column): Column = native(TagNodes(expression(html), bfs = false))
+  def bfs_tag_order(html: Column): Column = native(TagNodes(expression(html), bfs = true))
   val to_html_fixed = udf(roundtripFixed _)
   val build_tag = udf(buildTagHtml _)
-  val dom_tag_nodes = udf(domTagNodes _)
-  val bfs_tag_order = udf(bfsTagOrder _)
   val remove_tags = udf(removeTags _)
   val reset_nonpair = udf(resetNonPair _)
   val replace_tag = udf(replaceTag _)
@@ -281,7 +226,6 @@ object HtmlFunctions {
     * function table (graft.spark.catalyst.GraftSparkExtensions). */
   val udfs: Seq[(String, UserDefinedFunction)] = Seq(
     "to_html_fixed" -> to_html_fixed, "build_tag" -> build_tag,
-    "dom_tag_nodes" -> dom_tag_nodes, "bfs_tag_order" -> bfs_tag_order,
     "remove_tags" -> remove_tags, "reset_nonpair" -> reset_nonpair, "replace_tag" -> replace_tag,
     "find_links" -> find_links, "get_content" -> get_content,
     "first_tag_string" -> first_tag_string, "to_html" -> to_html,

@@ -167,23 +167,11 @@ object Pipeline {
     * an explicit count so AQE cannot coalesce them.
     */
   def extractTurns(turns: DataFrame, cfg: Config = Config()): Dataset[ExtractedTurn] =
-    extractMapped(turns.repartition(shufflePartitions(turns), col("conv_id"), col("turn_idx")), cfg)
+    extractOnScanPartitions(
+      turns.repartition(shufflePartitions(turns), col("conv_id"), col("turn_idx")), cfg)
 
   private def shufflePartitions(df: DataFrame): Int =
     df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-
-  /** The shared extraction stage: one [[ExtractTurn]] row per turn beside
-    * its (conv_id, turn_idx) keys. The salted, one-pass and extract-first
-    * shapes all plan through here, so every shape extracts a turn the
-    * same way. No object boundary: a filter on a key reaches the scan,
-    * and the scan reads only (conv_id, turn_idx, text).
-    */
-  private def extractMapped(rows: DataFrame, cfg: Config): Dataset[ExtractedTurn] = {
-    val extracted = CatalystBridge.column(
-      ExtractTurn(CatalystBridge.expression(col("text")), cfg.maxTextChars))
-    rows.select(col("conv_id"), col("turn_idx"), extracted.as(ExtractTurn.Schema.fieldNames.toSeq))
-      .as(Encoders.product[ExtractedTurn])
-  }
 
   /** Reassembly with a hard cap on buffered turns per conversation: the
     * bounded aggregator keeps only the FIRST `maxTurns` turns (by
@@ -333,7 +321,8 @@ object Pipeline {
     */
   def extractReassembledOnePass(turns: DataFrame,
                                 cfg: Config = Config()): Dataset[ExtractedTurn] =
-    extractMapped(turns.repartitionByRange(shufflePartitions(turns), col("conv_id"), col("turn_idx")), cfg)
+    extractOnScanPartitions(
+      turns.repartitionByRange(shufflePartitions(turns), col("conv_id"), col("turn_idx")), cfg)
       .sortWithinPartitions(col("conv_id"), col("turn_idx"))
 
   /** EXTRACT-FIRST pipeline: extraction runs directly on the scan
@@ -353,13 +342,18 @@ object Pipeline {
                                      cfg: Config = Config()): Dataset[ExtractedTurn] =
     reassembled(extractOnScanPartitions(turns, cfg))
 
-  /** Shuffle-free extraction: parse+extract per row directly on the
-    * incoming partitions (file-source splits are byte-balanced by
-    * maxPartitionBytes; the oversize guard bounds per-turn cost). Safe on
-    * both batch and STREAMING DataFrames — no repartition, no sort.
-    */
-  def extractOnScanPartitions(turns: DataFrame, cfg: Config = Config()): Dataset[ExtractedTurn] =
-    extractMapped(turns, cfg)
+  /** Shuffle-free extraction, the stage every shape plans through on its
+    * (repartitioned) input: one [[ExtractTurn]] row per turn beside its
+    * (conv_id, turn_idx) keys, on the incoming partitions (file splits are
+    * byte-balanced; the oversize guard bounds per-turn cost). Safe on batch
+    * and STREAMING DataFrames. No object boundary: a filter on a key
+    * reaches the scan, and the scan reads only (conv_id, turn_idx, text). */
+  def extractOnScanPartitions(turns: DataFrame, cfg: Config = Config()): Dataset[ExtractedTurn] = {
+    val extracted = CatalystBridge.column(
+      ExtractTurn(CatalystBridge.expression(col("text")), cfg.maxTextChars))
+    turns.select(col("conv_id"), col("turn_idx"), extracted.as(ExtractTurn.Schema.fieldNames.toSeq))
+      .as(Encoders.product[ExtractedTurn])
+  }
 
   /** Per-turn output in stable (conv_id, turn_idx) order — the shape the
     * per-turn oracle compares (north_rule: "per-turn text equality under

@@ -122,7 +122,7 @@ object StreamingNearDup {
           accepted.write.mode("overwrite")
             .parquet(s"$outDir/accepted/batch=$batchId")
           accepted.write.mode("append").parquet(corpusPath)
-          Dedup.bandTable(accepted).select(col("doc_id"), col("band_hash"))
+          Dedup.bandRows(accepted)
             .write.mode("append").bucketBy(nBuckets, "band_hash")
             .sortBy("band_hash").format("parquet").saveAsTable(indexTable)
           // ledger LAST: a batch is replayable until this row lands

@@ -50,7 +50,9 @@ object GraftSparkExtensions {
     Fn("ws_token_count", classOf[WsTokenCount], 1, a => WsTokenCount(a.head)),
     Fn("bpeish_token_count", classOf[BpeishTokenCount], 1, a => BpeishTokenCount(a.head)),
     Fn("simhash64", classOf[SimHash64], 1, a => SimHash64(a.head)),
-    Fn("winnow_fingerprints", classOf[WinnowFingerprints], 1, a => WinnowFingerprints(a.head))) ++
+    Fn("winnow_fingerprints", classOf[WinnowFingerprints], 1, a => WinnowFingerprints(a.head)),
+    Fn("dom_tag_nodes", classOf[TagNodes], 1, a => TagNodes(a.head, bfs = false)),
+    Fn("bfs_tag_order", classOf[TagNodes], 1, a => TagNodes(a.head, bfs = true))) ++
     HtmlFunctions.udfs.map { case (name, f) =>
       val named = f.withName(name)
       Fn(name, classOf[ScalaUDF], CatalystBridge.arity(f), CatalystBridge.scalaUdf(named, _))

@@ -6,7 +6,9 @@ import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow,
   ImplicitCastInputTypes, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, CodegenFallback,
+  ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -15,12 +17,14 @@ import scala.collection.mutable.ArrayBuffer
 /** Native Catalyst Generator: one output row per DOM node, pre-order, with
   * no intermediate array, from the one node-row writer
   * [[ParseHtmlNodes.rows]]. parse_html and find_nodes wrap the same rows in
-  * an array ([[NodeRowArray]]), so their outputs cannot drift
-  * (GeneratorSpec compares them). The parse dominates, so CodegenFallback
-  * is the tier. The tree is the task's shared parse (HtmlFunctions.parsed):
-  * a Generate cannot share a subexpression with the Project below it that
-  * evaluates find_links or to_html over the same text, but the memo lets
-  * all three read one parse of the row.
+  * an array ([[NodeRowArray]]), and dom_tag_nodes and bfs_tag_order are
+  * views of its tag rows ([[TagNodes]]), so no output can drift from
+  * another (GeneratorSpec compares the generator and parse_html). The
+  * parse dominates, so CodegenFallback is the tier. The tree is the
+  * task's shared parse (HtmlFunctions.parsed): a Generate cannot share a
+  * subexpression with the Project below it that evaluates find_links or
+  * to_html over the same text, but the memo lets all three read one parse
+  * of the row.
   */
 case class ParseHtmlNodes(child: Expression)
     extends StringFunction("parse_nodes") with Generator with CodegenFallback {
@@ -57,35 +61,54 @@ object ParseHtmlNodes {
   private val EmptyMap =
     ArrayBasedMapData(Array.empty[Any], Array.empty[Any])
 
-  /** The one node-row writer: one row of [[Schema]] per node of the task's
-    * shared parse of `html` (a UTF8String) that `keep` accepts, given the
-    * node and its kind; every node when `keep` is null. NULL gives none. */
-  def rows(html: Any, keep: (HtmlNode, Byte) => Boolean): ArrayBuffer[InternalRow] = {
+  /** The one node-row writer and the only walk of a parse: one row of
+    * [[Schema]] per node of the task's shared parse of `html` (a
+    * UTF8String) that `keep` accepts, given the node and its kind (the
+    * reference classifier, dhtmlparser.d:287-351); every node when `keep`
+    * is null. NULL gives none. With `content` false, raw and params are
+    * left empty, and params are never parsed. */
+  def rows(html: Any, keep: (HtmlNode, Byte) => Boolean,
+           content: Boolean = true): ArrayBuffer[InternalRow] = {
     val out = new ArrayBuffer[InternalRow]()
     if (html == null) return out
-    val root = HtmlFunctions.parsed(html.asInstanceOf[UTF8String].toString).root
-    HtmlFunctions.walkArena(root, (n, id, parent, pos, depth, kind, endId, opId) =>
+    def idOf(n: HtmlNode): Int = if (n == null) -1 else n.arenaId
+    // hasChilds guards: a leaf (most nodes) allocates no child closure
+    def walk(n: HtmlNode, parent: Int, pos: Int, depth: Int): Unit = {
+      val kind: Byte =
+        if (!n.isTag) 0
+        else if (n.isComment) 1
+        else if (n.isEndTag) 3
+        else 2
       if (keep == null || keep(n, kind)) {
         val params =
-          if (n.hasParams)
+          if (content && n.hasParams)
             ArrayBasedMapData(n.params,
               (k: Any) => UTF8String.fromString(k.asInstanceOf[String]),
               (x: Any) => UTF8String.fromString(x.asInstanceOf[String]))
           else EmptyMap
-        val raw = UTF8String.fromString(n.rawElement)
+        val raw = if (content) UTF8String.fromString(n.rawElement) else UTF8String.EMPTY_UTF8
         // a text or comment node's tagname is its element (HtmlNode.classify)
-        val tagname = if (n.getTagName eq n.rawElement) raw else UTF8String.fromString(n.getTagName)
-        out += new GenericInternalRow(Array[Any](id, parent, pos, depth, kind,
-          tagname, raw, params, n.isNonPairTag, endId, opId, n.srcOffset))
-      })
+        val tagname =
+          if (content && (n.getTagName eq n.rawElement)) raw else UTF8String.fromString(n.getTagName)
+        out += new GenericInternalRow(Array[Any](n.arenaId, parent, pos, depth, kind,
+          tagname, raw, params, n.isNonPairTag, idOf(n.endtag), idOf(n.openertag), n.srcOffset))
+      }
+      if (n.hasChilds) {
+        var i = 0
+        n.foreachChild { c => walk(c, n.arenaId, i, depth + 1); i += 1 }
+      }
+    }
+    walk(HtmlFunctions.parsed(html.asInstanceOf[UTF8String].toString).root, -1, 0, 0)
     out
   }
 }
 
-/** A non-null array of [[ParseHtmlNodes.rows]]. Arguments are cast as a
-  * UDF's are, so an int or a NULL literal works. */
-trait NodeRowArray extends ImplicitCastInputTypes with CodegenFallback {
-  override def dataType: DataType = ArrayType(ParseHtmlNodes.Schema, containsNull = false)
+/** A non-null array of [[ParseHtmlNodes.rows]], or of a view of them
+  * with its own `rowType`. Arguments are cast as a UDF's are, so an int or
+  * a NULL literal works. */
+trait NodeRowArray extends ImplicitCastInputTypes {
+  protected def rowType: StructType = ParseHtmlNodes.Schema
+  override def dataType: DataType = ArrayType(rowType, containsNull = false)
   override def nullable: Boolean = false
   protected def array(rows: ArrayBuffer[InternalRow]): GenericArrayData =
     new GenericArrayData(rows.toArray[Any])
@@ -93,7 +116,8 @@ trait NodeRowArray extends ImplicitCastInputTypes with CodegenFallback {
 
 /** The reference's `parseString` (dhtmlparser.d:929-944): every node's
   * row; a NULL input gives an empty array. */
-case class ParseHtml(child: Expression) extends UnaryExpression with NodeRowArray {
+case class ParseHtml(child: Expression)
+    extends UnaryExpression with NodeRowArray with CodegenFallback {
   override def prettyName: String = "parse_html"
   override def inputTypes: Seq[DataType] = Seq(StringType)
 
@@ -109,7 +133,7 @@ case class ParseHtml(child: Expression) extends UnaryExpression with NodeRowArra
   * NULL map value or a NULL tag matches nothing, and a NULL input gives an
   * empty array. */
 case class FindNodes(html: Expression, tag: Expression, params: Expression)
-    extends Expression with NodeRowArray {
+    extends Expression with NodeRowArray with CodegenFallback {
   override def prettyName: String = "find_nodes"
   override def children: Seq[Expression] = Seq(html, tag, params)
   override def inputTypes: Seq[DataType] = Seq(StringType, StringType, MapType(StringType, StringType))
@@ -123,6 +147,49 @@ case class FindNodes(html: Expression, tag: Expression, params: Expression)
 
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): FindNodes =
     FindNodes(c(0), c(1), c(2))
+}
+
+/** dom_tag_nodes: the writer's rows of the tag, comment and endtag nodes
+  * (text omitted, so template oracles hold) as (node_id, parent_id, pos,
+  * depth, kind, tagname, nonpair); with `bfs`, bfs_tag_order: findAllB with
+  * a match-all fn (dhtmlparser.d:265-282) as (bfs_pos_among_tags, tagname,
+  * is_endtag). Fields are tuple-named, `_1`, `_2`, ..., as callers read them.
+  * Generated code calls [[viewOf]]: as CodegenFallback, a Generate that
+  * explodes a view would leave whole-stage codegen. */
+case class TagNodes(child: Expression, bfs: Boolean) extends UnaryExpression with NodeRowArray {
+  override def prettyName: String = if (bfs) "bfs_tag_order" else "dom_tag_nodes"
+  override protected def stringArgs: Iterator[Any] = Iterator(child)
+  override def inputTypes: Seq[DataType] = Seq(StringType)
+  override protected def rowType: StructType = if (bfs) TagNodes.BfsRow else TagNodes.DomRow
+
+  def viewOf(html: Any): GenericArrayData = {
+    // the writer's fields 0-5 are (node_id, parent_id, pos, depth, kind, tagname), 8 is nonpair
+    val tags = ParseHtmlNodes.rows(html, (_, kind) => kind != 0, content = false)
+    // ids are pre-order and each subtree's are contiguous, so within a depth
+    // pre-order is FIFO-queue order: BFS is a stable sort on depth
+    var i = -1
+    array(
+      if (bfs) tags.sortBy(_.getInt(3)).map { r => i += 1; InternalRow(i, r.getUTF8String(5), r.getByte(4) == 3) }
+      else tags.map(r => InternalRow(r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3),
+        r.getByte(4).toInt, r.getUTF8String(5), r.getBoolean(8))))
+  }
+
+  override def eval(input: InternalRow): Any = viewOf(child.eval(input))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    val self = ctx.addReferenceObj("view", this)
+    ev.copy(code = code"""${c.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} =
+      |  $self.viewOf(${c.isNull} ? null : ${c.value});""".stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): TagNodes = copy(child = newChild)
+}
+
+object TagNodes {
+  val DomRow: StructType = Encoders.product[(Int, Int, Int, Int, Int, String, Boolean)].schema
+  val BfsRow: StructType = Encoders.product[(Int, String, Boolean)].schema
 }
 
 /** The pipeline's per-turn extraction as a native one-row Generator over

@@ -35,8 +35,8 @@ class TreeBuilderEquivalenceSpec extends AnyFunSuite {
 
   private def buildBoth(s: String): (String, String, Seq[Int], Seq[Int]) = {
     def tokens(): Array[HtmlNode] = {
-      val (toks, _) = Lexer.rawSplitWithOffsets(s)
-      toks.map(HtmlNode.fromRaw).toArray
+      val (toks, _, n) = Lexer.rawSplitArrays(s)
+      toks.take(n).map(HtmlNode.fromRaw)
     }
     val c1 = new Array[Int](2)
     val t1 = tokens()

@@ -94,7 +94,7 @@ class DedupSpec extends SparkTestBase {
     assert(!flagged.contains(8000001L))
     // the loop closes: append the accepted batch's band rows, re-probe —
     // every batch doc (clean one included) now collides with itself
-    Dedup.bandTable(batch).select(col("doc_id"), col("band_hash"))
+    Dedup.bandRows(batch)
       .write.mode("append").bucketBy(8, "band_hash").sortBy("band_hash")
       .format("parquet").saveAsTable("band_idx_spec")
     val self = Dedup.newNearDupCandidates(spark, "band_idx_spec", batch)

@@ -3,7 +3,7 @@ package graft.spark
 import graft.parser.HtmlParser
 import graft.spark.catalyst.GraftSparkExtensions
 import graft.text.{Fingerprints, TextAnalysis}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The one function table: Column functions need no install and bind no
@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
 class FunctionTableSpec extends SparkTestBase {
 
   private val natives = Seq("parse_nodes", "parse_html", "find_nodes",
-    "ws_token_count", "bpeish_token_count", "simhash64", "winnow_fingerprints")
+    "ws_token_count", "bpeish_token_count", "simhash64", "winnow_fingerprints",
+    "dom_tag_nodes", "bfs_tag_order")
   private val html = "<div id='m'><a href='/x'>go</a> some main content, text</div>"
 
   /** A session with neither the extension nor `register`: a new session
@@ -46,6 +47,13 @@ class FunctionTableSpec extends SparkTestBase {
       Seq("<a href='/x'>"))
     assert(df.select(GraftSparkExtensions.winnow_fingerprints(col("text")))
       .as[Long].collect().toSeq == Fingerprints.winnow(html).toSeq)
+    // the views: div, a, </a>, </div>; level order puts </div> before a
+    val views = df.select(HtmlFunctions.dom_tag_nodes(col("text")),
+      HtmlFunctions.bfs_tag_order(col("text"))).head
+    assert(views.getSeq[Row](0).map(r => (r.getInt(0), r.getInt(4), r.getString(5))) ==
+      Seq((1, 2, "div"), (2, 2, "a"), (4, 3, "a"), (6, 3, "div")))
+    assert(views.getSeq[Row](1) ==
+      Seq(Row(0, "div", false), Row(1, "div", true), Row(2, "a", false), Row(3, "a", true)))
     natives.foreach(n => assert(!s.catalog.functionExists(n), s"$n was bound by a Column call"))
   }
 
@@ -84,17 +92,19 @@ class FunctionTableSpec extends SparkTestBase {
 
       import ext.implicits._
       val page = "<div><p>one <b>two</b></p><a href='/x'>x</a><br></div>"
-      val df = Seq(page).toDF("text")
+      val df = Seq((0, page), (1, ""), (2, null: String)).toDF("id", "text")
       df.createOrReplaceTempView("pages")
       val viaSql = ext.sql(
         """SELECT dom_tag_nodes(text), bfs_tag_order(text), remove_tags(text, array('b', 'a'))
-          |FROM pages""".stripMargin).head
-      val viaColumn = df.select(
+          |FROM pages ORDER BY id""".stripMargin).collect().toSeq
+      val viaColumn = df.orderBy(col("id")).select(
         HtmlFunctions.dom_tag_nodes(col("text")),
         HtmlFunctions.bfs_tag_order(col("text")),
-        HtmlFunctions.remove_tags(col("text"), array(lit("b"), lit("a")))).head
+        HtmlFunctions.remove_tags(col("text"), array(lit("b"), lit("a")))).collect().toSeq
       assert(viaSql == viaColumn)
-      assert(viaColumn.getString(2) == "<div><p>one </p><br></div>")
+      assert(viaColumn.head.getString(2) == "<div><p>one </p><br></div>")
+      assert(viaColumn.head.getSeq[Row](0).length == 9 && viaColumn.head.getSeq[Row](1).length == 9)
+      assert(viaColumn.tail.forall(r => r.getSeq[Row](0).isEmpty && r.getSeq[Row](1).isEmpty))
     } finally {
       // do NOT close(): ext shares the suite's SparkContext
       SparkSession.setActiveSession(spark)

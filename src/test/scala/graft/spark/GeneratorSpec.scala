@@ -203,6 +203,27 @@ class GeneratorSpec extends SparkTestBase {
     assert(n.isNullAt(0))
   }
 
+  test("dom_tag_nodes and bfs_tag_order explode inside WholeStageCodegen") {
+    val dir = tmpDir("tagviews")
+    samples.zipWithIndex.map { case (h, i) => (i, h) }.toDF("id", "text")
+      .union(Seq((99, null: String)).toDF("id", "text")).write.parquet(s"$dir/t")
+    val df = spark.read.parquet(s"$dir/t")
+    for (view <- Seq(HtmlFunctions.dom_tag_nodes _, HtmlFunctions.bfs_tag_order _)) {
+      val q = df.select(col("id"), explode(view(col("text"))).as("n"))
+      val compiled = compiledOnly(q.collect()).map(_.toString).sorted.toSeq
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      val interpreted = try q.collect().map(_.toString).sorted.toSeq finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+      assert(compiled.nonEmpty && compiled == interpreted)
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.linesIterator.exists(l => l.contains("*(") && l.contains("Generate")),
+        s"not codegen'd:\n$plan")
+    }
+  }
+
   test("bpeish_token_count: equals the char-based counter on adversarial unicode (property)") {
     import org.scalacheck.{Gen => G}
     import org.scalacheck.rng.Seed

@@ -85,8 +85,9 @@ class PlanSpec extends SparkTestBase {
 
   test("node-row functions plan no UDF: q_find_nodes and size(parse_html(text)) over parquet") {
     val sizes = spark.read.parquet(turnsParquet).select(size(HtmlFunctions.parse_html(col("text"))))
-    for ((df, native) <- Seq(graft.SparkEntry.queries("q_find_nodes")(spark, sf) -> "FindNodes",
-                             sizes -> "ParseHtml")) {
+    def q(name: String) = graft.SparkEntry.queries(name)(spark, sf)
+    for ((df, native) <- Seq(q("q_find_nodes") -> "FindNodes", q("q_dom_nodes") -> "TagNodes",
+                             q("q_bfs_order") -> "TagNodes", sizes -> "ParseHtml")) {
       val exprs = planParts(df)._2
       assert(exprs.contains(native) && !exprs.contains("ScalaUDF"), df.queryExecution.optimizedPlan.toString)
     }

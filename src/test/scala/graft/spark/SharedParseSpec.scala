@@ -114,13 +114,15 @@ class SharedParseSpec extends SparkTestBase {
     val nodesA = alone(HtmlFunctions.parse_html(col("a")))
     val found = alone(HtmlFunctions.find_nodes(col("a"), lit("a"), typedLit(Map("class" -> "x"))))
     assert(found.count(_.nonEmpty) == 4, found)
+    val tagsA = alone(HtmlFunctions.dom_tag_nodes(col("a")))
+    val bfsB = alone(HtmlFunctions.bfs_tag_order(col("b")))
     val expected = rows.zipWithIndex.map { case ((_, a, b), i) => Row(
       HtmlFunctions.findLinks(a), HtmlFunctions.findLinks(b),
       HtmlFunctions.roundtrip(b), HtmlFunctions.roundtrip(a),
       HtmlFunctions.nodeCount(a), HtmlFunctions.nodeCount(b),
       nodesB(i), nodesA(i), found(i),
       HtmlFunctions.firstTagString(b, "a", "class", "x"),
-      HtmlFunctions.domTagNodes(a).map(Row.fromTuple), HtmlFunctions.bfsTagOrder(b).map(Row.fromTuple),
+      tagsA(i), bfsB(i),
       HtmlFunctions.getContentOf(a, "div"), HtmlFunctions.prettifyHtml(b))
     }
     assert(got == expected)
@@ -129,14 +131,50 @@ class SharedParseSpec extends SparkTestBase {
   test("dom_tag_nodes == the non-text rows of parse_html, ids unchanged") {
     val texts = (0 until 5).map(page) ++ Seq("<HT<!-- c -->ML>x</HTML>", "<br><hr>t", "", "text")
     val df = parquet(texts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("id", "text"), "tagnodes")
-    val got = df.orderBy(col("id")).select(HtmlFunctions.parse_html(col("text"))).collect().toSeq
-    assert(got.length == texts.length)
-    texts.zip(got).foreach { case (t, r) =>
-      assert(HtmlFunctions.domTagNodes(t) == r.getSeq[Row](0).filter(_.getAs[Byte]("kind") != 0)
-        .map(n => (n.getAs[Int]("node_id"), n.getAs[Int]("parent_id"), n.getAs[Int]("pos"),
+    def alone(c: Column): Seq[Seq[Row]] =
+      df.orderBy(col("id")).select(c).collect().toSeq.map(_.getSeq[Row](0))
+    val got = alone(HtmlFunctions.parse_html(col("text")))
+    val tags = alone(HtmlFunctions.dom_tag_nodes(col("text")))
+    assert(got.length == texts.length && tags.length == texts.length)
+    texts.indices.foreach { i =>
+      assert(tags(i) == got(i).filter(_.getAs[Byte]("kind") != 0)
+        .map(n => Row(n.getAs[Int]("node_id"), n.getAs[Int]("parent_id"), n.getAs[Int]("pos"),
           n.getAs[Int]("depth"), n.getAs[Byte]("kind").toInt, n.getAs[String]("tagname"),
-          n.getAs[Boolean]("nonpair"))), t)
+          n.getAs[Boolean]("nonpair"))), texts(i))
     }
+  }
+
+  test("bfs_tag_order == findAllB's tag nodes over seeded soup (level-order sort)") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // ParserPropertySpec's character soup, and a tag soup that nests
+    val soupChar: Gen[Char] = Gen.frequency(
+      (8, Gen.alphaNumChar),
+      (3, Gen.oneOf('<', '>', '/', '=', ' ')),
+      (2, Gen.oneOf('\'', '"', '\\', '-', '!')),
+      (1, Gen.oneOf('\n', '\t', '&', ';', '.')))
+    val chars: Gen[String] = Gen.listOf(soupChar).map(_.mkString)
+    val tagNames = Seq("div", "p", "a", "b", "br", "span")
+    val tags: Gen[String] = Gen.listOfN(40, Gen.frequency(
+      (2, Gen.alphaStr.map(_.take(5))),
+      (4, Gen.oneOf(tagNames).map(t => s"<$t>")),
+      (3, Gen.oneOf(tagNames).map(t => s"</$t>")),
+      (1, Gen.const("<!-- c -->")))).map(_.mkString)
+    val texts = (0 until 300).flatMap { i =>
+      chars(Gen.Parameters.default.withSize(400), Seed(0xB0F5L + i)) ++
+        tags(Gen.Parameters.default.withSize(40), Seed(0xB0F5L + i))
+    }
+    val df = parquet(texts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("id", "text"), "bfs")
+    val got = df.orderBy(col("id")).select(HtmlFunctions.bfs_tag_order(col("text")))
+      .collect().toSeq.map(_.getSeq[Row](0))
+    val expected = texts.map(t => HtmlParser.parseString(t).findAllB(null, null, _ => true)
+      .filter(_.isTag).zipWithIndex.map { case (n, i) => Row(i, n.getTagName, n.isEndTag) }.toSeq)
+    assert(got.length == texts.length)
+    texts.indices.foreach(i => assert(got(i) == expected(i), texts(i)))
+    // the soup nests: on many docs BFS order is not document order
+    val dfs = texts.map(t => HtmlParser.parseString(t).findAll(null, null, _ => true)
+      .filter(_.isTag).map(n => (n.getTagName, n.isEndTag)).toSeq)
+    assert(texts.indices.count(i => got(i).map(r => (r.getString(1), r.getBoolean(2))) != dfs(i)) > 100)
   }
 
   test("SQL route (LATERAL VIEW parse_nodes with find_links) == Column route, one parse per row") {

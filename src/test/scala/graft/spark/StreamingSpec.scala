@@ -192,6 +192,29 @@ class StreamingSpec extends SparkTestBase {
       s"replay against the already-appended index must reproduce decisions; got $replayed")
   }
 
+  test("streaming near-dup index: byte-identical twins in one batch add one doc's band rows") {
+    val dir = tmpDir("graft-sndtwin")
+    val in = s"$dir/in"; val out = s"$dir/out"
+    val corpus = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (2L, "one two three four five six seven eight")).toDF("doc_id", "text")
+    Dedup.writeBandIndex(corpus, "stream_twin_idx_spec", nBuckets = 8)
+    corpus.write.mode("overwrite").parquet(s"$dir/corpus")
+    val text = "zzgibber xxgibber ccgibber vvgibber bbgibber nngibber"
+    Seq((8100001L, text), (8100002L, text)).toDF("doc_id", "text").coalesce(1)
+      .write.parquet(in)
+    StreamingNearDup.runAvailableNow(spark, in, "stream_twin_idx_spec",
+      s"$dir/corpus", out, nBuckets = 8)
+    val accepted = StreamingNearDup.readAccepted(spark, out)
+    assert(accepted.select($"doc_id").as[Long].collect().toSet == Set(8100001L, 8100002L))
+    spark.catalog.refreshTable("stream_twin_idx_spec")
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.select($"doc_id", $"band_hash").as[(Long, Long)].collect().toSeq.sorted
+    val added = sorted(spark.table("stream_twin_idx_spec").filter($"doc_id" > 2L))
+    // a batch-built index holds one doc per distinct text: 16 bands, not 32
+    assert(added.length == 16, s"${added.length} band rows for the pair")
+    assert(added == sorted(Dedup.bandRows(accepted)))
+  }
+
   test("watermark-buffered sessionize: idle state is removed after retention (ADVICE r3)") {
     val dir = tmpDir("graft-bufttl")
     val in = s"$dir/in"
